@@ -4,14 +4,7 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     // Optional args: query names to bench (default all) — local iteration
     // aid; the driver invokes with no args.
     // TWO always-on controls, each answering a different health question
@@ -58,20 +51,6 @@ object Bench {
     // GC pauses and codegen-cache pressure accumulating over the long
     // in-process sweep. The median of n>=3 is robust to one bad draw.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    // Full storage drop, not just the SQL cache: localCheckpoint'd RDD
-    // blocks from EARLIER queries (and earlier reps of this one) linger
-    // in the BlockManager until the async ContextCleaner catches up, and
-    // at the 230-query sweep scale that accumulated residue is what
-    // evicted composite pipelines' stage persists mid-rep —
-    // td_curation_audit charged 16.9 s in the r5 sweep vs 4.66 s
-    // isolated, a measurement of cache pressure, not the operator.
-    // Unpersisting here is safe: it runs BETWEEN executions, when no
-    // live query references the blocks (each rep rebuilds its DAG).
-    def dropStorage(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // Steady-state measurement, per query: run once untimed (pays this
     // plan's janino codegen compilation — measured 4.8s first run vs
     // 1.5s steady for td_lsh_candidates; pure JVM startup cost that a
@@ -87,7 +66,7 @@ object Bench {
       try { consumeWith(forceEval)(fn(spark, sfDir)) }
       catch { case _: Throwable => () }
       val times = (0 until reps).map { _ =>
-        dropStorage()
+        LocalSpark.dropStorage(spark)
         val t0 = System.nanoTime()
         // a query that THROWS must be loud, not a fast-looking near-zero
         // timing — surface it on stderr and in the metric line
@@ -101,7 +80,7 @@ object Bench {
       }
       // Isolate queries: drop caches again and give the cleaner a chance
       // to free accumulated broadcasts before the next query's timing.
-      dropStorage()
+      LocalSpark.dropStorage(spark)
       System.gc()
       if (times.exists(_ < 0)) -1.0
       else times.sorted.apply(times.size / 2) // median

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan for the named
   * queries (or all) so pushdown/broadcast/codegen can be audited.
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
@@ -11,14 +9,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(spark)
+    val spark = LocalSpark.session()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_EXEC=1: run the query first and print the AQE-FINAL
     // executed plan — the one with runtime exchange reuse, skew splits,

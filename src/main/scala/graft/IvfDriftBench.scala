@@ -96,23 +96,17 @@ object IvfDriftBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/tmp/sf100emb")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSpark.envCores
     val steps = sys.env.getOrElse("SPARK_GRAFT_DRIFT_STEPS", "8").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_DRIFT_OUT",
       "/root/repo/BENCH_IVF_DRIFT.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     // repartition on read: a generator-written corpus can be one
     // parquet file, and a single input split would serialize every
     // corpus-side leg (route, brute referee) onto one core
     val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .repartition(cpus.toInt).localCheckpoint()
+      .repartition(cpus).localCheckpoint()
     val base = corpus.select(col("vec_id"), col("embedding"))
     val n = base.count()
     val dims = base.select(size(col("embedding"))).first().getInt(0)

@@ -1,14 +1,12 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-query job/stage profiler (optimization-round instrument, guide §1).
   *
-  * Runs the named registered queries under the SAME session shape as
-  * graft.Bench (master local[$SPARK_GRAFT_CPUS], shuffle.partitions =
-  * cpus), once untimed (codegen warm-up, the bench's own protocol), then
+  * Runs the named registered queries in graft.Bench's [[LocalSpark]]
+  * session, once untimed (codegen warm-up, the bench's own protocol), then
   * once timed with a listener attached, and prints every Spark job the
   * timed execution submitted: wall duration, summed task time, and the
   * per-stage input / shuffle-read / shuffle-write bytes.
@@ -17,6 +15,12 @@ import scala.collection.mutable
   * composite operator's jobs (kmeans iterations, localCheckpoint
   * materializations, audit counts) carries the seconds, and whether the
   * time is compute (task time >> fetch) or exchange volume.
+  *
+  * When the timed action ends, before storage is dropped, it also prints
+  * every RDD the BlockManager still holds — id, storage level, cached
+  * partitions, memory and disk MB: how much unified-pool storage the
+  * query's persists/checkpoints occupy while its own tasks still run,
+  * i.e. the execution-memory squeeze at high core counts.
   *
   * Usage: runMain graft.ProfileQuery <queryName> [more ...]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
@@ -67,30 +71,20 @@ object ProfileQuery {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    def dropStorage(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
+    val spark = LocalSpark.session()
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       // warm (codegen), exactly like Bench.timeQuery
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      dropStorage()
+      LocalSpark.dropStorage(spark)
       val rec = new Rec
       spark.sparkContext.addSparkListener(rec)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count()
       catch { case e: Throwable => println(s"$name FAILED: ${e.getMessage}") }
       val wall = (System.nanoTime() - t0) / 1e9
+      // what the query still holds when its action ends, before the drop
+      val stored = spark.sparkContext.getRDDStorageInfo
       // let queued listener events drain before reading
       Thread.sleep(500)
       spark.sparkContext.removeSparkListener(rec)
@@ -103,7 +97,14 @@ object ProfileQuery {
           println(f"    stage tasks=${s.tasks}%4d run ${s.runMs / 1000.0}%7.2f s cpu ${s.cpuMs / 1000.0}%6.2f s gc ${s.gcMs / 1000.0}%5.2f s  in ${mb(s.inputB)}%7s MB  sr ${mb(s.srB)}%7s MB  sw ${mb(s.swB)}%7s MB  ${s.name.take(120)}%s")
         }
       }
-      dropStorage()
+      println(f"%n===== $name%s: ${stored.length}%d stored RDDs, " +
+        f"mem ${mb(stored.map(_.memSize).sum)}%s MB, disk ${mb(stored.map(_.diskSize).sum)}%s MB =====")
+      stored.sortBy(-_.memSize).foreach { i =>
+        println(f"  rdd ${i.id}%5d ${i.storageLevel.description}%-32s " +
+          f"parts ${i.numCachedPartitions}%4d  mem ${i.memSize / 1048576.0}%8.2f MB" +
+          f"  disk ${i.diskSize / 1048576.0}%8.2f MB  ${i.name}%s")
+      }
+      LocalSpark.dropStorage(spark)
     }
     spark.stop()
   }

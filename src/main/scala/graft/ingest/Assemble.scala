@@ -39,32 +39,6 @@ object Assemble {
         lit(ts).as("ingestion_date"))
   }
 
-  /** reference: create_final_manifest_json (manifest.py:23-42) — drops
-    * empty manifests, collects the rest. */
-  def manifestsEnvelope(manifests: DataFrame, ts: String): DataFrame =
-    manifests
-      .agg(sort_array(collect_list(struct(
-        col("name"), col("landing_date"), col("launch_date"), col("status"),
-        col("max_sol"), col("max_date"), col("total_photos"), col("photos"))))
-        .as("manifests"))
-      .select(
-        lit(s"mars_rover_manifests_${fnTs(ts)}.json").as("filename"),
-        col("manifests"),
-        lit(ts).as("ingestion_date"))
-
-  /** reference: create_final_coordinates_json (coordinates.py:28-54) —
-    * features already rover-tagged upstream (S6 enrichment). */
-  def coordinatesEnvelope(features: DataFrame, ts: String): DataFrame =
-    features
-      .agg(sort_array(collect_list(struct(
-        col("type"), col("rover_name"), col("geometry"), col("properties"))))
-        .as("coordinates"))
-      .select(
-        lit(s"mars_rover_coordinates_${fnTs(ts)}.json").as("filename"),
-        size(col("coordinates")).as("coordinate_count"),
-        col("coordinates"),
-        lit(ts).as("ingestion_date"))
-
   /** Object-store JSON sink with prefix routing (reference: minio.py:19-46).
     * The envelope is one document by construction, so this is a driver-side
     * single-object write, exactly like the reference's put_object. Returns

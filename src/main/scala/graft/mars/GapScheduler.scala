@@ -45,9 +45,4 @@ object GapScheduler {
       else (tasks.map(_.sol).min to tasks.map(_.sol).max).toSeq
     IngestionSchedule(tasks, solRange)
   }
-
-  /** Per-rover fan-out for the manifest/coordinate feeds (reference:
-    * manifest.py:44-51, coordinates.py:56-63 — one task per rover). */
-  def roverTasks(rovers: Seq[String]): Seq[IngestionTask] =
-    rovers.map(IngestionTask(_, -1))
 }

@@ -62,11 +62,4 @@ object RoverKeys {
     else if (filename.startsWith("mars_rover_coordinates")) "coordinates"
     else if (filename.startsWith("mars_rover_manifests")) "manifests"
     else "UNKNOWN"
-
-  /** Column-expression form of the same routing for distributed use. */
-  def routeCol(filename: Column): Column =
-    when(filename.startsWith("mars_rover_photos"), "photos")
-      .when(filename.startsWith("mars_rover_coordinates"), "coordinates")
-      .when(filename.startsWith("mars_rover_manifests"), "manifests")
-      .otherwise("UNKNOWN")
 }

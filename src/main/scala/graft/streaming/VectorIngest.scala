@@ -204,17 +204,4 @@ object VectorIngest {
     Seq((k, iters)).toDF("n_cells", "iters").write.mode("overwrite")
       .parquet(s"$indexDir/refresh/batch_id=$batchId")
   }
-
-  /** Continuous maintained ingest: [[applyBatchMaintained]] per
-    * micro-batch, keyed by the stream's own batch id. */
-  def ingestStreamMaintained(source: DataFrame, indexDir: String,
-                             checkpointDir: String,
-                             driftThreshold: Double = 0.9,
-                             retrainIters: Int = 2): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatchMaintained(b, id, indexDir, driftThreshold, retrainIters); ()
-      }
-      .start()
 }
