@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.BlockedPairs
+
 /** Multimodal-column plumbing: opaque `binary` content + typed metadata.
   *
   * The pattern for a 100 TB media lake: content is an opaque BinaryType
@@ -290,18 +292,10 @@ object Multimodal {
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .withColumn("bkey",
         expr(s"(phash >> (band * $bandBits)) & ${(1 << bandBits) - 1}"))
-    banded.select(col("band"), col("bkey"),
-        col("doc_id").as("doc_id_a"), col("phash").as("phash_a"))
-      .join(banded.select(col("band"), col("bkey"),
-        col("doc_id").as("doc_id_b"), col("phash").as("phash_b")),
-        Seq("band", "bkey"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      // a pair can collide in several bands — one row per pair
-      .groupBy("doc_id_a", "doc_id_b", "phash_a", "phash_b")
-      .agg(count(lit(1)).as("n_shared_bands"))
-      .withColumn("hamming",
-        expr("bit_count(phash_a ^ phash_b)").cast("int"))
-      .filter(col("hamming") <= maxHamming)
+    // a pair can collide in several bands — one row per pair
+    BlockedPairs(banded, "doc_id", Seq("band", "bkey"), Seq("phash"),
+        scores = Seq("hamming" -> expr("bit_count(phash_a ^ phash_b)").cast("int")),
+        keep = Some(col("hamming") <= maxHamming), shared = Some("n_shared_bands"))
       .select("doc_id_a", "doc_id_b", "hamming", "n_shared_bands")
   }
 
@@ -325,19 +319,12 @@ object Multimodal {
     val frames = frameSample(media, stride)
       .select(col("doc_id"), col("frame_md5")).distinct()
       .localCheckpoint() // one frame scan feeds the join sides + sizes
-    val sizes = frames.groupBy("doc_id").agg(count(lit(1)).as("nf"))
-    frames.select(col("doc_id").as("doc_id_a"), col("frame_md5"))
-      .join(frames.select(col("doc_id").as("doc_id_b"), col("frame_md5")),
-        "frame_md5")
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .groupBy("doc_id_a", "doc_id_b")
-      .agg(count(lit(1)).as("n_shared"))
-      .join(sizes.select(col("doc_id").as("doc_id_a"), col("nf").as("n_a")),
-        "doc_id_a")
-      .join(sizes.select(col("doc_id").as("doc_id_b"), col("nf").as("n_b")),
-        "doc_id_b")
-      .withColumn("jaccard", round(col("n_shared").cast("double") /
-        (col("n_a") + col("n_b") - col("n_shared")), 6))
+    val sizes = frames.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    BlockedPairs.attach(
+        BlockedPairs(frames, "doc_id", Seq("frame_md5"), shared = Some("n_shared")),
+        sizes, "doc_id", Seq("n"), ("doc_id_a", "doc_id_b"))
+      .withColumn("jaccard", BlockedPairs.round6(col("n_shared").cast("double") /
+        (col("n_a") + col("n_b") - col("n_shared"))))
       .filter(col("jaccard") >= threshold)
       .select("doc_id_a", "doc_id_b", "n_shared", "n_a", "n_b", "jaccard")
   }

@@ -17,15 +17,17 @@ import org.apache.spark.sql.functions._
   */
 object ZOrder {
 
-  /** Morton key of two non-negative ints using the low `bits` of each. */
+  /** Morton key of two non-negative ints using the low `bits` of each, in
+    * long arithmetic: bit i of `a` lands on bit 2i+1, past an int's 31. */
   def zorderKey(a: Column, b: Column, bits: Int = 16): Column = {
     require(bits >= 1 && bits <= 31, "bits in 1..31")
+    val (la, lb) = (a.cast("long"), b.cast("long"))
     val terms = (0 until bits).flatMap { i =>
       Seq(
-        shiftleft(shiftright(a, i).bitwiseAND(lit(1)), 2 * i + 1),
-        shiftleft(shiftright(b, i).bitwiseAND(lit(1)), 2 * i))
+        shiftleft(shiftright(la, i).bitwiseAND(lit(1L)), 2 * i + 1),
+        shiftleft(shiftright(lb, i).bitwiseAND(lit(1L)), 2 * i))
     }
-    terms.reduce(_ + _).cast("long")
+    terms.reduce(_ + _)
   }
 
   /** The same key as engine-portable SQL (for oracles / other engines). */

@@ -1451,14 +1451,11 @@ object TrainingOps extends OpsModule {
         .select(col("doc_id"), splitOf(col("root")).as("split"),
           splitOf(col("doc_id")).as("naive_split"))
         .localCheckpoint() // feeds 2 rollups + 2 leak probes
-      val leaks = pairs
-        .join(asg.select(col("doc_id").as("doc_id_a"),
-          col("split").as("sa"), col("naive_split").as("na")), "doc_id_a")
-        .join(asg.select(col("doc_id").as("doc_id_b"),
-          col("split").as("sb"), col("naive_split").as("nb")), "doc_id_b")
-        .agg(sum(when(col("sa") =!= col("sb"), 1L).otherwise(0L))
+      val leaks = graft.ops.BlockedPairs.attach(pairs, asg, "doc_id",
+          Seq("split", "naive_split"), ("doc_id_a", "doc_id_b"))
+        .agg(sum(when(col("split_a") =!= col("split_b"), 1L).otherwise(0L))
             .as("leaked_aware"),
-          sum(when(col("na") =!= col("nb"), 1L).otherwise(0L))
+          sum(when(col("naive_split_a") =!= col("naive_split_b"), 1L).otherwise(0L))
             .as("leaked_naive"))
       val ca = asg.groupBy("split").agg(count(lit(1)).as("n_docs"))
       val na = asg.groupBy(col("naive_split").as("split"))

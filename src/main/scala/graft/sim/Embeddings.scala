@@ -5,6 +5,9 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.BlockedPairs
+import graft.ops.BlockedPairs.round6
+
 /** Similarity search over an `Array[Float]` embedding column.
   *
   * All vector math is higher-order Column expressions (`zip_with` +
@@ -65,11 +68,6 @@ object Embeddings {
   def dotI8L(a: Column, b: Column): Column = call_function("vec_dot_i8_l", a, b)
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Native `round6(x)` ≡ Spark `round(x, 6)` bit-for-bit (Round6Spec) —
-    * used on the per-PAIR scoring paths where Spark's BigDecimal-based
-    * double rounding was the hottest scalar (r13, guide §1.2). */
-  private def r6(c: Column): Column = call_function("round6", c)
 
   /** Cosine with the norms hoisted out: inside a pair join, norm(v) is a
     * per-vector quantity — computing it per PAIR multiplies the vector
@@ -456,20 +454,21 @@ object Embeddings {
     * k-means or a random-hyperplane LSH sign-bucket over the vectors;
     * here the corpus ships with cluster labels, the same shape. */
   def cosineNearDup(embeddings: DataFrame, threshold: Double = 0.4): DataFrame = {
-    val e = embeddings.select(col("label").as("cell"), col("vec_id"),
-      asDouble(col("embedding")).as("emb"))
-      .withColumn("vnorm", norm(col("emb")))
-    val a = e.select(col("cell"), col("vec_id").as("vec_id_a"),
-      col("emb").as("emb_a"), col("vnorm").as("norm_a"))
-    val b = e.select(col("cell"), col("vec_id").as("vec_id_b"),
-      col("emb").as("emb_b"), col("vnorm").as("norm_b"))
-    a.join(b, Seq("cell"))
-      .filter(col("vec_id_a") < col("vec_id_b"))
-      .withColumn("cosine", round(
-        cosinePre(col("emb_a"), col("emb_b"), col("norm_a"), col("norm_b")), 6))
-      .filter(col("cosine") >= threshold)
+    BlockedPairs(cellVectors(embeddings), "vec_id", Seq("cell"), Seq("emb", "vnorm"),
+        scores = Seq("cosine" -> pairCosine), withKeys = true,
+        keep = Some(col("cosine") >= threshold))
       .select("cell", "vec_id_a", "vec_id_b", "cosine")
   }
+
+  /** (cell, vec_id, emb, vnorm) with the corpus label as the cell. */
+  private def cellVectors(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("label").as("cell"), col("vec_id"),
+      asDouble(col("embedding")).as("emb"))
+      .withColumn("vnorm", norm(col("emb")))
+
+  /** Cosine of a [[BlockedPairs]] pair over suffixed (emb, vnorm). */
+  private def pairCosine: Column =
+    cosinePre(col("emb_a"), col("emb_b"), col("vnorm_a"), col("vnorm_b"))
 
   /** Within-cell pairwise-cosine HISTOGRAM — the distribution diagnostic
     * that picks near-dup / SemDeDup thresholds from measured data instead
@@ -482,17 +481,8 @@ object Embeddings {
     * over the 6dp-rounded cosine, so boundary pairs land in the same bin
     * in any engine; fractions attach via a 1-row broadcast total. */
   def cosineHistogram(embeddings: DataFrame): DataFrame = {
-    val e = embeddings.select(col("label").as("cell"), col("vec_id"),
-      asDouble(col("embedding")).as("emb"))
-      .withColumn("vnorm", norm(col("emb")))
-    val a = e.select(col("cell"), col("vec_id").as("va"),
-      col("emb").as("ea"), col("vnorm").as("na"))
-    val b = e.select(col("cell"), col("vec_id").as("vb"),
-      col("emb").as("eb"), col("vnorm").as("nb"))
-    val binned = a.join(b, Seq("cell"))
-      .filter(col("va") < col("vb"))
-      .withColumn("cosine",
-        r6(cosinePre(col("ea"), col("eb"), col("na"), col("nb"))))
+    val binned = BlockedPairs(cellVectors(embeddings), "vec_id", Seq("cell"),
+        Seq("emb", "vnorm"), scores = Seq("cosine" -> pairCosine))
       .withColumn("bin", floor(col("cosine") * 10).cast("int"))
       .groupBy("bin").agg(count(lit(1)).as("n_pairs"))
     val tot = binned.agg(sum("n_pairs").as("total"))
@@ -963,15 +953,10 @@ object Embeddings {
         .join(fat.select(col("vec_id").as("vid_a"), col("emb").as("emb_a"),
           col("vnorm").as("norm_a")), Seq("vid_a"))
         .join(fat, Seq("vec_id"))
-        .filter(r6(cosinePre(col("emb_a"), col("emb"),
+        .filter(round6(cosinePre(col("emb_a"), col("emb"),
           col("norm_a"), col("vnorm"))) >= threshold)
         .select("vec_id").distinct()
-      val dup = sure.unionByName(confirmed).distinct()
-        .withColumn("is_dup", lit(1))
-      expand(ranked.join(dup, Seq("vec_id"), "left")
-        .select(col("cell"), col("vec_id"),
-          col("ccos").as("centroid_cos"),
-          coalesce(col("is_dup"), lit(0)).as("is_dup")))
+      expand(markDups(ranked, sure.unionByName(confirmed).distinct()))
     }
   }
 
@@ -1005,7 +990,7 @@ object Embeddings {
     base
       .withColumn("vnorm", norm(col("emb")))
       .join(broadcast(cents), Seq("cell"))
-      .withColumn("ccos", r6(cosine(col("emb"), col("cemb"))))
+      .withColumn("ccos", round6(cosine(col("emb"), col("cemb"))))
       .drop("cemb")
   }
 
@@ -1018,15 +1003,17 @@ object Embeddings {
       col("emb").as("emb_a"), col("vnorm").as("norm_a"))
     val dup = a.join(ranked, Seq("cell"))
       .filter(col("rank_a") < col("crank"))
-      .filter(r6(cosinePre(col("emb_a"), col("emb"),
+      .filter(round6(cosinePre(col("emb_a"), col("emb"),
         col("norm_a"), col("vnorm"))) >= threshold)
       .select("vec_id").distinct()
-      .withColumn("is_dup", lit(1))
-    ranked.join(dup, Seq("vec_id"), "left")
-      .select(col("cell"), col("vec_id"),
-        col("ccos").as("centroid_cos"),
-        coalesce(col("is_dup"), lit(0)).as("is_dup"))
+    markDups(ranked, dup)
   }
+
+  /** `ranked` as (cell, vec_id, centroid_cos, is_dup): 1 for `dupIds`. */
+  private def markDups(ranked: DataFrame, dupIds: DataFrame): DataFrame =
+    ranked.join(dupIds.withColumn("is_dup", lit(1)), Seq("vec_id"), "left")
+      .select(col("cell"), col("vec_id"), col("ccos").as("centroid_cos"),
+        coalesce(col("is_dup"), lit(0)).as("is_dup"))
 
   /** [[semDedup]] over CELL-BUCKETED POSTINGS — the A/B sibling of the
     * int8 pre-verify (VERDICT r8 "Next round" #1 option (a)): the scored
@@ -1124,7 +1111,7 @@ object Embeddings {
     val corpus = e.filter(!evalFilter)
     corpus.join(broadcast(ev), col("vec_id") =!= col("eval_id"))
       .withColumn("cos",
-        r6(cosinePre(col("eemb"), col("emb"), col("enorm"), col("vnorm"))))
+        round6(cosinePre(col("eemb"), col("emb"), col("enorm"), col("vnorm"))))
       .groupBy("vec_id")
       .agg(max(struct(col("cos").as("c"), (-col("eval_id")).as("ni"))).as("m"))
       .select(col("vec_id"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.ops.BlockedPairs
 import graft.text.TextOps
 
 /** Continuous NEAR-duplicate-free corpus ingestion: the streaming face of
@@ -54,27 +55,22 @@ object NearDupIngest {
     val signed = sigs.filter(col("mh_0").isNotNull)
     val unsigned = sigs.filter(col("mh_0").isNull).select("doc_id")
 
-    def sigSide(p: String): DataFrame = signed.select(
-      col("doc_id").as(s"${p}_id") +:
-        (0 until k).map(i => col(s"mh_$i").as(s"${p}_mh_$i")): _*)
     def estJaccard: Column =
-      (0 until k).map(i => (col(s"a_mh_$i") === col(s"b_mh_$i")).cast("int"))
+      (0 until k).map(i => (col(s"mh_${i}_a") === col(s"mh_${i}_b")).cast("int"))
         .reduce(_ + _).cast("double") / k
 
-    def bandsOf(df: DataFrame): DataFrame = df.select(col("doc_id"),
-      explode(array((0 until nb).map(b => col(s"band_$b")): _*)).as("band"))
+    def bandsOf(df: DataFrame, carry: Seq[String] = Nil): DataFrame =
+      df.select(("doc_id" +: carry).map(col) :+
+        explode(array((0 until nb).map(b => col(s"band_$b")): _*)).as("band"): _*)
 
     // 2. batch-local: drop the LATER member of any candidate pair whose
-    // estimated jaccard clears the threshold
-    val bl = bandsOf(signed)
-    val localPairs = bl.select(col("band"), col("doc_id").as("a_id"))
-      .join(bl.select(col("band"), col("doc_id").as("b_id")), "band")
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id").distinct()
-      .join(sigSide("a"), "a_id").join(sigSide("b"), "b_id")
-      .filter(estJaccard >= threshold)
+    // estimated jaccard clears the threshold — scored inside the band
+    // join, where the signatures ride along
+    val mhs = (0 until k).map(i => s"mh_$i")
+    val localPairs = BlockedPairs(bandsOf(signed, mhs), "doc_id", Seq("band"), mhs,
+      scores = Seq("est_jaccard" -> estJaccard), keep = Some(col("est_jaccard") >= threshold))
     val localSurvivors = signed.join(
-      localPairs.select(col("b_id").as("doc_id")).distinct(),
+      localPairs.select(col("doc_id_b").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
 
     // 3. store probe: any persisted near-dup vetoes admission
@@ -90,11 +86,11 @@ object NearDupIngest {
         val vetoed = candidates
           .join(localSurvivors.select(
             col("doc_id").as("a_id") +:
-              (0 until k).map(i => col(s"mh_$i").as(s"a_mh_$i")): _*), "a_id")
+              (0 until k).map(i => col(s"mh_$i").as(s"mh_${i}_a")): _*), "a_id")
           .join(storedSigs.select(
             col("doc_id").as("b_id") +:
-              (0 until k).map(i => col(s"mh_$i").as(s"b_mh_$i")): _*), "b_id")
-          .filter(estJaccard >= threshold)
+              (0 until k).map(i => col(s"mh_$i").as(s"mh_${i}_b")): _*), "b_id")
+          .filter(BlockedPairs.round6(estJaccard) >= threshold)
           .select(col("a_id").as("doc_id")).distinct()
         localSurvivors.join(vetoed, Seq("doc_id"), "left_anti")
       } else localSurvivors

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.BlockedPairs
+
 /** Text-analysis + dedup operators for large-scale training-data pipelines.
   *
   * Everything here is pure Column expressions / narrow transforms — no UDFs
@@ -106,8 +108,9 @@ object TextOps {
     * set Jaccard + SimHash Hamming distance for every pair above the
     * Jaccard threshold. Blocking keys the join (quadratic only within a
     * block); at 100 TB the block key would be an LSH band from
-    * minhashSignatures instead of a metadata column — same shape. */
-  /** `broadcastPairs`: the build side of the pair join is the corpus
+    * minhashSignatures instead of a metadata column — same shape.
+    *
+    * `broadcastPairs`: the build side of the pair join is the corpus
     * itself. On a corpus that fits an executor, explicitly broadcasting it
     * is the fast, DETERMINISTIC plan — the probe side keeps full scan
     * parallelism, and pinning the strategy stops AQE from flipping between
@@ -123,29 +126,21 @@ object TextOps {
     * in memory than the scanned text bytes. */
   def nearDupPairs(docs: DataFrame, threshold: Double = 0.5,
                    broadcastPairs: Option[Boolean] = None): DataFrame = {
-    val sh = simhash16(docs)
     val side = docs
       .select(col("doc_id"), col("source"),
-        array_distinct(tokens(col("text"))).as("dtoks"))
-      .join(sh, "doc_id")
-    val a = side.select(col("source"), col("doc_id").as("doc_id_a"),
-      col("dtoks").as("toks_a"), col("simhash").as("sim_a"))
-    val b = side.select(col("source"), col("doc_id").as("doc_id_b"),
-      col("dtoks").as("toks_b"), col("simhash").as("sim_b"))
-    val inter = size(array_intersect(col("toks_a"), col("toks_b")))
-    val union = size(col("toks_a")) + size(col("toks_b")) - inter
-    val built = broadcastPairs match {
-      case Some(true)  => broadcast(b)
-      case Some(false) => b
-      case None        => graft.ops.AutoBroadcast.sizeGate(b, inflation = 4.0)
-    }
-    a.join(built, Seq("source"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .withColumn("jaccard",
-        call_function("round6", inter.cast("double") / union.cast("double")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_id_a"), col("doc_id_b"), col("jaccard"),
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).as("hamming_distance"))
+        array_distinct(tokens(col("text"))).as("toks"))
+      .join(simhash16(docs), "doc_id")
+    BlockedPairs(side, "doc_id", Seq("source"), Seq("toks", "simhash"),
+      scores = Seq(
+        "jaccard" -> BlockedPairs.setJaccard(col("toks_a"), col("toks_b")),
+        "hamming_distance" ->
+          bit_count(col("simhash_a").bitwiseXOR(col("simhash_b")))),
+      keep = Some(col("jaccard") >= threshold),
+      build = b => broadcastPairs match {
+        case Some(true)  => broadcast(b)
+        case Some(false) => b
+        case None        => graft.ops.AutoBroadcast.sizeGate(b, inflation = 4.0)
+      })
   }
 
   /** MinHash+LSH candidate-pair generation — the scale path for near-dup:
@@ -155,48 +150,8 @@ object TextOps {
     * anything. The bucket join's fan-in is bounded by bucket size (bands
     * hash near-uniformly), so the join never goes quadratic in the corpus;
     * only the final verify touches shingle sets, and only for candidates. */
-  def lshCandidatePairs(docs: DataFrame, k: Int = 4): DataFrame = {
-    val nBands = k / 2
-    // The shingle set is the expensive projection (k-gram assembly + dedup
-    // over every token of every doc) and is consumed FOUR times: both band
-    // sides of the bucket self-join and both sides of the Jaccard verify.
-    // Materialize it once — without this, Catalyst re-derives it from the
-    // scan per consumer (measured 17s→5s at sf0.1). At cluster scale this
-    // persist would be a staged parquet write; the shape is the same.
-    val shingleSets = tokenized(docs)
-      .select(col("doc_id"), shingles(col("toks")).as("shset"))
-      .persist()
-    // verify sides broadcast when the shingle frame fits the session
-    // threshold (estimate from the un-persisted plan, ×4 inflation for
-    // the array-of-strings row width): the candidate pairs then never
-    // shuffle shingle ARRAYS — the same gated pattern as
-    // prefixJaccardPairs' verify. At scale the gate declines and the
-    // verify joins shuffle on the pair keys.
-    val verifyBroadcast = graft.ops.AutoBroadcast.decideFrom(shingleSets, 4)
-    def vSide(df: DataFrame) = if (verifyBroadcast) broadcast(df) else df
-    val sig = shingleSets.select(
-      col("doc_id") +: (0 until k).map(i => minhash(col("shset"), i).as(s"mh_$i")): _*)
-    val bandsExploded = sig
-      .filter(col("mh_0").isNotNull)
-      .select(col("doc_id"), explode(array((0 until nBands).map(bd =>
-        struct(lit(bd).as("band_idx"),
-          md5(concat_ws("_", lit(bd), col(s"mh_${2 * bd}"), col(s"mh_${2 * bd + 1}")))
-            .as("band_key"))): _*)).as("b"))
-      .select(col("doc_id"), col("b.band_idx"), col("b.band_key"))
-    val candidates = bandsExploded.as("x")
-      .join(bandsExploded.as("y"), Seq("band_idx", "band_key"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("doc_id_a"), col("y.doc_id").as("doc_id_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-    val inter = size(array_intersect(col("shset_a"), col("shset_b")))
-    val union = size(col("shset_a")) + size(col("shset_b")) - inter
-    candidates
-      .join(vSide(shingleSets.select(col("doc_id").as("doc_id_a"), col("shset").as("shset_a"))), "doc_id_a")
-      .join(vSide(shingleSets.select(col("doc_id").as("doc_id_b"), col("shset").as("shset_b"))), "doc_id_b")
-      .select(col("doc_id_a"), col("doc_id_b"), col("n_shared_bands"),
-        call_function("round6",
-          inter.cast("double") / union.cast("double")).as("jaccard"))
-  }
+  def lshCandidatePairs(docs: DataFrame, k: Int = 4): DataFrame =
+    lshJaccardPairs(docs, k, None)
 
   /** Incremental (delta) near-dup — the NIGHTLY-INGEST form of
     * [[lshCandidatePairs]]: banded-LSH candidates restricted to CROSS
@@ -213,38 +168,53 @@ object TextOps {
     * transfer unchanged. At 100 TB the old side's band table is a
     * precomputed index (the same banded signatures, staged once);
     * here it derives inline, same plan shape. */
-  def deltaNearDupPairs(docs: DataFrame, isNew: Column, k: Int = 4): DataFrame = {
+  def deltaNearDupPairs(docs: DataFrame, isNew: Column, k: Int = 4): DataFrame =
+    lshJaccardPairs(docs, k, Some(isNew))
+
+  /** The one body of [[lshCandidatePairs]] (`isNew` None: every pair once)
+    * and [[deltaNearDupPairs]] (new × old cross pairs only). */
+  private def lshJaccardPairs(docs: DataFrame, k: Int,
+                              isNew: Option[Column]): DataFrame = {
     val nBands = k / 2
-    val shingleSets = tokenized(docs.withColumn("__new", isNew))
-      .select(col("doc_id"), col("__new"), shingles(col("toks")).as("shset"))
+    val carry = isNew.map(_ => col("__new")).toSeq
+    // The shingle set is the expensive projection (k-gram assembly + dedup
+    // over every token of every doc) and is consumed FOUR times: both band
+    // sides of the bucket self-join and both sides of the Jaccard verify.
+    // Materialize it once — without this, Catalyst re-derives it from the
+    // scan per consumer (measured 17s→5s at sf0.1). At cluster scale this
+    // persist would be a staged parquet write; the shape is the same.
+    val shingleSets = tokenized(isNew.fold(docs)(docs.withColumn("__new", _)))
+      .select(col("doc_id") +: carry :+ shingles(col("toks")).as("shset"): _*)
       .persist()
-    // same gated-broadcast verify as lshCandidatePairs
+    // verify sides broadcast when the shingle frame fits the session
+    // threshold (estimate from the un-persisted plan, ×4 inflation for
+    // the array-of-strings row width): the candidate pairs then never
+    // shuffle shingle ARRAYS — the same gated pattern as
+    // prefixJaccardPairs' verify. At scale the gate declines and the
+    // verify joins shuffle on the pair keys.
     val verifyBroadcast = graft.ops.AutoBroadcast.decideFrom(shingleSets, 4)
-    def vSide(df: DataFrame) = if (verifyBroadcast) broadcast(df) else df
-    val sig = shingleSets.select(
-      col("doc_id") +: col("__new") +:
+    val bands = shingleSets
+      .select(col("doc_id") +: carry ++:
         (0 until k).map(i => minhash(col("shset"), i).as(s"mh_$i")): _*)
-    val bandsExploded = sig
       .filter(col("mh_0").isNotNull)
-      .select(col("doc_id"), col("__new"),
-        explode(array((0 until nBands).map(bd =>
-          struct(lit(bd).as("band_idx"),
-            md5(concat_ws("_", lit(bd), col(s"mh_${2 * bd}"), col(s"mh_${2 * bd + 1}")))
-              .as("band_key"))): _*)).as("b"))
-      .select(col("doc_id"), col("__new"), col("b.band_idx"), col("b.band_key"))
-    val candidates = bandsExploded.filter(col("__new")).as("x")
-      .join(bandsExploded.filter(!col("__new")).as("y"), Seq("band_idx", "band_key"))
-      .groupBy(col("x.doc_id").as("doc_id_new"), col("y.doc_id").as("doc_id_old"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-    val inter = size(array_intersect(col("shset_a"), col("shset_b")))
-    val union = size(col("shset_a")) + size(col("shset_b")) - inter
-    candidates
-      .join(vSide(shingleSets.select(col("doc_id").as("doc_id_new"), col("shset").as("shset_a"))),
-        "doc_id_new")
-      .join(vSide(shingleSets.select(col("doc_id").as("doc_id_old"), col("shset").as("shset_b"))),
-        "doc_id_old")
-      .select(col("doc_id_new"), col("doc_id_old"), col("n_shared_bands"),
-        round(inter.cast("double") / union.cast("double"), 6).as("jaccard"))
+      .select(col("doc_id") +: carry :+ explode(array((0 until nBands).map(bd =>
+        struct(lit(bd).as("band_idx"),
+          md5(concat_ws("_", lit(bd), col(s"mh_${2 * bd}"), col(s"mh_${2 * bd + 1}")))
+            .as("band_key"))): _*)).as("b"): _*)
+      .select(col("doc_id") +: carry ++: Seq(col("b.band_idx"), col("b.band_key")): _*)
+    val (candidates, ids) = isNew match {
+      case None =>
+        (BlockedPairs(bands, "doc_id", Seq("band_idx", "band_key"),
+          shared = Some("n_shared_bands")), ("doc_id_a", "doc_id_b"))
+      case Some(_) =>
+        // new × old is oriented by construction: no self-pairs, no twins
+        (bands.filter(col("__new")).as("x")
+          .join(bands.filter(!col("__new")).as("y"), Seq("band_idx", "band_key"))
+          .groupBy(col("x.doc_id").as("doc_id_new"), col("y.doc_id").as("doc_id_old"))
+          .agg(count(lit(1)).as("n_shared_bands")), ("doc_id_new", "doc_id_old"))
+    }
+    BlockedPairs.verifyJaccard(candidates, shingleSets, "doc_id", "shset", ids,
+      verifyBroadcast)
   }
 
   /** Snapshot delta audit — what changed between two corpus versions,
@@ -1188,25 +1158,26 @@ object TextOps {
     * N²; at 100 TB the block key would be source × a signature prefix).
     * similarity = 1 − lev/max(len) — 1.0 is an exact signature match. */
   def fuzzyMatches(docs: DataFrame, simThreshold: Double = 0.95,
-                   sigLen: Int = 160): DataFrame = {
-    val d = docs.select(col("doc_id"), col("source"),
-      fuzzySignature(col("text"), sigLen).as("sig"))
-    val a = d.select(col("source"), col("doc_id").as("doc_id_a"), col("sig").as("sig_a"))
-    val b = d.select(col("source"), col("doc_id").as("doc_id_b"), col("sig").as("sig_b"))
+                   sigLen: Int = 160): DataFrame =
+    levenshteinPairs(docs.select(col("doc_id"), col("source"),
+      fuzzySignature(col("text"), sigLen).as("sig")), Seq("source"),
+      simThreshold, sigLen)
+
+  /** The one body of [[fuzzyMatches]] and [[fuzzyMatchesPrefixBlocked]]:
+    * Levenshtein pairs over `(doc_id, sig)` within `keys` blocks. */
+  private def levenshteinPairs(sigs: DataFrame, keys: Seq[String],
+                               simThreshold: Double, sigLen: Int): DataFrame = {
     // sim ≥ t ⟹ lev ≤ (1−t)·max(len) ≤ (1−t)·sigLen, so the banded
     // (thresholded) Levenshtein is exact for every surviving pair and
     // O(band·len) instead of O(len²) for the overwhelming reject majority
     // (it returns −1 beyond the band, which the filter drops).
     val band = math.max(1, math.floor((1.0 - simThreshold) * sigLen).toInt)
-    a.join(b, Seq("source"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .withColumn("edit_distance", levenshtein(col("sig_a"), col("sig_b"), band))
-      .filter(col("edit_distance") >= 0)
-      .withColumn("similarity", round(
-        lit(1.0) - col("edit_distance").cast("double") /
-          greatest(length(col("sig_a")), length(col("sig_b")), lit(1)), 6))
-      .filter(col("similarity") >= simThreshold)
-      .select("doc_id_a", "doc_id_b", "edit_distance", "similarity")
+    BlockedPairs(sigs, "doc_id", keys, Seq("sig"),
+      scores = Seq(
+        "edit_distance" -> levenshtein(col("sig_a"), col("sig_b"), band),
+        "similarity" -> (lit(1.0) - col("edit_distance").cast("double") /
+          greatest(length(col("sig_a")), length(col("sig_b")), lit(1)))),
+      keep = Some(col("edit_distance") >= 0 && col("similarity") >= simThreshold))
   }
 
   /** Blocked record linkage by Jaro-Winkler similarity — the FOURTH dedup
@@ -1230,16 +1201,10 @@ object TextOps {
     val d = docs.select(col("doc_id"), col("source"),
       fuzzySignature(col("text"), sigLen).as("sig"))
       .withColumn("blk", substring(col("sig"), 1, blockPrefix))
-    val a = d.select(col("source"), col("blk"),
-      col("doc_id").as("doc_id_a"), col("sig").as("sig_a"))
-    val b = d.select(col("source"), col("blk"),
-      col("doc_id").as("doc_id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("source", "blk"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .withColumn("jw_similarity",
-        round(call_function("jaro_winkler", col("sig_a"), col("sig_b")), 6))
-      .filter(col("jw_similarity") >= simThreshold)
-      .select("doc_id_a", "doc_id_b", "jw_similarity")
+    BlockedPairs(d, "doc_id", Seq("source", "blk"), Seq("sig"),
+      scores = Seq("jw_similarity" ->
+        call_function("jaro_winkler", col("sig_a"), col("sig_b"))),
+      keep = Some(col("jw_similarity") >= simThreshold))
   }
 
   /** Sorted-neighborhood dedup (Hernández & Stolfo 1995) — the FIFTH
@@ -1297,8 +1262,8 @@ object TextOps {
       .withColumn("band", (col("rb") / lit(window)).cast("long"))
     a.join(b, col("probe") === col("band"))
       .filter((col("rb") - col("ra")).between(1, window))
-      .withColumn("jw_similarity",
-        round(call_function("jaro_winkler", col("sig_a"), col("sig_b")), 6))
+      .withColumn("jw_similarity", BlockedPairs.round6(
+        call_function("jaro_winkler", col("sig_a"), col("sig_b"))))
       .filter(col("jw_similarity") >= simThreshold)
       .select(col("doc_id_a"), col("doc_id_b"),
         (col("rb") - col("ra")).as("rank_gap"), col("jw_similarity"))
@@ -1407,24 +1372,10 @@ object TextOps {
     * `(doc_id, source, sig)` frame — see [[snmPairsOnSigs]]. */
   private[text] def fuzzyMatchesPrefixBlockedOnSigs(
       sigs: DataFrame, simThreshold: Double = 0.95,
-      sigLen: Int = 160, prefixLen: Int = 8): DataFrame = {
-    val d = sigs.select(col("doc_id"), col("source"), col("sig"))
-      .withColumn("blk", substring(col("sig"), 1, prefixLen))
-    val a = d.select(col("source"), col("blk"),
-      col("doc_id").as("doc_id_a"), col("sig").as("sig_a"))
-    val b = d.select(col("source"), col("blk"),
-      col("doc_id").as("doc_id_b"), col("sig").as("sig_b"))
-    val band = math.max(1, math.floor((1.0 - simThreshold) * sigLen).toInt)
-    a.join(b, Seq("source", "blk"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .withColumn("edit_distance", levenshtein(col("sig_a"), col("sig_b"), band))
-      .filter(col("edit_distance") >= 0)
-      .withColumn("similarity", round(
-        lit(1.0) - col("edit_distance").cast("double") /
-          greatest(length(col("sig_a")), length(col("sig_b")), lit(1)), 6))
-      .filter(col("similarity") >= simThreshold)
-      .select("doc_id_a", "doc_id_b", "edit_distance", "similarity")
-  }
+      sigLen: Int = 160, prefixLen: Int = 8): DataFrame =
+    levenshteinPairs(
+      sigs.withColumn("blk", substring(col("sig"), 1, prefixLen)),
+      Seq("source", "blk"), simThreshold, sigLen)
 
   /** Exact substring-duplication signal: for every k-token span (ALL
     * positions, not the distinct shingle set), does the identical span
@@ -2507,9 +2458,6 @@ object TextOps {
     // broadcast); a no-op wherever the frame already carries cluster
     // parallelism — the Tables.rebalanced posture.
     val target = v.sparkSession.sparkContext.defaultParallelism
-    val vs = if (v.rdd.getNumPartitions < target) v.repartition(target) else v
-    val a = vs.select(col("block"), col("doc_id").as("doc_id_a"), col("vec").as("vec_a"))
-    val b = v.select(col("block"), col("doc_id").as("doc_id_b"), col("vec").as("vec_b"))
     // top-k via the k-bounded native aggregate instead of a row_number
     // window (r12): the window had to shuffle + sort the WHOLE block
     // fan-out per document — with a dominant block (sf0.1: one bucket
@@ -2517,11 +2465,10 @@ object TextOps {
     // single giant sort; topk_by partial-reduces every pair where it is
     // produced and ships ≤ k rows per doc per partition. Ordering
     // contract identical: rounded cosine DESC, doc_id_b ASC.
-    a.join(b, Seq("block"))
-      .filter(col("doc_id_a") =!= col("doc_id_b"))
-      .withColumn("cosine",
-        call_function("round6",
-          call_function("vec_dot", col("vec_a"), col("vec_b"))))
+    BlockedPairs(v, "doc_id", Seq("block"), Seq("vec"),
+        scores = Seq("cosine" -> call_function("vec_dot", col("vec_a"), col("vec_b"))),
+        ordered = true,
+        probe = vs => if (vs.rdd.getNumPartitions < target) vs.repartition(target) else vs)
       .groupBy("doc_id_a")
       .agg(call_function("topk_by", col("doc_id_b"), col("cosine"),
         lit(k)).as("tk"))
@@ -2780,10 +2727,9 @@ object TextOps {
       .filter(col("ubound").cast("double") * (1.0 + threshold) >=
         lit(threshold) * (col("sz_a") + col("sz_b")))
       .select("doc_id_a", "doc_id_b", "sz_a", "sz_b")
-    val inter = size(array_intersect(col("toks_a"), col("toks_b")))
-    val union = size(col("toks_a")) + size(col("toks_b")) - inter
-    val dsA = dsets.select(col("doc_id").as("doc_id_a"), col("items").as("toks_a"))
-    val dsB = dsets.select(col("doc_id").as("doc_id_b"), col("items").as("toks_b"))
+    def verify(pairs: DataFrame, broadcastSides: Boolean): DataFrame =
+      BlockedPairs.verifyJaccard(pairs, dsets, "doc_id", "items",
+        ("doc_id_a", "doc_id_b"), broadcastSides)
     // verify-join strategy ladder (the r6-decade regime step, resolved):
     //  (1) corpus arrays fit the session threshold → broadcast them,
     //      pairs never shuffle (the small-scale plan, unchanged);
@@ -2811,10 +2757,7 @@ object TextOps {
     // rung-3 shape measured 100–178 s vs ~77 s checkpointed — the
     // recomputed-candidate stream plans its verify exchanges blind).
     val verified =
-      if (verifyBroadcast)
-        cand.select("doc_id_a", "doc_id_b")
-          .join(broadcast(dsA), "doc_id_a")
-          .join(broadcast(dsB), "doc_id_b")
+      if (verifyBroadcast) verify(cand.select("doc_id_a", "doc_id_b"), true)
       else {
         val candCk = cand.localCheckpoint()
         val thresholdB = graft.ops.AutoBroadcast.thresholdBytes(sets)
@@ -2828,22 +2771,23 @@ object TextOps {
         val (idBytes, j1Bytes) = (st.getLong(0), st.getLong(1))
         val pairIds = candCk.select("doc_id_a", "doc_id_b")
         if (thresholdB > 0 && idBytes <= thresholdB) {
+          val dsA = dsets.select(col("doc_id").as("doc_id_a"), col("items").as("items_a"))
+          val dsB = dsets.select(col("doc_id").as("doc_id_b"), col("items").as("items_b"))
           val j1 = dsA.join(broadcast(pairIds), "doc_id_a")
-          if (j1Bytes <= thresholdB)
-            dsB.join(broadcast(j1.localCheckpoint()), "doc_id_b")
-          else {
-            val j2 = dsB.join(broadcast(pairIds), "doc_id_b")
-              .select("doc_id_a", "doc_id_b", "toks_b")
-            j1.join(j2, Seq("doc_id_a", "doc_id_b"))
-          }
-        } else
-          pairIds.join(dsA, "doc_id_a").join(dsB, "doc_id_b")
+          val joined =
+            if (j1Bytes <= thresholdB)
+              dsB.join(broadcast(j1.localCheckpoint()), "doc_id_b")
+            else {
+              val j2 = dsB.join(broadcast(pairIds), "doc_id_b")
+                .select("doc_id_a", "doc_id_b", "items_b")
+              j1.join(j2, Seq("doc_id_a", "doc_id_b"))
+            }
+          joined.select(col("doc_id_a"), col("doc_id_b"),
+            BlockedPairs.round6(BlockedPairs.setJaccard(col("items_a"), col("items_b")))
+              .as("jaccard"))
+        } else verify(pairIds, false)
       }
-    verified
-      .withColumn("jaccard",
-        call_function("round6", inter.cast("double") / union.cast("double")))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_id_a", "doc_id_b", "jaccard")
+    verified.filter(col("jaccard") >= threshold)
   }
 
   /** K-minimum-values distinct sketch (Bar-Yossef et al. RANDOM'02;
@@ -2982,37 +2926,28 @@ object TextOps {
       .filter(col("rk") <= k)
       .groupBy("grp")
       .agg(array_sort(collect_list("h")).as("kmin"))
-    val pairs = kmin.select(col("grp").as("source_a"), col("kmin").as("ka"))
-      .join(broadcast(
-        kmin.select(col("grp").as("source_b"), col("kmin").as("kb"))))
-      .filter(col("source_a") < col("source_b"))
-    val est = pairs
-      .withColumn("ku", slice(array_sort(array_union(col("ka"), col("kb"))),
-        1, k))
-      .withColumn("kmv_jaccard", round(
-        size(filter(col("ku"), x =>
-          array_contains(col("ka"), x) && array_contains(col("kb"), x)))
-          .cast("double") / size(col("ku")), 6))
+    // no block key: every group pair, the k-min union `ku` merged once
+    val est = BlockedPairs(kmin.select(col("grp").as("source"), col("kmin")),
+        "source", Nil, Seq("kmin"),
+        scores = Seq(
+          "ku" -> slice(array_sort(array_union(col("kmin_a"), col("kmin_b"))), 1, k),
+          "kmv_jaccard" -> (size(filter(col("ku"), x =>
+            array_contains(col("kmin_a"), x) && array_contains(col("kmin_b"), x)))
+            .cast("double") / size(col("ku")))),
+        build = broadcast)
       .select("source_a", "source_b", "kmv_jaccard")
     // exact calibration: |A∩B| via the term-keyed pair join over the
     // SAME distinct frame, sizes from its per-group rollup
     val sizes = dt.groupBy("grp").agg(count(lit(1)).as("n"))
-    val inter = dt.select(col("it"), col("grp").as("source_a"))
-      .join(dt.select(col("it"), col("grp").as("source_b")), "it")
-      .filter(col("source_a") < col("source_b"))
-      .groupBy("source_a", "source_b").agg(count(lit(1)).as("n_inter"))
-    est
-      .join(inter, Seq("source_a", "source_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(broadcast(sizes.select(col("grp").as("source_a"),
-        col("n").as("n_a"))), "source_a")
-      .join(broadcast(sizes.select(col("grp").as("source_b"),
-        col("n").as("n_b"))), "source_b")
-      .withColumn("exact_jaccard", round(
-        col("n_inter").cast("double") /
-          (col("n_a") + col("n_b") - col("n_inter")), 6))
+    val inter = BlockedPairs(dt.select(col("it"), col("grp").as("source")),
+      "source", Seq("it"), shared = Some("n_inter"))
+    BlockedPairs.attach(est.join(inter, Seq("source_a", "source_b"), "left")
+        .na.fill(0L, Seq("n_inter")),
+        sizes, "grp", Seq("n"), ("source_a", "source_b"), broadcastSides = true)
+      .withColumn("exact_jaccard", BlockedPairs.round6(
+        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter"))))
       .withColumn("abs_err",
-        round(abs(col("kmv_jaccard") - col("exact_jaccard")), 6))
+        BlockedPairs.round6(abs(col("kmv_jaccard") - col("exact_jaccard"))))
       .select("source_a", "source_b", "kmv_jaccard", "exact_jaccard",
         "abs_err")
   }

@@ -17,6 +17,18 @@ class ZOrderSpec extends AnyFunSuite {
     val r = Seq((3, 5)).toDF("a", "b")
       .select(ZOrder.zorderKey(col("a"), col("b"), bits = 3)).first()
     assert(r.getLong(0) == 27L)
+    // bit 15 of a lands on bit 31: the sum must not wrap an int
+    val full = Seq((0xffff, 0xffff)).toDF("a", "b")
+      .select(ZOrder.zorderKey(col("a"), col("b"), bits = 16)).first()
+    assert(full.getLong(0) == 0xffffffffL)
+    // 31 bits per input against a plain bit-interleave
+    def morton(a: Int, b: Int, bits: Int): Long = (0 until bits).foldLeft(0L) {
+      (z, i) => z | (((a >> i) & 1L) << (2 * i + 1)) | (((b >> i) & 1L) << (2 * i))
+    }
+    val (a31, b31) = (0x6b2f1c95, 0x3c4d5e6f)
+    val wide = Seq((a31, b31)).toDF("a", "b")
+      .select(ZOrder.zorderKey(col("a"), col("b"), bits = 31)).first()
+    assert(wide.getLong(0) == morton(a31, b31, 31))
   }
 
   test("z-order layout prunes the SECOND dimension better than a plain sort") {
