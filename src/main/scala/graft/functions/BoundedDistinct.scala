@@ -16,9 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * DETERMINISTIC sample (unlike `collect_set`, whose order and — under
   * `LIMIT`-style truncation — membership depend on partitioning).
   *
-  * This is the third and lowest rung of the custom-aggregate ladder the
-  * engine exercises (built-ins → typed `Aggregator` (TopKNeighbors) →
-  * `TypedImperativeAggregate`): an arbitrary mutable buffer (a TreeSet)
+  * This is the lowest rung of the custom-aggregate ladder the engine
+  * exercises (built-ins → `TypedImperativeAggregate`, the rung it shares
+  * with [[TopKByScore]] and [[KMinValues]]): an arbitrary mutable buffer (a TreeSet)
   * with explicit binary serialization between partial and final passes.
   * The buffer never exceeds k+1 entries, so partial aggregation ships at
   * most k strings per group per partition — collect_set's unbounded

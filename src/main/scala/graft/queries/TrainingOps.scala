@@ -4231,7 +4231,7 @@ object TrainingOps extends OpsModule {
           WHERE mrl_rank <= 10 ORDER BY query_id, mrl_rank""",
 
     // identical semantics to emb_knn_brute — the Spark side differs only in
-    // physical strategy (k-bounded typed Aggregator vs windowed row_number)
+    // physical strategy (k-bounded native topk_by aggregate vs windowed row_number)
     "emb_knn_topk" ->
       s"""WITH $duckCosPrelude
           SELECT query_id, neighbor_id, round(cos, 6) AS cosine, knn_rank FROM (

@@ -1,7 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -156,9 +155,6 @@ object Embeddings {
       .withColumn("margin", round(col("pos_cos") - col("neg_cos"), 6))
   }
 
-  /** One scored candidate inside the top-k aggregation. */
-  final case class Neighbor(neighbor_id: Long, cosine: Double)
-
   /** Matryoshka (MRL) two-stage search: score every candidate on the
     * PREFIX of the embedding first (matryoshka-trained models concentrate
     * meaning in the leading dims), keep `candidates` per query, rerank
@@ -200,56 +196,29 @@ object Embeddings {
         round(col("cos"), 6).as("cosine"), col("mrl_rank"))
   }
 
-  /** k-bounded top-k as a typed Aggregator: the buffer holds at most k
-    * neighbors, so partial (map-side) aggregation ships k rows per query
-    * per partition instead of the full candidate set — the scale path that
-    * replaces the windowed row_number (which must shuffle and sort EVERY
-    * candidate) once candidates-per-query outgrow memory. Ordering matches
-    * the window variant exactly: cosine desc, neighbor_id asc. */
-  final class TopKNeighbors(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Neighbor, Seq[Neighbor], Seq[Neighbor]] {
-    private val ord: Ordering[Neighbor] =
-      Ordering.by(n => (-n.cosine, n.neighbor_id))
-    override def zero: Seq[Neighbor] = Nil
-    override def reduce(buf: Seq[Neighbor], n: Neighbor): Seq[Neighbor] =
-      if (buf.sizeIs >= k && ord.gteq(n, buf.last)) buf
-      else (buf :+ n).sorted(ord).take(k)
-    override def merge(a: Seq[Neighbor], b: Seq[Neighbor]): Seq[Neighbor] =
-      (a ++ b).sorted(ord).take(k)
-    override def finish(buf: Seq[Neighbor]): Seq[Neighbor] = buf.sorted(ord)
-    override def bufferEncoder: Encoder[Seq[Neighbor]] = ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[Neighbor]] = ExpressionEncoder()
-  }
-
-  /** knnBruteForce semantics via the k-bounded Aggregator instead of a
-    * window: identical output, hash-aggregated (partial+final) rather than
-    * shuffle-sorted. */
+  /** [[knnBruteForce]] semantics through the k-bounded native
+    * `topk_by` aggregate ([[graft.functions.TopKByScore]]) instead of a
+    * window, the [[graft.text.TextOps.hashedKnn]] shape: the partial
+    * aggregation keeps at most k neighbors per query per partition, so
+    * the exchange ships k rows per query instead of the full candidate
+    * set, and nothing is sorted beyond k. Identical output: the order is
+    * the window's (cosine desc, neighbor_id asc), ranked on the
+    * unrounded cosine and rounded after. */
   def knnTopKAgg(embeddings: DataFrame, queryFilter: Column, k: Int = 10): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       .withColumn("vnorm", norm(col("emb")))
     val q = e.filter(queryFilter)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
         col("vnorm").as("qnorm"))
-    val scored = e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"),
-        struct(col("vec_id").as("neighbor_id"),
-          cosinePre(col("qemb"), col("emb"), col("qnorm"), col("vnorm")).as("cosine"))
-          .as("n"))
-      .as[(Long, Neighbor)]
-    scored
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(new TopKNeighbors(k).toColumn.name("topk"))
-      .flatMap { case (queryId, neighbors) =>
-        neighbors.iterator.zipWithIndex.map { case (n, i) =>
-          (queryId, n.neighbor_id, n.cosine, i + 1)
-        }
-      }
-      .toDF("query_id", "neighbor_id", "cos", "knn_rank")
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("cos"), 6).as("cosine"), col("knn_rank"))
+    e.join(broadcast(q), col("vec_id") =!= col("query_id"))
+      .groupBy("query_id")
+      .agg(call_function("topk_by", col("vec_id"),
+        cosinePre(col("qemb"), col("emb"), col("qnorm"), col("vnorm")),
+        lit(k)).as("tk"))
+      .select(col("query_id"), posexplode(col("tk")).as(Seq("p", "n")))
+      .select(col("query_id"), col("n.id").as("neighbor_id"),
+        round(col("n.score"), 6).as("cosine"),
+        (col("p") + 1).cast("int").as("knn_rank"))
   }
 
   /** Per-cell mean centroid via the native [[graft.functions.VecAvg]]
@@ -284,16 +253,8 @@ object Embeddings {
     val q = queries
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
         col("vnorm").as("qnorm"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("ccos").desc, col("cell").asc)
-    val probes = q.crossJoin(broadcast(cents))
-      .withColumn("ccos", cosine(col("qemb"), col("cemb")))
-      .withColumn("probe_rank", row_number().over(wProbe))
-      .filter(col("probe_rank") <= nprobe)
-      .select(col("query_id"), col("qemb"), col("qnorm"), col("cell").as("probe_cell"))
-
     val wK = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    probes
+    ivfProbes(q, cents, nprobe, keep = Seq("qemb", "qnorm"))
       .join(e, col("probe_cell") === col("cell") && col("vec_id") =!= col("query_id"))
       .withColumn("cos",
         cosinePre(col("qemb"), col("emb"), col("qnorm"), col("vnorm")))
@@ -308,23 +269,16 @@ object Embeddings {
     * index maintenance — run it when drift accumulates, then rebuild
     * centroids from the new assignment.
     *
-    * Argmax WITHOUT a window: a window by vec_id would shuffle the
-    * scored (corpus × cells) rows; `max(struct(score, -cell))` instead
-    * gets map-side partial aggregation — after the broadcast cross join
-    * the candidates for a vector are co-located, so the shuffle carries
-    * one pre-reduced row per vector. Ties break to the lowest cell id
-    * (the -cell component), deterministically in any engine. */
+    * The argmax is the `cell_argmax` scan of [[exhaustiveAssign]],
+    * carrying `old_cell` through: one broadcast one-row centroid array,
+    * no window and no re-group exchange over the scored corpus. Ties
+    * break to the lowest cell id, deterministically in any engine. */
   def kmeansAssign(embeddings: DataFrame): DataFrame = {
-    val cents = centroids(embeddings)
     val e = embeddings.select(col("vec_id"), col("label").as("old_cell"),
       asDouble(col("embedding")).as("emb"))
-    e.crossJoin(broadcast(cents))
-      .withColumn("acos", cosine(col("emb"), col("cemb")))
-      .groupBy("vec_id", "old_cell")
-      .agg(max(struct(col("acos").as("s"), (-col("cell")).as("nc"))).as("m"))
-      .select(col("vec_id"), col("old_cell"),
-        (-col("m.nc")).as("new_cell"),
-        (col("old_cell") =!= -col("m.nc")).cast("int").as("moved"))
+    exhaustiveAssign(e, centroids(embeddings), keep = Seq("old_cell"))
+      .select(col("vec_id"), col("old_cell"), col("cell").as("new_cell"),
+        (col("old_cell") =!= col("cell")).cast("int").as("moved"))
   }
 
   /** Persist the IVF index: the build/search split of a real ANN serving
@@ -381,7 +335,8 @@ object Embeddings {
     * centroids go stale as data drifts (new vectors join the cells that
     * exist, not the cells that ideally would), and the refresh pass is
     * [[kmeansAssign]] + [[buildIvfIndex]] when drift accumulates.
-    * Routing is the same argmax-without-a-window as kmeansAssign. */
+    * Routing is [[routeToCells]]: the same `cell_argmax` scan as
+    * kmeansAssign, and a zero-norm vector fails the append. */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                        embeddings: DataFrame): Unit =
     appendRoutedToIvf(routeToIvfCells(spark, indexDir, embeddings), indexDir)
@@ -404,16 +359,20 @@ object Embeddings {
     * same low-cell-id tie-break) and can never disagree: the replay
     * idempotence of [[graft.streaming.SemDedupIngest]] /
     * [[graft.streaming.VectorIngest]] rests on "stored cell = where this
-    * vector routes", which a rebuild must re-establish by construction. */
+    * vector routes", which a rebuild must re-establish by construction.
+    *
+    * The argmax is [[exhaustiveAssign]]'s `cell_argmax` scan carrying
+    * `emb`/`vnorm` through, so no aggregate and no join back to the
+    * input. A zero-norm vector has no cosine to any centroid: it raises
+    * an error here rather than route silently to the lowest cell
+    * (stream input reaches this entry from outside the program). */
   def routeToCells(embeddings: DataFrame, cents: DataFrame): DataFrame = {
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       .withColumn("vnorm", norm(col("emb")))
-    val routed = e.crossJoin(broadcast(cents))
-      .withColumn("acos", cosine(col("emb"), col("cemb")))
-      .groupBy("vec_id")
-      .agg(max(struct(col("acos").as("s"), (-col("cell")).as("nc"))).as("m"))
-      .select(col("vec_id"), (-col("m.nc")).as("cell"))
-    e.join(routed, "vec_id")
+      .withColumn("vnorm", when(col("vnorm") === 0.0,
+        raise_error(concat(lit("zero-norm vector "), col("vec_id").cast("string"),
+          lit(" has no cosine to any centroid")))).otherwise(col("vnorm")))
+    exhaustiveAssign(e, cents, keep = Seq("emb", "vnorm"))
       .select(col("vec_id"), col("emb"), col("vnorm"), col("cell"))
   }
 
@@ -496,8 +455,8 @@ object Embeddings {
   /** The Lloyd ASSIGN pass, factored once: argmax-assign every vector of
     * `e` (vec_id, emb) to its nearest (cosine) centroid of `cents`
     * (cell, cemb), returning (vec_id, cell, ccos) where ccos is the
-    * winning cosine. Always argmax WITHOUT a window (map-side-combined
-    * `max(struct)`, ties to the lowest cell id — see [[kmeansAssign]]).
+    * winning cosine. Always argmax WITHOUT a window (the `cell_argmax`
+    * scan of [[cellArgmax]], ties to the lowest cell id).
     *
     * `nCoarse <= 1` is the exhaustive single-level scan — N·|cells|
     * distance evaluations, BIT-IDENTICAL to the historical plan. With
@@ -573,11 +532,18 @@ object Embeddings {
   private def cellArgmax(emb: Column, cents: Column): Column =
     call_function("cell_argmax", emb, cents)
 
-  private def exhaustiveAssign(e: DataFrame, cents: DataFrame): DataFrame =
+  /** The one-level assign: every row of `e` (vec_id, emb, `keep`…)
+    * argmax-scans the whole broadcast centroid array, returning
+    * (vec_id, `keep`…, cell, ccos) — the one nearest-centroid argmax of
+    * [[kmeansAssign]], [[routeToCells]] and the exhaustive Lloyd pass. */
+  private def exhaustiveAssign(e: DataFrame, cents: DataFrame,
+                               keep: Seq[String] = Nil): DataFrame = {
+    val carried = col("vec_id") +: keep.map(col)
     e.crossJoin(broadcast(centsArray(cents, "cell", "cemb")))
-      .select(col("vec_id"), cellArgmax(col("emb"), col("cents")).as("m"))
+      .select(carried :+ cellArgmax(col("emb"), col("cents")).as("m"): _*)
       .filter(col("m").isNotNull)
-      .select(col("vec_id"), col("m.cell").as("cell"), col("m.ccos").as("ccos"))
+      .select(carried ++ Seq(col("m.cell").as("cell"), col("m.ccos").as("ccos")): _*)
+  }
 
   /** The routed (2- or 3-level) assign over a checkpointed centroid
     * table `c`, with EFFECTIVE level widths k1 (mid) / k2 (top). */
@@ -666,8 +632,8 @@ object Embeddings {
     * join degrades toward O(N²/k). Init is deterministic and
     * engine-portable (seed group = vec_id mod k), followed by one Lloyd
     * assignment step against the seed-group means via [[assignToCells]]
-    * (map-side-combined `max(struct(...))`, ties to the lowest cell id;
-    * `nCoarse > 1` routes the step two-level). Feed the output back
+    * (`cell_argmax`, ties to the lowest cell id; `nCoarse > 1` routes
+    * the step two-level). Feed the output back
     * through [[centroids]] + reassignment for more Lloyd steps when the
     * partition needs polishing. */
   def kmeansCells(embeddings: DataFrame, nCells: Int, nCoarse: Int = 1,
@@ -683,10 +649,10 @@ object Embeddings {
     * [[kmeansCells]] — the training loop behind every IVF/PQ/SemDeDup
     * cell in this library, expressed as the iterative-ML shape Spark
     * does well: per round, ONE |cells|×dims centroid aggregation over
-    * the corpus and ONE broadcast argmax re-assignment
-    * (map-side-combined `max(struct)` — never a window over the scored
-    * corpus). The assignment frame carried between rounds is narrow
-    * (vec_id, cell) and localCheckpoint'd, so lineage stays flat and
+    * the corpus and ONE broadcast `cell_argmax` re-assignment (never a
+    * window over the scored corpus). The assignment frame carried
+    * between rounds is narrow (vec_id, cell, ccos) and
+    * localCheckpoint'd ([[lloydRounds]]), so lineage stays flat and
     * per-round driver traffic is zero — iteration count is the only
     * sequential element, exactly like [[graft.text.TextOps.bpeTrain]].
     * Ties break to the lowest cell id, deterministically in any engine.
@@ -734,28 +700,37 @@ object Embeddings {
                          sampleMod: Int = 1, nCoarse: Int = 1,
                          nCoarse2: Int = 1): DataFrame = {
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
+    val (t, rounds) = lloydRounds(e, nCells, iters, sampleMod, nCoarse, nCoarse2)
+    val asg = rounds.last.select("vec_id", "cell")
+    if (sampleMod <= 1) asg
+    else assignToCells(e, trainedCentroids(t, asg), nCoarse, nCoarse2)
+      .select("vec_id", "cell")
+  }
+
+  /** The seeded Lloyd loop behind [[kmeansTrainSampled]] and
+    * [[kmeansQuality]]: the training frame `t` (the `vec_id ≡ 0 (mod
+    * sampleMod)` sample of `e`, or `e` itself) and the assignment before
+    * and after each round — the seed (vec_id, cell) first, then `iters`
+    * rounds of (vec_id, cell, ccos), each assigned against the centroids
+    * of the one before. Every round is localCheckpoint'd lazily: the next
+    * round's (or the caller's) job materializes it (r12). */
+  private def lloydRounds(e: DataFrame, nCells: Int, iters: Int, sampleMod: Int,
+                          nCoarse: Int, nCoarse2: Int): (DataFrame, Seq[DataFrame]) = {
     val t = if (sampleMod <= 1) e
             else e.filter(pmod(col("vec_id"), lit(sampleMod.toLong)) === 0L)
     val seedId = if (sampleMod <= 1) col("vec_id")
                  else expr(s"vec_id div ${sampleMod}L")
-    var asg = t.select(col("vec_id"),
-      pmod(seedId, lit(nCells.toLong)).as("cell"))
-    for (_ <- 0 until iters) {
-      val cents = centroids(
-        t.join(asg, "vec_id")
-          .select(col("cell").as("label"), col("emb").as("embedding")))
-      asg = assignToCells(t, cents, nCoarse, nCoarse2)
-        .select("vec_id", "cell")
-        .localCheckpoint(false) // materialized by the next round / caller (r12)
-    }
-    if (sampleMod <= 1) asg
-    else {
-      val finalCents = centroids(
-        t.join(asg, "vec_id")
-          .select(col("cell").as("label"), col("emb").as("embedding")))
-      assignToCells(e, finalCents, nCoarse, nCoarse2).select("vec_id", "cell")
-    }
+    val seed = t.select(col("vec_id"), pmod(seedId, lit(nCells.toLong)).as("cell"))
+    (t, (1 to iters).scanLeft(seed) { (asg, _) =>
+      assignToCells(t, trainedCentroids(t, asg), nCoarse, nCoarse2)
+        .localCheckpoint(false)
+    })
   }
+
+  /** Per-cell centroids of the training frame `t` under assignment `asg`. */
+  private def trainedCentroids(t: DataFrame, asg: DataFrame): DataFrame =
+    centroids(t.join(asg, "vec_id")
+      .select(col("cell").as("label"), col("emb").as("embedding")))
 
   /** Convergence telemetry for [[kmeansTrain]] — one row per round r:
     * the mean cosine of every vector to the centroid it was assigned in
@@ -763,44 +738,28 @@ object Embeddings {
     * cell vs round r−1. Mean cosine rises and movement falls as Lloyd's
     * converges; this is the signal that picks `iters` (run until
     * n_moved ~ 0) and the drift monitor that schedules an IVF index
-    * refresh. The per-round metrics are FREE on the corpus side: the
-    * argmax that picks the new cell already carries the winning cosine
-    * (`m.s` IS cosine-to-assigned-centroid, bit-identical to recomputing
-    * it against the broadcast centroid table), so telemetry is a narrow
-    * 3-column self-join with the previous assignment — no second scoring
-    * pass over the corpus, no window, no driver traffic beyond the
-    * iters-row result. */
+    * refresh. The rounds are [[lloydRounds]], the loop
+    * [[kmeansTrainSampled]] trains with, so under sampled training the
+    * telemetry measures convergence on the sample — the thing the
+    * iteration-count decision is actually made on. The per-round metrics
+    * are FREE on the corpus side: the argmax that picks the new cell
+    * already carries the winning cosine (`ccos` IS
+    * cosine-to-assigned-centroid), so telemetry is a narrow 3-column
+    * self-join with the previous assignment — no second scoring pass
+    * over the corpus, no window, no driver traffic beyond the iters-row
+    * result. */
   def kmeansQuality(embeddings: DataFrame, nCells: Int, iters: Int,
                     sampleMod: Int = 1, nCoarse: Int = 1,
                     nCoarse2: Int = 1): DataFrame = {
-    val eAll = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-    // telemetry follows the TRAINING rounds, so under sampled training
-    // ([[kmeansTrainSampled]]) it measures convergence on the sample —
-    // the thing the iteration-count decision is actually made on; the
-    // seed divides by sampleMod first for the same gcd-coverage reason
-    val e = if (sampleMod <= 1) eAll
-            else eAll.filter(pmod(col("vec_id"), lit(sampleMod.toLong)) === 0L)
-    val seedId = if (sampleMod <= 1) col("vec_id")
-                 else expr(s"vec_id div ${sampleMod}L")
-    var asg = e.select(col("vec_id"),
-      pmod(seedId, lit(nCells.toLong)).as("cell"))
-    val rounds = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    for (r <- 1 to iters) {
-      val cents = centroids(
-        e.join(asg, "vec_id")
-          .select(col("cell").as("label"), col("emb").as("embedding")))
-      val next = assignToCells(e, cents, nCoarse, nCoarse2)
-        .localCheckpoint()
-      val prev = asg.select(col("vec_id"), col("cell").as("prev_cell"))
-      rounds += next
-        .join(prev, "vec_id")
+    val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
+    val (_, rounds) = lloydRounds(e, nCells, iters, sampleMod, nCoarse, nCoarse2)
+    rounds.zip(rounds.tail).zipWithIndex.map { case ((prev, next), i) =>
+      next.join(prev.select(col("vec_id"), col("cell").as("prev_cell")), "vec_id")
         .agg(
           round(avg(col("ccos")), 6).as("mean_ccos"),
           sum((col("cell") =!= col("prev_cell")).cast("long")).as("n_moved"))
-        .select(lit(r).as("round"), col("mean_ccos"), col("n_moved"))
-      asg = next.select("vec_id", "cell")
-    }
-    rounds.reduce(_ unionByName _)
+        .select(lit(i + 1).as("round"), col("mean_ccos"), col("n_moved"))
+    }.reduce(_ unionByName _)
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): SEMANTIC dedup scoped
@@ -1472,10 +1431,23 @@ object Embeddings {
   /** [[pqCodes]] against an already-derived codebook — callers that also
     * need the centroids elsewhere (pqSearch's LUT, a persisted index
     * build) pass them in so the centroid aggregation runs once. */
-  def pqCodesWith(embeddings: DataFrame, cents: DataFrame, m: Int): DataFrame = {
-    val dims = embeddings.select(size(col("embedding"))).first().getInt(0)
+  def pqCodesWith(embeddings: DataFrame, cents: DataFrame, m: Int): DataFrame =
+    pqCodesOfDims(embeddings, cents, m, vectorDims(embeddings, "embedding"))
+
+  /** The vector width of `vecCol`, read from its first row: one eager job,
+    * run once per search and handed to every step that needs it. */
+  private def vectorDims(df: DataFrame, vecCol: String): Int =
+    df.select(size(col(vecCol))).first().getInt(0)
+
+  /** The PQ subvector width, dims / m. */
+  private def pqDsub(dims: Int, m: Int): Int = {
     require(dims % m == 0, s"dims $dims not divisible by m=$m")
-    val dsub = dims / m
+    dims / m
+  }
+
+  private def pqCodesOfDims(embeddings: DataFrame, cents: DataFrame, m: Int,
+                            dims: Int): DataFrame = {
+    val dsub = pqDsub(dims, m)
     val e = pqProject(
       embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb")),
       "emb", Seq(col("vec_id")), m, dsub, "e")
@@ -1502,12 +1474,12 @@ object Embeddings {
     */
   def pqSearch(embeddings: DataFrame, queryFilter: Column, k: Int = 5,
                m: Int = 4): DataFrame = {
-    val dims = embeddings.select(size(col("embedding"))).first().getInt(0)
+    val dims = vectorDims(embeddings, "embedding")
     val queries = embeddings.filter(queryFilter)
       .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qemb"))
     // one centroid derivation feeds both the code assignment and the LUT
     val cents = centroids(embeddings)
-    pqSearchCore(pqCodesWith(embeddings, cents, m), cents, queries, k, m, dims)
+    pqSearchCore(pqCodesOfDims(embeddings, cents, m, dims), cents, queries, k, m, dims)
   }
 
   /** Persist the PQ index — codes + codebook, the PQ sibling of
@@ -1525,45 +1497,58 @@ object Embeddings {
     * (query_id, qemb double[]). */
   def searchPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                     queries: DataFrame, k: Int = 5, m: Int = 4): DataFrame = {
-    val dims = queries.select(size(col("qemb"))).first().getInt(0)
+    val dims = vectorDims(queries, "qemb")
     pqSearchCore(spark.read.parquet(s"$indexDir/codes"),
       spark.read.parquet(s"$indexDir/codebook"), queries, k, m, dims)
   }
 
+  /** Exhaustive ADC: every code row is a candidate of every query. */
   private def pqSearchCore(codes: DataFrame, cents: DataFrame, queries: DataFrame,
                            k: Int, m: Int, dims: Int): DataFrame = {
-    require(dims % m == 0, s"dims $dims not divisible by m=$m")
-    val dsub = dims / m
+    val lut = adcLut(queries, cents, m, dims, "query_id")
+    adcTopK(longCodes(codes, Seq("vec_id"), m)
+      .join(broadcast(lut), col("csub") === col("sub") && col("code") === col("cell"))
+      .filter(col("vec_id") =!= col("query_id")), m, k)
+  }
+
+  /** Per-query ADC lookup table in LONG form — (`qid`, sub, cell, d) with
+    * d = ‖q_sub − codebook[cell]_sub‖² — so code lookup is ONE broadcast
+    * equi-join on (sub, code) instead of m separate join subtrees (which
+    * would each re-derive the centroid table: no exchange reuse across
+    * differently-projected broadcasts). `queries` is (query_id, qemb). */
+  private def adcLut(queries: DataFrame, cents: DataFrame, m: Int, dims: Int,
+                     qid: String): DataFrame = {
+    val dsub = pqDsub(dims, m)
     val q = pqProject(queries, "qemb", Seq(col("query_id")), m, dsub, "q")
     val c = pqProject(cents, "cemb", Seq(col("cell")), m, dsub, "c")
-    // per-query LUT in LONG form — (query_id, sub, cell, d) — so code
-    // lookup is ONE broadcast equi-join on (sub, code) instead of m
-    // separate join subtrees (which would each re-derive the centroid
-    // table: no exchange reuse across differently-projected broadcasts)
-    val lut = q.crossJoin(broadcast(c))
-      .select(col("query_id"), col("cell"),
+    q.crossJoin(broadcast(c))
+      .select(col("query_id").as(qid), col("cell"),
         explode(array((0 until m).map(j => struct(lit(j).as("sub"),
           dist2Pre(col(s"qn2_$j"), col(s"qsub_$j"), col(s"csub_$j"), col(s"cn2_$j"))
             .as("d"))): _*)).as("sd"))
-      .select(col("query_id"), col("sd.sub").as("sub"), col("cell"), col("sd.d").as("d"))
-    val codesLong = codes
-      .select(col("vec_id"),
+      .select(col(qid), col("sd.sub").as("sub"), col("cell"), col("sd.d").as("d"))
+  }
+
+  /** A code table (`keep`…, code_0..code_{m-1}) in LONG form: one
+    * (`keep`…, csub, code) row per subspace, ready for the LUT join. */
+  private def longCodes(codes: DataFrame, keep: Seq[String], m: Int): DataFrame =
+    codes.select(keep.map(col) :+
         explode(array((0 until m).map(j => struct(lit(j).as("sub"),
-          col(s"code_$j").as("code"))): _*)).as("sc"))
-      .select(col("vec_id"), col("sc.sub").as("csub"), col("sc.code").as("code"))
-    // per (query, vector): one row per subspace → m conditional aggregates
-    // re-widen it, so the ADC sum runs in a FIXED order (d_0+d_1+…),
-    // map-side combinable and bit-deterministic
-    val perSub = codesLong
-      .join(broadcast(lut), col("csub") === col("sub") && col("code") === col("cell"))
-      .groupBy("query_id", "vec_id")
-      .agg((0 until m).map(j => max(when(col("sub") === j, col("d"))).as(s"d_$j")).head,
-        (0 until m).map(j => max(when(col("sub") === j, col("d"))).as(s"d_$j")).tail: _*)
-    val est = (0 until m).map(j => col(s"d_$j")).reduce(_ + _)
-    val w = Window.partitionBy("query_id").orderBy(col("est_dist").asc, col("vec_id").asc)
-    perSub
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("est_dist", est)
+          col(s"code_$j").as("code"))): _*)).as("sc"): _*)
+      .select(keep.map(col) ++ Seq(col("sc.sub").as("csub"), col("sc.code").as("code")): _*)
+
+  /** The ADC tail over LUT-joined candidate rows (query_id, vec_id, sub,
+    * d): one row per subspace → m conditional aggregates re-widen it, so
+    * the sum runs in a FIXED order (d_0+d_1+…), map-side combinable and
+    * bit-deterministic; then the per-query top-k by (est_dist, vec_id). */
+  private def adcTopK(scored: DataFrame, m: Int, k: Int): DataFrame = {
+    val aggs = (0 until m).map(j =>
+      max(when(col("sub") === j, col("d"))).as(s"d_$j"))
+    val w = Window.partitionBy("query_id")
+      .orderBy(col("est_dist").asc, col("vec_id").asc)
+    scored.groupBy("query_id", "vec_id")
+      .agg(aggs.head, aggs.tail: _*)
+      .withColumn("est_dist", (0 until m).map(j => col(s"d_$j")).reduce(_ + _))
       .withColumn("knn_rank", row_number().over(w))
       .filter(col("knn_rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -1583,10 +1568,11 @@ object Embeddings {
     * (broadcast); candidate generation is one broadcast join against the
     * code table's cell column (partition-prunable in a persisted layout,
     * see [[buildIvfIndex]]); the ADC LUT join and fixed-order sum are
-    * [[pqSearchCore]]'s, restricted to candidates. */
+    * [[pqSearchCore]]'s ([[adcLut]], [[adcTopK]]), restricted to
+    * candidates. */
   def ivfPqSearch(embeddings: DataFrame, queryFilter: Column, k: Int = 5,
                   nprobe: Int = 1, m: Int = 4): DataFrame = {
-    val dims = embeddings.select(size(col("embedding"))).first().getInt(0)
+    val dims = vectorDims(embeddings, "embedding")
     // |cells|-row frame consumed by THREE differently-projected broadcast
     // subtrees (codes, probes, ADC LUT) — Spark gets no exchange reuse
     // across those, so without materialization the corpus-side centroid
@@ -1595,22 +1581,24 @@ object Embeddings {
     val cents = centroids(embeddings).localCheckpoint()
     val queries = embeddings.filter(queryFilter)
       .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qemb"))
-    val codes = pqCodesWith(embeddings, cents, m)
+    val codes = pqCodesOfDims(embeddings, cents, m, dims)
       .join(embeddings.select(col("vec_id"), col("label").as("cell")), "vec_id")
     ivfPqCore(codes, cents, queries, ivfProbes(queries, cents, nprobe), k, m, dims)
   }
 
   /** IVF probe routing: each query's `nprobe` nearest centroids by
-    * cosine — query-set × nprobe rows, always broadcastable. */
-  private def ivfProbes(queries: DataFrame, cents: DataFrame,
-                        nprobe: Int): DataFrame = {
+    * cosine (ties to the lowest cell) — query-set × nprobe rows, always
+    * broadcastable. `queries` is (query_id, qemb, `keep`…); the output is
+    * (query_id, `keep`…, probe_cell). */
+  private def ivfProbes(queries: DataFrame, cents: DataFrame, nprobe: Int,
+                        keep: Seq[String] = Nil): DataFrame = {
     val wProbe = Window.partitionBy("query_id")
       .orderBy(col("ccos").desc, col("cell").asc)
     queries.crossJoin(broadcast(cents))
       .withColumn("ccos", cosine(col("qemb"), col("cemb")))
       .withColumn("pr", row_number().over(wProbe))
       .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("cell").as("probe_cell"))
+      .select(col("query_id") +: keep.map(col) :+ col("cell").as("probe_cell"): _*)
   }
 
   /** Persist the IVF-PQ index: PQ codes PARTITIONED BY CELL plus the
@@ -1637,7 +1625,7 @@ object Embeddings {
   def searchIvfPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                        queries: DataFrame, k: Int = 5, nprobe: Int = 1,
                        m: Int = 4): DataFrame = {
-    val dims = queries.select(size(col("qemb"))).first().getInt(0)
+    val dims = vectorDims(queries, "qemb")
     val cents = spark.read.parquet(s"$indexDir/codebook")
     val q = queries.select(col("query_id"), asDouble(col("qemb")).as("qemb"))
     val probes = ivfProbes(q, cents, nprobe)
@@ -1651,40 +1639,12 @@ object Embeddings {
     * `codes` carries (vec_id, cell, code_0..code_{m-1}). */
   private def ivfPqCore(codes: DataFrame, cents: DataFrame, queries: DataFrame,
                         probes: DataFrame, k: Int, m: Int, dims: Int): DataFrame = {
-    require(dims % m == 0, s"dims $dims not divisible by m=$m")
-    val dsub = dims / m
+    val lut = adcLut(queries, cents, m, dims, "lq")
     val cand = codes.join(broadcast(probes), col("cell") === col("probe_cell"))
       .filter(col("vec_id") =!= col("query_id"))
-    val candLong = cand.select(col("query_id"), col("vec_id"),
-      explode(array((0 until m).map(j => struct(lit(j).as("sub"),
-        col(s"code_$j").as("code"))): _*)).as("sc"))
-      .select(col("query_id"), col("vec_id"),
-        col("sc.sub").as("csub"), col("sc.code").as("code"))
-    val q = pqProject(queries, "qemb", Seq(col("query_id")), m, dsub, "q")
-    val c = pqProject(cents, "cemb", Seq(col("cell")), m, dsub, "c")
-    val lut = q.crossJoin(broadcast(c))
-      .select(col("query_id").as("lq"), col("cell"),
-        explode(array((0 until m).map(j => struct(lit(j).as("sub"),
-          dist2Pre(col(s"qn2_$j"), col(s"qsub_$j"), col(s"csub_$j"), col(s"cn2_$j"))
-            .as("d"))): _*)).as("sd"))
-      .select(col("lq"), col("sd.sub").as("sub"), col("cell"), col("sd.d").as("d"))
-    val aggs = (0 until m).map(j =>
-      max(when(col("sub") === j, col("d"))).as(s"d_$j"))
-    val perSub = candLong
-      .join(broadcast(lut),
-        col("query_id") === col("lq") && col("csub") === col("sub") &&
-          col("code") === col("cell"))
-      .groupBy("query_id", "vec_id")
-      .agg(aggs.head, aggs.tail: _*)
-    val est = (0 until m).map(j => col(s"d_$j")).reduce(_ + _)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("est_dist").asc, col("vec_id").asc)
-    perSub
-      .withColumn("est_dist", est)
-      .withColumn("knn_rank", row_number().over(w))
-      .filter(col("knn_rank") <= k)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("est_dist"), 6).as("est_dist"), col("knn_rank"))
+    adcTopK(longCodes(cand, Seq("query_id", "vec_id"), m)
+      .join(broadcast(lut), col("query_id") === col("lq") &&
+        col("csub") === col("sub") && col("code") === col("cell")), m, k)
   }
 
   /** Cluster-quality metric (centroid silhouette): per vector,
@@ -1693,9 +1653,8 @@ object Embeddings {
     * centroid than to any rival — averaged per cell this is the cheap,
     * one-pass health check that tells you when the IVF/PQ cell structure
     * has drifted enough to warrant a [[kmeansAssign]] refresh (full
-    * silhouette is O(N²); the centroid form is O(N·cells)). Same
-    * argmax-free shape as kmeansAssign: conditional maxes under one
-    * groupBy, no window. */
+    * silhouette is O(N²); the centroid form is O(N·cells)). Two
+    * conditional maxes under one groupBy, no window. */
   def silhouette(embeddings: DataFrame): DataFrame = {
     val cents = centroids(embeddings)
     val e = embeddings.select(col("vec_id"), col("label").as("own"),

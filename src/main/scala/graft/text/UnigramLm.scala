@@ -239,30 +239,7 @@ object UnigramLm {
     * trainer applies to its weights: cross-partition float sums drift in
     * the last bits, and unpinned drift would COMPOUND over rounds. */
   private def emRound(occ: DataFrame, vocab: DataFrame): DataFrame = {
-    // r13 (guide §2.3/§2.4): expected counts come straight off the
-    // lattice rows — each es entry [i,j,p] IS one scored occurrence, and
-    // its piece identity is the span substring (the exclEs pattern
-    // pieceLoss already relies on). The r12 shape re-joined the full
-    // occurrence table to the lattice on `word` (one exchange of occ +
-    // the join) only to re-attach (j,i,p) values the lattice already
-    // carries. Same ec multiset, same multiplication order, 6dp-rounded
-    // after the piece aggregation as before (the repo float contract).
-    val len = length(col("word"))
-    val lat = wordLattice(occ, vocab)
-      .withColumn("alpha", alphaFold(col("es"), len))
-      .withColumn("beta", betaFold(col("esb"), len))
-      .withColumn("z", element_at(col("alpha"), len + 1))
-    val e = col("e")
-    val ec = lat
-      .select(col("word"), col("wcount"), col("alpha"), col("beta"),
-        col("z"), explode(col("es")).as("e"))
-      .select(
-        col("word").substr(e.getItem(1).cast("int") + 1,
-          e.getItem(0).cast("int") - e.getItem(1).cast("int")).as("piece"),
-        (col("wcount").cast("double") *
-          element_at(col("alpha"), e.getItem(1).cast("int") + 1) * e.getItem(2) *
-          element_at(col("beta"), e.getItem(0).cast("int") + 1) / col("z")).as("ec"))
-    val agg = ec.groupBy("piece").agg(round(sum(col("ec")), 6).as("e"))
+    val agg = expectedCounts(occ, vocab)
     // floor at 1e-6 AFTER the 6dp rounding: a rare piece whose p rounds
     // to exactly 0.0 would zero every lattice path through it — and if
     // that piece is a single character (the coverage guarantee), the
@@ -401,16 +378,31 @@ object UnigramLm {
              vocabSize: Int = 60): DataFrame = {
     val occ = graft.ops.Checkpoints.ser(occurrences(words(docs), maxPieceLen))
     val vocab = seedVocabFrom(occ, vocabSize)
-    // r13: ec straight off the lattice entries (see emRound) — the
-    // occ⋈lattice word join is gone; the per-piece p re-attaches from
-    // the vocab-sized broadcast AFTER the aggregation.
+    // the per-piece p re-attaches from the vocab-sized broadcast AFTER
+    // the aggregation
+    val agg = expectedCounts(occ, vocab)
+      .join(broadcast(vocab.select(col("piece"), col("p"))), "piece")
+    agg.crossJoin(broadcast(agg.agg(round(sum("e"), 6).as("tot"))))
+      .select(col("piece"), round(col("p"), 6).as("seed_prob"),
+        col("e").as("expected_count"),
+        round(col("e") / col("tot"), 6).as("new_prob"))
+  }
+
+  /** The E-step of [[emRound]] and [[emStep]]: expected piece counts
+    * under `vocab` probabilities, as (piece, e) with e the 6dp-rounded
+    * Σ ec (the repo float contract). The counts come straight off the
+    * lattice rows: each es entry [i,j,p] IS one scored occurrence, and
+    * its piece identity is the span substring (the exclEs pattern of
+    * [[pieceLoss]]), so the occurrence table never re-joins the lattice
+    * (r13). */
+  private def expectedCounts(occ: DataFrame, vocab: DataFrame): DataFrame = {
     val len = length(col("word"))
     val lat = wordLattice(occ, vocab)
       .withColumn("alpha", alphaFold(col("es"), len))
       .withColumn("beta", betaFold(col("esb"), len))
       .withColumn("z", element_at(col("alpha"), len + 1))
     val e = col("e")
-    val ec = lat
+    lat
       .select(col("word"), col("wcount"), col("alpha"), col("beta"),
         col("z"), explode(col("es")).as("e"))
       .select(
@@ -419,13 +411,6 @@ object UnigramLm {
         (col("wcount").cast("double") *
           element_at(col("alpha"), e.getItem(1).cast("int") + 1) * e.getItem(2) *
           element_at(col("beta"), e.getItem(0).cast("int") + 1) / col("z")).as("ec"))
-    val agg = ec.groupBy("piece")
-      .agg(round(sum(col("ec")), 6).as("expected_count"))
-      .join(broadcast(vocab.select(col("piece"), col("p"))), "piece")
-    agg.crossJoin(broadcast(
-        agg.agg(round(sum("expected_count"), 6).as("tot"))))
-      .select(col("piece"), round(col("p"), 6).as("seed_prob"),
-        col("expected_count"),
-        round(col("expected_count") / col("tot"), 6).as("new_prob"))
+      .groupBy("piece").agg(round(sum(col("ec")), 6).as("e"))
   }
 }
