@@ -41,14 +41,15 @@ object Assemble {
 
   /** Object-store JSON sink with prefix routing (reference: minio.py:19-46).
     * The envelope is one document by construction, so this is a driver-side
-    * single-object write, exactly like the reference's put_object. Returns
-    * the object key. */
+    * single-object write, exactly like the reference's put_object. One
+    * collect yields the filename and the JSON text together, so the
+    * envelope is computed once. Returns the object key. */
   def uploadJson(envelope: DataFrame, objectStoreRoot: String): String = {
-    val rows = envelope.limit(2).collect()
-    require(rows.length == 1, s"envelope must be exactly one document, got ${rows.length}")
-    val filename = rows.head.getAs[String]("filename")
+    val docs = envelope.select(col("filename"),
+      to_json(struct(envelope.columns.toIndexedSeq.map(col): _*))).collect()
+    require(docs.length == 1, s"envelope must be exactly one document, got ${docs.length}")
+    val (filename, json) = (docs.head.getString(0), docs.head.getString(1))
     val prefix = RoverKeys.route(filename)
-    val json = envelope.toJSON.collect().head
     val dir = Paths.get(objectStoreRoot, prefix)
     Files.createDirectories(dir)
     Files.writeString(dir.resolve(filename), json + "\n")

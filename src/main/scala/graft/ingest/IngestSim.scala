@@ -43,7 +43,7 @@ object IngestSim {
             landingByRover(rover), // earth_date: fixed per rover (sim)
             Row(rid, rover, landingByRover(rover), landingByRover(rover), "active"))
         }
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, math.max(1, rows.size)), Schemas.photo)
+        // one partition per fetch: a (rover, sol) task is one API call
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), Schemas.photo)
     }
 }

@@ -5,6 +5,7 @@ import java.util.UUID
 import org.apache.hadoop.fs.{FileAlreadyExistsException, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** dbt incremental materialization semantics over parquet table paths
   * (SURVEY §2.9). Three behaviors:
@@ -107,31 +108,42 @@ object Incremental {
   /** Resolves the current version ONCE, eagerly: the returned DataFrame
     * is bound to an immutable snapshot directory, so lazy evaluation
     * later — even mid-merge — reads a consistent table. Flat
-    * (append-layout) paths read directly. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    currentSnapshot(spark, path) match {
-      case Some(snap) => spark.read.parquet(s"$path/$snap")
-      case None       => spark.read.parquet(path)
-    }
+    * (append-layout) paths read directly.
+    *
+    * With a `schema`, the read is pinned to it: no schema-inference job
+    * (Spark's one-task footer scan per read). A stored column whose type
+    * the schema cannot read fails the scan loudly; a pinned column the
+    * stored files lack reads as null (additive evolution). */
+  def read(spark: SparkSession, path: String,
+           schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema)
+      .parquet(currentSnapshot(spark, path).fold(path)(snap => s"$path/$snap"))
 
   /** ISO-8601-string high-watermark filter (P3/A4): rows strictly newer
     * than the target's MAX(watermarkCol). String `>` is correct for ISO
-    * timestamps (SURVEY §7.4.5). */
+    * timestamps (SURVEY §7.4.5). The target's watermark column is read
+    * pinned to the source's type for it. */
   def newerThanWatermark(spark: SparkSession, target: String, source: DataFrame,
                          watermarkCol: String): DataFrame =
     if (!exists(spark, target)) source
     else {
-      val wm = read(spark, target).agg(max(col(watermarkCol))).first().getString(0)
+      val wm = read(spark, target, Some(StructType(Seq(source.schema(watermarkCol)))))
+        .agg(max(col(watermarkCol))).first().getString(0)
       if (wm == null) source else source.filter(col(watermarkCol) > lit(wm))
     }
 
-  /** incremental_strategy='append' with watermark filter. */
+  /** incremental_strategy='append' with watermark filter. A target that
+    * exists and has nothing newer than its watermark is left as it is:
+    * one emptiness probe of the slice, no write, no empty file. A target
+    * that does not exist yet is created, even from an empty source. */
   def appendIncremental(spark: SparkSession, target: String, source: DataFrame,
                         watermarkCol: String = "ingestion_date",
-                        clusterBy: Seq[String] = Nil): Unit = {
-    val fresh = newerThanWatermark(spark, target, source, watermarkCol)
-    write(fresh, target, SaveMode.Append, clusterBy)
-  }
+                        clusterBy: Seq[String] = Nil): Unit =
+    if (!exists(spark, target)) write(source, target, SaveMode.Append, clusterBy)
+    else {
+      val fresh = newerThanWatermark(spark, target, source, watermarkCol)
+      if (!fresh.isEmpty) write(fresh, target, SaveMode.Append, clusterBy)
+    }
 
   /** incremental_strategy='insert_overwrite' (the third dbt incremental
     * strategy, completing append/merge): replace exactly the partitions
@@ -166,17 +178,21 @@ object Incremental {
   /** incremental_strategy='merge' with unique_key: upsert via anti-join +
     * union, published as a fresh immutable snapshot (see writeSnapshot).
     * Also applies the watermark filter to the incoming side first, like
-    * dbt's is_incremental() guard. */
+    * dbt's is_incremental() guard. An existing target with nothing newer
+    * than its watermark and no `meta` to overlay is left as it is: one
+    * emptiness probe of the slice, then no anti-join, no snapshot and no
+    * new version — the table an empty upsert would publish anyway. A
+    * missing target is created, even from an empty source. */
   def mergeIncremental(spark: SparkSession, target: String, source: DataFrame,
                        keys: Seq[String], watermarkCol: String = "ingestion_date",
                        clusterBy: Seq[String] = Nil,
-                       meta: Map[String, String] = Map.empty): Unit = {
-    val fresh =
-      if (exists(spark, target))
-        newerThanWatermark(spark, target, source, watermarkCol)
-      else source
-    upsertSnapshot(spark, target, fresh, keys, clusterBy, meta)
-  }
+                       meta: Map[String, String] = Map.empty): Unit =
+    if (!exists(spark, target)) upsertSnapshot(spark, target, source, keys, clusterBy, meta)
+    else {
+      val fresh = newerThanWatermark(spark, target, source, watermarkCol)
+      if (meta.nonEmpty || !fresh.isEmpty)
+        upsertSnapshot(spark, target, fresh, keys, clusterBy, meta)
+    }
 
   /** Upsert WITHOUT the high-watermark guard: the caller asserts the
     * source is ALREADY incremental. dbt's is_incremental() filter exists

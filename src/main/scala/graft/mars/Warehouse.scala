@@ -1,6 +1,7 @@
 package graft.mars
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Materialized (incremental) variant of the medallion pipeline: bronze
   * parquet tables → silver/gold parquet tables with the reference's dbt
@@ -38,9 +39,16 @@ final case class Warehouse(spark: SparkSession, root: String) {
   val goldDailyActivity = s"$root/gold/daily_activity"
   val goldCameraTravel = s"$root/gold/camera_travel_correlation"
 
-  private def readOr(path: String, schemaOf: => DataFrame): DataFrame =
-    if (Incremental.exists(spark, path)) Incremental.read(spark, path)
-    else schemaOf.limit(0)
+  // A silver table is read pinned to its model's output schema over no
+  // bronze; before its first build it reads as that empty model.
+  private def noBronze(schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+  private lazy val manifestModel =
+    Silver.flatManifestResponse(noBronze(Schemas.manifestBatch))
+  private def readPinned(path: String, schema: StructType): Option[DataFrame] =
+    Option.when(Incremental.exists(spark, path))(Incremental.read(spark, path, Some(schema)))
+  private def readOr(path: String, model: DataFrame): DataFrame =
+    readPinned(path, model.schema).getOrElse(model)
 
   /** Bronze loader (S9): one routed JSON object → typed append. */
   def loadBronze(objectPath: String, filename: String): String = {
@@ -61,34 +69,38 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
   }
 
-  /** dbt run --select tag:flatten equivalent (EP2 first stage). */
+  /** dbt run --select tag:flatten equivalent (EP2 first stage). Each
+    * bronze table is read once, pinned to its batch schema. */
   def buildSilver(): Unit = {
-    if (Incremental.exists(spark, bronzePhotos))
+    readPinned(bronzePhotos, Schemas.photoBatch).foreach(raw =>
       Incremental.appendIncremental(spark, silverFlatPhotos,
-        Silver.flatPhotoResponse(Incremental.read(spark, bronzePhotos)),
-        clusterBy = Seq("rover_id", "sol", "earth_date"))
-    if (Incremental.exists(spark, bronzeManifests)) {
-      Incremental.mergeIncremental(spark, silverFlatManifest,
-        Silver.flatManifestResponse(Incremental.read(spark, bronzeManifests)),
+        Silver.flatPhotoResponse(raw),
+        clusterBy = Seq("rover_id", "sol", "earth_date")))
+    readPinned(bronzeManifests, Schemas.manifestBatch).foreach { raw =>
+      val manifests = Silver.flatManifestResponse(raw)
+      Incremental.mergeIncremental(spark, silverFlatManifest, manifests,
         keys = Seq("rover_name"), clusterBy = Seq("rover_name"))
       // flatten-inner: orphaned tag in the reference, but a hard dependency
-      // of the validation view — built here (SURVEY §7.3 decision)
+      // of the validation view — built here (SURVEY §7.3 decision). Fed
+      // from the same bronze read: its watermark slice is the manifests
+      // the merge above just took in.
       Incremental.mergeIncremental(spark, silverFlatManifestPhotos,
-        Silver.flatManifestPhotos(Incremental.read(spark, silverFlatManifest)),
+        Silver.flatManifestPhotos(manifests),
         keys = Seq("rover_name", "sol"), clusterBy = Seq("rover_name", "sol"))
     }
-    if (Incremental.exists(spark, bronzeCoordinates))
+    readPinned(bronzeCoordinates, Schemas.coordinateBatch).foreach(raw =>
       Incremental.mergeIncremental(spark, silverFlatCoordinates,
-        Silver.flatCoordinateResponse(Incremental.read(spark, bronzeCoordinates)),
-        keys = Seq("rover_name", "sol"), clusterBy = Seq("rover_name", "sol"))
-    // retention: the orchestrator loop re-merges these every batch — keep
-    // current + one grace version so disk stays bounded instead of growing
-    // one full snapshot per micro-batch. "Two versions" alone is NOT a
-    // reader grace under a fast trigger (sub-second batches would sweep a
-    // snapshot mid-scan), so the wall-clock grace below is what actually
-    // protects a concurrent reader of the public warehouse views — a
-    // pinned version is deletable only after it is BOTH superseded twice
-    // and 10 minutes cold, the Delta VACUUM retention shape.
+        Silver.flatCoordinateResponse(raw),
+        keys = Seq("rover_name", "sol"), clusterBy = Seq("rover_name", "sol")))
+    // retention: a merge table gains a version only in a cycle whose
+    // bronze brought it new rows (an empty watermark slice publishes
+    // nothing) — keep current + one grace version so disk stays bounded
+    // instead of growing one full snapshot per such batch. "Two versions"
+    // alone is NOT a reader grace under a fast trigger (sub-second batches
+    // would sweep a snapshot mid-scan), so the wall-clock grace below is
+    // what actually protects a concurrent reader of the public warehouse
+    // views — a pinned version is deletable only after it is BOTH
+    // superseded twice and 10 minutes cold, the Delta VACUUM retention shape.
     Seq(silverFlatManifest, silverFlatManifestPhotos, silverFlatCoordinates)
       .foreach(t => Incremental.vacuum(spark, t, keep = 2,
         minAgeMs = 10L * 60 * 1000))
@@ -96,13 +108,12 @@ final case class Warehouse(spark: SparkSession, root: String) {
 
   // lazy views over the materialized silver
   def flatPhotos: DataFrame = readOr(silverFlatPhotos,
-    Silver.flatPhotoResponse(Bronze.rawPhotoResponse(spark, "/nonexistent")))
-  def flatManifest: DataFrame = readOr(silverFlatManifest,
-    Silver.flatManifestResponse(Bronze.rawManifestResponse(spark, "/nonexistent")))
+    Silver.flatPhotoResponse(noBronze(Schemas.photoBatch)))
+  def flatManifest: DataFrame = readOr(silverFlatManifest, manifestModel)
   def flatManifestPhotos: DataFrame = readOr(silverFlatManifestPhotos,
-    Silver.flatManifestPhotos(flatManifest))
+    Silver.flatManifestPhotos(manifestModel))
   def flatCoordinates: DataFrame = readOr(silverFlatCoordinates,
-    Silver.flatCoordinateResponse(Bronze.rawCoordinateResponse(spark, "/nonexistent")))
+    Silver.flatCoordinateResponse(noBronze(Schemas.coordinateBatch)))
 
   def dimRovers: DataFrame = Dims.dimRovers(flatManifest)
   def dimCameras: DataFrame = Dims.dimCameras(flatManifest)
@@ -111,15 +122,19 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def validationPhotoGaps: DataFrame =
     Validation.validationPhotoGaps(flatManifestPhotos, flatPhotos)
 
-  /** dbt run --select tag:aggregate equivalent (EP2 second stage). */
+  /** dbt run --select tag:aggregate equivalent (EP2 second stage). The
+    * three silver inputs are read once and shared by the three marts. */
   def buildGold(): Unit = {
+    val manifest = flatManifest
+    val (rovers, cameras) = (Dims.dimRovers(manifest), Dims.dimCameras(manifest))
+    val (photos, path) = (factPhotos, factPath)
     Incremental.appendIncremental(spark, goldPhotoSummary,
-      Marts.photoSummary(dimRovers), clusterBy = Seq("rover_name"))
+      Marts.photoSummary(rovers), clusterBy = Seq("rover_name"))
     Incremental.appendIncremental(spark, goldDailyActivity,
-      Marts.dailyActivity(factPhotos, dimRovers, dimCameras, factPath),
+      Marts.dailyActivity(photos, rovers, cameras, path),
       clusterBy = Seq("rover_name", "sol_number"))
     Incremental.appendIncremental(spark, goldCameraTravel,
-      Marts.cameraTravelCorrelation(factPhotos, dimRovers, dimCameras, factPath),
+      Marts.cameraTravelCorrelation(photos, rovers, cameras, path),
       clusterBy = Seq("rover_name", "sol_number"))
   }
 }

@@ -1,0 +1,204 @@
+package graft
+
+import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.ingest.{Assemble, IngestSim}
+import graft.mars._
+import graft.streaming.Orchestrator
+
+/** The batch orchestration loop, cycle by cycle, against a full refresh:
+  * after every cycle each silver table and each gold mart equals the
+  * `Silver`/`Dims`/`Marts` functions applied to all bronze loaded so far,
+  * and a cycle that brings a table nothing new publishes nothing to it.
+  * Plus the pinned-schema reads: a stored table whose column type
+  * disagrees with the schema it is read with fails loudly.
+  */
+class IncrementalLoopSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private val sols = 1 to 6
+  private val cameras = Seq("Curiosity" -> Seq("FHAZ", "MAST"),
+    "Perseverance" -> Seq("NAVCAM_LEFT", "MCZ_RIGHT"))
+
+  /** A clock that advances one second per call, so every batch gets its
+    * own watermark value however fast the cycles run. */
+  private def ticking(): () => String = {
+    var t = java.time.LocalDateTime.parse("2025-01-01T00:00:00")
+    () => { t = t.plusSeconds(1); t.toString }
+  }
+
+  private def upload(store: Path, filename: String, doc: String): String = {
+    val dir = store.resolve(RoverKeys.route(filename))
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve(filename), doc + "\n")
+    s"${RoverKeys.route(filename)}/$filename"
+  }
+
+  // every sol of both rovers declares exactly the cameras IngestSim lands
+  private def manifestDoc(ts: String): String = {
+    val ms = cameras.map { case (rover, cams) =>
+      val perSol = sols.map(s =>
+        s"""{"sol": $s, "earth_date": "2025-01-0$s", "total_photos": ${cams.size}, """ +
+          s""""cameras": ${cams.map(c => s""""$c"""").mkString("[", ", ", "]")}}""")
+      s"""{"name": "$rover", "landing_date": "2020-01-01", "launch_date": "2019-06-01", """ +
+        s""""status": "active", "max_sol": ${sols.max}, "max_date": "2025-01-06", """ +
+        s""""total_photos": ${sols.size * cams.size}, "photos": ${perSol.mkString("[", ", ", "]")}}"""
+    }
+    s"""{"filename": "mars_rover_manifests_1.json", "manifests": ${ms.mkString("[", ", ", "]")}, """ +
+      s""""ingestion_date": "$ts"}"""
+  }
+
+  // a drive segment on odd sols only, so photo-only sols take the marts'
+  // null-path branches; its SCLK window holds IngestSim's capture times
+  private def coordinatesDoc(ts: String): String = {
+    val fs = for ((rover, _) <- cameras; s <- sols if s % 2 == 1) yield {
+      val start = 600000000L + s * 86400L
+      s"""{"type": "Feature", "rover_name": "$rover", "geometry": {"type": "LineString", """ +
+        s""""coordinates": [[$s.0, 1.0, -2.0], [$s.5, 1.5, -2.5]]}, "properties": {"sol": $s, """ +
+        s""""fromRMC": "${s}_0", "toRMC": "${s}_1", "length": ${s * 1.5}, """ +
+        s""""SCLK_START": $start, "SCLK_END": ${start + 3600}}}"""
+    }
+    s"""{"filename": "mars_rover_coordinates_1.json", "coordinate_count": ${fs.size}, """ +
+      s""""coordinates": ${fs.mkString("[", ", ", "]")}, "ingestion_date": "$ts"}"""
+  }
+
+  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+
+  /** File and marker names under a table root and its snapshot dirs. */
+  private def entries(table: String): Set[String] = {
+    val p = Path.of(table)
+    if (!Files.exists(p)) Set.empty
+    else {
+      val s = Files.walk(p)
+      try s.map(f => p.relativize(f).toString).toArray.map(_.toString).toSet
+      finally s.close()
+    }
+  }
+
+  test("every batch cycle leaves silver and gold equal to a full refresh of bronze") {
+    val root = Files.createTempDirectory("graft_incloop")
+    val store = root.resolve("store")
+    val wh = Warehouse(spark, root.resolve("warehouse").toString)
+    val clock = ticking()
+    val orch = Orchestrator(spark, root.resolve("topics").toString, store.toString, wh, clock)
+    val merged = Seq(wh.silverFlatManifest, wh.silverFlatManifestPhotos, wh.silverFlatCoordinates)
+    val silver = wh.silverFlatPhotos +: merged
+    val gold = Seq(wh.goldPhotoSummary, wh.goldDailyActivity, wh.goldCameraTravel)
+
+    def assertFullRefresh(cycle: String): Unit = {
+      val photos = Silver.flatPhotoResponse(Bronze.rawPhotoResponse(spark, s"$store/photos"))
+      val manifest = Silver.flatManifestResponse(
+        Bronze.rawManifestResponse(spark, s"$store/manifests"))
+      val coords = Silver.flatCoordinateResponse(
+        Bronze.rawCoordinateResponse(spark, s"$store/coordinates"))
+      val (rovers, cams) = (Dims.dimRovers(manifest), Dims.dimCameras(manifest))
+      val (facts, path) = (Facts.factPhotos(photos), Facts.factPath(coords))
+      Seq(
+        "flat_photo_response" -> (wh.flatPhotos, photos),
+        "flat_manifest_response" -> (wh.flatManifest, manifest),
+        "flat_manifest_photos" -> (wh.flatManifestPhotos, Silver.flatManifestPhotos(manifest)),
+        "flat_coordinate_response" -> (wh.flatCoordinates, coords),
+        "photo_summary" -> (spark.read.parquet(wh.goldPhotoSummary), Marts.photoSummary(rovers)),
+        "daily_activity" -> (spark.read.parquet(wh.goldDailyActivity),
+          Marts.dailyActivity(facts, rovers, cams, path)),
+        "camera_travel_correlation" -> (spark.read.parquet(wh.goldCameraTravel),
+          Marts.cameraTravelCorrelation(facts, rovers, cams, path))
+      ).foreach { case (name, (got, want)) =>
+        val expected = multiset(want)
+        assert(expected.nonEmpty, s"$cycle: full-refresh $name is empty")
+        assert(multiset(got.select(want.columns.toIndexedSeq.map(col): _*)) == expected,
+          s"$cycle: $name differs from its full refresh")
+      }
+      // the merge tables were fed once, at set-up: no cycle re-published them
+      merged.foreach(t => assert(Incremental.snapshots(spark, t) == Seq("v00000001"),
+        s"$cycle: $t was re-published"))
+    }
+
+    // set-up: manifest and traverse, then sol 1 of each rover through the sim
+    val seeded = Seq(
+      upload(store, "mars_rover_manifests_1.json", manifestDoc(clock())),
+      upload(store, "mars_rover_coordinates_1.json", coordinatesDoc(clock()))) ++
+      orch.ingestStage(cameras.map(rc => GapScheduler.IngestionTask(rc._1, 1)), Seq(1))
+    orch.loadStage(seeded)
+    var sched = orch.transformStage()
+    assertFullRefresh("set-up")
+
+    /** One cycle: ingest the head of the schedule (none: no new bronze at
+      * all), load, transform; returns the tasks ingested. */
+    def cycle(n: Int): Seq[GapScheduler.IngestionTask] = {
+      val tasks = sched.tasks.take(n)
+      if (tasks.nonEmpty) {
+        val key = orch.ingestStage(tasks, tasks.map(_.sol).min to tasks.map(_.sol).max)
+        orch.loadStage(key.toSeq)
+      }
+      sched = orch.transformStage()
+      tasks
+    }
+    def rovers(ts: Seq[GapScheduler.IngestionTask]) = ts.map(_.rover_name).toSet
+
+    // Curiosity only: the marts (Perseverance rows) gain no file
+    for (c <- 1 to 2) {
+      val goldBefore = gold.map(entries)
+      assert(rovers(cycle(2)) == Set("Curiosity"))
+      assertFullRefresh(s"cycle $c")
+      assert(gold.map(entries) == goldBefore, s"cycle $c: a gold table gained a file")
+    }
+    assert(rovers(cycle(2)) == Set("Curiosity", "Perseverance"))
+    assertFullRefresh("cycle 3")
+    // no new bronze: nothing is published anywhere
+    val before = (silver ++ gold).map(entries)
+    assert(cycle(0).isEmpty)
+    (silver ++ gold).zip(before).foreach { case (t, b) =>
+      assert(entries(t) -- b == Set.empty, s"no-bronze cycle wrote under $t")
+    }
+    assertFullRefresh("cycle 4")
+    for (c <- 5 to 6) {
+      assert(rovers(cycle(2)) == Set("Perseverance"))
+      assertFullRefresh(s"cycle $c")
+    }
+    assert(sched.tasks.isEmpty, s"gap queue not drained: ${sched.tasks}")
+  }
+
+  test("a stored column whose type disagrees with the pinned schema fails loudly") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_pinned").toString
+    val wh = Warehouse(spark, root)
+    // silver photos with `sol` stored as a string
+    Silver.flatPhotoResponse(MarsPipeline.fixtures(spark).rawPhotos)
+      .withColumn("sol", col("sol").cast("string"))
+      .write.parquet(wh.silverFlatPhotos)
+    def mismatch(action: => Any): Unit = {
+      val e = intercept[org.apache.spark.SparkException](action)
+      assert(e.getMessage.contains("PARQUET_COLUMN_DATA_TYPE_MISMATCH"), e.getMessage)
+    }
+    mismatch(wh.flatPhotos.collect())
+    mismatch(wh.buildGold())
+    // bronze photos with `ingestion_date` stored as a long
+    Seq(("a.json", 99990101L)).toDF("filename", "ingestion_date")
+      .withColumn("photos", lit(null).cast(Schemas.photoBatch("photos").dataType))
+      .write.parquet(wh.bronzePhotos)
+    mismatch(wh.buildSilver())
+    // the watermark column: stored as an int, the source's is a string
+    val t = s"$root/wm"
+    Seq((1, 20250101)).toDF("k", "ingestion_date").write.parquet(t)
+    mismatch(Incremental.appendIncremental(spark, t,
+      Seq((2, "2025-01-02T00:00:00")).toDF("k", "ingestion_date")))
+  }
+
+  test("the ingest envelope is one fetch partition per task and the JSON Spark writes") {
+    val tasks = Seq(("Curiosity", 4), ("Perseverance", 9), ("Spirit", 3))
+    val parts = tasks.map { case (r, s) => IngestSim.photos(spark, r, s) }
+    assert(parts.map(_.rdd.getNumPartitions) == Seq(1, 1, 1))
+    val envelope = Assemble.photosEnvelope(parts.reduce(_ unionByName _), 3 to 9,
+      "2025-01-01T00:00:00")
+    val store = Files.createTempDirectory("graft_envelope")
+    val key = Assemble.uploadJson(envelope, store.toString)
+    assert(key == "photos/mars_rover_photos_batch_sol_3_to_9_2025-01-01T000000.json")
+    assert(Files.readString(store.resolve(key)) == envelope.toJSON.collect().head + "\n")
+    intercept[IllegalArgumentException](
+      Assemble.uploadJson(envelope.unionByName(envelope), store.toString))
+  }
+}
