@@ -568,7 +568,7 @@ object Incremental {
   /** dbt cluster_by → repartition on the first key + sort within
     * partitions on all of them: co-locates key ranges so parquet row-group
     * min/max stats prune on the cluster keys (SURVEY §2.9). */
-  private def write(df: DataFrame, path: String, mode: SaveMode,
+  private[mars] def write(df: DataFrame, path: String, mode: SaveMode,
                     clusterBy: Seq[String]): Unit = {
     val arranged =
       if (clusterBy.isEmpty) df

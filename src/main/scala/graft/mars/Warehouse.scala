@@ -1,6 +1,10 @@
 package graft.mars
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Materialized (incremental) variant of the medallion pipeline: bronze
@@ -13,6 +17,18 @@ import org.apache.spark.sql.types.StructType
   *  | flat_manifest_photos       | merge    | rover_name, sol     | rover_name, sol |
   *  | flat_coordinate_response   | merge    | rover_name, sol     | rover_name, sol |
   *  | photo_summary / daily_activity / camera_travel_correlation | append | — | per model |
+  *
+  * Incremental by file, not by watermark (SURVEY §7.4, item 5a): silver and
+  * gold each keep an [[OffsetLog]] (`$root/_checkpoints/silver`, `/gold`)
+  * of the input files they have consumed, and a batch reads only the files
+  * not in it. Both builds therefore cost O(batch), run no `max()` scan,
+  * and with nothing new run no Spark job at all; a batch stamped in the same
+  * second as the one before is kept, where the reference's strict `>` on
+  * `ingestion_date` drops it. Appends publish batch n as `b<n>-*` files
+  * renamed in from a hidden stage dir, merges record n in the snapshot
+  * meta, so re-running a batch whose commit entry is missing neither loses
+  * nor duplicates rows. `Incremental`'s watermark entry points keep the
+  * dbt semantics for other callers; this store does not use them.
   *
   * Views (dims/facts/validation) stay lazy — recomputed per query.
   * `MarsPipeline` is the view-only variant over raw fixtures; this is the
@@ -39,12 +55,19 @@ final case class Warehouse(spark: SparkSession, root: String) {
   val goldDailyActivity = s"$root/gold/daily_activity"
   val goldCameraTravel = s"$root/gold/camera_travel_correlation"
 
+  private lazy val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  // the offset logs sit outside the table roots: a batch that writes
+  // nothing to a table leaves no file under it
+  private lazy val silverLog = OffsetLog(spark, s"$root/_checkpoints/silver")
+  private lazy val goldLog = OffsetLog(spark, s"$root/_checkpoints/gold")
+
   // A silver table is read pinned to its model's output schema over no
   // bronze; before its first build it reads as that empty model.
   private def noBronze(schema: StructType): DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   private lazy val manifestModel =
     Silver.flatManifestResponse(noBronze(Schemas.manifestBatch))
+  private lazy val photoModel = Silver.flatPhotoResponse(noBronze(Schemas.photoBatch))
   private def readPinned(path: String, schema: StructType): Option[DataFrame] =
     Option.when(Incremental.exists(spark, path))(Incremental.read(spark, path, Some(schema)))
   private def readOr(path: String, model: DataFrame): DataFrame =
@@ -69,46 +92,56 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
   }
 
-  /** dbt run --select tag:flatten equivalent (EP2 first stage). Each
-    * bronze table is read once, pinned to its batch schema. */
+  /** dbt run --select tag:flatten equivalent (EP2 first stage), one
+    * batch of the silver offset log: the bronze files no batch has taken
+    * yet. New photo files are flattened and appended; the rows of new
+    * manifest and coordinate files are upserted (their own batch, so no
+    * watermark filter applies), `flat_manifest_photos` from the same frame
+    * as `flat_manifest_response`. A batch whose commit entry is missing
+    * runs again over the files its offsets entry names (bronze files never
+    * change): its appends are wiped first, and a merge table whose current
+    * version already records the batch is left as it is. */
   def buildSilver(): Unit = {
-    readPinned(bronzePhotos, Schemas.photoBatch).foreach(raw =>
-      Incremental.appendIncremental(spark, silverFlatPhotos,
-        Silver.flatPhotoResponse(raw),
-        clusterBy = Seq("rover_id", "sol", "earth_date")))
-    readPinned(bronzeManifests, Schemas.manifestBatch).foreach { raw =>
-      val manifests = Silver.flatManifestResponse(raw)
-      Incremental.mergeIncremental(spark, silverFlatManifest, manifests,
-        keys = Seq("rover_name"), clusterBy = Seq("rover_name"))
-      // flatten-inner: orphaned tag in the reference, but a hard dependency
-      // of the validation view — built here (SURVEY §7.3 decision). Fed
-      // from the same bronze read: its watermark slice is the manifests
-      // the merge above just took in.
-      Incremental.mergeIncremental(spark, silverFlatManifestPhotos,
-        Silver.flatManifestPhotos(manifests),
-        keys = Seq("rover_name", "sol"), clusterBy = Seq("rover_name", "sol"))
+    val bronze = Seq(bronzePhotos, bronzeManifests, bronzeCoordinates)
+    runBatch(silverLog, bronze.flatMap(t => dataFiles(t).map(tableName(t) -> _)),
+        replay = true, appends = Seq(silverFlatPhotos)) { (n, fresh) =>
+      def take(table: String, schema: StructType): Option[(Seq[String], DataFrame)] =
+        fresh.get(tableName(table)).map(files => files -> readFiles(table, files, schema))
+      val photos = take(bronzePhotos, Schemas.photoBatch).toSeq.map { case (in, raw) =>
+        (silverFlatPhotos, in, appendBatch(silverFlatPhotos, n, Silver.flatPhotoResponse(raw),
+          clusterBy = Seq("rover_id", "sol", "earth_date")))
+      }
+      val merged = take(bronzeManifests, Schemas.manifestBatch).toSeq.flatMap { case (in, raw) =>
+        val manifests = Silver.flatManifestResponse(raw)
+        // flatten-inner: orphaned tag in the reference, but a hard
+        // dependency of the validation view — built here (SURVEY §7.3
+        // decision), from the manifests the merge above takes in
+        Seq((silverFlatManifest, in,
+            upsertBatch(silverFlatManifest, n, manifests, Seq("rover_name"))),
+          (silverFlatManifestPhotos, in, upsertBatch(silverFlatManifestPhotos, n,
+            Silver.flatManifestPhotos(manifests), Seq("rover_name", "sol"))))
+      } ++ take(bronzeCoordinates, Schemas.coordinateBatch).toSeq.map { case (in, raw) =>
+        (silverFlatCoordinates, in, upsertBatch(silverFlatCoordinates, n,
+          Silver.flatCoordinateResponse(raw), Seq("rover_name", "sol")))
+      }
+      // retention: a merge table gains a version only in a batch that
+      // brought it new bronze files — keep current + one grace version so
+      // disk stays bounded instead of growing one full snapshot per such
+      // batch. "Two versions" alone is NOT a reader grace under a fast
+      // trigger (sub-second batches would sweep a snapshot mid-scan), so
+      // the wall-clock grace below is what actually protects a concurrent
+      // reader of the public warehouse views — a pinned version is
+      // deletable only after it is BOTH superseded twice and 10 minutes
+      // cold, the Delta VACUUM retention shape.
+      merged.foreach { case (t, _, _) =>
+        Incremental.vacuum(spark, t, keep = 2, minAgeMs = 10L * 60 * 1000)
+      }
+      (photos ++ merged).flatMap((commitLines _).tupled)
     }
-    readPinned(bronzeCoordinates, Schemas.coordinateBatch).foreach(raw =>
-      Incremental.mergeIncremental(spark, silverFlatCoordinates,
-        Silver.flatCoordinateResponse(raw),
-        keys = Seq("rover_name", "sol"), clusterBy = Seq("rover_name", "sol")))
-    // retention: a merge table gains a version only in a cycle whose
-    // bronze brought it new rows (an empty watermark slice publishes
-    // nothing) — keep current + one grace version so disk stays bounded
-    // instead of growing one full snapshot per such batch. "Two versions"
-    // alone is NOT a reader grace under a fast trigger (sub-second batches
-    // would sweep a snapshot mid-scan), so the wall-clock grace below is
-    // what actually protects a concurrent reader of the public warehouse
-    // views — a pinned version is deletable only after it is BOTH
-    // superseded twice and 10 minutes cold, the Delta VACUUM retention shape.
-    Seq(silverFlatManifest, silverFlatManifestPhotos, silverFlatCoordinates)
-      .foreach(t => Incremental.vacuum(spark, t, keep = 2,
-        minAgeMs = 10L * 60 * 1000))
   }
 
   // lazy views over the materialized silver
-  def flatPhotos: DataFrame = readOr(silverFlatPhotos,
-    Silver.flatPhotoResponse(noBronze(Schemas.photoBatch)))
+  def flatPhotos: DataFrame = readOr(silverFlatPhotos, photoModel)
   def flatManifest: DataFrame = readOr(silverFlatManifest, manifestModel)
   def flatManifestPhotos: DataFrame = readOr(silverFlatManifestPhotos,
     Silver.flatManifestPhotos(manifestModel))
@@ -122,19 +155,157 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def validationPhotoGaps: DataFrame =
     Validation.validationPhotoGaps(flatManifestPhotos, flatPhotos)
 
-  /** dbt run --select tag:aggregate equivalent (EP2 second stage). The
-    * three silver inputs are read once and shared by the three marts. */
+  /** dbt run --select tag:aggregate equivalent (EP2 second stage), one
+    * batch of the gold offset log: the silver photo files no batch has
+    * taken yet, and the `flat_manifest_response` version when it changed.
+    * The marts join the current dims and path, read once and shared:
+    *
+    *  - `camera_travel_correlation`: the mart over the new photos alone —
+    *    each row carries its photo's ingestion date;
+    *  - `daily_activity`: the Perseverance sols among the new photos (one
+    *    small job over the new files), then the mart over every silver
+    *    photo of those sols, since a sol's counts include its older
+    *    photos; both marts are skipped when there are no such sols;
+    *  - `photo_summary`, when the manifest changed: the `dimRovers` rows
+    *    it does not hold yet, matched by (rover_name, ingestion_date).
+    *
+    * A mart that does not exist yet is created, even empty. A batch whose
+    * commit entry is missing is planned again from the listing: a silver
+    * re-run renames the files its offsets entry names, and every gold
+    * output is an append that is wiped before the batch runs again. */
   def buildGold(): Unit = {
-    val manifest = flatManifest
-    val (rovers, cameras) = (Dims.dimRovers(manifest), Dims.dimCameras(manifest))
-    val (photos, path) = (factPhotos, factPath)
-    Incremental.appendIncremental(spark, goldPhotoSummary,
-      Marts.photoSummary(rovers), clusterBy = Seq("rover_name"))
-    Incremental.appendIncremental(spark, goldDailyActivity,
-      Marts.dailyActivity(photos, rovers, cameras, path),
-      clusterBy = Seq("rover_name", "sol_number"))
-    Incremental.appendIncremental(spark, goldCameraTravel,
-      Marts.cameraTravelCorrelation(photos, rovers, cameras, path),
-      clusterBy = Seq("rover_name", "sol_number"))
+    val (photosIn, manifestIn) = (tableName(silverFlatPhotos), tableName(silverFlatManifest))
+    val listing = dataFiles(silverFlatPhotos).map(photosIn -> _) ++
+      Incremental.currentSnapshot(spark, silverFlatManifest).map(manifestIn -> _)
+    val marts = Seq(goldPhotoSummary, goldDailyActivity, goldCameraTravel)
+    runBatch(goldLog, listing, replay = false, appends = marts) { (m, fresh) =>
+      val manifest = flatManifest
+      val (rovers, cameras) = (Dims.dimRovers(manifest), Dims.dimCameras(manifest))
+      val path = factPath
+      val manifestFresh = fresh.getOrElse(manifestIn, Nil)
+      val summary =
+        if (manifestFresh.isEmpty && Incremental.exists(spark, goldPhotoSummary)) None
+        else {
+          val rows = Marts.photoSummary(rovers)
+          val keys = Seq("rover_name", "ingestion_date")
+          val unheld = readPinned(goldPhotoSummary, rows.schema)
+            .fold(rows)(held => rows.join(held.select(keys.map(col): _*), keys, "left_anti"))
+          Some((goldPhotoSummary, manifestFresh,
+            appendBatch(goldPhotoSummary, m, unheld, clusterBy = Seq("rover_name"))))
+        }
+      val photoFiles = fresh.getOrElse(photosIn, Nil)
+      val newPhotos = Facts.factPhotos(
+        if (photoFiles.isEmpty) photoModel
+        else readFiles(silverFlatPhotos, photoFiles, photoModel.schema))
+      val sols =
+        if (photoFiles.isEmpty) Nil
+        else newPhotos.filter(col("rover_id") === 8 && col("sol").isNotNull)
+          .select("sol").collect().map(_.getInt(0)).distinct.toSeq
+      def mart(table: String, build: => DataFrame) =
+        (table, photoFiles,
+          if (sols.isEmpty && Incremental.exists(spark, table)) Nil
+          else appendBatch(table, m, build, clusterBy = Seq("rover_name", "sol_number")))
+      val perSol = Seq(
+        mart(goldDailyActivity, Marts.dailyActivity(
+          factPhotos.filter(col("sol").isin(sols: _*)), rovers, cameras, path)),
+        mart(goldCameraTravel, Marts.cameraTravelCorrelation(newPhotos, rovers, cameras, path)))
+      (summary.toSeq ++ perSol).flatMap((commitLines _).tupled)
+    }
+  }
+
+  /** Runs the next batch of `log` over `listing`, the (table, input)
+    * pairs on disk now. The batch takes the inputs the log has not
+    * consumed, or, for a pending batch when `replay`, the ones its offsets
+    * entry names; it records them in `offsets/<n>`, wipes what an earlier
+    * attempt at batch n left in `appends`, lets `publish` write the batch
+    * (inputs grouped by source table) and commits the lines it returns.
+    * With nothing new and nothing pending it does nothing: no Spark job,
+    * no file. */
+  private def runBatch(log: OffsetLog, listing: => Seq[(String, String)], replay: Boolean,
+                       appends: Seq[String])
+                      (publish: (Long, Map[String, Seq[String]]) => Seq[Seq[String]]): Unit = {
+    val r = log.resume()
+    val replayed = r.planned.filter(_ => replay)
+    val fresh = replayed.getOrElse(listing.toSet) -- r.consumed
+    if (fresh.isEmpty && r.planned.isEmpty) return
+    if (replayed.isEmpty)
+      log.write(OffsetLog.Offsets, r.batch,
+        (r.consumed ++ fresh).toSeq.sorted.map { case (t, f) => Seq(t, f) })
+    appends.foreach(wipe(_, r.batch))
+    val inputs = fresh.groupMap(_._1)(_._2).map { case (t, fs) => t -> fs.toSeq.sorted }
+    log.write(OffsetLog.Commits, r.batch, publish(r.batch, inputs))
+  }
+
+  /** A commit entry's lines for one table: `<table> in <input>` per input
+    * taken and `<table> out <name>` per file or snapshot published. */
+  private def commitLines(table: String, in: Seq[String], out: Seq[String]): Seq[Seq[String]] =
+    in.map(Seq(tableName(table), "in", _)) ++ out.map(Seq(tableName(table), "out", _))
+
+  private def tableName(table: String): String = new Path(table).getName
+
+  /** A table's input files: the data files directly under its root. Names
+    * starting with `_` or `.` are skipped — Spark's `_temporary`,
+    * `_SUCCESS` and `.crc` files and a batch's `_stage_b<n>` — so a load
+    * still committing is taken by a later batch. */
+  private def dataFiles(table: String): Seq[String] = {
+    val p = new Path(table)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+  }
+
+  private def readFiles(table: String, files: Seq[String], schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(files.map(f => s"$table/$f"): _*)
+
+  /** Removes what an attempt at batch n left in an append table: its
+    * stage directory and the files it already renamed in. */
+  private def wipe(table: String, n: Long): Unit = {
+    val p = new Path(table)
+    if (fs.exists(p))
+      fs.listStatus(p).map(_.getPath)
+        .filter(f => f.getName == s"_stage_b$n" || f.getName.startsWith(s"b$n-"))
+        .foreach(fs.delete(_, true))
+  }
+
+  /** Appends `df` to `table` as batch n: written to `_stage_b<n>`, which
+    * readers skip, then each data file renamed into the root as
+    * `b<n>-<name>`. A file holding no rows is dropped (the count is read
+    * from its parquet footer, no Spark job) unless the table does not
+    * exist yet, which a first batch creates even empty. Returns the names
+    * published. */
+  private def appendBatch(table: String, n: Long, df: DataFrame,
+                          clusterBy: Seq[String]): Seq[String] = {
+    val create = !Incremental.exists(spark, table)
+    val stage = new Path(table, s"_stage_b$n")
+    Incremental.write(df, stage.toString, SaveMode.Overwrite, clusterBy)
+    val published = dataFiles(stage.toString)
+      .filter(f => create || rowCount(new Path(stage, f)) > 0)
+      .map { f =>
+        val dest = new Path(table, s"b$n-$f")
+        require(fs.rename(new Path(stage, f), dest), s"rename into $dest failed")
+        dest.getName
+      }
+    fs.delete(stage, true)
+    published
+  }
+
+  private def rowCount(file: Path): Long = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try reader.getRecordCount finally reader.close()
+  }
+
+  private val BatchKey = "transform.batch"
+
+  /** Upserts batch n into a merge table, recording `transform.batch=n` in
+    * the published version's meta, the way `SnapshotSink` records its
+    * batch id; a table whose current version already records n is left
+    * as it is. Returns the current version. */
+  private def upsertBatch(table: String, n: Long, df: DataFrame,
+                          keys: Seq[String]): Seq[String] = {
+    if (!Incremental.snapshotMeta(spark, table).get(BatchKey).contains(n.toString))
+      Incremental.upsertSnapshot(spark, table, df, keys, clusterBy = keys,
+        meta = Map(BatchKey -> n.toString))
+    Incremental.currentSnapshot(spark, table).toSeq
   }
 }

@@ -78,15 +78,19 @@ class IncrementalLoopSpec extends AnyFunSuite {
     }
   }
 
-  test("every batch cycle leaves silver and gold equal to a full refresh of bronze") {
-    val root = Files.createTempDirectory("graft_incloop")
-    val store = root.resolve("store")
+  /** A warehouse over a fresh object store, driven by the batch
+    * orchestrator: `setUp` lands the manifest, the traverse and sol 1 of
+    * each rover and runs the first transform; `cycle` ingests the head of
+    * the schedule. */
+  private final class Loop(tag: String, clock: () => String) {
+    val root: Path = Files.createTempDirectory(s"graft_$tag")
+    val store: Path = root.resolve("store")
     val wh = Warehouse(spark, root.resolve("warehouse").toString)
-    val clock = ticking()
     val orch = Orchestrator(spark, root.resolve("topics").toString, store.toString, wh, clock)
     val merged = Seq(wh.silverFlatManifest, wh.silverFlatManifestPhotos, wh.silverFlatCoordinates)
     val silver = wh.silverFlatPhotos +: merged
     val gold = Seq(wh.goldPhotoSummary, wh.goldDailyActivity, wh.goldCameraTravel)
+    var sched: GapScheduler.IngestionSchedule = _
 
     def assertFullRefresh(cycle: String): Unit = {
       val photos = Silver.flatPhotoResponse(Bronze.rawPhotoResponse(spark, s"$store/photos"))
@@ -118,25 +122,40 @@ class IncrementalLoopSpec extends AnyFunSuite {
     }
 
     // set-up: manifest and traverse, then sol 1 of each rover through the sim
-    val seeded = Seq(
-      upload(store, "mars_rover_manifests_1.json", manifestDoc(clock())),
-      upload(store, "mars_rover_coordinates_1.json", coordinatesDoc(clock()))) ++
-      orch.ingestStage(cameras.map(rc => GapScheduler.IngestionTask(rc._1, 1)), Seq(1))
-    orch.loadStage(seeded)
-    var sched = orch.transformStage()
-    assertFullRefresh("set-up")
+    def setUp(): Unit = {
+      val seeded = Seq(
+        upload(store, "mars_rover_manifests_1.json", manifestDoc(clock())),
+        upload(store, "mars_rover_coordinates_1.json", coordinatesDoc(clock()))) ++
+        orch.ingestStage(cameras.map(rc => GapScheduler.IngestionTask(rc._1, 1)), Seq(1))
+      orch.loadStage(seeded)
+      sched = orch.transformStage()
+    }
 
     /** One cycle: ingest the head of the schedule (none: no new bronze at
       * all), load, transform; returns the tasks ingested. */
     def cycle(n: Int): Seq[GapScheduler.IngestionTask] = {
+      val tasks = land(n)
+      sched = orch.transformStage()
+      tasks
+    }
+
+    /** The ingest and load half of a cycle. */
+    def land(n: Int): Seq[GapScheduler.IngestionTask] = {
       val tasks = sched.tasks.take(n)
       if (tasks.nonEmpty) {
         val key = orch.ingestStage(tasks, tasks.map(_.sol).min to tasks.map(_.sol).max)
         orch.loadStage(key.toSeq)
       }
-      sched = orch.transformStage()
       tasks
     }
+  }
+
+  test("every batch cycle leaves silver and gold equal to a full refresh of bronze") {
+    val loop = new Loop("incloop", ticking())
+    import loop._
+    setUp()
+    assertFullRefresh("set-up")
+
     def rovers(ts: Seq[GapScheduler.IngestionTask]) = ts.map(_.rover_name).toSet
 
     // Curiosity only: the marts (Perseverance rows) gain no file
@@ -160,6 +179,125 @@ class IncrementalLoopSpec extends AnyFunSuite {
       assertFullRefresh(s"cycle $c")
     }
     assert(sched.tasks.isEmpty, s"gap queue not drained: ${sched.tasks}")
+  }
+
+  private def logIds(dir: Path): Seq[Long] =
+    if (!Files.exists(dir)) Nil
+    else {
+      val s = Files.list(dir)
+      try s.toArray.map(_.asInstanceOf[Path].getFileName.toString)
+        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted.toSeq
+      finally s.close()
+    }
+
+  /** The data files directly under a table root (no `_`/`.` names). */
+  private def dataFiles(table: String): Set[String] =
+    entries(table).filter(n => !n.contains('/') && !n.startsWith("_") && !n.startsWith(".") &&
+      Files.isRegularFile(Path.of(table, n)))
+
+  /** The last commit entry of each offset log against the disk: every
+    * input it names is a file (gold: or the manifest version) of the
+    * table's source, together they are exactly the inputs its offsets
+    * entry added, and each table's outputs are its `b<n>-` files or its
+    * current version. */
+  private def assertCommitEntries(loop: Loop, label: String): Unit = {
+    import loop.{gold, merged, silver, wh}
+    val source = Map(
+      wh.silverFlatPhotos -> wh.bronzePhotos, wh.silverFlatManifest -> wh.bronzeManifests,
+      wh.silverFlatManifestPhotos -> wh.bronzeManifests,
+      wh.silverFlatCoordinates -> wh.bronzeCoordinates,
+      wh.goldPhotoSummary -> wh.silverFlatManifest, wh.goldDailyActivity -> wh.silverFlatPhotos,
+      wh.goldCameraTravel -> wh.silverFlatPhotos)
+    def name(t: String) = Path.of(t).getFileName.toString
+    val tables = (silver ++ gold).map(t => name(t) -> t).toMap
+    for ((stage, appends) <- Seq("silver" -> Seq(wh.silverFlatPhotos), "gold" -> gold)) {
+      val dir = Path.of(wh.root, "_checkpoints", stage)
+      val log = OffsetLog(spark, dir.toString)
+      val n = logIds(dir.resolve(OffsetLog.Commits)).last
+      val lines = log.read(OffsetLog.Commits, n).map(l => (tables(l.head), l(1), l(2)))
+      def offsets(i: Long) =
+        if (i < 0) Set.empty[(String, String)] else log.read(OffsetLog.Offsets, i).map(l => l.head -> l(1)).toSet
+      val taken = lines.collect { case (t, "in", f) =>
+        assert(Files.exists(Path.of(source(t), f)), s"$label: $stage batch $n input $f is not in ${source(t)}")
+        name(source(t)) -> f
+      }.toSet
+      assert(taken == offsets(n) -- offsets(n - 1), s"$label: $stage batch $n inputs")
+      val out = lines.collect { case (t, "out", f) => t -> f }.groupMap(_._1)(_._2)
+      appends.foreach { t =>
+        assert(out.getOrElse(t, Nil).toSet == dataFiles(t).filter(_.startsWith(s"b$n-")),
+          s"$label: $stage batch $n outputs of $t")
+      }
+      out.foreach { case (t, fs) =>
+        if (merged.contains(t)) assert(fs == Seq(Incremental.currentSnapshot(spark, t).get))
+        else assert(appends.contains(t), s"$label: $stage published to $t")
+      }
+    }
+  }
+
+  test("a batch stamped in the same second as the one before reaches silver and gold") {
+    val loop = new Loop("samesecond", () => "2025-01-01T00:00:00")
+    import loop._
+    setUp()
+    assertFullRefresh("set-up")
+    assertCommitEntries(loop, "set-up")
+    val bronze = Seq(wh.bronzePhotos, wh.bronzeManifests, wh.bronzeCoordinates)
+    val copy = root.resolve("bronze_copy").toString
+    spark.read.parquet(wh.bronzePhotos).write.parquet(copy)
+    // Curiosity 2-6 and Perseverance 2, then Perseverance 3-4 and 5-6
+    for ((take, c) <- Seq(6, 2, 2).zipWithIndex) {
+      val tasks = land(take)
+      assert(tasks.exists(_.rover_name == "Perseverance"), tasks)
+      // writer leftovers in a bronze root: Spark's own _SUCCESS and .crc
+      // files, and a load still committing under _temporary/
+      Files.createDirectories(Path.of(wh.bronzePhotos, "_temporary", "0"))
+      dataFiles(copy).foreach(f =>
+        Files.copy(Path.of(copy, f), Path.of(wh.bronzePhotos, "_temporary", "0", f)))
+      val junk = entries(wh.bronzePhotos).filter(n => n.startsWith("_") || n.startsWith("."))
+      assert(Seq("_temporary", "_SUCCESS", ".").forall(p => junk.exists(_.startsWith(p))), junk)
+      sched = orch.transformStage()
+      assertFullRefresh(s"cycle ${c + 1}")
+      assertCommitEntries(loop, s"cycle ${c + 1}")
+      val dir = Path.of(wh.root, "_checkpoints", "silver", OffsetLog.Offsets)
+      val consumed = OffsetLog(spark, dir.getParent.toString)
+        .read(OffsetLog.Offsets, logIds(dir).last).map(_(1)).toSet
+      assert(consumed == bronze.flatMap(dataFiles).toSet, s"cycle ${c + 1}: silver consumed $consumed")
+      // the next bronze write's job commit would merge the planted files
+      org.apache.commons.io.FileUtils.deleteDirectory(Path.of(wh.bronzePhotos, "_temporary").toFile)
+    }
+  }
+
+  test("a batch run again after a crash lands once") {
+    val loop = new Loop("rerun", ticking())
+    import loop._
+    val checkpoints = s"${wh.root}/_checkpoints"
+    /** A committed batch becomes a pending one: its commit entries go,
+      * and a stale stage dir and one extra `b<n>-` file are left behind. */
+    def crash(): Unit =
+      for ((stage, t) <- Seq("silver" -> wh.silverFlatPhotos, "gold" -> wh.goldCameraTravel)) {
+        val commits = Path.of(checkpoints, stage, OffsetLog.Commits)
+        val n = logIds(commits).last
+        Files.delete(commits.resolve(n.toString))
+        val published = dataFiles(t).filter(_.startsWith(s"b$n-")).toSeq.sorted
+        assert(published.nonEmpty, s"$stage batch $n published nothing to $t")
+        val src = Path.of(t, published.head)
+        Files.copy(src, Path.of(t, s"b$n-extra.parquet"))
+        Files.createDirectories(Path.of(t, s"_stage_b$n"))
+        Files.copy(src, Path.of(t, s"_stage_b$n", "part-stale.parquet"))
+      }
+    def rerun(cycle: String): Unit = {
+      crash()
+      assert(loop.cycle(0).isEmpty)
+      assertFullRefresh(cycle)
+      assert(wh.flatPhotos.distinct().count() == wh.flatPhotos.count(), s"$cycle: duplicate photos")
+      assertCommitEntries(loop, cycle)
+      val before = (silver ++ gold :+ checkpoints).map(entries)
+      assert(loop.cycle(0).isEmpty)
+      assert((silver ++ gold :+ checkpoints).map(entries) == before, s"$cycle: a no-op run wrote")
+    }
+    setUp()
+    rerun("set-up batch run again") // batch 0: appends, merges and the marts' first files
+    assert(cycle(7).map(_.rover_name).toSet == Set("Curiosity", "Perseverance"))
+    rerun("cycle 1 run again")
   }
 
   test("a stored column whose type disagrees with the pinned schema fails loudly") {
