@@ -76,9 +76,6 @@ import org.apache.spark.sql.types._
 case class MmrSelect(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression with CodegenFallback {
 
-  private def poolStruct: StructType = first.dataType
-    .asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-
   override def checkInputDataTypes(): TypeCheckResult = {
     val okPool = first.dataType match {
       case ArrayType(StructType(Array(f0, f1, f2, f3)), _) =>

@@ -145,36 +145,6 @@ object Incremental {
       if (!fresh.isEmpty) write(fresh, target, SaveMode.Append, clusterBy)
     }
 
-  /** incremental_strategy='insert_overwrite' (the third dbt incremental
-    * strategy, completing append/merge): replace exactly the partitions
-    * present in `source`, leave every other partition untouched. This is
-    * Spark's dynamic partition overwrite on a hive-layout parquet path —
-    * per-write option, no session-conf mutation. The natural shape for
-    * late-arriving-but-bounded reprocessing (rebuild yesterday's and
-    * today's date partitions, keep three years of history in place):
-    * no anti-join, no snapshot rewrite — IO is proportional to the
-    * partitions touched, not the table.
-    *
-    * The target becomes/stays a directory-partitioned dataset, so
-    * downstream filters on `partitionCols` prune directories at planning
-    * time — the 100 TB layout the flat test files stand in for
-    * (Tables.scala doc). Partition-column VALUES become directory names:
-    * read-back types are inferred (string-typed unless parseable), so
-    * callers keep partition columns string-or-int typed, as dbt does. */
-  def replacePartitions(spark: SparkSession, target: String, source: DataFrame,
-                        partitionCols: Seq[String]): Unit = {
-    // a versioned snapshot root resolves reads through commit markers —
-    // hive partition dirs written beside them would be invisible to every
-    // reader while the write "succeeds" (same guard as ops.Compact)
-    require(!names(spark, target).exists(_.startsWith(CommitPrefix)),
-      s"$target is a versioned snapshot table - partition overwrite would be " +
-        "invisible behind its commit markers; use mergeIncremental/upsertSnapshot")
-    source.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(target)
-  }
-
   /** incremental_strategy='merge' with unique_key: upsert via anti-join +
     * union, published as a fresh immutable snapshot (see writeSnapshot).
     * Also applies the watermark filter to the incoming side first, like

@@ -1,5 +1,7 @@
 package graft.mars
 
+import java.util.UUID
+
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -27,8 +29,9 @@ import org.apache.spark.sql.types.StructType
   * `ingestion_date` drops it. Appends publish batch n as `b<n>-*` files
   * renamed in from a hidden stage dir, merges record n in the snapshot
   * meta, so re-running a batch whose commit entry is missing neither loses
-  * nor duplicates rows. `Incremental`'s watermark entry points keep the
-  * dbt semantics for other callers; this store does not use them.
+  * nor duplicates rows. No main code calls `Incremental`'s watermark entry
+  * points (`appendIncremental`, `mergeIncremental`, `newerThanWatermark`);
+  * only specs do.
   *
   * Views (dims/facts/validation) stay lazy — recomputed per query.
   * `MarsPipeline` is the view-only variant over raw fixtures; this is the
@@ -73,22 +76,22 @@ final case class Warehouse(spark: SparkSession, root: String) {
   private def readOr(path: String, model: DataFrame): DataFrame =
     readPinned(path, model.schema).getOrElse(model)
 
-  /** Bronze loader (S9): one routed JSON object → typed append. */
+  /** Bronze loader (S9): one routed JSON object → typed append, published
+    * the way a batch append is (see [[appendStaged]]) from a stage
+    * directory of its own. Loads therefore share no Spark job-attempt
+    * directory: what a load that died while committing left under the
+    * root's `_temporary/` is not merged by the next load's job commit. */
   def loadBronze(objectPath: String, filename: String): String = {
-    RoverKeys.route(filename) match {
-      case "photos" =>
-        Bronze.rawPhotoResponse(spark, objectPath)
-          .write.mode("append").parquet(bronzePhotos)
-        bronzePhotos
+    val load = RoverKeys.route(filename) match {
+      case "photos" => Some(bronzePhotos -> Bronze.rawPhotoResponse(spark, objectPath))
       case "coordinates" =>
-        Bronze.rawCoordinateResponse(spark, objectPath)
-          .write.mode("append").parquet(bronzeCoordinates)
-        bronzeCoordinates
-      case "manifests" =>
-        Bronze.rawManifestResponse(spark, objectPath)
-          .write.mode("append").parquet(bronzeManifests)
-        bronzeManifests
-      case _ => "UNKNOWN" // reference logs + skips unknown files
+        Some(bronzeCoordinates -> Bronze.rawCoordinateResponse(spark, objectPath))
+      case "manifests" => Some(bronzeManifests -> Bronze.rawManifestResponse(spark, objectPath))
+      case _ => None // reference logs + skips unknown files
+    }
+    load.fold("UNKNOWN") { case (table, df) =>
+      appendStaged(table, s"load-${UUID.randomUUID}", df, clusterBy = Nil)
+      table
     }
   }
 
@@ -108,8 +111,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
       def take(table: String, schema: StructType): Option[(Seq[String], DataFrame)] =
         fresh.get(tableName(table)).map(files => files -> readFiles(table, files, schema))
       val photos = take(bronzePhotos, Schemas.photoBatch).toSeq.map { case (in, raw) =>
-        (silverFlatPhotos, in, appendBatch(silverFlatPhotos, n, Silver.flatPhotoResponse(raw),
-          clusterBy = Seq("rover_id", "sol", "earth_date")))
+        (silverFlatPhotos, in, appendStaged(silverFlatPhotos, s"b$n",
+          Silver.flatPhotoResponse(raw), clusterBy = Seq("rover_id", "sol", "earth_date")))
       }
       val merged = take(bronzeManifests, Schemas.manifestBatch).toSeq.flatMap { case (in, raw) =>
         val manifests = Silver.flatManifestResponse(raw)
@@ -191,7 +194,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
           val unheld = readPinned(goldPhotoSummary, rows.schema)
             .fold(rows)(held => rows.join(held.select(keys.map(col): _*), keys, "left_anti"))
           Some((goldPhotoSummary, manifestFresh,
-            appendBatch(goldPhotoSummary, m, unheld, clusterBy = Seq("rover_name"))))
+            appendStaged(goldPhotoSummary, s"b$m", unheld, clusterBy = Seq("rover_name"))))
         }
       val photoFiles = fresh.getOrElse(photosIn, Nil)
       val newPhotos = Facts.factPhotos(
@@ -204,7 +207,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
       def mart(table: String, build: => DataFrame) =
         (table, photoFiles,
           if (sols.isEmpty && Incremental.exists(spark, table)) Nil
-          else appendBatch(table, m, build, clusterBy = Seq("rover_name", "sol_number")))
+          else appendStaged(table, s"b$m", build, clusterBy = Seq("rover_name", "sol_number")))
       val perSol = Seq(
         mart(goldDailyActivity, Marts.dailyActivity(
           factPhotos.filter(col("sol").isin(sols: _*)), rovers, cameras, path)),
@@ -267,21 +270,20 @@ final case class Warehouse(spark: SparkSession, root: String) {
         .foreach(fs.delete(_, true))
   }
 
-  /** Appends `df` to `table` as batch n: written to `_stage_b<n>`, which
-    * readers skip, then each data file renamed into the root as
-    * `b<n>-<name>`. A file holding no rows is dropped (the count is read
-    * from its parquet footer, no Spark job) unless the table does not
-    * exist yet, which a first batch creates even empty. Returns the names
-    * published. */
-  private def appendBatch(table: String, n: Long, df: DataFrame,
-                          clusterBy: Seq[String]): Seq[String] = {
+  /** Appends `df` to `table`: written to `_stage_<tag>`, which readers
+    * skip, then each data file renamed into the root as `<tag>-<name>`. A
+    * file holding no rows is dropped (the count is read from its parquet
+    * footer, no Spark job) unless the table does not exist yet, which a
+    * first append creates even empty. Returns the names published. */
+  private def appendStaged(table: String, tag: String, df: DataFrame,
+                           clusterBy: Seq[String]): Seq[String] = {
     val create = !Incremental.exists(spark, table)
-    val stage = new Path(table, s"_stage_b$n")
+    val stage = new Path(table, s"_stage_$tag")
     Incremental.write(df, stage.toString, SaveMode.Overwrite, clusterBy)
     val published = dataFiles(stage.toString)
       .filter(f => create || rowCount(new Path(stage, f)) > 0)
       .map { f =>
-        val dest = new Path(table, s"b$n-$f")
+        val dest = new Path(table, s"$tag-$f")
         require(fs.rename(new Path(stage, f), dest), s"rename into $dest failed")
         dest.getName
       }

@@ -30,7 +30,6 @@ object Relational extends OpsModule {
   private def ord(s: SparkSession, d: String) = Tables.orders(s, d)
   private def cust(s: SparkSession, d: String) = Tables.customer(s, d)
   private def supp(s: SparkSession, d: String) = Tables.supplier(s, d)
-  private def prt(s: SparkSession, d: String) = Tables.part(s, d)
   private def ev(s: SparkSession, d: String) = Tables.events(s, d)
 
   private def r2(c: Column): Column = round(c, 2)

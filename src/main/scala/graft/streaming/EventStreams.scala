@@ -1,47 +1,28 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues,
-  TTLConfig, ValueState}
 
 /** Typed view of one row of the events table (TESTDATA.md). */
 final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                        event_type: String, value: Double)
 
-/** Accumulating per-user session state between micro-batches. */
-final case class SessionBuf(startMs: Long, endMs: Long, n: Int, total: Double)
-
-/** One closed session, emitted when the event-time watermark passes the
-  * session gap past its last event. */
-final case class Session(user_id: Long, session_start: java.sql.Timestamp,
-                         session_end: java.sql.Timestamp, n_events: Int,
-                         total_value: Double)
-
-/** Event-time data-plane streaming over the events stream — the part of the
-  * streaming surface the reference never needed (its Kafka use is
-  * control-plane choreography only, SURVEY §2.10) but a training-data
-  * pipeline does: windowed rollups of telemetry and stateful sessionization.
-  *
-  * Both operators are watermark-driven, so state is bounded: windows older
-  * than the watermark are finalized and dropped, sessions time out and are
-  * emitted once the watermark passes their gap. That bounding is what makes
-  * them runnable forever on an unbounded stream — state size tracks the
-  * number of OPEN windows/sessions, not stream length.
+/** Event-time windows over the events table: [[EventStreams.windowedCounts]]
+  * backs `q18_stream_window` and [[EventStreams.sessionWindows]] backs
+  * `q19_session_window`. Each works on a batch DataFrame and identically on
+  * a stream, where its watermark bounds the state to the windows still
+  * open. The reference streams only control-plane events (its Kafka topics
+  * are choreography, SURVEY §2.10).
   */
 object EventStreams {
 
-  /** State store provider for production-scale stateful streaming. The
-    * default (HDFSBackedStateStoreProvider) keeps every key of every
-    * operator's state in executor HEAP — fine for tests, an OOM generator
-    * once session/dedup state reaches tens of millions of keys per
-    * partition. RocksDB keeps state off-heap on local disk with
-    * incremental checkpointing; set
+  /** State store provider for stateful streaming at scale. The default
+    * (HDFSBackedStateStoreProvider) keeps every key of an operator's
+    * state in executor heap; RocksDB keeps it off-heap on local disk with
+    * incremental checkpointing. Set
     * `spark.sql.streaming.stateStore.providerClass` to this before
-    * starting queries whose state is unbounded-ish (sessionization over
-    * all users, dedup horizons over high-cardinality keys). Exercised by
-    * EventStreamsSpec end-to-end. */
+    * starting a windowed query over many open windows. EventStreamsSpec
+    * runs [[windowedCounts]] on it end to end. */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -60,58 +41,10 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("total_value"))
 
-  /** Streaming exact-dedup with bounded state: drop rows whose dedup key
-    * was already seen within the watermark horizon
-    * (dropDuplicatesWithinWatermark) — the streaming face of
-    * td_exact_dedup. State holds only keys younger than the watermark, so
-    * it is bounded by arrival rate × delay, not stream length; an
-    * unbounded dropDuplicates would grow state forever. */
-  def streamingDedup(events: DataFrame, keyCols: Seq[String],
-                     watermarkDelay: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Stream-static enrichment: join the stream against a static dimension
-    * (broadcast by Catalyst when small). No streaming state at all — the
-    * static side is re-resolved per micro-batch, which also picks up dim
-    * updates between batches. */
-  def enrichWithStatic(stream: DataFrame, dim: DataFrame,
-                       keys: Seq[String]): DataFrame =
-    stream.join(dim, keys, "left")
-
-  /** Stream-STREAM inner join: correlate two live streams (e.g. each
-    * click with the same user's errors in the preceding window). Both
-    * sides carry watermarks and the join condition bounds event-time
-    * distance — the two constraints Spark needs to know when a row can
-    * never match again, which is what makes the join state FINITE: each
-    * side buffers only rows younger than (watermark + maxDelay). Without
-    * the time bound, stream-stream state grows forever — the classic
-    * unbounded-state bug; this operator makes the bound mandatory. */
-  def streamStreamJoin(left: DataFrame, right: DataFrame, key: String,
-                       maxDelay: String = "30 minutes",
-                       watermarkDelay: String = "10 minutes",
-                       joinType: String = "inner"): DataFrame = {
-    val l = left.withWatermark("ts", watermarkDelay)
-    val r = right.selectExpr(s"$key as r_key", "ts as r_ts",
-        "event_id as r_event_id", "event_type as r_event_type")
-      .withWatermark("r_ts", watermarkDelay)
-    // outer variants emit the null-padded row only once the watermark
-    // proves no match can still arrive — same state bound as inner
-    l.join(r,
-      col(key) === col("r_key") &&
-        col("r_ts") >= col("ts") - expr(s"INTERVAL $maxDelay") &&
-        col("r_ts") <= col("ts"),
-      joinType)
-  }
-
   /** Gap-based session windows via the built-in session_window: merges
     * events whose gap is under `gap`; window end = last event + gap. Works
     * identically on batch and streaming input (streaming needs the
-    * watermark for state eviction). This is the declarative sibling of
-    * [[sessionize]] — use this when per-session output is min/max/count
-    * aggregates; use flatMapGroupsWithState when session state needs
-    * custom logic. */
+    * watermark for state eviction). */
   def sessionWindows(events: DataFrame, gap: String = "30 minutes",
                      watermarkDelay: String = "10 minutes"): DataFrame =
     events
@@ -123,117 +56,4 @@ object EventStreams {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"), col("total_value"))
-
-  /** Gap-based sessionization via flatMapGroupsWithState: per-user custom
-    * state with an event-time timeout. A session closes (and is emitted)
-    * when the watermark passes `last event + gapMinutes`. State per key is
-    * a single fixed-size SessionBuf — no event buffering. */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30,
-                 watermarkDelay: String = "0 seconds"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val gapMs = gapMinutes * 60000L
-
-    def update(userId: Long, batch: Iterator[Event],
-               state: GroupState[SessionBuf]): Iterator[Session] = {
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        Iterator(Session(userId, new java.sql.Timestamp(s.startMs),
-          new java.sql.Timestamp(s.endMs), s.n, s.total))
-      } else {
-        val evs = batch.toVector
-        val lo = evs.iterator.map(_.ts.getTime).min
-        val hi = evs.iterator.map(_.ts.getTime).max
-        val sum = evs.iterator.map(_.value).sum
-        val merged = state.getOption match {
-          case Some(s) => SessionBuf(math.min(s.startMs, lo),
-            math.max(s.endMs, hi), s.n + evs.size, s.total + sum)
-          case None => SessionBuf(lo, hi, evs.size, sum)
-        }
-        state.update(merged)
-        state.setTimeoutTimestamp(merged.endMs + gapMs)
-        Iterator.empty
-      }
-    }
-
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionBuf, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** [[sessionize]] re-expressed on Spark 4's transformWithState — the
-    * successor API for arbitrary stateful processing: typed state handles
-    * (ValueState/ListState/MapState, optional TTL) instead of one blob,
-    * and explicit event-time TIMERS instead of a single per-key timeout.
-    * The session state is the fixed-size SessionBuf plus the armed
-    * timer's deadline: when a new batch extends the session it DELETES
-    * the previously armed timer before registering the new one, so the
-    * RocksDB timer state holds exactly one live timer per key instead of
-    * accumulating one per (key, batch) until each fires (ADVICE r2). The
-    * watermark guard in handleExpiredTimer stays as defense in depth.
-    * Requires the RocksDB state store provider — which is the configuration
-    * this engine runs stateful streaming on anyway (see RocksDbProvider).
-    */
-  /** SessionBuf + the deadline of the currently armed timer (-1 = none):
-    * what lets handleInputRows delete the stale timer on re-arm. */
-  final case class TimedSessionBuf(startMs: Long, endMs: Long, n: Int,
-                                   total: Double, armedMs: Long)
-
-  final class SessionProcessor(gapMs: Long)
-      extends StatefulProcessor[Long, Event, Session] {
-    @transient private var state: ValueState[TimedSessionBuf] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[TimedSessionBuf]("session",
-        Encoders.product[TimedSessionBuf], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Event],
-                                 tv: TimerValues): Iterator[Session] = {
-      val evs = rows.toVector
-      val lo = evs.iterator.map(_.ts.getTime).min
-      val hi = evs.iterator.map(_.ts.getTime).max
-      val sum = evs.iterator.map(_.value).sum
-      val merged =
-        if (state.exists()) {
-          val s = state.get()
-          TimedSessionBuf(math.min(s.startMs, lo), math.max(s.endMs, hi),
-            s.n + evs.size, s.total + sum, s.armedMs)
-        } else TimedSessionBuf(lo, hi, evs.size, sum, -1L)
-      val deadline = merged.endMs + gapMs
-      if (merged.armedMs != deadline) {
-        if (merged.armedMs >= 0L) getHandle.deleteTimer(merged.armedMs)
-        getHandle.registerTimer(deadline)
-      }
-      state.update(merged.copy(armedMs = deadline))
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-                                    info: ExpiredTimerInfo): Iterator[Session] = {
-      if (!state.exists()) Iterator.empty
-      else {
-        val s = state.get()
-        // a stale timer (session was extended after it was armed) fires
-        // before the real deadline — ignore it, the later timer is armed
-        if (tv.getCurrentWatermarkInMs() < s.endMs + gapMs) Iterator.empty
-        else {
-          state.clear()
-          Iterator(Session(userId, new java.sql.Timestamp(s.startMs),
-            new java.sql.Timestamp(s.endMs), s.n, s.total))
-        }
-      }
-    }
-  }
-
-  def sessionizeTws(events: Dataset[Event], gapMinutes: Int = 30,
-                    watermarkDelay: String = "0 seconds"): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor(gapMinutes * 60000L),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
 }

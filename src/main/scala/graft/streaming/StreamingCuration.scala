@@ -15,8 +15,7 @@ import graft.text.{CurationGates, TextOps}
   * corpus-wide boilerplate), and then near-dup ADMISSION against
   * [[NearDupIngest]]'s persisted band store — which subsumes exact dedup
   * (identical documents carry identical MinHash signatures, so the store
-  * vetoes them first). Decontamination-at-ingest is
-  * [[BudgetIngest]]/`decontaminateAuto` composition territory and
+  * vetoes them first). Decontamination (`decontaminateAuto`) is
   * deliberately not folded in here: benchmark sets change independently
   * of ingest, so production scrubs them on READ paths (the batch
   * pipeline) rather than baking a benchmark snapshot into admission.

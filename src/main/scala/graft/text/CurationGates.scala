@@ -30,8 +30,7 @@ object CurationGates {
     * documents max out at one required stopword, so the verbatim gate
     * rejects 100% — measured on sf0.001), and language coverage is
     * already [[lang]]'s job. The verbatim rule-set remains available as
-    * [[gopherVerbatim]] and as the registered audit query
-    * `txt_gopher`'s `pass_gopher`. */
+    * the registered audit query `txt_gopher`'s `pass_gopher`. */
   val gopher: Column =
     col("n_words") >= 50 && col("n_words") <= 100000 &&
       col("mean_word_len") >= 3.0 && col("mean_word_len") <= 10.0 &&
@@ -43,14 +42,9 @@ object CurationGates {
     * placeholder-text and code filters. The kept-lines rule (terminal
     * punctuation + ≥5 words per line) is web-page-specific — this
     * corpus is single-line prose without terminal punctuation, so the
-    * verbatim rule rejects 100% (measured). Verbatim form:
-    * [[c4Verbatim]] / the `txt_c4` audit query's `pass_c4`. */
+    * verbatim rule rejects 100% (measured). Verbatim form: the `txt_c4`
+    * audit query's `pass_c4`. */
   val c4: Column = col("has_lorem_ipsum") === 0 && col("has_brace") === 0
-
-  /** All Gopher rules verbatim, including required stopwords. */
-  val gopherVerbatim: Column = col("pass_gopher") === 1
-  /** All C4 rules verbatim, including the kept-lines minimum. */
-  val c4Verbatim: Column = col("pass_c4") === 1
 
   /** Stage-1 conjunction in audit order. */
   val all: Column = quality && lang && repetition && gopher && c4

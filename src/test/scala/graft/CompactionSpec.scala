@@ -141,16 +141,6 @@ class CompactionSpec extends AnyFunSuite {
     assert(Incremental.read(spark, t).count() === 1)
   }
 
-  test("the flat-dir compactor refuses a versioned root (would tear markers)") {
-    import spark.implicits._
-    val t = tmp()
-    Incremental.mergeIncremental(spark, t, Seq((1L, "a")).toDF("k", "ver"),
-      Seq("k"), watermarkCol = "ver")
-    intercept[IllegalArgumentException] {
-      graft.ops.Compact.compact(spark, t)
-    }
-  }
-
   test("compact refuses a non-versioned (flat append) table") {
     import spark.implicits._
     val t = tmp()

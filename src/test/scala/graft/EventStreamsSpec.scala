@@ -39,40 +39,6 @@ class EventStreamsSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("transformWithState sessionization: timers close sessions like the fMGWS path") {
-    import spark.implicits._
-    // transformWithState requires the RocksDB state store
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, EventStreams.RocksDbProvider)
-    try {
-      val input = MemoryStream[Event](spark)
-      val q = EventStreams.sessionizeTws(input.toDS(), gapMinutes = 30)
-        .writeStream.format("memory").queryName("sess_tws")
-        .outputMode("append").start()
-      try {
-        input.addData(
-          Event(1, ts(0), 7, "click", 1.5),
-          Event(2, ts(10), 7, "view", 2.5))
-        q.processAllAvailable()
-        assert(spark.table("sess_tws").count() == 0) // session still open
-        input.addData(Event(3, ts(100), 8, "click", 9.0))
-        q.processAllAvailable()
-        input.addData(Event(4, ts(200), 9, "click", 0.0))
-        q.processAllAvailable()
-        val sessions = spark.table("sess_tws").orderBy("user_id").collect()
-        val s7 = sessions.find(_.getLong(0) == 7L).get
-        assert(s7.getTimestamp(1) == ts(0) && s7.getTimestamp(2) == ts(10))
-        assert(s7.getInt(3) == 2 && s7.getDouble(4) == 4.0)
-        assert(sessions.exists(_.getLong(0) == 8L),
-          "user 8's single-event session should close too")
-      } finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("windowed counts on the RocksDB state store: same results, rocksdb metrics live") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
@@ -99,123 +65,6 @@ class EventStreamsSpec extends AnyFunSuite {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
-  }
-
-  test("sessionize: session closes when watermark passes the gap") {
-    import spark.implicits._
-    val input = MemoryStream[Event](spark)
-    val q = EventStreams.sessionize(input.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    try {
-      input.addData(
-        Event(1, ts(0), 7, "click", 1.5),
-        Event(2, ts(10), 7, "view", 2.5))
-      q.processAllAvailable()
-      assert(spark.table("sess").count() == 0) // session still open
-      // event 100 min later: watermark(100) > last(10) + gap(30) → close
-      input.addData(Event(3, ts(100), 8, "click", 9.0))
-      q.processAllAvailable()
-      input.addData(Event(4, ts(200), 9, "click", 0.0)) // push watermark again
-      q.processAllAvailable()
-      val sessions = spark.table("sess").orderBy("user_id").collect()
-      val s7 = sessions.find(_.getLong(0) == 7L).get
-      assert(s7.getTimestamp(1) == ts(0) && s7.getTimestamp(2) == ts(10))
-      assert(s7.getInt(3) == 2 && s7.getDouble(4) == 4.0)
-      val s8 = sessions.find(_.getLong(0) == 8L)
-      assert(s8.nonEmpty, "user 8's single-event session should close too")
-    } finally q.stop()
-  }
-
-  test("stream-stream join: click pairs with same-user error in the window, state stays bounded") {
-    import spark.implicits._
-    val clicks = MemoryStream[Event](spark)
-    val errors = MemoryStream[Event](spark)
-    val joined = EventStreams.streamStreamJoin(
-      clicks.toDF().filter(col("event_type") === "click"),
-      errors.toDF().filter(col("event_type") === "error"),
-      key = "user_id", maxDelay = "30 minutes", watermarkDelay = "0 seconds")
-    val q = joined
-      .select(col("event_id"), col("r_event_id"))
-      .writeStream.format("memory").queryName("ssj").outputMode("append").start()
-    try {
-      // user 1: error at t=10 then click at t=20 (within 30m) → match.
-      // user 2: error at t=10, click at t=50 (older than 30m) → no match.
-      errors.addData(Event(100, ts(10), 1, "error", 0.0),
-        Event(101, ts(10), 2, "error", 0.0))
-      clicks.addData(Event(1, ts(20), 1, "click", 1.0),
-        Event(2, ts(50), 2, "click", 1.0))
-      q.processAllAvailable()
-      // advance both watermarks so pending matches flush
-      errors.addData(Event(102, ts(120), 3, "error", 0.0))
-      clicks.addData(Event(3, ts(120), 3, "click", 1.0))
-      q.processAllAvailable()
-      val out = spark.table("ssj").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(out.contains((1L, 100L)), s"in-window pair must join, got $out")
-      assert(!out.contains((2L, 101L)), s"out-of-window pair must not, got $out")
-      // bounded state: the progress reports a watermark-driven state store
-      val state = q.lastProgress.stateOperators
-      assert(state.nonEmpty && state.head.numRowsTotal < 100,
-        "join state must stay bounded by the time condition")
-    } finally q.stop()
-  }
-
-  test("left-outer stream-stream join: unmatched click emits null-padded after watermark") {
-    import spark.implicits._
-    val clicks = MemoryStream[Event](spark)
-    val errors = MemoryStream[Event](spark)
-    val q = EventStreams.streamStreamJoin(
-        clicks.toDF().filter(col("event_type") === "click"),
-        errors.toDF().filter(col("event_type") === "error"),
-        key = "user_id", maxDelay = "30 minutes", watermarkDelay = "0 seconds",
-        joinType = "left_outer")
-      .select(col("event_id"), col("r_event_id"))
-      .writeStream.format("memory").queryName("ssj_outer").outputMode("append").start()
-    try {
-      errors.addData(Event(100, ts(10), 1, "error", 0.0))
-      clicks.addData(Event(1, ts(20), 1, "click", 1.0),  // matches error 100
-        Event(2, ts(20), 2, "click", 1.0))               // no error for user 2
-      q.processAllAvailable()
-      // push both watermarks far past t=20 so the unmatched row finalizes
-      errors.addData(Event(101, ts(300), 9, "error", 0.0))
-      clicks.addData(Event(3, ts(300), 9, "click", 1.0))
-      q.processAllAvailable()
-      val out = spark.table("ssj_outer").collect()
-        .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).toSet
-      assert(out.contains((1L, 100L)), s"matched pair must join: $out")
-      assert(out.contains((2L, -1L)), s"unmatched click must emit null-padded: $out")
-    } finally q.stop()
-  }
-
-  test("streaming dedup drops in-horizon repeats, keeps distinct keys") {
-    import spark.implicits._
-    val input = MemoryStream[Event](spark)
-    val q = EventStreams.streamingDedup(input.toDF(), Seq("user_id"), "5 minutes")
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      input.addData(
-        Event(1, ts(0), 7, "click", 1.0),
-        Event(2, ts(1), 7, "click", 2.0), // same user within horizon → dropped
-        Event(3, ts(1), 8, "view", 3.0))
-      q.processAllAvailable()
-      val ids = spark.table("dedup").collect().map(_.getAs[Long]("event_id")).toSet
-      assert(ids == Set(1L, 3L))
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment joins the dim per micro-batch") {
-    import spark.implicits._
-    val dim = Seq((7L, "gold"), (8L, "basic")).toDF("user_id", "tier")
-    val input = MemoryStream[Event](spark)
-    val q = EventStreams.enrichWithStatic(input.toDF(), dim, Seq("user_id"))
-      .writeStream.format("memory").queryName("enrich").outputMode("append").start()
-    try {
-      input.addData(Event(1, ts(0), 7, "click", 1.0), Event(2, ts(1), 9, "view", 2.0))
-      q.processAllAvailable()
-      val rows = spark.table("enrich").collect()
-        .map(r => r.getAs[Long]("event_id") -> Option(r.getAs[String]("tier"))).toMap
-      assert(rows == Map(1L -> Some("gold"), 2L -> None))
-    } finally q.stop()
   }
 
   test("windowed counts on the batch events table match a plain group-by") {

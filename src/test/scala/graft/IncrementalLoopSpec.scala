@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -247,11 +247,12 @@ class IncrementalLoopSpec extends AnyFunSuite {
     for ((take, c) <- Seq(6, 2, 2).zipWithIndex) {
       val tasks = land(take)
       assert(tasks.exists(_.rover_name == "Perseverance"), tasks)
-      // writer leftovers in a bronze root: Spark's own _SUCCESS and .crc
+      // writer leftovers in a bronze root: a _SUCCESS marker, Spark's .crc
       // files, and a load still committing under _temporary/
       Files.createDirectories(Path.of(wh.bronzePhotos, "_temporary", "0"))
-      dataFiles(copy).foreach(f =>
-        Files.copy(Path.of(copy, f), Path.of(wh.bronzePhotos, "_temporary", "0", f)))
+      Files.write(Path.of(wh.bronzePhotos, "_SUCCESS"), Array.emptyByteArray)
+      dataFiles(copy).foreach(f => Files.copy(Path.of(copy, f),
+        Path.of(wh.bronzePhotos, "_temporary", "0", f), StandardCopyOption.REPLACE_EXISTING))
       val junk = entries(wh.bronzePhotos).filter(n => n.startsWith("_") || n.startsWith("."))
       assert(Seq("_temporary", "_SUCCESS", ".").forall(p => junk.exists(_.startsWith(p))), junk)
       sched = orch.transformStage()
@@ -261,8 +262,22 @@ class IncrementalLoopSpec extends AnyFunSuite {
       val consumed = OffsetLog(spark, dir.getParent.toString)
         .read(OffsetLog.Offsets, logIds(dir).last).map(_(1)).toSet
       assert(consumed == bronze.flatMap(dataFiles).toSet, s"cycle ${c + 1}: silver consumed $consumed")
-      // the next bronze write's job commit would merge the planted files
-      org.apache.commons.io.FileUtils.deleteDirectory(Path.of(wh.bronzePhotos, "_temporary").toFile)
+    }
+  }
+
+  test("a bronze load leaves alone what a dead load left under _temporary") {
+    val loop = new Loop("deadload", ticking())
+    import loop._
+    setUp()
+    // a load that died while committing: a data file in the photo root's
+    // job-attempt dir, holding a copy of photos already loaded
+    val attempt = Files.createDirectories(Path.of(wh.bronzePhotos, "_temporary", "0"))
+    val planted = attempt.resolve("part-dead.parquet")
+    Files.copy(Path.of(wh.bronzePhotos, dataFiles(wh.bronzePhotos).min), planted)
+    for (c <- 1 to 2) {
+      assert(cycle(2).nonEmpty)
+      assertFullRefresh(s"cycle $c")
+      assert(Files.exists(planted), s"cycle $c: the planted file was moved")
     }
   }
 

@@ -7,8 +7,9 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.Event
 
-/** Output-mode and trigger semantics — the contract half of the streaming
-  * surface (EventStreamsSpec covers the operators):
+/** Output-mode and trigger semantics of Spark's streaming engine, on the
+  * events rows the windowed queries read (EventStreamsSpec covers
+  * `windowedCounts` itself):
   *
   *  - UPDATE mode re-emits a key's row every batch its value changes —
   *    the mode for live dashboards reading a mutable sink; APPEND holds a

@@ -109,40 +109,4 @@ class StreamingSketchSpec extends AnyFunSuite {
       assert(streamed == batch)
     } finally q.stop()
   }
-
-  test("KMV maintained via mapGroupsWithState == batch kmvDistinct") {
-    import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    val input = MemoryStream[(String, String)](spark)
-    val hashed = input.toDF().toDF("grp", "it")
-      .select(col("grp"),
-        TextOps.md5Long(concat(lit("kmv:"), col("it"))).as("h"))
-    val q = graft.streaming.SketchStreams.run(hashed, k = 8, "kmv_stream")
-    try {
-      input.addData(("a", "w1"), ("a", "w2"), ("a", "w3"), ("b", "w1"))
-      q.processAllAvailable()
-      input.addData(("a", "w2"), ("a", "w4"), ("b", "w9"),
-        ("a", "x1"), ("a", "x2"), ("a", "x3"), ("a", "x4"),
-        ("a", "x5"), ("a", "x6"))
-      q.processAllAvailable()
-      // final state per group: below k the list only GROWS (n_kept
-      // increases), at k the k-th min only SHRINKS — so the last
-      // emission is max n_kept, then min u_k
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("grp").orderBy(col("n_kept").desc, col("u_k").asc)
-      val fin = spark.table("kmv_stream")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1).drop("rk")
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-      val items = Seq("w1", "w2", "w3", "w2", "w4", "x1", "x2", "x3",
-        "x4", "x5", "x6").map(("a", _)) ++ Seq(("b", "w1"), ("b", "w9"))
-      val batch = TextOps.kmvDistinct(items.toDF("g", "it"),
-          col("it"), col("g"), k = 8)
-        .collect().map(r => r.getString(0) ->
-          (r.getAs[Long]("n_kept"), r.getAs[Double]("u_k"),
-            r.getAs[Double]("kmv_estimate"))).toMap
-      assert(fin == batch)
-    } finally q.stop()
-  }
 }
