@@ -216,7 +216,7 @@ object IvfDriftBench {
         .getOrElse(s""""threshold_read": "pending — run in progress"""")
       val doc =
         s"""{
-   |"what": "The drift -> probe-recall curve behind IvfLifecycle.indexDrift and maintain's driftThreshold (VERDICT r10 #2). Corpus: $sfDir ($n vectors, $dims-dim, unit-norm, $diversitySentence). Version 1 published through IvfLifecycle.init (routed build, $survivingCells cells). Drift model = NEW MODES: step s appends a disjoint 5% corpus slice with coordinates cyclically rotated by s - an isometry, so each rotated cluster keeps its exact tightness and neighbor structure while its center becomes a direction the stored centroids never saw; batches route to nearest STORED centroid exactly like the streaming faces (appendToIvfIndex), and an alien tight cluster whose routing margin is smaller than its own spread SPLITS across stale cells. Recall referee: knnBruteForce over the same store - recall@5 over 64 new-mode queries (the step's own batch), 64 fixed base queries, and the mass-weighted store-wide number, at nprobe 1 and 2. Deterministic end to end: batches, ids and query sets are pure functions of vec_id.",
+   |"what": "The drift -> probe-recall curve behind IvfLifecycle.indexDrift and maintain's driftThreshold (VERDICT r10 #2). Corpus: $sfDir ($n vectors, $dims-dim, unit-norm, $diversitySentence). Version 1 published through IvfLifecycle.init (routed build, $survivingCells cells). Drift model = NEW MODES: step s appends a disjoint 5% corpus slice with coordinates cyclically rotated by s - an isometry, so each rotated cluster keeps its exact tightness and neighbor structure while its center becomes a direction the stored centroids never saw; batches route to nearest STORED centroid through appendToIvfIndex, and an alien tight cluster whose routing margin is smaller than its own spread SPLITS across stale cells. Recall referee: knnBruteForce over the same store - recall@5 over 64 new-mode queries (the step's own batch), 64 fixed base queries, and the mass-weighted store-wide number, at nprobe 1 and 2. Deterministic end to end: batches, ids and query sets are pure functions of vec_id.",
    |"partial": $partial,
    |"protocol": {"init_sec": ${f(initSec)}, "trained_cells_requested": $cells, "cells_surviving": $survivingCells, "coarse": $c1, "coarse2": $c2, "sample_mod": $sampleMod, "queries_per_population": 64, "k": 5},
    |"fresh": {"index_drift": ${f(freshDrift)}, "recall_at5_base_queries": ${recallJson(freshRecall)}},

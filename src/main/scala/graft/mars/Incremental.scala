@@ -8,12 +8,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** dbt incremental materialization semantics over parquet table paths
-  * (SURVEY §2.9). Three behaviors:
+  * (SURVEY §2.9). Nothing here filters by watermark: the caller hands in
+  * only new rows — the loop's [[OffsetLog]] batch of input files no batch
+  * has taken (SURVEY §7.4 item 5a), or a streaming micro-batch. Behaviors:
   *
-  *  - append + high-watermark: filter source rows newer than
-  *    MAX(watermarkCol) in the target, append (reference:
-  *    flat_photo_response.sql:27-29 and all mart models). unique_key is
-  *    declared by the reference but append does NOT dedup — preserved.
+  *  - append: [[Warehouse]] renames a batch's files into the table root
+  *    (reference: flat_photo_response.sql:27-29 and all mart models);
+  *    here only the flat-layout read. unique_key is declared by the
+  *    reference but append does NOT dedup — preserved.
   *  - merge + unique_key: upsert — replace matching keys, insert new
   *    (reference: flat_manifest_response et al). No Delta in this
   *    environment, so: old ANTI-JOIN new ∪ new, written as an immutable
@@ -67,7 +69,7 @@ object Incremental {
     * documents as atomic. Remote filesystems use `create(overwrite =
     * false)`; HDFS signals a lost race with FileAlreadyExistsException,
     * which is a lost claim, not an error. */
-  private[graft] def createExclusive(f: FileSystem, p: Path): Boolean = {
+  private def createExclusive(f: FileSystem, p: Path): Boolean = {
     val q = f.makeQualified(p)
     if (q.toUri.getScheme == "file")
       new java.io.File(q.toUri.getPath).createNewFile()
@@ -119,58 +121,12 @@ object Incremental {
     schema.fold(spark.read)(spark.read.schema)
       .parquet(currentSnapshot(spark, path).fold(path)(snap => s"$path/$snap"))
 
-  /** ISO-8601-string high-watermark filter (P3/A4): rows strictly newer
-    * than the target's MAX(watermarkCol). String `>` is correct for ISO
-    * timestamps (SURVEY §7.4.5). The target's watermark column is read
-    * pinned to the source's type for it. */
-  def newerThanWatermark(spark: SparkSession, target: String, source: DataFrame,
-                         watermarkCol: String): DataFrame =
-    if (!exists(spark, target)) source
-    else {
-      val wm = read(spark, target, Some(StructType(Seq(source.schema(watermarkCol)))))
-        .agg(max(col(watermarkCol))).first().getString(0)
-      if (wm == null) source else source.filter(col(watermarkCol) > lit(wm))
-    }
-
-  /** incremental_strategy='append' with watermark filter. A target that
-    * exists and has nothing newer than its watermark is left as it is:
-    * one emptiness probe of the slice, no write, no empty file. A target
-    * that does not exist yet is created, even from an empty source. */
-  def appendIncremental(spark: SparkSession, target: String, source: DataFrame,
-                        watermarkCol: String = "ingestion_date",
-                        clusterBy: Seq[String] = Nil): Unit =
-    if (!exists(spark, target)) write(source, target, SaveMode.Append, clusterBy)
-    else {
-      val fresh = newerThanWatermark(spark, target, source, watermarkCol)
-      if (!fresh.isEmpty) write(fresh, target, SaveMode.Append, clusterBy)
-    }
-
   /** incremental_strategy='merge' with unique_key: upsert via anti-join +
     * union, published as a fresh immutable snapshot (see writeSnapshot).
-    * Also applies the watermark filter to the incoming side first, like
-    * dbt's is_incremental() guard. An existing target with nothing newer
-    * than its watermark and no `meta` to overlay is left as it is: one
-    * emptiness probe of the slice, then no anti-join, no snapshot and no
-    * new version — the table an empty upsert would publish anyway. A
-    * missing target is created, even from an empty source. */
-  def mergeIncremental(spark: SparkSession, target: String, source: DataFrame,
-                       keys: Seq[String], watermarkCol: String = "ingestion_date",
-                       clusterBy: Seq[String] = Nil,
-                       meta: Map[String, String] = Map.empty): Unit =
-    if (!exists(spark, target)) upsertSnapshot(spark, target, source, keys, clusterBy, meta)
-    else {
-      val fresh = newerThanWatermark(spark, target, source, watermarkCol)
-      if (meta.nonEmpty || !fresh.isEmpty)
-        upsertSnapshot(spark, target, fresh, keys, clusterBy, meta)
-    }
-
-  /** Upsert WITHOUT the high-watermark guard: the caller asserts the
-    * source is ALREADY incremental. dbt's is_incremental() filter exists
-    * to guard a re-read of a full source table; applied to an
-    * already-incremental feed (a foreachBatch micro-batch, a CDC slice)
-    * it silently DROPS rows whose watermark equals a previous batch's max
-    * — e.g. two batches landing within one date-grain watermark value.
-    * [[graft.streaming.SnapshotSink]] uses this entry point. */
+    * The source must already be incremental: dbt's is_incremental()
+    * string `>` on a watermark would drop a batch stamped in the same
+    * second as the previous one's max (SURVEY §7.4 item 5a). [[Warehouse]]
+    * and [[graft.streaming.SnapshotSink]] publish through this entry. */
   def upsertSnapshot(spark: SparkSession, target: String, source: DataFrame,
                      keys: Seq[String], clusterBy: Seq[String] = Nil,
                      meta: Map[String, String] = Map.empty,
@@ -202,7 +158,7 @@ object Incremental {
     *
     * Target schema: `keys ++ checkCols ++ (valid_from, valid_to)`;
     * `valid_to IS NULL` marks the current version. The table is published
-    * through the same versioned-snapshot store as [[mergeIncremental]],
+    * through the same versioned-snapshot store as [[upsertSnapshot]],
     * so racing readers see a committed history or none.
     *
     * Batches must arrive forward in time: a source row at or before the

@@ -1,6 +1,7 @@
 package graft.mars
 
-import java.util.UUID
+import java.security.MessageDigest
+import java.util.HexFormat
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -29,9 +30,8 @@ import org.apache.spark.sql.types.StructType
   * `ingestion_date` drops it. Appends publish batch n as `b<n>-*` files
   * renamed in from a hidden stage dir, merges record n in the snapshot
   * meta, so re-running a batch whose commit entry is missing neither loses
-  * nor duplicates rows. No main code calls `Incremental`'s watermark entry
-  * points (`appendIncremental`, `mergeIncremental`, `newerThanWatermark`);
-  * only specs do.
+  * nor duplicates rows. A bronze load is tagged by its object path, so a
+  * replayed `minio-events` record loads the object once.
   *
   * Views (dims/facts/validation) stay lazy — recomputed per query.
   * `MarsPipeline` is the view-only variant over raw fixtures; this is the
@@ -80,7 +80,13 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * the way a batch append is (see [[appendStaged]]) from a stage
     * directory of its own. Loads therefore share no Spark job-attempt
     * directory: what a load that died while committing left under the
-    * root's `_temporary/` is not merged by the next load's job commit. */
+    * root's `_temporary/` is not merged by the next load's job commit.
+    *
+    * The load's tag is a digest of the object path, so loading an object
+    * again — `startLoadStream`'s `foreachBatch` is at-least-once and may
+    * replay a `minio-events` record — publishes nothing once the first
+    * load's files are in, and finishes the renames of a load that died
+    * between them. */
   def loadBronze(objectPath: String, filename: String): String = {
     val load = RoverKeys.route(filename) match {
       case "photos" => Some(bronzePhotos -> Bronze.rawPhotoResponse(spark, objectPath))
@@ -90,7 +96,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
       case _ => None // reference logs + skips unknown files
     }
     load.fold("UNKNOWN") { case (table, df) =>
-      appendStaged(table, s"load-${UUID.randomUUID}", df, clusterBy = Nil)
+      val digest = MessageDigest.getInstance("MD5").digest(objectPath.getBytes("UTF-8"))
+      appendStaged(table, s"load-${HexFormat.of.formatHex(digest)}", df, clusterBy = Nil)
       table
     }
   }
@@ -274,13 +281,25 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * skip, then each data file renamed into the root as `<tag>-<name>`. A
     * file holding no rows is dropped (the count is read from its parquet
     * footer, no Spark job) unless the table does not exist yet, which a
-    * first append creates even empty. Returns the names published. */
+    * first append creates even empty. Returns the names published.
+    *
+    * An earlier append under the same tag is finished, never repeated:
+    * with `<tag>-` files in the root and no stage left it was complete,
+    * and nothing is written; a stage holding `_SUCCESS` was fully written,
+    * and only its remaining files are renamed in. A published file is
+    * never removed, since a batch may already have taken it. */
   private def appendStaged(table: String, tag: String, df: DataFrame,
                            clusterBy: Seq[String]): Seq[String] = {
-    val create = !Incremental.exists(spark, table)
-    val stage = new Path(table, s"_stage_$tag")
-    Incremental.write(df, stage.toString, SaveMode.Overwrite, clusterBy)
-    val published = dataFiles(stage.toString)
+    val root = new Path(table)
+    val listed = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
+    val stage = new Path(root, s"_stage_$tag")
+    val staged = listed.exists(_.getPath.getName == stage.getName)
+    val done = listed.map(_.getPath.getName).filter(_.startsWith(s"$tag-"))
+    if (done.nonEmpty && !staged) return done
+    val create = !listed.exists(st => st.isFile && !st.getPath.getName.startsWith("_"))
+    if (!staged || !fs.exists(new Path(stage, "_SUCCESS")))
+      Incremental.write(df, stage.toString, SaveMode.Overwrite, clusterBy)
+    val published = done ++ dataFiles(stage.toString)
       .filter(f => create || rowCount(new Path(stage, f)) > 0)
       .map { f =>
         val dest = new Path(table, s"$tag-$f")

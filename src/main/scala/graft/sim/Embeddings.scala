@@ -310,13 +310,12 @@ object Embeddings {
     * vector can be labeled into a cell its flat routing never probes —
     * measured at the r10 ingest bench as 0.4% of a 200k store, which
     * admitted 83 exact replicas as false novelty
-    * (BENCH_SEMDEDUP_INGEST batch 0). An index that serves STREAM
-    * admission ([[graft.streaming.SemDedupIngest]] /
-    * [[graft.streaming.VectorIngest]]) must be built through this
-    * entry or through [[IvfLifecycle.init]] (which calls it); the
-    * label-faithful [[buildIvfIndex]] remains the right build for the
-    * oracle paths, whose recorded answers reproduce the inline
-    * label-cell searches bit-exactly.
+    * (BENCH_SEMDEDUP_INGEST batch 0). An index that takes routed
+    * appends ([[appendToIvfIndex]]) and probes them by cell must be
+    * built through this entry or through [[IvfLifecycle.init]] (which
+    * calls it); the label-faithful [[buildIvfIndex]] remains the right
+    * build for the oracle paths, whose recorded answers reproduce the
+    * inline label-cell searches bit-exactly.
     *
     * Scale shape: one extra flat assign pass over the corpus
     * (broadcast |cells|-row centroid table, the bounded-linear leg
@@ -336,36 +335,31 @@ object Embeddings {
     * exist, not the cells that ideally would), and the refresh pass is
     * [[kmeansAssign]] + [[buildIvfIndex]] when drift accumulates.
     * Routing is [[routeToCells]]: the same `cell_argmax` scan as
-    * kmeansAssign, and a zero-norm vector fails the append. */
+    * kmeansAssign, and a zero-norm vector fails the append. It is a
+    * pure function of (embedding, centroids): as long as the centroid
+    * table is unchanged, the same `vec_id` always lands in the same
+    * cell — which is what lets a dedup check scope itself to the routed
+    * cells instead of scanning the whole index. */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                        embeddings: DataFrame): Unit =
-    appendRoutedToIvf(routeToIvfCells(spark, indexDir, embeddings), indexDir)
+    appendRoutedToIvf(
+      routeToCells(embeddings, spark.read.parquet(s"$indexDir/centroids")), indexDir)
 
-  /** Route vectors to their nearest EXISTING centroid — the shared head of
-    * the batch append and the streaming ingest ([[graft.streaming.VectorIngest]]).
-    * Routing is a pure function of (embedding, centroids): as long as the
-    * centroid table is unchanged, the same `vec_id` always lands in the
-    * same cell — which is what lets a dedup check scope itself to the
-    * routed cells instead of scanning the whole index. Output:
-    * (vec_id, emb, vnorm, cell), write-ready for the postings layout. */
-  def routeToIvfCells(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                      embeddings: DataFrame): DataFrame =
-    routeToCells(embeddings, spark.read.parquet(s"$indexDir/centroids"))
-
-  /** The flat nearest-centroid argmax behind [[routeToIvfCells]],
+  /** The flat nearest-centroid argmax behind [[appendToIvfIndex]],
     * against an explicit (cell, cemb) centroid frame — shared with the
     * lifecycle rebuild ([[IvfLifecycle.maintain]]) so STORED cells and
-    * STREAM routing derive from the identical expression (same rounding,
-    * same low-cell-id tie-break) and can never disagree: the replay
-    * idempotence of [[graft.streaming.SemDedupIngest]] /
-    * [[graft.streaming.VectorIngest]] rests on "stored cell = where this
-    * vector routes", which a rebuild must re-establish by construction.
+    * appended vectors' cells derive from the identical expression (same
+    * rounding, same low-cell-id tie-break) and can never disagree: "stored
+    * cell = where this vector routes" is what a cell-scoped probe of a
+    * replayed batch rests on, and a rebuild must re-establish it by
+    * construction. Output: (vec_id, emb, vnorm, cell), write-ready for
+    * the postings layout.
     *
     * The argmax is [[exhaustiveAssign]]'s `cell_argmax` scan carrying
     * `emb`/`vnorm` through, so no aggregate and no join back to the
     * input. A zero-norm vector has no cosine to any centroid: it raises
     * an error here rather than route silently to the lowest cell
-    * (stream input reaches this entry from outside the program). */
+    * (appended input reaches this entry from outside the program). */
   def routeToCells(embeddings: DataFrame, cents: DataFrame): DataFrame = {
     val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
       .withColumn("vnorm", norm(col("emb")))
@@ -376,7 +370,7 @@ object Embeddings {
       .select(col("vec_id"), col("emb"), col("vnorm"), col("cell"))
   }
 
-  /** Append (or, for a fresh build, overwrite) a [[routeToIvfCells]]-
+  /** Append (or, for a fresh build, overwrite) a [[routeToCells]]-
     * shaped frame into the postings layout.
     *
     * The write repartitions by cell first, so each append lands ONE
@@ -1620,8 +1614,7 @@ object Embeddings {
     * (query_id, qemb double[]). The probed cells are collected (bounded
     * by query-set × nprobe — a driver-side scalar) and pushed into the
     * codes scan as a static partition filter, so only those partitions'
-    * files are read — the same discipline as
-    * [[graft.streaming.VectorIngest]]'s cell-scoped dedup. */
+    * files are read. */
   def searchIvfPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                        queries: DataFrame, k: Int = 5, nprobe: Int = 1,
                        m: Int = 4): DataFrame = {

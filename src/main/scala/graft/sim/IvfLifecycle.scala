@@ -29,16 +29,15 @@ import org.apache.spark.sql.functions._
   *
   * The rebuild's LAST step re-routes every stored vector against the
   * final centroid table via [[Embeddings.routeToCells]] — the very
-  * expression the streaming faces route with — so the invariant the
-  * replay-idempotence proofs rest on ("stored cell = where this vector
-  * routes against the stored centroids") holds by construction in the
-  * new version: a [[graft.streaming.SemDedupIngest]] /
-  * [[graft.streaming.VectorIngest]] batch replayed ACROSS the swap
-  * re-derives its decisions against the new store and appends nothing
-  * (spec-pinned). Without the re-route, Lloyd's final assignment (made
-  * against the PREVIOUS round's centroids) can disagree with the stored
-  * means, and a replayed vector whose cell moved would re-append under
-  * its new cell — a silent duplicate.
+  * expression [[Embeddings.appendToIvfIndex]] routes with — so the
+  * invariant a cell-scoped probe rests on ("stored cell = where this
+  * vector routes against the stored centroids") holds by construction
+  * in the new version: a batch replayed ACROSS the swap routes every
+  * vector to the cell it is stored in (spec-pinned). Without the
+  * re-route, Lloyd's final assignment (made against the PREVIOUS
+  * round's centroids) can disagree with the stored means, and a
+  * replayed vector whose cell moved would miss its stored twin and
+  * re-append under its new cell — a silent duplicate.
   *
   * Scale shape: drift is one |cells|×dims centroid aggregation plus a
   * |cells|-row join against the stored centroid table; the
@@ -78,8 +77,8 @@ object IvfLifecycle {
   }
 
   /** Resolve the live version's index dir. A reader that resolves ONCE
-    * and passes the returned path to searchIvfIndex / SemDedupIngest /
-    * VectorIngest is pinned: a concurrent swap never mutates or removes
+    * and passes the returned path to searchIvfIndex / appendToIvfIndex
+    * is pinned: a concurrent swap never mutates or removes
     * the resolved tree, so the whole operation sees exactly one
     * version. */
   def current(spark: SparkSession, root: String): String =

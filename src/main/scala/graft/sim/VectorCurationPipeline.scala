@@ -31,14 +31,7 @@ import org.apache.spark.sql.functions._
   * 16-byte content hash instead, same plan shape) and semDedup's
   * cell-blocked rank/pair pass (Σ|cell|², the registered bucketed plan
   * past the cell floor); the eval side broadcasts. Nothing collects but
-  * the audit counts.
-  *
-  * Survivor policy vs the STREAMING face: batch SemDeDup keeps each
-  * cell-duplicate-group's least centroid-typical member;
-  * [[graft.streaming.SemDedupIngest]] keeps the earliest arrival. Same
-  * duplicate RELATION, different canonical pick — an intentional policy
-  * difference, spec-asserted by name in VectorCurationPipelineSpec
-  * rather than papered over. */
+  * the audit counts. */
 object VectorCurationPipeline {
 
   final case class Result(curated: DataFrame, audit: DataFrame,
@@ -64,28 +57,21 @@ object VectorCurationPipeline {
     * corpus size ([[graft.ops.ScaleKnobs.kmeansCells]] at `cellsFloor`,
     * the `emb_semdedup` contract — the floor resolves at every oracle
     * sf, which is what the static oracle SQL assumes); pass `nCells > 0`
-    * to pin it, or `labelCells = true` to use the input's `label`
-    * column as the cell (the pre-clustered case — e.g. a persisted IVF
-    * index's cells, [[Embeddings.semDedup]]'s own `nCells = 0`
-    * contract; this is the blocking [[graft.streaming.SemDedupIngest]]
-    * uses, which is what makes the batch/stream parity spec possible). */
+    * to pin it. */
   def run(embeddings: DataFrame, evalFilter: Column,
           semThreshold: Double = 0.4, nCells: Int = 0, cellsFloor: Int = 16,
-          decontThreshold: Double = 0.4, labelCells: Boolean = false): Result = {
+          decontThreshold: Double = 0.4): Result = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     // registry snapshot for Result.blocks (see text CurationPipeline)
     val preRun = spark.sparkContext.getPersistentRDDs.keySet
 
-    val carried =
-      if (labelCells) Seq(col("vec_id"), col("embedding"), col("label"))
-      else Seq(col("vec_id"), col("embedding"))
     // r13 (VERDICT r12 #3, guide §1.5): stage counts ride the eager
     // checkpoint materializations as observe metrics — no count() job
     // per audit row (the td CurationPipeline fusion, same mechanism,
     // pinned by CheckpointObservationSpec).
     val inObs = org.apache.spark.sql.Observation()
-    val corpus = embeddings.filter(!evalFilter).select(carried: _*)
+    val corpus = embeddings.filter(!evalFilter).select(col("vec_id"), col("embedding"))
       .observe(inObs, count(lit(1)).as("n")).localCheckpoint()
     val evalSet = embeddings.filter(evalFilter)
       .select(col("vec_id"), col("embedding")).localCheckpoint()
@@ -102,22 +88,21 @@ object VectorCurationPipeline {
       .localCheckpoint()
     val nExact = exObs.get("n").asInstanceOf[Long]
 
-    // stage 2: SemDeDup keep/drop over derived k-means cells (or the
-    // carried label cells) — the registered emb_semdedup operator on
-    // the deduped corpus. Cells derive from nExact, the DEDUPED count
-    // (ADVICE r10): the exact-dedup stage feeds SemDeDup, so its size
+    // stage 2: SemDeDup keep/drop over derived k-means cells — the
+    // registered emb_semdedup operator on the deduped corpus. Cells
+    // derive from nExact, the DEDUPED count (ADVICE r10): the
+    // exact-dedup stage feeds SemDeDup, so its size
     // is the operator-contract input — deriving from nInput would
     // over-provision cells on multiplicity-heavy corpora relative to
     // the standalone emb_semdedup this stage claims to merely wire.
     // Oracle-neutral: every oracle sf resolves both counts to the floor.
     val cells =
-      if (labelCells) 0
-      else if (nCells > 0) nCells
+      if (nCells > 0) nCells
       else graft.ops.ScaleKnobs.kmeansCells(nExact, floor = cellsFloor)
     val marked = Embeddings.semDedup(exact, threshold = semThreshold,
       nCells = cells,
-      nCoarse = if (cells > 0) graft.ops.ScaleKnobs.kmeansCoarse(cells) else 1,
-      nCoarse2 = if (cells > 0) graft.ops.ScaleKnobs.kmeansCoarse2(cells) else 1)
+      nCoarse = graft.ops.ScaleKnobs.kmeansCoarse(cells),
+      nCoarse2 = graft.ops.ScaleKnobs.kmeansCoarse2(cells))
     val semObs = org.apache.spark.sql.Observation()
     val survivors = exact.join(
       marked.filter(col("is_dup") === 1).select("vec_id"),

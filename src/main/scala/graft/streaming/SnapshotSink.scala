@@ -9,12 +9,11 @@ import graft.mars.Incremental
   * `foreachBatch` → [[Incremental.upsertSnapshot]] / [[Incremental.scd2Merge]]
   * with the micro-batch id recorded INSIDE the published version.
   *
-  * Why this is exactly-once where [[CorpusIngest]] is honestly
-  * at-least-once: there, the applied-batch marker is a separate file
-  * written AFTER the data append, so a crash between the two duplicates
-  * on replay. Here the batch id travels in the snapshot dir itself and
-  * becomes visible in the same atomic commit-marker publish as the data
-  * (the Delta `txnAppId`/`txnVersion` idempotent-writer pattern):
+  * Why this is exactly-once where an applied-batch marker is only
+  * at-least-once: a marker is a separate file written AFTER the data
+  * append, so a crash between the two duplicates on replay. Here the
+  * batch id travels in the snapshot dir itself and becomes visible in
+  * the same atomic commit-marker publish as the data (the Delta `txnAppId`/`txnVersion` idempotent-writer pattern):
   *
   *  - crash BEFORE the commit marker → the version is invisible to
   *    readers AND to [[lastBatchId]] (which reads only the COMMITTED
@@ -33,9 +32,9 @@ import graft.mars.Incremental
   * version count. A NEW checkpoint restarts ids at 0, so — as with any
   * txnVersion sink — a fresh checkpoint needs a fresh table.
   *
-  * The merge deliberately bypasses the dbt high-watermark filter
-  * ([[Incremental.upsertSnapshot]]): a micro-batch is already
-  * incremental, and the watermark guard would silently drop rows whose
+  * The merge ([[Incremental.upsertSnapshot]]) deliberately takes no dbt
+  * high-watermark filter: a micro-batch is already incremental, and
+  * the watermark guard would silently drop rows whose
   * watermark value ties a previous batch's max (two batches landing
   * within one date-grain value).
   *

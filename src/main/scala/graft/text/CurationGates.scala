@@ -58,10 +58,8 @@ object CurationGates {
 
   /** The per-doc signal frame every gate reads from — one row per doc
     * with all five signal families joined (quality bucket, lang vote,
-    * repetition fraction, Gopher rule columns, C4 rule columns). Shared
-    * by [[CurationPipeline]] (batch) and
-    * [[graft.streaming.StreamingCuration]] (per micro-batch), so the two
-    * faces gate on byte-identical expressions. */
+    * repetition fraction, Gopher rule columns, C4 rule columns), read by
+    * [[CurationPipeline]]. */
   def signalsOf(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     TextOps.qualityScores(docs).select("doc_id", "quality_bucket")
       .join(TextOps.langId(docs).select("doc_id", "lang_match"), "doc_id")
@@ -70,9 +68,4 @@ object CurationGates {
       .join(TextOps.gopherRules(docs).drop("n_req_stopwords"), "doc_id")
       .join(TextOps.c4Rules(docs)
         .select("doc_id", "has_lorem_ipsum", "has_brace", "pass_c4"), "doc_id")
-
-  /** Rows of `docs` passing every gate (original columns only). */
-  def gate(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    docs.join(signalsOf(docs), "doc_id").filter(all)
-      .select(docs.columns.map(col): _*)
 }

@@ -1565,25 +1565,21 @@ object TextOps {
       lineHashCounts(docs).filter(col("n_docs") > maxDocs).select("h"))
 
   /** Per-line-hash distinct document counts over `docs` — the line-grain
-    * document-frequency table [[lineDedup]] thresholds, factored out so
-    * the STREAMING face ([[graft.streaming.StreamingCuration]]) can
-    * accumulate the same counts across micro-batches (one batch alone
-    * cannot see corpus-wide boilerplate). Output: (h, n_docs). */
+    * document-frequency table [[lineDedup]] and [[CurationPipeline]]
+    * threshold. Output: (h, n_docs). */
   def lineHashCounts(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
         explode(split(col("text"), "\n")).as("line"))
       .withColumn("h", md5Long(col("line")))
       .groupBy("h").agg(countDistinct("doc_id").as("n_docs"))
 
-  /** The full stage-1.5 application, shared VERBATIM by the batch
-    * pipeline ([[CurationPipeline]]) and the streaming face
-    * ([[graft.streaming.StreamingCuration]]) so the two admission
-    * semantics cannot drift: rewrite `docs` with `heavy` lines removed,
-    * DROP documents whose every line was boilerplate (an empty rewrite
-    * must not ride past gates that never saw the empty text), and
-    * recompute `n_chars` from the rewritten text when the schema
-    * carries it (derived columns must not mix pre-rewrite stats with
-    * post-rewrite text). Returns `docs`' columns plus `n_removed`. */
+  /** The full stage-1.5 application of [[CurationPipeline]]: rewrite
+    * `docs` with `heavy` lines removed, DROP documents whose every line
+    * was boilerplate (an empty rewrite must not ride past gates that
+    * never saw the empty text), and recompute `n_chars` from the
+    * rewritten text when the schema carries it (derived columns must not
+    * mix pre-rewrite stats with post-rewrite text). Returns `docs`'
+    * columns plus `n_removed`. */
   def applyLineRemoval(docs: DataFrame, heavy: DataFrame): DataFrame = {
     val ld = lineRemove(docs, heavy)
     val rejoined = docs.drop("text")

@@ -35,10 +35,10 @@ class CompactionSpec extends AnyFunSuite {
     val t = tmp()
     // three merges at default shuffle width -> many small files per version
     (0 to 2).foreach(i =>
-      Incremental.mergeIncremental(spark, t,
+      Incremental.upsertSnapshot(spark, t,
         (i * 100 until (i + 1) * 100).map(k => (k.toLong, f"tag$i"))
           .toDF("k", "ver").repartition(8),
-        Seq("k"), watermarkCol = "ver"))
+        Seq("k")))
     val before = rows(Incremental.read(spark, t))
     val beforeFiles = parquetFiles(s"$t/v00000003").size
     assert(beforeFiles > 1, s"premise: expected many small files, got $beforeFiles")
@@ -54,10 +54,10 @@ class CompactionSpec extends AnyFunSuite {
   test("sorted compaction yields range-disjoint files (row-group pruning contract)") {
     import spark.implicits._
     val t = tmp()
-    Incremental.mergeIncremental(spark, t,
+    Incremental.upsertSnapshot(spark, t,
       (0L until 3000L).map(k => (k, s"v${k % 7}")).toDF("k", "ver")
         .repartition(16), // hash-scattered: every file spans ~the full key range
-      Seq("k"), watermarkCol = "ver")
+      Seq("k"))
     val bytes = fs.getContentSummary(new Path(s"$t/v00000001")).getLength
     assert(Incremental.compact(spark, t, targetFileBytes = bytes / 3,
       sortBy = Seq("k")))
@@ -79,10 +79,10 @@ class CompactionSpec extends AnyFunSuite {
   test("a publish conditioned on a stale base aborts cleanly") {
     import spark.implicits._
     val t = tmp()
-    Incremental.mergeIncremental(spark, t, Seq((1L, "a")).toDF("k", "ver"),
-      Seq("k"), watermarkCol = "ver")
-    Incremental.mergeIncremental(spark, t, Seq((1L, "b")).toDF("k", "ver"),
-      Seq("k"), watermarkCol = "ver")
+    Incremental.upsertSnapshot(spark, t, Seq((1L, "a")).toDF("k", "ver"),
+      Seq("k"))
+    Incremental.upsertSnapshot(spark, t, Seq((1L, "b")).toDF("k", "ver"),
+      Seq("k"))
     // a compact that read v1 as its base, racing the merge that made v2:
     // must refuse to publish v1's stale rows on top of v2
     val published = Incremental.writeSnapshot(spark, t,
@@ -102,10 +102,10 @@ class CompactionSpec extends AnyFunSuite {
     val t = tmp()
     // full 32x32 grid, hash-scattered across input files
     val grid = for { a <- 0 until 32; b <- 0 until 32 } yield (a, b)
-    Incremental.mergeIncremental(spark, t,
+    Incremental.upsertSnapshot(spark, t,
       grid.map { case (a, b) => (a, b, "w") }.toDF("a", "b", "ver")
         .repartition(16),
-      Seq("a", "b"), watermarkCol = "ver")
+      Seq("a", "b"))
     val bytes = fs.getContentSummary(new Path(s"$t/v00000001")).getLength
     assert(Incremental.compact(spark, t, targetFileBytes = (bytes + 3) / 4,
       zorderBy = Seq("a", "b")))
@@ -127,8 +127,8 @@ class CompactionSpec extends AnyFunSuite {
   test("compact aborts while a lower-numbered claim is still uncommitted") {
     import spark.implicits._
     val t = tmp()
-    Incremental.mergeIncremental(spark, t, Seq((1L, "a")).toDF("k", "ver"),
-      Seq("k"), watermarkCol = "ver")
+    Incremental.upsertSnapshot(spark, t, Seq((1L, "a")).toDF("k", "ver"),
+      Seq("k"))
     // an in-flight merge holds the next version's claim but hasn't
     // committed: compacting now would publish a HIGHER stale copy that
     // shadows that merge the moment it lands

@@ -120,9 +120,9 @@ class IncrementalAggSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("inc_agg_e2e").toString
     val table = dir + "/table"
     val mart = dir + "/mart"
-    Incremental.mergeIncremental(spark, table,
+    Incremental.upsertSnapshot(spark, table,
       (1L to 40L).map(i => (i, s"s${i % 4}", i * 2)).toDF("id", "grp", "qty"),
-      Seq("id"), "grp")
+      Seq("id"))
     IncrementalAgg.update(spark, mart, Incremental.readVersion(spark, table, 1),
       keys = Seq("grp"), sums = Seq("qty"))
     // v2: upsert some, v3: takedown

@@ -234,31 +234,16 @@ class MarsPipelineSpec extends AnyFunSuite {
 
   // ---- incremental materialization (§2.9) ----
 
-  test("incremental append honors the string ISO watermark") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc").toString
-    val t = s"$dir/tbl"
-    val v1 = Seq(("a", "2025-01-01T00:00:00"), ("b", "2025-01-02T00:00:00"))
-      .toDF("k", "ingestion_date")
-    Incremental.appendIncremental(spark, t, v1)
-    // second run carries one stale row (≤ watermark) and one fresh row
-    val v2 = Seq(("b", "2025-01-02T00:00:00"), ("c", "2025-01-03T00:00:00"))
-      .toDF("k", "ingestion_date")
-    Incremental.appendIncremental(spark, t, v2)
-    val out = Incremental.read(spark, t).select("k").collect().map(_.getString(0)).sorted
-    assert(out.toSeq == Seq("a", "b", "c")) // stale 'b' filtered, no dedup beyond watermark
-  }
-
   test("incremental merge upserts by key via anti-join + swap") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
     val t = s"$dir/tbl"
     val v1 = Seq(("r1", 10, "2025-01-01T00:00:00"), ("r2", 20, "2025-01-01T00:00:00"))
       .toDF("k", "v", "ingestion_date")
-    Incremental.mergeIncremental(spark, t, v1, Seq("k"))
+    Incremental.upsertSnapshot(spark, t, v1, Seq("k"))
     val v2 = Seq(("r2", 99, "2025-01-02T00:00:00"), ("r3", 30, "2025-01-02T00:00:00"))
       .toDF("k", "v", "ingestion_date")
-    Incremental.mergeIncremental(spark, t, v2, Seq("k"))
+    Incremental.upsertSnapshot(spark, t, v2, Seq("k"))
     val out = Incremental.read(spark, t).collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(out == Map("r1" -> 10, "r2" -> 99, "r3" -> 30))

@@ -52,16 +52,16 @@ class PropertiesSpec extends AnyFunSuite {
         .map { case (k, v) => (k, v, "2024-01-02T00:00:00") }
       def df(rows: Seq[(Int, Int, String)]) =
         rows.toDF("k", "v", "ingestion_date")
-      Incremental.mergeIncremental(spark, target, df(oldRows), Seq("k"))
-      Incremental.mergeIncremental(spark, target, df(newRows), Seq("k"))
+      Incremental.upsertSnapshot(spark, target, df(oldRows), Seq("k"))
+      Incremental.upsertSnapshot(spark, target, df(newRows), Seq("k"))
       val got = Incremental.read(spark, target)
         .as[(Int, Int, String)].collect().toSet
       val expected = (newRows ++
         oldRows.filterNot(o => newRows.exists(_._1 == o._1))).toSet
       assert(got == expected, s"seed=$seed")
-      // idempotence: replaying the same source changes nothing (watermark
-      // filter drops rows not strictly newer)
-      Incremental.mergeIncremental(spark, target, df(newRows), Seq("k"))
+      // idempotence: replaying the same source changes nothing (each
+      // replayed key replaces itself)
+      Incremental.upsertSnapshot(spark, target, df(newRows), Seq("k"))
       val again = Incremental.read(spark, target)
         .as[(Int, Int, String)].collect().toSet
       assert(again == expected, s"seed=$seed replay must be a no-op")
@@ -251,16 +251,5 @@ class PropertiesSpec extends AnyFunSuite {
       }.toMap
       assert(got == expected, s"seed=$seed")
     }
-  }
-
-  test("append with watermark never duplicates rows on replay") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("append_prop").toString
-    val target = s"$dir/t"
-    val rows = (1 to 10).map(i => (i, s"2024-01-0${i % 9 + 1}T00:00:00"))
-    val df = rows.toDF("v", "ingestion_date")
-    Incremental.appendIncremental(spark, target, df)
-    Incremental.appendIncremental(spark, target, df) // replay: all rows <= wm
-    assert(Incremental.read(spark, target).count() == rows.size)
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.mars.Incremental
 
 /** The merge-publish atomicity contract (VERDICT r2 item 6): a reader
-  * racing mergeIncremental must never observe a half-published table —
+  * racing upsertSnapshot must never observe a half-published table —
   * no FileNotFound from a swapped-away directory (the r2 temp-dir-swap
   * failure mode), no row set that isn't exactly one committed version.
   */
@@ -28,8 +28,7 @@ class SnapshotRaceSpec extends AnyFunSuite {
     // version has a recognizable (count, single distinct tag) signature.
     def version(i: Int) =
       (0 until 1000).map(k => (k.toLong, f"$i%03d")).toDF("k", "ver")
-    Incremental.mergeIncremental(spark, t, version(0), Seq("k"),
-      watermarkCol = "ver")
+    Incremental.upsertSnapshot(spark, t, version(0), Seq("k"))
 
     val stop = new AtomicBoolean(false)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -47,10 +46,9 @@ class SnapshotRaceSpec extends AnyFunSuite {
     })
     reader.start()
     try {
-      // each merge fully replaces all keys (strictly higher watermark tag)
+      // each merge fully replaces all keys with a strictly higher tag
       (1 to 6).foreach(i =>
-        Incremental.mergeIncremental(spark, t, version(i), Seq("k"),
-          watermarkCol = "ver"))
+        Incremental.upsertSnapshot(spark, t, version(i), Seq("k")))
     } finally {
       stop.set(true)
       reader.join(60000)
@@ -63,12 +61,11 @@ class SnapshotRaceSpec extends AnyFunSuite {
   test("a DataFrame resolved before a merge still reads its own snapshot") {
     import spark.implicits._
     val t = tmpDir()
-    Incremental.mergeIncremental(spark, t,
-      Seq((1L, "v1"), (2L, "v1")).toDF("k", "ver"), Seq("k"), watermarkCol = "ver")
+    Incremental.upsertSnapshot(spark, t,
+      Seq((1L, "v1"), (2L, "v1")).toDF("k", "ver"), Seq("k"))
     val pinned = Incremental.read(spark, t) // resolves the pointer NOW
-    Incremental.mergeIncremental(spark, t,
-      Seq((1L, "v2"), (2L, "v2"), (3L, "v2")).toDF("k", "ver"), Seq("k"),
-      watermarkCol = "ver")
+    Incremental.upsertSnapshot(spark, t,
+      Seq((1L, "v2"), (2L, "v2"), (3L, "v2")).toDF("k", "ver"), Seq("k"))
     // lazy evaluation AFTER the merge: the pinned frame must still be the
     // old snapshot, the fresh read the new one
     assert(pinned.collect().map(_.getString(1)).toSet === Set("v1"))
@@ -79,8 +76,8 @@ class SnapshotRaceSpec extends AnyFunSuite {
     import spark.implicits._
     val t = tmpDir()
     (0 to 4).foreach(i =>
-      Incremental.mergeIncremental(spark, t,
-        Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k"), watermarkCol = "ver"))
+      Incremental.upsertSnapshot(spark, t,
+        Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k")))
     Incremental.vacuum(spark, t, keep = 2)
     val fs = new org.apache.hadoop.fs.Path(t)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -94,8 +91,8 @@ class SnapshotRaceSpec extends AnyFunSuite {
     import spark.implicits._
     val t = tmpDir()
     (0 to 2).foreach(i =>
-      Incremental.mergeIncremental(spark, t,
-        Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k"), watermarkCol = "ver"))
+      Incremental.upsertSnapshot(spark, t,
+        Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k")))
     Incremental.vacuum(spark, t, keep = 0)
     assert(Incremental.exists(spark, t))
     assert(Incremental.snapshots(spark, t) === Seq("v00000003"))
@@ -106,8 +103,8 @@ class SnapshotRaceSpec extends AnyFunSuite {
     import spark.implicits._
     val t = tmpDir()
     (0 to 3).foreach(i =>
-      Incremental.mergeIncremental(spark, t,
-        Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k"), watermarkCol = "ver"))
+      Incremental.upsertSnapshot(spark, t,
+        Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k")))
     // simulate an in-flight writer: a fresh stage dir + claim
     val fs = new org.apache.hadoop.fs.Path(t)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -132,8 +129,8 @@ class SnapshotRaceSpec extends AnyFunSuite {
     import spark.implicits._
     val t = tmpDir()
     (0 to 3).foreach(i =>
-      Incremental.mergeIncremental(spark, t,
-        Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k"), watermarkCol = "ver"))
+      Incremental.upsertSnapshot(spark, t,
+        Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k")))
     assert(Incremental.snapshots(spark, t) ===
       Seq("v00000001", "v00000002", "v00000003", "v00000004"))
     (1 to 4).foreach { v =>
@@ -158,11 +155,10 @@ class SnapshotRaceSpec extends AnyFunSuite {
       for (batch <- 0 until 6) {
         val tag = f"$batch%03d"
         val keys = (0 until (1 + rnd.nextInt(12))).map(_ => rnd.nextInt(30).toLong).distinct
-        // batch tag strictly increases, so the whole batch passes the
-        // watermark filter and upserts by key — mirror exactly
+        // every row of the batch upserts by key — mirror exactly
         keys.foreach(k => model(k) = tag)
-        Incremental.mergeIncremental(spark, t,
-          keys.map(k => (k, tag)).toDF("k", "ver"), Seq("k"), watermarkCol = "ver")
+        Incremental.upsertSnapshot(spark, t,
+          keys.map(k => (k, tag)).toDF("k", "ver"), Seq("k"))
       }
       val got = Incremental.read(spark, t).collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -173,14 +169,12 @@ class SnapshotRaceSpec extends AnyFunSuite {
   test("two racing merges publish two distinct committed versions, no torn files") {
     import spark.implicits._
     val t = tmpDir()
-    Incremental.mergeIncremental(spark, t,
-      (0L to 9L).map(k => (k, "000")).toDF("k", "ver"), Seq("k"),
-      watermarkCol = "ver")
+    Incremental.upsertSnapshot(spark, t,
+      (0L to 9L).map(k => (k, "000")).toDF("k", "ver"), Seq("k"))
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     def merger(tag: String) = new Thread(() => {
-      try Incremental.mergeIncremental(spark, t,
-        (0L to 9L).map(k => (k, tag)).toDF("k", "ver"), Seq("k"),
-        watermarkCol = "ver")
+      try Incremental.upsertSnapshot(spark, t,
+        (0L to 9L).map(k => (k, tag)).toDF("k", "ver"), Seq("k"))
       catch { case e: Throwable => errs.add(e) }
     })
     val (a, b) = (merger("001"), merger("002"))
@@ -206,11 +200,11 @@ class SnapshotRaceSpec extends AnyFunSuite {
     val t = tmpDir()
     // k=10 carries a NULL tag: `tag === 'pii'` evaluates to NULL there —
     // the row must be KEPT (SQL DELETE semantics), not swept by !condition
-    Incremental.mergeIncremental(spark, t,
+    Incremental.upsertSnapshot(spark, t,
       (1L to 10L).map(k =>
         (k, if (k <= 3) "pii" else if (k == 10L) null else "ok"))
         .toDF("k", "tag"),
-      Seq("k"), watermarkCol = "tag")
+      Seq("k"))
     val removed = Incremental.deleteWhere(spark, t, col("tag") === "pii")
     assert(removed === 3L)
     assert(Incremental.read(spark, t).count() === 7)
@@ -230,8 +224,8 @@ class SnapshotRaceSpec extends AnyFunSuite {
   test("upsert with mergeSchema grows the table schema; strict mode refuses") {
     import spark.implicits._
     val t = tmpDir()
-    Incremental.mergeIncremental(spark, t,
-      Seq((1L, "a"), (2L, "b")).toDF("k", "ver"), Seq("k"), watermarkCol = "ver")
+    Incremental.upsertSnapshot(spark, t,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "ver"), Seq("k"))
     // upstream grew a column: evolve on upsert, old rows null-fill
     Incremental.upsertSnapshot(spark, t,
       Seq((2L, "b2", "en"), (3L, "c", "fr")).toDF("k", "ver", "lang"),
@@ -256,8 +250,8 @@ class SnapshotRaceSpec extends AnyFunSuite {
     Seq((1L, "x")).toDF("k", "ver").write.parquet(s"$t/v00000001")
     assert(!Incremental.exists(spark, t))
     // first real merge publishes cleanly over the orphan
-    Incremental.mergeIncremental(spark, t, Seq((2L, "y")).toDF("k", "ver"),
-      Seq("k"), watermarkCol = "ver")
+    Incremental.upsertSnapshot(spark, t, Seq((2L, "y")).toDF("k", "ver"),
+      Seq("k"))
     assert(Incremental.read(spark, t).collect().map(_.getLong(0)).toSeq === Seq(2L))
   }
 }

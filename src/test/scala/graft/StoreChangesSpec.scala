@@ -29,10 +29,9 @@ class StoreChangesSpec extends AnyFunSuite {
   test("insert / update / delete classified exactly; unchanged rows absent") {
     import spark.implicits._
     val t = tmp()
-    Incremental.mergeIncremental(spark, t,
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "ver"), Seq("k"), "ver")
-    // v2: update k=2, insert k=4; k=1/3 untouched (upsertSnapshot — the
-    // non-watermarked writer — so the lower-sorting tag still applies)
+    Incremental.upsertSnapshot(spark, t,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "ver"), Seq("k"))
+    // v2: update k=2, insert k=4; k=1/3 untouched
     Incremental.upsertSnapshot(spark, t,
       Seq((2L, "b2"), (4L, "d")).toDF("k", "ver"), Seq("k"))
     // v3: delete k=3
@@ -55,16 +54,16 @@ class StoreChangesSpec extends AnyFunSuite {
   test("same-version diff is empty") {
     import spark.implicits._
     val t = tmp()
-    Incremental.mergeIncremental(spark, t,
-      Seq((1L, "a")).toDF("k", "ver"), Seq("k"), "ver")
+    Incremental.upsertSnapshot(spark, t,
+      Seq((1L, "a")).toDF("k", "ver"), Seq("k"))
     assert(Incremental.changesBetween(spark, t, 1, 1, Seq("k")).count() == 0)
   }
 
   test("applying the change feed to the old version reproduces the new") {
     import spark.implicits._
     val t = tmp()
-    Incremental.mergeIncremental(spark, t,
-      (1L to 50L).map(k => (k, s"v$k")).toDF("k", "ver"), Seq("k"), "ver")
+    Incremental.upsertSnapshot(spark, t,
+      (1L to 50L).map(k => (k, s"v$k")).toDF("k", "ver"), Seq("k"))
     Incremental.upsertSnapshot(spark, t,
       Seq((7L, "x"), (51L, "y"), (9L, "z")).toDF("k", "ver"), Seq("k"))
     Incremental.deleteWhere(spark, t, col("k") % 10L === 0L)
@@ -86,8 +85,8 @@ class StoreChangesSpec extends AnyFunSuite {
   test("schema evolution: a column born after v1 does not fabricate updates") {
     import spark.implicits._
     val t = tmp()
-    Incremental.mergeIncremental(spark, t,
-      Seq((1L, "a"), (2L, "b")).toDF("k", "ver"), Seq("k"), "ver")
+    Incremental.upsertSnapshot(spark, t,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "ver"), Seq("k"))
     // v2 adds a column; k=1 keeps its old payload value, k=2 changes
     Incremental.upsertSnapshot(spark, t,
       Seq((2L, "b2", "extra")).toDF("k", "ver", "note"),

@@ -17,8 +17,8 @@ import graft.streaming.Event
   *    that), exactly-once for append-only sinks.
   *  - Trigger.AvailableNow drains the backlog in bounded batches and
   *    terminates — the scheduled-catch-up runner for continuous-ingest
-  *    pipelines (CorpusIngest): each cron tick processes what
-  *    accumulated, checkpoints, exits.
+  *    pipelines: each cron tick processes what accumulated, checkpoints,
+  *    exits.
   */
 class StreamingModesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark

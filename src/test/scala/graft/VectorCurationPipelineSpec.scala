@@ -1,20 +1,15 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sim.{Embeddings, VectorCurationPipeline}
-import graft.streaming.SemDedupIngest
 
 /** [[VectorCurationPipeline]] — the embedding family's composed
   * curation (VERDICT r9 #5). The end-to-end audit is oracle-checked
   * (`emb_curation_audit`); this spec pins the composition properties
-  * the oracle can't see: stage-funnel consistency, the member-operator
-  * agreement, and batch ≡ stream parity against [[SemDedupIngest]] on
-  * id-ordered batches — with the one intentional survivor-POLICY
-  * divergence (earliest arrival vs least centroid-typical) asserted BY
-  * NAME on a crafted cell, the StreamingCurationSpec posture.
+  * the oracle can't see: stage-funnel consistency and the
+  * member-operator agreement.
   */
 class VectorCurationPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -42,78 +37,6 @@ class VectorCurationPipelineSpec extends AnyFunSuite {
       .filter(col("contaminated") === 1)
       .select("vec_id").as[Long].collect().toSet
     assert(curatedIds.intersect(contaminated).isEmpty)
-    r.unpersist()
-  }
-
-  // ---- batch ≡ stream parity (the td_curation_audit pattern) ----
-
-  private def unit(c: Int): Array[Float] =
-    Array.tabulate(4)(d => if (d == c) 1.0f else 0.0f)
-
-  /** Tilted copy of basis c (routes to cell c; cos to the basis =
-    * 1/sqrt(1+tilt²)). */
-  private def tilted(c: Int, tilt: Float): Array[Float] = {
-    val v = Array.tabulate(4)(d => if (d == c) 1.0f else 0.0f)
-    v((c + 1) % 4) = tilt
-    val n = math.sqrt(1.0 + tilt * tilt).toFloat
-    v.map(_ / n)
-  }
-
-  test("pipeline ≡ SemDedupIngest on id-ordered batches; survivor-policy divergence named") {
-    // Crafted corpus over 4 basis cells (threshold 0.99):
-    //  - 10 ≡ basis 0 byte-identical: stream store-vetoes it (cos 1.0);
-    //    the pipeline drops it at EXACT dedup — different stage, same
-    //    composite decision
-    //  - 20, 21 identical new direction in cell 1 (pair cos 1.0, 0.894
-    //    to the basis): both faces keep 20 (ties rank by id)
-    //  - 30 (tilt .28), 31 (tilt .38) in cell 2: pair cos ≈ .996 ≥ t,
-    //    each < t to the basis — a TRUE near-dup group with distinct
-    //    centroid distances. THE NAMED POLICY DIVERGENCE: the stream
-    //    keeps 30 (earliest arrival), batch SemDeDup keeps 31 (least
-    //    centroid-typical; 30 is vetoed by the earlier-ranked 31)
-    //  - 40 distinct direction in cell 3 (0.857 to basis): kept by both
-    val t = 0.99
-    val seeds = (0 to 3).map(c => (c.toLong, unit(c), c))
-    val arrivals = Seq(
-      (10L, unit(0), 0), (20L, tilted(1, 0.5f), 1), (21L, tilted(1, 0.5f), 1),
-      (30L, tilted(2, 0.28f), 2), (31L, tilted(2, 0.38f), 2),
-      (40L, tilted(3, 0.6f), 3))
-
-    // stream face: seeds are the stored index; arrivals fold in two
-    // id-ordered micro-batches
-    val dir = Files.createTempDirectory("vec_pipe_parity").toString + "/ivf"
-    Embeddings.buildIvfIndex(
-      seeds.toDF("vec_id", "embedding", "label"), dir)
-    val (b1, b2) = arrivals.splitAt(3)
-    SemDedupIngest.applyBatch(
-      b1.map(r => (r._1, r._2)).toDF("vec_id", "embedding"), dir, threshold = t)
-    SemDedupIngest.applyBatch(
-      b2.map(r => (r._1, r._2)).toDF("vec_id", "embedding"), dir, threshold = t)
-    val streamKept = spark.read.parquet(s"$dir/postings")
-      .select("vec_id").as[Long].collect().toSet
-
-    // batch face: the same content (seeds are corpus members too) through
-    // the composed pipeline, cells carried as the index's labels (the
-    // pre-clustered contract — the SAME blocking the stream used), no
-    // eval set (parity isolates the dedup stages)
-    val all = (seeds ++ arrivals).toDF("vec_id", "embedding", "label")
-    val r = VectorCurationPipeline.run(all, lit(false),
-      semThreshold = t, labelCells = true)
-    val batchKept = r.curated.select("vec_id").as[Long].collect().toSet
-
-    // the duplicate RELATION is identical: same kept count per cell,
-    // same dropped-group structure...
-    assert(streamKept.size === batchKept.size)
-    assert((streamKept -- Set(30L)) === (batchKept -- Set(31L)))
-    // ...and the ONE divergence is the named survivor-policy difference
-    // on the 30/31 near-dup group: earliest arrival (stream) vs least
-    // centroid-typical (batch SemDeDup rank). Not papered over.
-    assert(streamKept === Set(0L, 1L, 2L, 3L, 20L, 30L, 40L))
-    assert(batchKept === Set(0L, 1L, 2L, 3L, 20L, 31L, 40L))
-    // exact-dup arrivals (10, 21) were dropped by BOTH faces — at the
-    // semantic stage in the stream, at the exact stage in the pipeline
-    assert(!streamKept.contains(10L) && !streamKept.contains(21L))
-    assert(!batchKept.contains(10L) && !batchKept.contains(21L))
     r.unpersist()
   }
 }
