@@ -10,10 +10,10 @@ import graft.mars.RoverKeys
   * The reference concatenates per-task API results into one JSON envelope
   * document and uploads it under a prefix routed by filename
   * (src/ingestion/photos.py:23-48, minio.py:19-46). Here the per-record
-  * side stays a DataFrame (union of task results) and the envelope is a
-  * one-row DataFrame with an ArrayType payload column — collect_list is
-  * sort_array'd so envelope content is deterministic under any partition
-  * order.
+  * side stays a DataFrame (one fetch over the whole schedule,
+  * `IngestSim.photos`) and the envelope is a one-row DataFrame with an
+  * ArrayType payload column — collect_list is sort_array'd so envelope
+  * content is deterministic under any partitioning.
   */
 object Assemble {
 

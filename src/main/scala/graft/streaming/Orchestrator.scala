@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.ingest.{Assemble, IngestSim}
@@ -50,12 +50,11 @@ final case class Orchestrator(spark: SparkSession, topicsRoot: String,
   /** EP3: dynamic fan-out over (rover, sol) tasks → one batch envelope →
     * object-store upload → the loop re-enters EP1 via a new event. The
     * reference's Airflow dynamic task mapping becomes Spark's own
-    * executor parallelism over a union of per-task reads. */
+    * executor parallelism: the schedule is one DataFrame of tasks, fetched
+    * in at most one Spark task per core. */
   def ingestStage(tasks: Seq[GapScheduler.IngestionTask], solRange: Seq[Int]): Option[String] = {
     if (tasks.isEmpty) return None
-    val photoDfs = tasks.map(t => IngestSim.photos(spark, t.rover_name, t.sol))
-    val allPhotos = photoDfs.reduce(_ unionByName _)
-    val envelope = Assemble.photosEnvelope(allPhotos, solRange, clock())
+    val envelope = Assemble.photosEnvelope(IngestSim.photos(spark, tasks), solRange, clock())
     val key = Assemble.uploadJson(envelope, objectStore)
     ControlPlane.produce(topicsRoot, ControlPlane.TopicMinioEvents,
       ControlPlane.minioEventJson(key))
@@ -75,8 +74,9 @@ final case class Orchestrator(spark: SparkSession, topicsRoot: String,
 
   def startLoadStream(): StreamingQuery =
     start(ControlPlane.TopicMinioEvents) { batch =>
+      // an unparseable message is an all-null row: skip it, don't fail
       val keys = batch.select(url_decode(col("Key")).as("key"))
-        .collect().map(_.getString(0)).toSeq
+        .collect().flatMap(r => Option(r.getString(0))).toSeq
       loadStage(keys)
     }
 
@@ -87,13 +87,15 @@ final case class Orchestrator(spark: SparkSession, topicsRoot: String,
 
   def startIngestStream(): StreamingQuery =
     start(ControlPlane.TopicScheduling) { batch =>
-      batch.select(col("ingestion_schedule")).collect().foreach { row =>
-        val s = row.getStruct(0)
-        val tasks = s.getSeq[org.apache.spark.sql.Row](0).map(t =>
-          GapScheduler.IngestionTask(t.getString(0), t.getInt(1)))
-        val solRange = s.getSeq[Int](1)
-        ingestStage(tasks, solRange)
-      }
+      // a message that is not a whole schedule (an unparseable one is an
+      // all-null row) and a task without a sol are skipped, not a failure
+      batch.select(col("ingestion_schedule.tasks"), col("ingestion_schedule.sol_range"))
+        .filter(col("tasks").isNotNull && col("sol_range").isNotNull)
+        .collect().foreach { row =>
+          val tasks = row.getSeq[Row](0).filterNot(_.isNullAt(1)).map(t =>
+            GapScheduler.IngestionTask(t.getString(0), t.getInt(1)))
+          ingestStage(tasks, row.getSeq[Int](1))
+        }
     }
 
   def startAll(): Seq[StreamingQuery] =

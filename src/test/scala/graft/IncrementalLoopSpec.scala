@@ -374,12 +374,17 @@ class IncrementalLoopSpec extends AnyFunSuite {
     mismatch(wh.buildSilver())
   }
 
-  test("the ingest envelope is one fetch partition per task and the JSON Spark writes") {
+  test("the ingest envelope is one fetch per schedule and the JSON Spark writes") {
     val tasks = Seq(("Curiosity", 4), ("Perseverance", 9), ("Spirit", 3))
-    val parts = tasks.map { case (r, s) => IngestSim.photos(spark, r, s) }
-    assert(parts.map(_.rdd.getNumPartitions) == Seq(1, 1, 1))
-    val envelope = Assemble.photosEnvelope(parts.reduce(_ unionByName _), 3 to 9,
+      .map { case (r, s) => GapScheduler.IngestionTask(r, s) }
+    val photos = IngestSim.photos(spark, tasks)
+    assert(photos.rdd.getNumPartitions == math.min(3, spark.sparkContext.defaultParallelism))
+    val envelope = Assemble.photosEnvelope(photos, 3 to 9, "2025-01-01T00:00:00")
+    // the same document as the union of each task fetched alone
+    val perTask = Assemble.photosEnvelope(
+      tasks.map(t => IngestSim.photos(spark, Seq(t))).reduce(_ unionByName _), 3 to 9,
       "2025-01-01T00:00:00")
+    assert(envelope.toJSON.collect().toSeq == perTask.toJSON.collect().toSeq)
     val store = Files.createTempDirectory("graft_envelope")
     val key = Assemble.uploadJson(envelope, store.toString)
     assert(key == "photos/mars_rover_photos_batch_sol_3_to_9_2025-01-01T000000.json")

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
-import graft.mars.{MarsPipeline, Warehouse}
+import graft.mars.{GapScheduler, MarsPipeline, Schemas, Warehouse}
 import graft.streaming.{ControlPlane, Orchestrator}
 
 /** End-to-end test of the closed feedback loop (SURVEY §3 EP1→EP2→EP3):
@@ -35,6 +36,23 @@ class OrchestratorSpec extends AnyFunSuite {
     val clock = () => java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss"))
     (Orchestrator(spark, topics, store, wh, clock), wh, topics, store)
+  }
+
+  /** Drive the three streams' micro-batches until the loop quiesces:
+    * events→load, complete→transform(schedule), schedule→ingest(event),
+    * event→load, complete→transform(no gaps). */
+  private def drain(queries: Seq[StreamingQuery], wh: Warehouse): Unit = {
+    val Seq(load, transform, ingest) = queries
+    var spins = 0
+    var drained = false
+    while (!drained && spins < 6) {
+      load.processAllAvailable()
+      transform.processAllAvailable()
+      ingest.processAllAvailable()
+      spins += 1
+      drained = spins >= 2 && wh.validationPhotoGaps.count() == 0
+    }
+    assert(drained, s"gap queue not drained after $spins loop spins")
   }
 
   test("batch orchestration closes the loop and drains the gap queue") {
@@ -75,26 +93,57 @@ class OrchestratorSpec extends AnyFunSuite {
         ControlPlane.produce(topics, ControlPlane.TopicMinioEvents,
           ControlPlane.minioEventJson(key))
       }
-      // drive micro-batches until the loop quiesces:
-      // events→load, complete→transform(schedule), schedule→ingest(event),
-      // event→load, complete→transform(no gaps)
-      val Seq(load, transform, ingest) = queries
-      var spins = 0
-      var drained = false
-      while (!drained && spins < 6) {
-        load.processAllAvailable()
-        transform.processAllAvailable()
-        ingest.processAllAvailable()
-        spins += 1
-        drained = spins >= 2 && wh.validationPhotoGaps.count() == 0
-      }
-      assert(drained, s"gap queue not drained after $spins loop spins")
+      drain(queries, wh)
       // at-least-once: every load-complete micro-batch triggers a transform,
       // so the same gap schedule may be re-emitted until ingestion lands —
       // reference behavior (each Kafka msg triggers a full dbt DAG run)
       val nSched = ControlPlane.readTopicBatch(spark, topics,
         ControlPlane.TopicScheduling).count()
       assert(nSched >= 1, s"unexpected scheduling count $nSched")
+      assert(spark.read.parquet(wh.goldDailyActivity).count() > 0)
+    } finally queries.foreach(_.stop())
+  }
+
+  test("an unknown rover in a schedule lands no photos and fails nothing (S1)") {
+    val (orch, wh, _, store) = mkOrchestrator("unknown_rover")
+    val tasks = Seq(("Curiosity", 2), ("Phoenix", 7), ("Perseverance", 51))
+      .map { case (r, s) => GapScheduler.IngestionTask(r, s) }
+    val key = orch.ingestStage(tasks, 2 to 51).get
+    val doc = spark.read.schema(Schemas.photoBatch).json(s"$store/$key")
+      .select(col("photo_count"), explode(col("photos.rover.name")).as("rover"))
+      .collect()
+    // IngestSim lands two cameras per known rover and sol
+    assert(doc.map(_.getInt(0)).toSet == Set(4))
+    assert(doc.map(_.getString(1)).sorted.toSeq ==
+      Seq("Curiosity", "Curiosity", "Perseverance", "Perseverance"))
+
+    orch.loadStage(Seq(key))
+    wh.buildSilver()
+    assert(wh.flatPhotos.select(col("rover_name"), col("sol")).distinct().collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSet ==
+      Set(("Curiosity", 2), ("Perseverance", 51)))
+  }
+
+  test("a malformed control-plane message is skipped; the streams keep running") {
+    val (orch, wh, topics, store) = mkOrchestrator("malformed")
+    val queries = orch.startAll()
+    try {
+      Seq("photos.jsonl", "manifests.jsonl", "coordinates.jsonl").foreach { f =>
+        ControlPlane.produce(topics, ControlPlane.TopicMinioEvents,
+          ControlPlane.minioEventJson(seed(store, f)))
+      }
+      Seq(ControlPlane.TopicMinioEvents, ControlPlane.TopicLoadComplete,
+        ControlPlane.TopicScheduling).foreach(ControlPlane.produce(topics, _, "not json at all"))
+      // schedules that parse but lack a sol range, or a task's sol
+      Seq("""{"tasks":[{"rover_name":"Spirit","sol":1}]}""",
+        """{"tasks":[{"rover_name":"Spirit"}],"sol_range":[1]}""").foreach { sched =>
+        ControlPlane.produce(topics, ControlPlane.TopicScheduling,
+          ControlPlane.schedulingJson(s"""{"ingestion_schedule":$sched}""", "t"))
+      }
+      drain(queries, wh)
+      queries.foreach { q =>
+        assert(q.isActive && q.exception.isEmpty, s"${q.name} stopped: ${q.exception}")
+      }
       assert(spark.read.parquet(wh.goldDailyActivity).count() > 0)
     } finally queries.foreach(_.stop())
   }

@@ -1,0 +1,106 @@
+#!/usr/bin/env python3
+"""Paired A/B of two checkouts on one benchmark workload.
+
+    python3 tools/loop_ab.py <parent-dir> <change-dir> \
+        --workload loop|sweep --pairs N --first-seed S
+
+Runs the command `BENCHMARK.json` declares (`perfbench/run.py`) once per
+side per pair, one JVM at a time, with the pair's seed, the declared run
+length and tracing off; the side that runs first alternates from pair to
+pair. Each run's result line is printed as it lands, with its side and
+seed. Then, for every end-to-end metric `BENCHMARK.json` lists, it prints
+each side's median and quartiles, the change's wins out of N (ties count
+for neither side) and a verdict:
+
+    gain        the change wins at least 9 pairs in 10 and its median beats
+                the parent's by more than the parent's interquartile range
+    regression  the change's median is worse than the parent's by more than
+                the metric's bound (a fraction of the parent's median)
+    unresolved  neither
+
+Each side builds in its own checkout (its `.bench_build`). Nothing is
+written under `perfbench/`. Don't run another JVM while the pairs run.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def run(side, cwd, command, workload, seed, seconds):
+    cmd = command + ["--workload", workload, "--seed", str(seed),
+                     "--seconds", str(seconds), "--trace", "0"]
+    p = subprocess.run(cmd, cwd=cwd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+    lines = p.stdout.strip().splitlines()
+    if p.returncode != 0 or not lines:
+        sys.exit(f"{side} seed {seed}: {' '.join(cmd)} exited {p.returncode} in {cwd}")
+    result = json.loads(lines[-1])
+    print(f"run {side} seed={seed} {lines[-1]}", flush=True)
+    return result
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    return tuple(statistics.quantiles(xs, n=4, method="inclusive"))
+
+
+def verdict(metric, parent, change):
+    lower = metric["better"] == "lower"
+    better = (lambda c, p: c < p) if lower else (lambda c, p: c > p)
+    wins = sum(better(c, p) for p, c in zip(parent, change))
+    pq, cq = quartiles(parent), quartiles(change)
+    gap = cq[1] - pq[1]
+    if wins >= 0.9 * len(parent) and better(cq[1], pq[1]) and abs(gap) > pq[2] - pq[0]:
+        word = "gain"
+    elif (gap if lower else -gap) > metric["bound"] * abs(pq[1]):
+        word = "regression"
+    else:
+        word = "unresolved"
+    return wins, pq, cq, word
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("parent_dir")
+    ap.add_argument("change_dir")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--first-seed", type=int, default=1)
+    a = ap.parse_args()
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    if a.workload not in {w["name"] for w in bench["workloads"]}:
+        sys.exit(f"unknown workload {a.workload}")
+    dirs = {"parent": os.path.abspath(a.parent_dir), "change": os.path.abspath(a.change_dir)}
+
+    results = {"parent": [], "change": []}
+    for i in range(a.pairs):
+        seed = a.first_seed + i
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for side in order:
+            results[side].append(run(side, dirs[side], bench["command"], a.workload, seed,
+                                     bench["run_seconds"]))
+
+    for side in ("parent", "change"):
+        rs = results[side]
+        print(f"{side}: correct {sum(r['correct'] for r in rs)}/{len(rs)} runs, failed ops "
+              + " ".join(str(r["failed"]) for r in rs) + " of attempted "
+              + " ".join(str(r["attempted"]) for r in rs))
+    for m in bench["end_to_end"]:
+        name = m["name"]
+        parent = [r["metrics"][name]["value"] for r in results["parent"]]
+        change = [r["metrics"][name]["value"] for r in results["change"]]
+        wins, pq, cq, word = verdict(m, parent, change)
+        print(f"{a.workload} {name} ({m['unit']}, {m['better']} is better): "
+              f"parent {pq[1]:.4g} [{pq[0]:.4g}, {pq[2]:.4g}]  "
+              f"change {cq[1]:.4g} [{cq[0]:.4g}, {cq[2]:.4g}]  "
+              f"({(cq[1] - pq[1]) / pq[1]:+.1%})  wins {wins}/{a.pairs}  {word}")
+
+
+if __name__ == "__main__":
+    main()
