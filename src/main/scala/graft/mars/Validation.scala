@@ -2,6 +2,7 @@ package graft.mars
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.AutoBroadcast
 
 /** Gap-detection view (SURVEY §2: A1, J2, O1) — the engine's data-quality
   * reconciliation AND the scheduler's work queue (closed feedback loop).
@@ -10,53 +11,43 @@ object Validation {
 
   /** reference: models/staging/validation_photo_gaps.sql.
     *
-    * manifest-declared per-sol stats LEFT JOIN ingested actuals on
-    * (rover_name, sol), THEN `WHERE a.rover_name IS NULL` — so despite the
-    * 4-way CASE, only MISSING_SOL rows survive (the view is effectively a
-    * left anti-join; SURVEY §7.4.3 says replicate exactly, including the
-    * dead CASE branches and the COALESCEd actual columns).
+    * The reference LEFT JOINs the manifest-declared per-sol stats to the
+    * ingested actuals aggregated by (rover_name, earth_date, sol), on
+    * (rover_name, sol), and keeps `WHERE a.rover_name IS NULL`: only
+    * manifest sols with no photo survive, so the view is a left anti-join
+    * of the manifest sols against the photos' (rover_name, sol) keys, and
+    * it is computed as one. Its output is the reference's exactly (SURVEY
+    * §7.4.3): on a surviving row the COALESCEd actuals are always 0, each
+    * diff is the manifest value minus 0 (still `bigint`) and the 4-way
+    * CASE always takes its MISSING_SOL branch, so those columns are
+    * written as those values.
     *
-    * Scale: the aggregate is partial+final hash agg on (rover_name,
-    * earth_date, sol); the join shuffles both sides on (rover_name, sol).
-    * At 100 TB the photo side is the big one and aggregates *before* the
-    * join, so the join inputs are both sol-grain (tiny relative to raw).
+    * Scale: the photo keys are the build side. When Catalyst's estimate
+    * of them fits the session's broadcast threshold
+    * ([[AutoBroadcast.decideFrom]]) they are broadcast as they are, and
+    * the view runs as a broadcast build plus the probe, with no shuffle
+    * and no aggregate. Otherwise they are deduplicated first: a partial
+    * plus final hash aggregate shrinks the photo side to sol grain before
+    * the join's shuffle, so at 100 TB both join inputs are sol-grain, not
+    * photo-grain.
     */
   def validationPhotoGaps(flatManifestPhotos: DataFrame, flatPhotos: DataFrame): DataFrame = {
-    val manifestSolData = flatManifestPhotos.select(
-      col("rover_name"), col("sol"), col("earth_date"),
-      col("manifest_total_photos"), col("manifest_camera_count"))
-
-    val actualSolData = flatPhotos
-      .groupBy(col("rover_name"), col("earth_date"), col("sol"))
-      .agg(
-        countDistinct(col("camera_id")).as("actual_camera_count"),
-        count(col("image_id")).as("actual_total_photos"))
-      .select(col("rover_name").as("a_rover_name"), col("sol").as("a_sol"),
-        col("actual_camera_count"), col("actual_total_photos"))
-
-    manifestSolData
-      .join(actualSolData,
-        col("rover_name") === col("a_rover_name") && col("sol") === col("a_sol"),
-        "left_outer")
-      .filter(col("a_rover_name").isNull)
+    val photoKeys = flatPhotos.select(col("rover_name"), col("sol"))
+    val covered =
+      if (AutoBroadcast.decideFrom(photoKeys)) broadcast(photoKeys) else photoKeys.distinct()
+    flatManifestPhotos
+      .join(covered, Seq("rover_name", "sol"), "left_anti")
       .select(
         col("rover_name"),
         col("sol"),
         col("earth_date"),
         col("manifest_total_photos"),
-        coalesce(col("actual_total_photos"), lit(0L)).as("actual_total_photos"),
-        (col("manifest_total_photos") - coalesce(col("actual_total_photos"), lit(0L)))
-          .as("photo_count_diff"),
+        lit(0L).as("actual_total_photos"),
+        (col("manifest_total_photos") - lit(0L)).as("photo_count_diff"),
         col("manifest_camera_count"),
-        coalesce(col("actual_camera_count"), lit(0L)).as("actual_camera_count"),
-        (col("manifest_camera_count") - coalesce(col("actual_camera_count"), lit(0L)))
-          .as("camera_count_diff"),
-        when(col("a_rover_name").isNull, "MISSING_SOL")
-          .when(col("manifest_total_photos") =!= coalesce(col("actual_total_photos"), lit(0L)),
-            "PHOTO_COUNT_MISMATCH")
-          .when(col("manifest_camera_count") =!= coalesce(col("actual_camera_count"), lit(0L)),
-            "CAMERA_COUNT_MISMATCH")
-          .otherwise("VALID").as("validation_status"),
+        lit(0L).as("actual_camera_count"),
+        (col("manifest_camera_count") - lit(0L)).as("camera_count_diff"),
+        lit("MISSING_SOL").as("validation_status"),
         current_timestamp().as("validation_timestamp"))
       .orderBy(col("sol"))
   }

@@ -4,6 +4,7 @@ import java.security.MessageDigest
 import java.util.HexFormat
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
@@ -70,7 +71,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
     spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   private lazy val manifestModel =
     Silver.flatManifestResponse(noBronze(Schemas.manifestBatch))
+  private lazy val manifestPhotosModel = Silver.flatManifestPhotos(manifestModel)
   private lazy val photoModel = Silver.flatPhotoResponse(noBronze(Schemas.photoBatch))
+  private lazy val coordinateModel =
+    Silver.flatCoordinateResponse(noBronze(Schemas.coordinateBatch))
   private def readPinned(path: String, schema: StructType): Option[DataFrame] =
     Option.when(Incremental.exists(spark, path))(Incremental.read(spark, path, Some(schema)))
   private def readOr(path: String, model: DataFrame): DataFrame =
@@ -153,10 +157,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
   // lazy views over the materialized silver
   def flatPhotos: DataFrame = readOr(silverFlatPhotos, photoModel)
   def flatManifest: DataFrame = readOr(silverFlatManifest, manifestModel)
-  def flatManifestPhotos: DataFrame = readOr(silverFlatManifestPhotos,
-    Silver.flatManifestPhotos(manifestModel))
-  def flatCoordinates: DataFrame = readOr(silverFlatCoordinates,
-    Silver.flatCoordinateResponse(noBronze(Schemas.coordinateBatch)))
+  def flatManifestPhotos: DataFrame = readOr(silverFlatManifestPhotos, manifestPhotosModel)
+  def flatCoordinates: DataFrame = readOr(silverFlatCoordinates, coordinateModel)
 
   def dimRovers: DataFrame = Dims.dimRovers(flatManifest)
   def dimCameras: DataFrame = Dims.dimCameras(flatManifest)
@@ -168,7 +170,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
   /** dbt run --select tag:aggregate equivalent (EP2 second stage), one
     * batch of the gold offset log: the silver photo files no batch has
     * taken yet, and the `flat_manifest_response` version when it changed.
-    * The marts join the current dims and path, read once and shared:
+    * The marts join the current dims and path, read once and shared, and
+    * built only in a batch that writes a mart:
     *
     *  - `camera_travel_correlation`: the mart over the new photos alone —
     *    each row carries its photo's ingestion date;
@@ -189,9 +192,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
       Incremental.currentSnapshot(spark, silverFlatManifest).map(manifestIn -> _)
     val marts = Seq(goldPhotoSummary, goldDailyActivity, goldCameraTravel)
     runBatch(goldLog, listing, replay = false, appends = marts) { (m, fresh) =>
-      val manifest = flatManifest
-      val (rovers, cameras) = (Dims.dimRovers(manifest), Dims.dimCameras(manifest))
-      val path = factPath
+      lazy val manifest = flatManifest
+      lazy val rovers = Dims.dimRovers(manifest)
+      lazy val cameras = Dims.dimCameras(manifest)
+      lazy val path = factPath
       val manifestFresh = fresh.getOrElse(manifestIn, Nil)
       val summary =
         if (manifestFresh.isEmpty && Incremental.exists(spark, goldPhotoSummary)) None
@@ -204,7 +208,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
             appendStaged(goldPhotoSummary, s"b$m", unheld, clusterBy = Seq("rover_name"))))
         }
       val photoFiles = fresh.getOrElse(photosIn, Nil)
-      val newPhotos = Facts.factPhotos(
+      lazy val newPhotos = Facts.factPhotos(
         if (photoFiles.isEmpty) photoModel
         else readFiles(silverFlatPhotos, photoFiles, photoModel.schema))
       val sols =
@@ -311,8 +315,11 @@ final case class Warehouse(spark: SparkSession, root: String) {
   }
 
   private def rowCount(file: Path): Long = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    // options from the session's conf: the default ones build a new
+    // Hadoop Configuration, re-parsing the *-default.xml files, per call
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf).build())
     try reader.getRecordCount finally reader.close()
   }
 

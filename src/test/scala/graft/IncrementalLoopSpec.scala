@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -179,6 +182,43 @@ class IncrementalLoopSpec extends AnyFunSuite {
       assertFullRefresh(s"cycle $c")
     }
     assert(sched.tasks.isEmpty, s"gap queue not drained: ${sched.tasks}")
+  }
+
+  /** The Spark jobs `body` starts, counted under a job group of its own.
+    * Listener events arrive in order, so once a marker job run after
+    * `body` is seen, every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (group, marker) = ("graft-jobs-of", "graft-jobs-of-marker")
+    val started = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsOf", interruptOnCancel = false)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "jobsOf marker", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
+    } finally sc.removeSparkListener(listener)
+    started.get
+  }
+
+  test("a cycle's gap scan and schedule run at most two Spark jobs") {
+    val loop = new Loop("gapjobs", ticking())
+    import loop._
+    setUp()
+    cycle(2)
+    cycle(2)
+    val jobs = jobsOf(GapScheduler.schedule(GapScheduler.nextBatch(wh.validationPhotoGaps)))
+    assert(jobs <= 2, s"the gap scan ran $jobs jobs")
   }
 
   private def logIds(dir: Path): Seq[Long] =

@@ -2,7 +2,7 @@
 """Paired A/B of two checkouts on one benchmark workload.
 
     python3 tools/loop_ab.py <parent-dir> <change-dir> \
-        --workload loop|sweep --pairs N --first-seed S
+        --workload loop|sweep --pairs N --first-seed S [--layers]
 
 Runs the command `BENCHMARK.json` declares (`perfbench/run.py`) once per
 side per pair, one JVM at a time, with the pair's seed, the declared run
@@ -18,6 +18,11 @@ for neither side) and a verdict:
                 the metric's bound (a fraction of the parent's median)
     unresolved  neither
 
+With --layers, one traced run per side follows the pairs (the first seed,
+`--trace 1`), and every per-layer metric `BENCHMARK.json` lists that is
+non-zero on either side is printed side by side with the change/parent
+ratio, so a claim can name the layer that moved.
+
 Each side builds in its own checkout (its `.bench_build`). Nothing is
 written under `perfbench/`. Don't run another JVM while the pairs run.
 """
@@ -31,15 +36,15 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(side, cwd, command, workload, seed, seconds):
+def run(side, cwd, command, workload, seed, seconds, trace=0):
     cmd = command + ["--workload", workload, "--seed", str(seed),
-                     "--seconds", str(seconds), "--trace", "0"]
+                     "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=cwd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
         sys.exit(f"{side} seed {seed}: {' '.join(cmd)} exited {p.returncode} in {cwd}")
     result = json.loads(lines[-1])
-    print(f"run {side} seed={seed} {lines[-1]}", flush=True)
+    print(f"run {side} seed={seed} trace={trace} {lines[-1]}", flush=True)
     return result
 
 
@@ -71,6 +76,8 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
+    ap.add_argument("--layers", action="store_true",
+                    help="after the pairs, one traced run per side, per-layer metrics side by side")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -100,6 +107,18 @@ def main():
               f"parent {pq[1]:.4g} [{pq[0]:.4g}, {pq[2]:.4g}]  "
               f"change {cq[1]:.4g} [{cq[0]:.4g}, {cq[2]:.4g}]  "
               f"({(cq[1] - pq[1]) / pq[1]:+.1%})  wins {wins}/{a.pairs}  {word}")
+
+    if a.layers:
+        traced = {side: run(side, dirs[side], bench["command"], a.workload, a.first_seed,
+                            bench["run_seconds"], trace=1)["metrics"]
+                  for side in ("parent", "change")}
+        print(f"{a.workload} per-layer, seed {a.first_seed}, --trace 1: parent  change  change/parent")
+        for m in bench["per_layer"]:
+            p, c = (traced[side].get(m["name"], {}).get("value", 0) for side in ("parent", "change"))
+            if p or c:
+                ratio = f"{c / p:.3f}" if p else "-"
+                print(f"  {m['name']} ({m['unit']}, {m['better']} is better): "
+                      f"{p:.6g}  {c:.6g}  {ratio}")
 
 
 if __name__ == "__main__":
