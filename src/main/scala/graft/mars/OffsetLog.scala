@@ -2,6 +2,7 @@ package graft.mars
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import scala.util.matching.Regex
 
 /** A stage's offset write-ahead log, in Structured Streaming's layout
   * (SIGMOD 2018): `offsets/<n>` is written before batch n runs and holds
@@ -19,7 +20,8 @@ final case class OffsetLog(spark: SparkSession, dir: String) {
 
   private val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def ids(kind: String): Seq[Long] = {
+  /** The ids of the retained entries of `kind`, ascending. */
+  def ids(kind: String): Seq[Long] = {
     val p = new Path(dir, kind)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
@@ -70,6 +72,22 @@ final case class OffsetLog(spark: SparkSession, dir: String) {
 object OffsetLog {
   val Offsets = "offsets"
   val Commits = "commits"
+
+  /** A field that may be null: `\N` stands for null, and a value's
+    * backslash, tab and line breaks are escaped, so any value fits on
+    * one line. [[value]] reads it back. */
+  def field(v: Option[Any]): String =
+    v.fold("\\N")(_.toString.flatMap {
+      case '\\' => "\\\\"
+      case '\t' => "\\t"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case c => c.toString
+    })
+
+  def value(f: String): Option[String] =
+    Option.when(f != "\\N")("""\\(.)""".r.replaceAllIn(f, m => Regex.quoteReplacement(
+      m.group(1) match { case "t" => "\t"; case "n" => "\n"; case "r" => "\r"; case c => c })))
 
   /** `consumed` and `planned` hold (source table, input name) pairs. */
   final case class Resume(batch: Long, consumed: Set[(String, String)],

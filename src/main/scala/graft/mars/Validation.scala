@@ -31,12 +31,8 @@ object Validation {
     * the join's shuffle, so at 100 TB both join inputs are sol-grain, not
     * photo-grain.
     */
-  def validationPhotoGaps(flatManifestPhotos: DataFrame, flatPhotos: DataFrame): DataFrame = {
-    val photoKeys = flatPhotos.select(col("rover_name"), col("sol"))
-    val covered =
-      if (AutoBroadcast.decideFrom(photoKeys)) broadcast(photoKeys) else photoKeys.distinct()
-    flatManifestPhotos
-      .join(covered, Seq("rover_name", "sol"), "left_anti")
+  def validationPhotoGaps(flatManifestPhotos: DataFrame, flatPhotos: DataFrame): DataFrame =
+    missingSols(flatManifestPhotos, flatPhotos)
       .select(
         col("rover_name"),
         col("sol"),
@@ -50,5 +46,16 @@ object Validation {
         lit("MISSING_SOL").as("validation_status"),
         current_timestamp().as("validation_timestamp"))
       .orderBy(col("sol"))
+
+  /** The view's rows before its projection and ORDER BY: the manifest
+    * sols that no photo's (rover_name, sol) matches. With the photo keys
+    * broadcast, collecting it runs two jobs, the broadcast and the
+    * collect; the view's global sort would add a sampling and a shuffle
+    * job. */
+  def missingSols(flatManifestPhotos: DataFrame, flatPhotos: DataFrame): DataFrame = {
+    val photoKeys = flatPhotos.select(col("rover_name"), col("sol"))
+    val covered =
+      if (AutoBroadcast.decideFrom(photoKeys)) broadcast(photoKeys) else photoKeys.distinct()
+    flatManifestPhotos.join(covered, Seq("rover_name", "sol"), "left_anti")
   }
 }

@@ -7,8 +7,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{col, collect_set, struct}
 import org.apache.spark.sql.types.StructType
 
 /** Materialized (incremental) variant of the medallion pipeline: bronze
@@ -34,6 +34,18 @@ import org.apache.spark.sql.types.StructType
   * nor duplicates rows. A bronze load is tagged by its object path, so a
   * replayed `minio-events` record loads the object once.
   *
+  * The log also carries the facts a cycle would otherwise re-derive from
+  * silver. Silver's commit entry holds a `key` line per distinct
+  * (rover_name, sol, rover_id) its photo append wrote, gathered on the
+  * write; [[buildGold]] takes its Perseverance sols from them and
+  * [[gapKeys]] keeps the gap set from them (`$root/_checkpoints/gaps`).
+  * Each has a recovery path that reads the data instead: gold collects
+  * the sols from its new files when they are not exactly the files of
+  * retained silver entries (silver's entries deleted, or `buildGold`
+  * alone over a table no batch wrote), and the gap set is rebuilt from
+  * the view on the first cycle, after a manifest merge, and when the
+  * entries since its batch are gone (a crash that lost them, retention).
+  *
   * Views (dims/facts/validation) stay lazy — recomputed per query.
   * `MarsPipeline` is the view-only variant over raw fixtures; this is the
   * stateful store the orchestration loop writes through.
@@ -45,6 +57,7 @@ import org.apache.spark.sql.types.StructType
   * mart models' `:1-7` headers (append + cluster_by).
   */
 final case class Warehouse(spark: SparkSession, root: String) {
+  import Warehouse.Appended
 
   val bronzePhotos = s"$root/bronze/raw_photo_response"
   val bronzeManifests = s"$root/bronze/raw_manifest_response"
@@ -64,6 +77,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
   // nothing to a table leaves no file under it
   private lazy val silverLog = OffsetLog(spark, s"$root/_checkpoints/silver")
   private lazy val goldLog = OffsetLog(spark, s"$root/_checkpoints/gold")
+  private lazy val gapLog = OffsetLog(spark, s"$root/_checkpoints/gaps")
+  private val GapState = "state"
 
   // A silver table is read pinned to its model's output schema over no
   // bronze; before its first build it reads as that empty model.
@@ -108,7 +123,8 @@ final case class Warehouse(spark: SparkSession, root: String) {
 
   /** dbt run --select tag:flatten equivalent (EP2 first stage), one
     * batch of the silver offset log: the bronze files no batch has taken
-    * yet. New photo files are flattened and appended; the rows of new
+    * yet. New photo files are flattened and appended, and the commit
+    * entry lists the sol keys the append wrote; the rows of new
     * manifest and coordinate files are upserted (their own batch, so no
     * watermark filter applies), `flat_manifest_photos` from the same frame
     * as `flat_manifest_response`. A batch whose commit entry is missing
@@ -121,9 +137,22 @@ final case class Warehouse(spark: SparkSession, root: String) {
         replay = true, appends = Seq(silverFlatPhotos)) { (n, fresh) =>
       def take(table: String, schema: StructType): Option[(Seq[String], DataFrame)] =
         fresh.get(tableName(table)).map(files => files -> readFiles(table, files, schema))
-      val photos = take(bronzePhotos, Schemas.photoBatch).toSeq.map { case (in, raw) =>
-        (silverFlatPhotos, in, appendStaged(silverFlatPhotos, s"b$n",
-          Silver.flatPhotoResponse(raw), clusterBy = Seq("rover_id", "sol", "earth_date")))
+      val photos = take(bronzePhotos, Schemas.photoBatch).toSeq.flatMap { case (in, raw) =>
+        val observed = Observation()
+        val out = appendStaged(silverFlatPhotos, s"b$n",
+          Silver.flatPhotoResponse(raw).observe(observed, collect_set(photoKeyStruct).as("keys")),
+          clusterBy = Seq("rover_id", "sol", "earth_date"))
+        // the write gathered the keys; an append that only finished an
+        // earlier attempt wrote nothing, so they are read from its files
+        val gathered = if (out.wrote) observed.get.get("keys") else None
+        val keys = gathered.getOrElse(
+          if (out.files.isEmpty) Nil
+          else readFiles(silverFlatPhotos, out.files, photoModel.schema)
+            .select(collect_set(photoKeyStruct)).head().get(0)).asInstanceOf[Seq[Row]]
+        commitLines(silverFlatPhotos, in, out.files) ++
+          keys.map(photoKey).sorted.map { case (r, s, id) =>
+            Seq(tableName(silverFlatPhotos), "key") ++ Seq(r, s, id).map(OffsetLog.field)
+          }
       }
       val merged = take(bronzeManifests, Schemas.manifestBatch).toSeq.flatMap { case (in, raw) =>
         val manifests = Silver.flatManifestResponse(raw)
@@ -150,8 +179,37 @@ final case class Warehouse(spark: SparkSession, root: String) {
       merged.foreach { case (t, _, _) =>
         Incremental.vacuum(spark, t, keep = 2, minAgeMs = 10L * 60 * 1000)
       }
-      (photos ++ merged).flatMap((commitLines _).tupled)
+      photos ++ merged.flatMap((commitLines _).tupled)
     }
+  }
+
+  /** A silver photo's sol key, (rover_name, sol, rover_id): silver's
+    * commit entry holds the distinct keys its photo append wrote. */
+  private type PhotoKey = (Option[String], Option[Int], Option[Int])
+  private val photoKeyStruct: Column = struct(col("rover_name"), col("sol"), col("rover_id"))
+  private def photoKey(r: Row): PhotoKey = {
+    val (rover, sol) = GapScheduler.gapKey(r)
+    (rover, sol, Option(r.get(2)).map(_.asInstanceOf[Int]))
+  }
+
+  /** Silver batch n's photo append as its commit entry records it: the
+    * files it published (`out` lines) and the keys they hold (`key`
+    * lines, `flat_photo_response key <rover_name> <sol> <rover_id>`). */
+  private def photoBatch(n: Long): (Set[String], Seq[PhotoKey]) = {
+    val lines = silverLog.read(OffsetLog.Commits, n).filter(_.head == tableName(silverFlatPhotos))
+    def int(f: String) = OffsetLog.value(f).map(_.toInt)
+    (lines.collect { case Seq(_, "out", f) => f }.toSet,
+      lines.collect { case Seq(_, "key", r, s, id) => (OffsetLog.value(r), int(s), int(id)) })
+  }
+
+  /** The keys of silver photo `files` from silver's retained commit
+    * entries, when those entries published exactly `files`; None when a
+    * file is in no retained entry or an entry's files are only partly
+    * among them. */
+  private def loggedKeys(files: Seq[String]): Option[Seq[PhotoKey]] = {
+    val batches = silverLog.ids(OffsetLog.Commits).map(photoBatch)
+      .filter(_._1.exists(files.contains))
+    Option.when(batches.flatMap(_._1).toSet == files.toSet)(batches.flatMap(_._2))
   }
 
   // lazy views over the materialized silver
@@ -167,6 +225,41 @@ final case class Warehouse(spark: SparkSession, root: String) {
   def validationPhotoGaps: DataFrame =
     Validation.validationPhotoGaps(flatManifestPhotos, flatPhotos)
 
+  /** The gap set the scheduler reads, as (rover_name, sol) keys in
+    * `GapScheduler.nextBatch` order with duplicates kept: the keys of
+    * [[validationPhotoGaps]], which stays its oracle, maintained under
+    * `$root/_checkpoints/gaps` instead of scanned.
+    *
+    * The state is an entry keyed by the silver batch it reflects: the
+    * `flat_manifest_photos` version, then the keys. When that version is
+    * current and silver's commit entries after the state's batch are all
+    * retained, their photo keys are dropped from it (a key holding a null
+    * covers nothing, as in the view's anti-join): no Spark job. Otherwise
+    * — first call, a manifest merge, or entries lost to a crash or to
+    * retention — it is rebuilt from the view's keys, unsorted
+    * ([[Validation.missingSols]], two jobs) and sorted here. The
+    * state is written, at the last committed silver batch, only when it
+    * changed. */
+  def gapKeys(): Seq[GapScheduler.GapKey] = {
+    val committed = silverLog.ids(OffsetLog.Commits)
+    val version = OffsetLog.field(Incremental.currentSnapshot(spark, silverFlatManifestPhotos))
+    val held = gapLog.ids(GapState).lastOption.map(s => s -> gapLog.read(GapState, s))
+    val maintained = held.zip(committed.lastOption).collect {
+      case ((s, Seq(`version`) +: lines), c) if s <= c && (s + 1 to c).forall(committed.contains) =>
+        val covered = (s + 1 to c).flatMap(photoBatch(_)._2)
+          .collect { case (Some(r), Some(sol), _) => (r, sol) }.toSet
+        lines.map { case Seq(r, sol) => (OffsetLog.value(r), OffsetLog.value(sol).map(_.toInt)) }
+          .filterNot { case (r, sol) => r.zip(sol).exists(covered) }
+    }
+    val gaps = maintained.getOrElse(
+      Validation.missingSols(flatManifestPhotos, flatPhotos).select("rover_name", "sol")
+        .collect().toSeq.map(GapScheduler.gapKey).sorted(GapScheduler.gapOrder))
+    val state = Seq(version) +: gaps.map { case (r, sol) => Seq(r, sol).map(OffsetLog.field) }
+    committed.lastOption.filterNot(c => held.contains(c -> state))
+      .foreach(gapLog.write(GapState, _, state))
+    gaps
+  }
+
   /** dbt run --select tag:aggregate equivalent (EP2 second stage), one
     * batch of the gold offset log: the silver photo files no batch has
     * taken yet, and the `flat_manifest_response` version when it changed.
@@ -175,10 +268,12 @@ final case class Warehouse(spark: SparkSession, root: String) {
     *
     *  - `camera_travel_correlation`: the mart over the new photos alone —
     *    each row carries its photo's ingestion date;
-    *  - `daily_activity`: the Perseverance sols among the new photos (one
-    *    small job over the new files), then the mart over every silver
-    *    photo of those sols, since a sol's counts include its older
-    *    photos; both marts are skipped when there are no such sols;
+    *  - `daily_activity`: the Perseverance sols among the new photos, then
+    *    the mart over every silver photo of those sols, since a sol's
+    *    counts include its older photos; both marts are skipped when there
+    *    are no such sols. The sols are the `rover_id = 8` keys of the
+    *    silver commit entries that published exactly the new files, or,
+    *    when there are no such entries, one small job over the files;
     *  - `photo_summary`, when the manifest changed: the `dimRovers` rows
     *    it does not hold yet, matched by (rover_name, ingestion_date).
     *
@@ -205,7 +300,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
           val unheld = readPinned(goldPhotoSummary, rows.schema)
             .fold(rows)(held => rows.join(held.select(keys.map(col): _*), keys, "left_anti"))
           Some((goldPhotoSummary, manifestFresh,
-            appendStaged(goldPhotoSummary, s"b$m", unheld, clusterBy = Seq("rover_name"))))
+            appendStaged(goldPhotoSummary, s"b$m", unheld, clusterBy = Seq("rover_name")).files))
         }
       val photoFiles = fresh.getOrElse(photosIn, Nil)
       lazy val newPhotos = Facts.factPhotos(
@@ -213,12 +308,16 @@ final case class Warehouse(spark: SparkSession, root: String) {
         else readFiles(silverFlatPhotos, photoFiles, photoModel.schema))
       val sols =
         if (photoFiles.isEmpty) Nil
-        else newPhotos.filter(col("rover_id") === 8 && col("sol").isNotNull)
-          .select("sol").collect().map(_.getInt(0)).distinct.toSeq
+        else loggedKeys(photoFiles).fold(
+          // recovery: the new files are not whole retained silver entries
+          newPhotos.filter(col("rover_id") === 8 && col("sol").isNotNull)
+            .select("sol").collect().map(_.getInt(0)).toSeq)(
+          _.collect { case (_, Some(sol), Some(8)) => sol }).distinct
       def mart(table: String, build: => DataFrame) =
         (table, photoFiles,
           if (sols.isEmpty && Incremental.exists(spark, table)) Nil
-          else appendStaged(table, s"b$m", build, clusterBy = Seq("rover_name", "sol_number")))
+          else appendStaged(table, s"b$m", build,
+            clusterBy = Seq("rover_name", "sol_number")).files)
       val perSol = Seq(
         mart(goldDailyActivity, Marts.dailyActivity(
           factPhotos.filter(col("sol").isin(sols: _*)), rovers, cameras, path)),
@@ -285,7 +384,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * skip, then each data file renamed into the root as `<tag>-<name>`. A
     * file holding no rows is dropped (the count is read from its parquet
     * footer, no Spark job) unless the table does not exist yet, which a
-    * first append creates even empty. Returns the names published.
+    * first append creates even empty.
     *
     * An earlier append under the same tag is finished, never repeated:
     * with `<tag>-` files in the root and no stage left it was complete,
@@ -293,16 +392,16 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * and only its remaining files are renamed in. A published file is
     * never removed, since a batch may already have taken it. */
   private def appendStaged(table: String, tag: String, df: DataFrame,
-                           clusterBy: Seq[String]): Seq[String] = {
+                           clusterBy: Seq[String]): Appended = {
     val root = new Path(table)
     val listed = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
     val stage = new Path(root, s"_stage_$tag")
     val staged = listed.exists(_.getPath.getName == stage.getName)
     val done = listed.map(_.getPath.getName).filter(_.startsWith(s"$tag-"))
-    if (done.nonEmpty && !staged) return done
+    if (done.nonEmpty && !staged) return Appended(done, wrote = false)
     val create = !listed.exists(st => st.isFile && !st.getPath.getName.startsWith("_"))
-    if (!staged || !fs.exists(new Path(stage, "_SUCCESS")))
-      Incremental.write(df, stage.toString, SaveMode.Overwrite, clusterBy)
+    val wrote = !staged || !fs.exists(new Path(stage, "_SUCCESS"))
+    if (wrote) Incremental.write(df, stage.toString, SaveMode.Overwrite, clusterBy)
     val published = done ++ dataFiles(stage.toString)
       .filter(f => create || rowCount(new Path(stage, f)) > 0)
       .map { f =>
@@ -311,7 +410,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
         dest.getName
       }
     fs.delete(stage, true)
-    published
+    Appended(published, wrote)
   }
 
   private def rowCount(file: Path): Long = {
@@ -336,4 +435,11 @@ final case class Warehouse(spark: SparkSession, root: String) {
         meta = Map(BatchKey -> n.toString))
     Incremental.currentSnapshot(spark, table).toSeq
   }
+}
+
+object Warehouse {
+
+  /** What `appendStaged` did: the names it published, and whether it ran
+    * the write (false when it finished an earlier attempt). */
+  private final case class Appended(files: Seq[String], wrote: Boolean)
 }

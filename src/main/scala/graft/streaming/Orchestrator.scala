@@ -10,7 +10,7 @@ import graft.mars.{GapScheduler, Warehouse}
   * three Structured Streaming stages wired through control-plane topics:
   *
   *   EP1 load_stage:      minio-events        → bronze load → load-complete
-  *   EP2 transform_stage: load-complete       → silver+gold build → gap scan → ingestion-scheduling
+  *   EP2 transform_stage: load-complete       → silver+gold build → gap set → ingestion-scheduling
   *   EP3 ingest_stage:    ingestion-scheduling→ per-task fetch → envelope → object store → minio-events
   *
   * Each stage is `readStream → foreachBatch` — the micro-batch function
@@ -35,12 +35,14 @@ final case class Orchestrator(spark: SparkSession, topicsRoot: String,
     }
 
   /** EP2: flatten → aggregate → gap fetch → schedule (ordering enforced,
-    * like transformation_dag.py:70). */
+    * like transformation_dag.py:70). The gaps are the set the warehouse
+    * maintains from silver's commit entries (`Warehouse.gapKeys`), not a
+    * scan of silver: a photo-only cycle runs only the silver append's
+    * two jobs. */
   def transformStage(): GapScheduler.IngestionSchedule = {
     warehouse.buildSilver()
     warehouse.buildGold()
-    val sched = GapScheduler.schedule(
-      GapScheduler.nextBatch(warehouse.validationPhotoGaps))
+    val sched = GapScheduler.schedule(warehouse.gapKeys())
     if (sched.tasks.nonEmpty)
       ControlPlane.produce(topicsRoot, ControlPlane.TopicScheduling,
         ControlPlane.schedulingJson(sched.toJson, clock()))

@@ -39,19 +39,27 @@ class IncrementalLoopSpec extends AnyFunSuite {
     s"${RoverKeys.route(filename)}/$filename"
   }
 
-  // every sol of both rovers declares exactly the cameras IngestSim lands
-  private def manifestDoc(ts: String): String = {
+  // every sol of both rovers declares exactly the cameras IngestSim lands;
+  // `extra` adds raw per-sol entries to a rover's list
+  private def manifestDoc(ts: String, name: String = "mars_rover_manifests_1.json",
+                          extra: Map[String, Seq[String]] = Map.empty): String = {
     val ms = cameras.map { case (rover, cams) =>
       val perSol = sols.map(s =>
         s"""{"sol": $s, "earth_date": "2025-01-0$s", "total_photos": ${cams.size}, """ +
-          s""""cameras": ${cams.map(c => s""""$c"""").mkString("[", ", ", "]")}}""")
+          s""""cameras": ${cams.map(c => s""""$c"""").mkString("[", ", ", "]")}}""") ++
+        extra.getOrElse(rover, Nil)
       s"""{"name": "$rover", "landing_date": "2020-01-01", "launch_date": "2019-06-01", """ +
         s""""status": "active", "max_sol": ${sols.max}, "max_date": "2025-01-06", """ +
         s""""total_photos": ${sols.size * cams.size}, "photos": ${perSol.mkString("[", ", ", "]")}}"""
     }
-    s"""{"filename": "mars_rover_manifests_1.json", "manifests": ${ms.mkString("[", ", ", "]")}, """ +
+    s"""{"filename": "$name", "manifests": ${ms.mkString("[", ", ", "]")}, """ +
       s""""ingestion_date": "$ts"}"""
   }
+
+  /** A manifest sol entry; `sol = None` leaves the field out. */
+  private def solEntry(sol: Option[Int]): String =
+    sol.fold("{")(s => s"""{"sol": $s, """) +
+      """"earth_date": "2025-01-09", "total_photos": 2, "cameras": ["FHAZ", "MAST"]}"""
 
   // a drive segment on odd sols only, so photo-only sols take the marts'
   // null-path branches; its SCLK window holds IngestSim's capture times
@@ -85,7 +93,8 @@ class IncrementalLoopSpec extends AnyFunSuite {
     * orchestrator: `setUp` lands the manifest, the traverse and sol 1 of
     * each rover and runs the first transform; `cycle` ingests the head of
     * the schedule. */
-  private final class Loop(tag: String, clock: () => String) {
+  private final class Loop(tag: String, clock: () => String,
+                           manifest: String => String = manifestDoc(_)) {
     val root: Path = Files.createTempDirectory(s"graft_$tag")
     val store: Path = root.resolve("store")
     val wh = Warehouse(spark, root.resolve("warehouse").toString)
@@ -127,7 +136,7 @@ class IncrementalLoopSpec extends AnyFunSuite {
     // set-up: manifest and traverse, then sol 1 of each rover through the sim
     def setUp(): Unit = {
       val seeded = Seq(
-        upload(store, "mars_rover_manifests_1.json", manifestDoc(clock())),
+        upload(store, "mars_rover_manifests_1.json", manifest(clock())),
         upload(store, "mars_rover_coordinates_1.json", coordinatesDoc(clock()))) ++
         orch.ingestStage(cameras.map(rc => GapScheduler.IngestionTask(rc._1, 1)), Seq(1))
       orch.loadStage(seeded)
@@ -143,8 +152,9 @@ class IncrementalLoopSpec extends AnyFunSuite {
     }
 
     /** The ingest and load half of a cycle. */
-    def land(n: Int): Seq[GapScheduler.IngestionTask] = {
-      val tasks = sched.tasks.take(n)
+    def land(n: Int): Seq[GapScheduler.IngestionTask] = landTasks(sched.tasks.take(n))
+
+    def landTasks(tasks: Seq[GapScheduler.IngestionTask]): Seq[GapScheduler.IngestionTask] = {
       if (tasks.nonEmpty) {
         val key = orch.ingestStage(tasks, tasks.map(_.sol).min to tasks.map(_.sol).max)
         orch.loadStage(key.toSeq)
@@ -431,5 +441,140 @@ class IncrementalLoopSpec extends AnyFunSuite {
     assert(Files.readString(store.resolve(key)) == envelope.toJSON.collect().head + "\n")
     intercept[IllegalArgumentException](
       Assemble.uploadJson(envelope.unionByName(envelope), store.toString))
+  }
+
+  test("a manifest sol without a sol number does not stall the schedule") {
+    val loop = new Loop("solless", ticking(),
+      manifestDoc(_, extra = Map("Curiosity" -> Seq(solEntry(None)))))
+    import loop._
+    setUp()
+    val all = for ((rover, _) <- cameras; s <- sols if s > 1) yield GapScheduler.IngestionTask(rover, s)
+    assert(sched.tasks == all)
+    assert(cycle(4) == all.take(4))
+    assert(sched.tasks == all.drop(4))
+    // the view keeps the sol-less row
+    assert(wh.validationPhotoGaps.filter(col("sol").isNull).count() == 1)
+  }
+
+  test("a photo-only cycle's transform runs at most two Spark jobs") {
+    val loop = new Loop("transformjobs", ticking())
+    import loop._
+    setUp()
+    cycle(2)
+    assert(land(2).map(_.rover_name).toSet == Set("Curiosity"))
+    val jobs = jobsOf { sched = orch.transformStage() }
+    assert(jobs <= 2, s"the transform ran $jobs jobs")
+    assertFullRefresh("the counted cycle")
+  }
+
+  test("gold takes a batch's sols from silver's commit entries, or from its files without them") {
+    val loop = new Loop("goldsols", ticking())
+    import loop._
+    setUp()
+    def land(tasks: (String, Int)*): Unit =
+      landTasks(tasks.map { case (r, s) => GapScheduler.IngestionTask(r, s) })
+    // the new silver files span two commit entries
+    land("Perseverance" -> 2, "Curiosity" -> 2)
+    wh.buildSilver()
+    land("Perseverance" -> 3)
+    wh.buildSilver()
+    wh.buildGold()
+    assertFullRefresh("two silver batches, one gold batch")
+    // no silver commit entry left: gold reads the sols from the files
+    land("Perseverance" -> 4, "Perseverance" -> 5)
+    wh.buildSilver()
+    val commits = Path.of(wh.root, "_checkpoints", "silver", OffsetLog.Commits)
+    logIds(commits).foreach(n => Files.delete(commits.resolve(n.toString)))
+    wh.buildGold()
+    assertFullRefresh("silver commit entries deleted")
+  }
+
+  test("a log field holds a null, or any value on one line") {
+    val values = Seq(None, Some("Curiosity"), Some(""), Some("\\N"), Some("a\tb\nc\rd\\e\\t"), Some(42))
+    val fields = values.map(OffsetLog.field)
+    assert(fields.head == "\\N" && fields(1) == "Curiosity" && fields.last == "42")
+    assert(fields.forall(f => !f.exists("\t\n\r".contains(_))), fields)
+    assert(fields.map(OffsetLog.value) == values.map(_.map(_.toString)))
+  }
+
+  test("the maintained gap set equals the gap view after every cycle") {
+    // a sol-less Curiosity entry and a Perseverance sol declared twice
+    val dup = Map("Curiosity" -> Seq(solEntry(None)), "Perseverance" -> Seq(solEntry(Some(3))))
+    val clock = ticking()
+    val loop = new Loop("gapstate", clock, manifestDoc(_, extra = dup))
+    import loop._
+    val checkpoints = Path.of(wh.root, "_checkpoints")
+    val (silverCommits, state) = (checkpoints.resolve("silver/commits"), checkpoints.resolve("gaps/state"))
+    def keys(df: DataFrame) = df.collect().toSeq.map(GapScheduler.gapKey)
+    def assertGaps(label: String): Unit = {
+      val n = logIds(state).last
+      assert(n == logIds(silverCommits).last, s"$label: state keyed by batch $n")
+      val lines = OffsetLog(spark, state.getParent.toString).read("state", n)
+      assert(lines.head == Seq(OffsetLog.field(
+        Incremental.currentSnapshot(spark, wh.silverFlatManifestPhotos))), s"$label: version")
+      val held = lines.tail.map { case Seq(r, s) => (OffsetLog.value(r), OffsetLog.value(s).map(_.toInt)) }
+      val view = wh.validationPhotoGaps.select("rover_name", "sol")
+      assert(held == keys(view.orderBy("rover_name", "sol")), s"$label: gap state")
+      assert(sched == GapScheduler.schedule(GapScheduler.nextBatch(view)), s"$label: schedule")
+    }
+    def delete(dir: Path, n: Long): Unit = Files.delete(dir.resolve(n.toString))
+
+    setUp()
+    assertGaps("set-up")
+    cycle(2)
+    assertGaps("cycle 1")
+    // photos without a rover name (at Curiosity's gap sol 6) or a sol
+    val odd = Seq("""{"id": 901, "sol": 6, "rover": {"id": 5}}""",
+      """{"id": 902, "rover": {"id": 5, "name": "Curiosity"}}""")
+    orch.loadStage(Seq(upload(store, "mars_rover_photos_odd.json",
+      s"""{"filename": "mars_rover_photos_odd.json", "photo_count": 2, """ +
+        s""""photos": ${odd.mkString("[", ", ", "]")}, "ingestion_date": "${clock()}"}""")))
+    assert(cycle(2).map(_.sol) == Seq(4, 5))
+    assertGaps("cycle 2: photos with a null key")
+    assert(sched.tasks.head == GapScheduler.IngestionTask("Curiosity", 6))
+    // the manifest changes: new sols 7 and 8, Perseverance 3 still twice
+    val more = Map("Curiosity" -> Seq(solEntry(Some(7))),
+      "Perseverance" -> Seq(7, 8, 3).map(s => solEntry(Some(s))))
+    orch.loadStage(Seq(upload(store, "mars_rover_manifests_2.json",
+      manifestDoc(clock(), "mars_rover_manifests_2.json", more))))
+    cycle(2)
+    assertGaps("cycle 3: manifest changed")
+    // a crash in silver's batch: its offsets entry without its commit
+    // entry, and no gap state or gold commit written after it
+    cycle(2)
+    val n = logIds(silverCommits).last
+    delete(silverCommits, n)
+    delete(checkpoints.resolve("gold/commits"), logIds(checkpoints.resolve("gold/commits")).last)
+    delete(state, n)
+    assert(cycle(0).isEmpty)
+    assertGaps("cycle 4: silver batch run again")
+    // a lost silver commit entry between the state and the last batch
+    land(2)
+    wh.buildSilver()
+    delete(silverCommits, n)
+    delete(state, n)
+    sched = orch.transformStage()
+    assertGaps("cycle 5: silver commit entry lost")
+    // a lost gap state
+    def loseState(): Unit =
+      Files.walk(state.getParent).sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
+    loseState()
+    cycle(2)
+    assertGaps("cycle 6: gap state lost")
+    // the rebuild is the view's two jobs; the state it wrote is read in none
+    loseState()
+    val rebuilt = jobsOf(wh.gapKeys())
+    assert(rebuilt <= 2, s"the rebuild ran $rebuilt jobs")
+    assert(jobsOf(wh.gapKeys()) == 0)
+    assertGaps("cycle 6: rebuilt again")
+    assert(cycle(2).nonEmpty)
+    assertGaps("cycle 7")
+    assert(sched.tasks.isEmpty, s"gap queue not drained: ${sched.tasks}")
+    // the sol-less row is all that is left, and a cycle with nothing new
+    // writes no state
+    assert(keys(wh.validationPhotoGaps.select("rover_name", "sol")) == Seq(Some("Curiosity") -> None))
+    val before = entries(state.getParent.toString)
+    assert(cycle(0).isEmpty)
+    assert(entries(state.getParent.toString) == before)
   }
 }
