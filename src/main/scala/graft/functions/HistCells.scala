@@ -6,46 +6,35 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Fixed-grid histogram cells as NATIVE aggregation state — the
-  * percentile partial behind [[graft.plans.MvRewrite]]'s
-  * approx-percentile serving (r8), the same machinery
+/** Fixed-grid histogram cells as NATIVE aggregation state, the state of
+  * [[HistQuantile]] — the same machinery
   * [[graft.text.TextOps.histogramQuantiles]] builds as a DataFrame plan:
   * bucket = floorDiv(value, width), one (bucket, count) cell per occupied
   * bucket.
   *
-  * Why cells are the right partial: histogram cells are OR-mergeable
-  * (per-group cell counts SUM across any regrouping), so the
-  * interpolated quantile computed from merged partials is IDENTICAL —
-  * not approximately equal — to the quantile computed over the base
-  * rows: the histogram is a deterministic function of the value multiset
-  * and cell merge is exact addition. That is the KMV-union-style
-  * equality [[graft.plans.MvRewrite]] requires before it reroutes an
-  * aggregate; the ESTIMATE's error vs the true percentile is the usual
-  * fixed-grid bound (≤ width), unchanged by serving from the mart.
+  * Why cells are the right partial: per-group cell counts SUM across any
+  * regrouping, so the interpolated quantile computed from merged partials
+  * is IDENTICAL — not approximately equal — to the quantile computed over
+  * the base rows under any partitioning: the histogram is a deterministic
+  * function of the value multiset and cell merge is exact addition. The
+  * ESTIMATE's error vs the true percentile is the usual fixed-grid bound
+  * (≤ width).
   *
   * State is |occupied buckets| per group per partition — bounded by
   * value-range/width, independent of row count (the bounded-partial
-  * argument [[KMinValues]] and [[BoundedDistinct]] make). Exact
-  * `percentile` is NOT expressible from cells and the rewrite refuses
-  * it by design.
+  * argument [[KMinValues]] and [[BoundedDistinct]] make).
   *
-  * The quantile rule (shared by [[HistQuantile]] / [[HistQuantileMerge]]
-  * and replayed by the DuckDB oracle): with n = Σcnt and target t = q·n,
-  * pick the first bucket (ascending) whose cumulative count reaches t;
-  * estimate = bucket·width + width·(t − cum_prev)/cnt, rounded
-  * HALF_UP to 6 dp — exactly [[graft.text.TextOps.histogramQuantiles]]'s
-  * interpolation.
+  * The quantile rule (replayed by the DuckDB oracle): with n = Σcnt and
+  * target t = q·n, pick the first bucket (ascending) whose cumulative
+  * count reaches t; estimate = bucket·width + width·(t − cum_prev)/cnt,
+  * rounded HALF_UP to 6 dp — exactly
+  * [[graft.text.TextOps.histogramQuantiles]]'s interpolation.
   */
 object HistOps {
 
   type Cells = java.util.TreeMap[java.lang.Long, java.lang.Long]
-
-  val cellsType: DataType = ArrayType(StructType(Seq(
-    StructField("bucket", LongType, nullable = false),
-    StructField("cnt", LongType, nullable = false))), containsNull = false)
 
   def newCells(): Cells = new java.util.TreeMap[java.lang.Long, java.lang.Long]()
 
@@ -61,32 +50,6 @@ object HistOps {
       add(b1, e.getKey, e.getValue)
     }
     b1
-  }
-
-  /** Fold an ARRAY<STRUCT<bucket,cnt>> input value into the buffer
-    * (null slots skipped — the KMinMerge r8-ADVICE posture). */
-  def addArray(buf: Cells, arr: ArrayData): Unit = {
-    var i = 0
-    while (i < arr.numElements()) {
-      if (!arr.isNullAt(i)) {
-        val row = arr.getStruct(i, 2)
-        add(buf, row.getLong(0), row.getLong(1))
-      }
-      i += 1
-    }
-  }
-
-  /** Sorted (bucket, cnt) array — deterministic under any partitioning. */
-  def toArrayData(buf: Cells): ArrayData = {
-    val out = new Array[Any](buf.size)
-    val it = buf.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next()
-      out(i) = InternalRow(e.getKey.longValue(), e.getValue.longValue())
-      i += 1
-    }
-    new GenericArrayData(out)
   }
 
   /** Interpolated quantile from cells; null when the histogram is empty. */
@@ -170,117 +133,10 @@ object HistOps {
         TypeCheckResult.TypeCheckFailure("q must be in (0, 1]")
       else TypeCheckResult.TypeCheckSuccess
     }
-
-  private[functions] def checkCells(dt: DataType): TypeCheckResult = dt match {
-    case ArrayType(st: StructType, _)
-        if st.fields.length == 2 && st.fields.forall(_.dataType == LongType) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"expected ARRAY<STRUCT<BIGINT,BIGINT>> cells, got ${other.catalogString}")
-  }
-}
-
-/** `hist_cells(x, width) → ARRAY<STRUCT<bucket,cnt>>` — the fixed-grid
-  * cell partial per group, sorted by bucket. */
-case class HistCells(
-    child: Expression,
-    wExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HistOps.Cells] {
-
-  private lazy val width: Int = wExpr.eval().asInstanceOf[Number].intValue()
-
-  override def children: Seq[Expression] = Seq(child, wExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = HistOps.cellsType
-  override def prettyName: String = "hist_cells"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!HistOps.integral(child.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        s"hist_cells requires an integral input, got ${child.dataType.catalogString}")
-    else HistOps.checkWidth(wExpr)
-
-  override def createAggregationBuffer(): HistOps.Cells = HistOps.newCells()
-
-  override def update(buf: HistOps.Cells, input: InternalRow): HistOps.Cells = {
-    val v = child.eval(input)
-    if (v != null) HistOps.add(buf, Math.floorDiv(HistOps.asLong(v), width.toLong), 1L)
-    buf
-  }
-
-  override def merge(b1: HistOps.Cells, b2: HistOps.Cells): HistOps.Cells =
-    HistOps.mergeInto(b1, b2)
-
-  override def eval(buf: HistOps.Cells): Any = HistOps.toArrayData(buf)
-
-  override def serialize(buf: HistOps.Cells): Array[Byte] = HistOps.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): HistOps.Cells = HistOps.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HistCells =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HistCells =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HistCells =
-    copy(child = newChildren(0), wExpr = newChildren(1))
-}
-
-object HistCells {
-  val info = new ExpressionInfo(classOf[HistCells].getName, "hist_cells")
-}
-
-/** `hist_merge(cells) → ARRAY<STRUCT<bucket,cnt>>` — merge STORED cell
-  * partials (counts sum per bucket): the maintenance half
-  * [[graft.ops.IncrementalAgg]] folds batches with. */
-case class HistMerge(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HistOps.Cells] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = HistOps.cellsType
-  override def prettyName: String = "hist_merge"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    HistOps.checkCells(child.dataType)
-
-  override def createAggregationBuffer(): HistOps.Cells = HistOps.newCells()
-
-  override def update(buf: HistOps.Cells, input: InternalRow): HistOps.Cells = {
-    val v = child.eval(input)
-    if (v != null) HistOps.addArray(buf, v.asInstanceOf[ArrayData])
-    buf
-  }
-
-  override def merge(b1: HistOps.Cells, b2: HistOps.Cells): HistOps.Cells =
-    HistOps.mergeInto(b1, b2)
-
-  override def eval(buf: HistOps.Cells): Any = HistOps.toArrayData(buf)
-
-  override def serialize(buf: HistOps.Cells): Array[Byte] = HistOps.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): HistOps.Cells = HistOps.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HistMerge =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HistMerge =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HistMerge =
-    copy(child = newChildren(0))
-}
-
-object HistMerge {
-  val info = new ExpressionInfo(classOf[HistMerge].getName, "hist_merge")
 }
 
 /** `hist_quantile(x, q, width) → DOUBLE` — the fixed-grid interpolated
-  * quantile aggregated directly over base rows; the read shape
-  * [[graft.plans.MvRewrite]] serves from a mart's [[HistCells]] partial
-  * via [[HistQuantileMerge]] (identical by cell-merge exactness). */
+  * quantile aggregated directly over base rows. */
 case class HistQuantile(
     child: Expression,
     qExpr: Expression,
@@ -333,63 +189,4 @@ case class HistQuantile(
 
 object HistQuantile {
   val info = new ExpressionInfo(classOf[HistQuantile].getName, "hist_quantile")
-}
-
-/** `hist_quantile_merge(cells, q, width) → DOUBLE` — the serving half:
-  * merge stored cell partials, then the same interpolation as
-  * [[HistQuantile]]. Exactly equal to `hist_quantile` over the base
-  * rows for any rollup of the partial's groups. */
-case class HistQuantileMerge(
-    child: Expression,
-    qExpr: Expression,
-    wExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[HistOps.Cells] {
-
-  private lazy val width: Int = wExpr.eval().asInstanceOf[Number].intValue()
-  private lazy val q: Double = qExpr.eval().asInstanceOf[Number].doubleValue()
-
-  override def children: Seq[Expression] = Seq(child, qExpr, wExpr)
-  override def nullable: Boolean = true
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "hist_quantile_merge"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    HistOps.checkCells(child.dataType) match {
-      case TypeCheckResult.TypeCheckSuccess => HistOps.checkQ(qExpr) match {
-        case TypeCheckResult.TypeCheckSuccess => HistOps.checkWidth(wExpr)
-        case fail => fail
-      }
-      case fail => fail
-    }
-
-  override def createAggregationBuffer(): HistOps.Cells = HistOps.newCells()
-
-  override def update(buf: HistOps.Cells, input: InternalRow): HistOps.Cells = {
-    val v = child.eval(input)
-    if (v != null) HistOps.addArray(buf, v.asInstanceOf[ArrayData])
-    buf
-  }
-
-  override def merge(b1: HistOps.Cells, b2: HistOps.Cells): HistOps.Cells =
-    HistOps.mergeInto(b1, b2)
-
-  override def eval(buf: HistOps.Cells): Any = HistOps.quantile(buf, q, width)
-
-  override def serialize(buf: HistOps.Cells): Array[Byte] = HistOps.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): HistOps.Cells = HistOps.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): HistQuantileMerge =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): HistQuantileMerge =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): HistQuantileMerge =
-    copy(child = newChildren(0), qExpr = newChildren(1), wExpr = newChildren(2))
-}
-
-object HistQuantileMerge {
-  val info = new ExpressionInfo(classOf[HistQuantileMerge].getName,
-    "hist_quantile_merge")
 }

@@ -119,119 +119,3 @@ case class KMinValues(
 object KMinValues {
   val info = new ExpressionInfo(classOf[KMinValues].getName, "kmin_values")
 }
-
-/** `kmin_merge(kmins, k)` — merge STORED k-min arrays (the
-  * [[KMinValues]] output / partial) back into one k-min sketch: the
-  * k smallest distinct longs across every input array, sorted.
-  *
-  * This is the serving half of the KMV maintain-and-serve loop (r7):
-  * a mart keeps one `kmin_values` array per group
-  * ([[graft.ops.IncrementalAgg]] folds batches into it), and a distinct
-  * estimate over ANY rollup of those groups re-aggregates with this
-  * function — the classic KMV union property makes the merged sketch
-  * EQUAL (not approximately equal) to `kmin_values` over the base rows,
-  * because membership in the k smallest is a set property: dropping
-  * values that are not among a group's k smallest can never evict a
-  * value from the global k smallest. [[graft.plans.MvRewrite]] relies
-  * on exactly that equality when it reroutes a `kmin_values` aggregate
-  * to the mart's partial column.
-  */
-case class KMinMerge(
-    child: Expression,
-    kExpr: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]] {
-
-  private lazy val k: Int = kExpr.eval().asInstanceOf[Number].intValue()
-
-  override def children: Seq[Expression] = Seq(child, kExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "kmin_merge"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _)
-        if kExpr.foldable && kExpr.dataType == IntegerType &&
-          kExpr.eval() != null &&  // foldable NULL: fail, don't NPE
-          kExpr.eval().asInstanceOf[Number].intValue() > 0 =>
-      TypeCheckResult.TypeCheckSuccess
-    case ArrayType(LongType, _) =>
-      TypeCheckResult.TypeCheckFailure("k must be a positive INTEGER literal")
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kmin_merge requires ARRAY<BIGINT> input, got ${other.catalogString}")
-  }
-
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
-
-  override def update(buf: java.util.TreeSet[java.lang.Long],
-                      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val v = child.eval(input)
-    if (v != null) {
-      val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      var i = 0
-      while (i < arr.numElements()) {
-        // containsNull inputs: a null slot must not enter the sketch as 0L
-        if (!arr.isNullAt(i)) {
-          val h = arr.getLong(i)
-          if (buf.size < k || h < buf.last()) {
-            buf.add(h)
-            if (buf.size > k) buf.pollLast()
-          }
-        }
-        i += 1
-      }
-    }
-    buf
-  }
-
-  override def merge(b1: java.util.TreeSet[java.lang.Long],
-                     b2: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
-    val it = b2.iterator()
-    while (it.hasNext) {
-      b1.add(it.next())
-      if (b1.size > k) b1.pollLast()
-    }
-    b1
-  }
-
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any = {
-    val arr = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) { arr(i) = it.next().longValue(); i += 1 }
-    new GenericArrayData(arr)
-  }
-
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) out.writeLong(it.next().longValue())
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = new java.util.TreeSet[java.lang.Long]()
-    val n = in.readInt()
-    var i = 0
-    while (i < n) { buf.add(in.readLong()); i += 1 }
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): KMinMerge =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): KMinMerge =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): KMinMerge =
-    copy(child = newChildren(0), kExpr = newChildren(1))
-}
-
-object KMinMerge {
-  val info = new ExpressionInfo(classOf[KMinMerge].getName, "kmin_merge")
-}

@@ -125,12 +125,6 @@ object GraftFunctions {
         (children: Seq[Expression]) =>
           KMinValues(children(0), children(1)).toAggregateExpression())
     }
-    val kmmIdent = FunctionIdentifier("kmin_merge")
-    if (!registry.functionExists(kmmIdent)) {
-      registry.registerFunction(kmmIdent, KMinMerge.info,
-        (children: Seq[Expression]) =>
-          KMinMerge(children(0), children(1)).toAggregateExpression())
-    }
     val jwIdent = FunctionIdentifier("jaro_winkler")
     if (!registry.functionExists(jwIdent)) {
       registry.registerFunction(jwIdent, JaroWinkler.info,
@@ -228,32 +222,13 @@ object GraftFunctions {
       registry.registerFunction(afIdent, AviFrameLumas.info,
         (children: Seq[Expression]) => AviFrameLumas(children.head))
     }
-    // fixed-grid histogram aggregates (r8): the percentile partial and
-    // its maintain/serve halves behind MvRewrite's approx-quantile reads
-    val hcIdent = FunctionIdentifier("hist_cells")
-    if (!registry.functionExists(hcIdent)) {
-      registry.registerFunction(hcIdent, HistCells.info,
-        (children: Seq[Expression]) =>
-          HistCells(children(0), children(1)).toAggregateExpression())
-    }
-    val hmIdent = FunctionIdentifier("hist_merge")
-    if (!registry.functionExists(hmIdent)) {
-      registry.registerFunction(hmIdent, HistMerge.info,
-        (children: Seq[Expression]) =>
-          HistMerge(children.head).toAggregateExpression())
-    }
+    // the fixed-grid histogram quantile (r8): cells as bounded aggregation
+    // state, the same grid and interpolation as td_quantile_sketch's plan
     val hqIdent = FunctionIdentifier("hist_quantile")
     if (!registry.functionExists(hqIdent)) {
       registry.registerFunction(hqIdent, HistQuantile.info,
         (children: Seq[Expression]) =>
           HistQuantile(children(0), children(1), children(2))
-            .toAggregateExpression())
-    }
-    val hqmIdent = FunctionIdentifier("hist_quantile_merge")
-    if (!registry.functionExists(hqmIdent)) {
-      registry.registerFunction(hqmIdent, HistQuantileMerge.info,
-        (children: Seq[Expression]) =>
-          HistQuantileMerge(children(0), children(1), children(2))
             .toAggregateExpression())
     }
     // one call wires the whole custom surface: expressions above, the
@@ -281,9 +256,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     ext.injectFunction((FunctionIdentifier("kmin_values"), KMinValues.info,
       (children: Seq[Expression]) =>
         KMinValues(children(0), children(1)).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("kmin_merge"), KMinMerge.info,
-      (children: Seq[Expression]) =>
-        KMinMerge(children(0), children(1)).toAggregateExpression()))
     ext.injectFunction((FunctionIdentifier("jaro_winkler"), JaroWinkler.info,
       (children: Seq[Expression]) => JaroWinkler(children(0), children(1))))
     ext.injectFunction((FunctionIdentifier("i8_pack"), I8Pack.info,
@@ -322,20 +294,9 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       (children: Seq[Expression]) => AviEncode(children(0), children(1))))
     ext.injectFunction((FunctionIdentifier("avi_frame_lumas"), AviFrameLumas.info,
       (children: Seq[Expression]) => AviFrameLumas(children.head)))
-    ext.injectFunction((FunctionIdentifier("hist_cells"), HistCells.info,
-      (children: Seq[Expression]) =>
-        HistCells(children(0), children(1)).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("hist_merge"), HistMerge.info,
-      (children: Seq[Expression]) =>
-        HistMerge(children.head).toAggregateExpression()))
     ext.injectFunction((FunctionIdentifier("hist_quantile"), HistQuantile.info,
       (children: Seq[Expression]) =>
         HistQuantile(children(0), children(1), children(2))
-          .toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("hist_quantile_merge"),
-      HistQuantileMerge.info,
-      (children: Seq[Expression]) =>
-        HistQuantileMerge(children(0), children(1), children(2))
           .toAggregateExpression()))
     ext.injectOptimizerRule(_ => RewriteMd5Prefix)
     ext.injectPlannerStrategy(_ => graft.plans.RangeJoinStrategy)

@@ -125,18 +125,25 @@ object Incremental {
     * union, published as a fresh immutable snapshot (see writeSnapshot).
     * The source must already be incremental: dbt's is_incremental()
     * string `>` on a watermark would drop a batch stamped in the same
-    * second as the previous one's max (SURVEY §7.4 item 5a). [[Warehouse]]
-    * and [[graft.streaming.SnapshotSink]] publish through this entry. */
+    * second as the previous one's max (SURVEY §7.4 item 5a). Keys match
+    * null-safely (`<=>`), so a key holding a null replaces its old row
+    * like any other and the table keeps one row per key (SURVEY §7.4
+    * item 7); it is still an equi-join, planned as a hash or broadcast
+    * join. [[Warehouse]] publishes through this entry. */
   def upsertSnapshot(spark: SparkSession, target: String, source: DataFrame,
                      keys: Seq[String], clusterBy: Seq[String] = Nil,
                      meta: Map[String, String] = Map.empty,
                      mergeSchema: Boolean = false): Unit = {
     if (!exists(spark, target)) {
-      writeSnapshot(spark, target, source, clusterBy, meta = meta)
+      writeSnapshot(spark, target, source, clusterBy, meta)
       return
     }
     val old = read(spark, target)
-    val kept = old.join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
+    val incoming = source.select(
+      keys.indices.map(i => col(keys(i)).as(s"_key$i")): _*).distinct()
+    val kept = old.join(incoming,
+      keys.indices.map(i => old(keys(i)) <=> incoming(s"_key$i")).reduce(_ && _),
+      "left_anti")
     // schema evolution (opt-in, Delta mergeSchema): columns new to either
     // side null-fill on the other, so an upstream that grew a column
     // upserts without a table rewrite; default stays strict — the source
@@ -144,102 +151,7 @@ object Incremental {
     val merged =
       if (mergeSchema) kept.unionByName(source, allowMissingColumns = true)
       else kept.unionByName(source.select(old.columns.map(col).toIndexedSeq: _*))
-    writeSnapshot(spark, target, merged, clusterBy, meta = meta)
-  }
-
-  /** dbt `snapshot` materialization — SCD type-2 history over a mutable
-    * entity (the fourth dbt materialization; the reference scaffolds
-    * `dbt/martian_moments/snapshots/` for it but ships none, so this is
-    * the one dbt surface a reference user could invoke that `append` /
-    * `merge` / `view` don't cover). Check-strategy semantics: a source
-    * row opens a new version only when its tracked state differs from
-    * the entity's current version; the superseded version is closed with
-    * the newcomer's `updatedAt`.
-    *
-    * Target schema: `keys ++ checkCols ++ (valid_from, valid_to)`;
-    * `valid_to IS NULL` marks the current version. The table is published
-    * through the same versioned-snapshot store as [[upsertSnapshot]],
-    * so racing readers see a committed history or none.
-    *
-    * Batches must arrive forward in time: a source row at or before the
-    * entity's open `valid_from` is late data and is dropped (dbt compares
-    * against the current record only — identical contract). One row per
-    * (key, updatedAt) is required; ties have no defined version order.
-    *
-    * Scale: one shuffle on the entity key; closed history is carried via
-    * union, never re-windowed — the window runs only over (open ∪ fresh),
-    * which is O(entities + batch), not O(history). Equivalence with the
-    * one-shot reconstruction (`q61_scd2`) is pinned by Scd2Spec. */
-  def scd2Merge(spark: SparkSession, target: String, source: DataFrame,
-                keys: Seq[String], updatedAt: String,
-                checkCols: Seq[String], clusterBy: Seq[String] = Nil,
-                meta: Map[String, String] = Map.empty): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val batch = source.select(
-      (keys ++ checkCols).map(col) :+ col(updatedAt).as("valid_from"): _*)
-    val (closed, openAndFresh) =
-      if (!exists(spark, target)) {
-        (None, batch)
-      } else {
-        val cur = read(spark, target)
-        val open = cur.filter(col("valid_to").isNull).drop("valid_to")
-        val openFrom = open.select(
-          keys.map(col) :+ col("valid_from").as("_open_from"): _*)
-        val fresh = batch.join(openFrom, keys, "left")
-          .filter(col("_open_from").isNull ||
-            col("valid_from") > col("_open_from"))
-          .drop("_open_from")
-        (Some(cur.filter(col("valid_to").isNotNull)), open.unionByName(fresh))
-      }
-    // gaps-and-islands over the combined current + incoming versions:
-    // drop rows whose tracked state equals the previous version's, then
-    // close each surviving version with the next one's start. Both
-    // windows share one shuffle+sort on the entity key.
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("valid_from"))
-    val state = struct(checkCols.map(col): _*)
-    val rebuilt = openAndFresh
-      .withColumn("_prev", lag(state, 1).over(w))
-      .filter(col("_prev").isNull || !(col("_prev") <=> state))
-      .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
-      .drop("_prev")
-    val full = closed.fold(rebuilt)(_.unionByName(rebuilt))
-    writeSnapshot(spark, target, full, clusterBy, meta = meta)
-  }
-
-  /** Takedown / right-to-be-forgotten: publish a new version WITHOUT the
-    * rows matching `condition` (NULL-condition rows are KEPT — SQL DELETE
-    * semantics). Returns the number of rows removed. One counting scan
-    * plus the rewrite; at scale, partition/row-group pruning on the
-    * condition columns (cluster_by / compact sortBy on them) bounds what
-    * is actually read, and `clusterBy` preserves that layout across the
-    * rewrite. Publishes with the conflict-abort (`onlyIfCurrent`) and
-    * RETRIES from the fresh base when a concurrent merge lands first —
-    * a delete recomputed on the newer version neither resurrects taken-
-    * down rows nor shadows the merge (Delta's DELETE conflict-retry).
-    * COMPLIANCE NOTE: prior versions still hold the deleted rows until
-    * [[vacuum]] drops them — a takedown is complete only after `vacuum`
-    * has expired every version that predates it (VACUUM-after-DELETE). */
-  def deleteWhere(spark: SparkSession, target: String,
-                  condition: org.apache.spark.sql.Column,
-                  clusterBy: Seq[String] = Nil): Long = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      require(attempts <= 20, s"deleteWhere could not publish under $target " +
-        "(persistent write contention, or a crashed writer's stale claim — " +
-        "run vacuum)")
-      val base = currentSnapshot(spark, target).getOrElse(
-        throw new IllegalArgumentException(s"$target is not a versioned table"))
-      val cur = spark.read.parquet(s"$target/$base")
-      val removed = cur.filter(coalesce(condition, lit(false))).count()
-      if (removed == 0) return 0L
-      val kept = cur.filter(!coalesce(condition, lit(false)))
-      if (writeSnapshot(spark, target, kept, clusterBy,
-            onlyIfCurrent = Some(base)))
-        return removed
-      // a writer committed since `base` was read — recompute on its version
-    }
-    0L // unreachable
+    writeSnapshot(spark, target, merged, clusterBy, meta)
   }
 
   /** Stage `df` under a unique `_stage_*` dir, claim the next free
@@ -248,25 +160,19 @@ object Incremental {
     * `_commit_vN` create. Every step is crash-safe: a crash leaves at
     * worst a stage dir or a claimed-but-uncommitted version, both
     * invisible to readers and reclaimed by [[vacuum]]. */
-  private[graft] def writeSnapshot(spark: SparkSession, root: String, df: DataFrame,
-                            clusterBy: Seq[String],
-                            onlyIfCurrent: Option[String] = None,
-                            meta: Map[String, String] = Map.empty): Boolean = {
+  private def writeSnapshot(spark: SparkSession, root: String, df: DataFrame,
+                            clusterBy: Seq[String], meta: Map[String, String]): Unit = {
     val f = fs(spark, root)
     val rootPath = new Path(root)
     val stage = new Path(rootPath, s"$StagePrefix${UUID.randomUUID()}")
     write(df, stage.toString, SaveMode.Overwrite, clusterBy)
-    // Metadata behaves like TABLE PROPERTIES: each publish inherits the
-    // current committed version's meta and overlays its own keys, so a
-    // property (e.g. SnapshotSink's applied-batch watermark) survives
-    // interleaved merges that don't set it, and vacuum of old versions.
-    // It is staged INSIDE the snapshot dir, so it becomes visible in the
-    // same atomic publish as the data — the exactly-once hook SnapshotSink
-    // leans on. Underscore prefix keeps parquet readers blind to it.
-    val effectiveMeta = snapshotMeta(spark, root) ++ meta
-    if (effectiveMeta.nonEmpty) {
+    // The meta is staged INSIDE the snapshot dir, so it becomes visible in
+    // the same atomic publish as the data: a version that records a batch
+    // is a committed one, which Warehouse's re-run check leans on.
+    // Underscore prefix keeps parquet readers blind to it.
+    if (meta.nonEmpty) {
       val out = f.create(new Path(stage, MetaFile), true)
-      try effectiveMeta.foreach { case (k, v) =>
+      try meta.foreach { case (k, v) =>
         require(!k.contains('\n') && !v.contains('\n'), "meta must be line-free")
         out.write(s"$k=$v\n".getBytes("UTF-8"))
       } finally out.close()
@@ -286,29 +192,6 @@ object Incremental {
       val next = taken.map(_.stripPrefix("v").toInt).maxOption.getOrElse(0) + 1
       val snap = f"v$next%08d"
       if (createExclusive(f, new Path(rootPath, s"$ClaimPrefix$snap"))) {
-        // rewrite-in-place publishes (compact) abandon when another writer
-        // committed since the rewrite read its base — committing a copy of
-        // OLD data on top of the newcomer would shadow its changes — or
-        // when a lower-numbered claim is still UNCOMMITTED: that writer
-        // carries newer data and would commit beneath our higher version,
-        // shadowed the moment our copy publishes. (A claim that lands in
-        // the instant between this listing and our commit marker is the
-        // residual window; the vacuum-cleaned single-maintenance-writer
-        // contract covers it, as documented on vacuum.)
-        if (onlyIfCurrent.exists { base =>
-              val listing = names(spark, root)
-              val committed = listing.filter(_.startsWith(CommitPrefix))
-                .map(_.stripPrefix(CommitPrefix))
-              val pendingClaims = listing.filter(_.startsWith(ClaimPrefix))
-                .map(_.stripPrefix(ClaimPrefix))
-                .filterNot(committed.toSet)
-                .filterNot(_ == snap)
-              committed.sorted.lastOption != Some(base) || pendingClaims.nonEmpty
-            }) {
-          f.delete(new Path(rootPath, s"$ClaimPrefix$snap"), false)
-          f.delete(stage, true)
-          return false
-        }
         val dest = new Path(rootPath, snap)
         require(f.rename(stage, dest), s"rename $stage -> $dest failed")
         // unchecked, the merge would "succeed" while readers never see vN
@@ -319,58 +202,6 @@ object Incremental {
       }
       // claim lost: another writer took this version — recompute and retry
     }
-    true
-  }
-
-  /** OPTIMIZE-style compaction: rewrite the CURRENT snapshot as
-    * `ceil(on-disk bytes / targetFileBytes)` files, published as a new
-    * committed version holding identical rows. The streaming merge loop
-    * writes one snapshot per micro-batch with one file per shuffle
-    * partition — at scale that is the small-file problem (listing cost,
-    * per-file task scheduling, row groups too small for their stats to
-    * prune anything). Compaction bin-packs via `coalesce` (merges input
-    * splits, NO shuffle); passing `sortBy` instead range-partitions and
-    * sorts (one shuffle) so file- and row-group-level min/max stats
-    * become disjoint on those keys — the cluster_by pruning contract
-    * re-established after many unsorted merges.
-    *
-    * `zorderBy` (exactly two non-negative int columns, exclusive with
-    * `sortBy`) lays files along the Morton curve instead — OPTIMIZE
-    * ZORDER: each file covers a tight rectangle in BOTH dimensions, so
-    * min/max stats prune point/range predicates on either column, where
-    * a plain sort only serves its leading column.
-    *
-    * Returns false without publishing when another writer committed
-    * between the read and the publish — compacting stale data on top of
-    * a fresh merge would shadow it (Delta OPTIMIZE's conflict-abort).
-    * Readers are unaffected either way: both versions hold the same
-    * rows, and old versions stay readable until [[vacuum]]. */
-  def compact(spark: SparkSession, root: String,
-              targetFileBytes: Long = 128L * 1024 * 1024,
-              sortBy: Seq[String] = Nil,
-              zorderBy: Seq[String] = Nil): Boolean = {
-    require(zorderBy.isEmpty || zorderBy.length == 2,
-      "zorderBy takes exactly two columns")
-    require(sortBy.isEmpty || zorderBy.isEmpty,
-      "sortBy and zorderBy are exclusive layouts")
-    val snap = currentSnapshot(spark, root).getOrElse(
-      throw new IllegalArgumentException(s"$root is not a versioned table"))
-    val f = fs(spark, root)
-    val dir = new Path(new Path(root), snap)
-    val bytes = f.getContentSummary(dir).getLength
-    val nFiles = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df = spark.read.parquet(dir.toString)
-    val arranged =
-      if (zorderBy.nonEmpty)
-        graft.ops.ZOrder.layoutBy(df, zorderBy.head, zorderBy(1), files = nFiles)
-      else if (sortBy.nonEmpty)
-        df.repartitionByRange(nFiles, sortBy.map(col): _*)
-          .sortWithinPartitions(sortBy.map(col): _*)
-      else df.coalesce(nFiles)
-    // carry the base version's metadata forward: a compacted copy of the
-    // data must not erase e.g. a streaming sink's applied-batch watermark
-    writeSnapshot(spark, root, arranged, Nil, onlyIfCurrent = Some(snap),
-      meta = snapshotMeta(spark, root, Some(snap.stripPrefix("v").toInt)))
   }
 
   /** All snapshot dir names under a versioned root, oldest first —
@@ -378,13 +209,10 @@ object Incremental {
   def snapshots(spark: SparkSession, root: String): Seq[String] =
     names(spark, root).filter(_.matches("v\\d{8}")).sorted
 
-  /** Metadata recorded with a snapshot's publish (empty when none was
-    * attached). Reads the CURRENT version when `version` is None. */
-  def snapshotMeta(spark: SparkSession, root: String,
-                   version: Option[Int] = None): Map[String, String] = {
-    val snapOpt = version.map(v => f"v$v%08d")
-      .orElse(currentSnapshot(spark, root))
-    snapOpt.map { snap =>
+  /** Metadata recorded with the current version's publish (empty when
+    * none was attached). */
+  def snapshotMeta(spark: SparkSession, root: String): Map[String, String] =
+    currentSnapshot(spark, root).map { snap =>
       val f = fs(spark, root)
       val p = new Path(new Path(root), s"$snap/$MetaFile")
       if (!f.exists(p)) Map.empty[String, String]
@@ -397,7 +225,6 @@ object Incremental {
         finally in.close()
       }
     }.getOrElse(Map.empty)
-  }
 
   /** Time-travel read: a specific COMMITTED, retained snapshot version
     * (1-based, as in the dir name). An orphaned dir from a crashed
@@ -409,40 +236,6 @@ object Incremental {
     require(names(spark, root).contains(s"$CommitPrefix$snap"),
       s"version $version was never published or has been vacuumed")
     spark.read.parquet(s"$root/$snap")
-  }
-
-  /** CDC read: the row-level delta between two committed versions, as a
-    * frame of (keys…, change_type ∈ insert|update|delete, _before,
-    * _after) — before/after are payload structs (null image on the
-    * absent side). Because every version is a full snapshot, the diff IS
-    * the change feed — one full-outer join keyed on the table key,
-    * co-partitionable (both sides are the same table, so cluster_by /
-    * bucketing lines the shuffle up), with the unchanged majority
-    * dropped by the null-safe struct compare, the same `<=>` idiom the
-    * SCD2 merge uses. Survives additive schema evolution: a column the
-    * older version predates reads as null in `_before`, so its
-    * appearance alone does not fabricate updates for otherwise-unchanged
-    * rows — only rows whose values actually differ surface. */
-  def changesBetween(spark: SparkSession, root: String, fromVersion: Int,
-                     toVersion: Int, keys: Seq[String]): DataFrame = {
-    require(fromVersion <= toVersion,
-      s"fromVersion $fromVersion must be <= toVersion $toVersion")
-    val from = readVersion(spark, root, fromVersion)
-    val to = readVersion(spark, root, toVersion)
-    val payload = to.columns.filterNot(keys.contains).toSeq
-    def image(df: DataFrame, as: String) = df.select(
-      keys.map(col) :+ struct(payload.map { c =>
-        if (df.columns.contains(c)) col(c)
-        else lit(null).cast(to.schema(c).dataType).as(c)
-      }: _*).as(as): _*)
-    image(from, "_before").join(image(to, "_after"), keys, "full_outer")
-      .withColumn("change_type",
-        when(col("_before").isNull, lit("insert"))
-          .when(col("_after").isNull, lit("delete"))
-          .when(!(col("_before") <=> col("_after")), lit("update")))
-      .filter(col("change_type").isNotNull)
-      .select(keys.map(col) ++ Seq(col("change_type"), col("_before"),
-        col("_after")): _*)
   }
 
   /** Drop committed snapshots beyond the `keep` newest, plus every

@@ -425,9 +425,11 @@ final case class Warehouse(spark: SparkSession, root: String) {
   private val BatchKey = "transform.batch"
 
   /** Upserts batch n into a merge table, recording `transform.batch=n` in
-    * the published version's meta, the way `SnapshotSink` records its
-    * batch id; a table whose current version already records n is left
-    * as it is. Returns the current version. */
+    * the published version's meta; a table whose current version already
+    * records n is left as it is. Only a committed version counts: one
+    * that a run which died before its commit marker renamed in is not
+    * current, so the re-run publishes above it. Returns the current
+    * version. */
   private def upsertBatch(table: String, n: Long, df: DataFrame,
                           keys: Seq[String]): Seq[String] = {
     if (!Incremental.snapshotMeta(spark, table).get(BatchKey).contains(n.toString))

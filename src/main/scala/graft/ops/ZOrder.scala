@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) layout: interleave the bits of two dimension columns
@@ -35,16 +35,4 @@ object ZOrder {
     (0 until bits).flatMap { i =>
       Seq(s"((($a >> $i) & 1) << ${2 * i + 1})", s"((($b >> $i) & 1) << ${2 * i})")
     }.mkString("CAST((", " + ", ") AS BIGINT)")
-
-  /** Rewrite a dataset sorted by the Morton key of (a, b): range-partition
-    * by the key (globally ordered files), sort within partitions, so every
-    * file covers a tight Z-curve segment — a small rectangle in (a, b)
-    * space — and min/max stats prune on both columns. */
-  def layoutBy(df: DataFrame, a: String, b: String, bits: Int = 16,
-               files: Int = 8): DataFrame = {
-    val withKey = df.withColumn("__z", zorderKey(col(a), col(b), bits))
-    withKey.repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
 }

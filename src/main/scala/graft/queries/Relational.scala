@@ -961,8 +961,6 @@ object Relational extends OpsModule {
     // equal consecutive states per entity (gaps-and-islands), then close
     // each island with the next island's start. Two windows over ONE
     // shuffle on the entity key — the same partitioning serves both.
-    // Incremental.scd2Merge maintains the same table batch-by-batch;
-    // Scd2Spec pins iterative == this one-shot form.
     "q61_scd2" -> ((s, d) => {
       val w = Window.partitionBy("user_id").orderBy("ts")
       ev(s, d)
@@ -970,9 +968,8 @@ object Relational extends OpsModule {
         // the STRUCT wrapper keeps "no previous row" (null struct from
         // lag) distinguishable from "previous state was NULL" (non-null
         // struct holding a null field), and <=> makes a NULL state a
-        // tracked value — exactly scd2Merge's comparison, so the pinned
-        // iterative==one-shot equivalence holds on corpora with NULL
-        // tracked columns, not just this one
+        // tracked value, so a change to or from NULL opens a version on
+        // corpora with NULL tracked columns, not just this one
         .withColumn("prev_state", lag(struct(col("state")), 1).over(w))
         .filter(col("prev_state").isNull ||
           !(col("prev_state") <=> struct(col("state"))))

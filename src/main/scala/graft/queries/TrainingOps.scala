@@ -1283,9 +1283,8 @@ object TrainingOps extends OpsModule {
 
     // the NATIVE-aggregate face of the histogram quantile (r8): cells as
     // TypedImperativeAggregate state (bounded partials — |buckets| per
-    // group per partition, never row-count), the partial MvRewrite
-    // serves percentile reads from. Same grid, same interpolation as
-    // td_quantile_sketch's DataFrame plan
+    // group per partition, never row-count). Same grid, same
+    // interpolation as td_quantile_sketch's DataFrame plan
     "td_hist_quantile_agg" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       // quantile list derived from the SAME named constant as the

@@ -1501,8 +1501,7 @@ object TextOps {
     * k-token span hashes of a corpus, one 8-byte long per distinct
     * span. Persist it partitioned/bucketed by `h` at scale; append each
     * admitted batch's [[spanHashStore]] and re-distinct on compaction
-    * cadence (or keep it a [[graft.ops.IncrementalAgg]]-maintained key
-    * table — either way the probe side reads matching buckets only). */
+    * cadence — the probe side reads matching buckets only. */
   def spanHashStore(docs: DataFrame, k: Int = 8): DataFrame = {
     val t = tokenized(docs)
       .select(col("doc_id"), col("toks"), size(col("toks")).as("n"))

@@ -365,6 +365,40 @@ class IncrementalLoopSpec extends AnyFunSuite {
     rerun("cycle 1 run again")
   }
 
+  test("a merge renamed in without its commit marker does not count as applied") {
+    val clock = ticking()
+    val loop = new Loop("orphanmerge", clock)
+    import loop._
+    setUp()
+    // a second manifest: every sol again, and sol 7 for both rovers
+    val name = "mars_rover_manifests_2.json"
+    val sol7 = cameras.map { case (rover, _) => rover -> Seq(solEntry(Some(7))) }.toMap
+    orch.loadStage(Seq(upload(store, name, manifestDoc(clock(), name, sol7))))
+    wh.buildSilver()
+    // the run died between flat_manifest_photos' rename and its commit
+    // marker: the renamed version carries the batch in its meta, and the
+    // batch has no commit entry
+    val commits = Path.of(wh.root, "_checkpoints", "silver", OffsetLog.Commits)
+    val n = logIds(commits).last
+    Files.delete(commits.resolve(n.toString))
+    val table = wh.silverFlatManifestPhotos
+    Files.delete(Path.of(table, "_commit_v00000002"))
+    assert(Files.readString(Path.of(table, "v00000002", "_snapshot_meta")) == s"transform.batch=$n\n")
+    assert(Incremental.currentSnapshot(spark, table).contains("v00000001"))
+
+    sched = orch.transformStage()
+    // the batch ran again: its merge published above the orphan, and the
+    // merge that had committed was left as it is
+    assert(Incremental.snapshots(spark, table) == Seq("v00000001", "v00000002", "v00000003"))
+    assert(Incremental.currentSnapshot(spark, table).contains("v00000003"))
+    assert(Incremental.snapshots(spark, wh.silverFlatManifest) == Seq("v00000001", "v00000002"))
+    val want = Silver.flatManifestPhotos(Silver.flatManifestResponse(
+      Bronze.rawManifestResponse(spark, s"$store/manifests/$name")))
+    assert(multiset(wh.flatManifestPhotos.select(want.columns.toIndexedSeq.map(col): _*)) ==
+      multiset(want))
+    assertCommitEntries(loop, "merge batch run again")
+  }
+
   test("an object loaded again lands once, and its replay finishes a load that died") {
     val loop = new Loop("reload", ticking())
     import loop._

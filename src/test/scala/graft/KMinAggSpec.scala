@@ -33,28 +33,12 @@ class KMinAggSpec extends AnyFunSuite {
     assert(agg == win)
   }
 
-  test("kmin_merge skips null array slots instead of admitting 0L (r8 ADVICE)") {
-    graft.functions.GraftFunctions.register(spark)
-    // arrays carry containsNull slots; before the fix each null entered
-    // the sketch as 0L (the global minimum), poisoning every k-min set
-    val df = Seq(
-      ("a", Seq[java.lang.Long](5L, null, 9L)),
-      ("a", Seq[java.lang.Long](null, 7L))
-    ).toDF("g", "arr")
-    val merged = df.groupBy("g")
-      .agg(call_function("kmin_merge", col("arr"), lit(4)).as("kmin"))
-      .collect().head.getSeq[Long](1)
-    assert(merged === Seq(5L, 7L, 9L))
-  }
-
   test("foldable NULL literals fail typecheck instead of NPE-ing analysis (r8 review)") {
     graft.functions.GraftFunctions.register(spark)
     val df = Seq(("a", 1L)).toDF("g", "h")
     df.createOrReplaceTempView("kmin_null_probe")
     for (q <- Seq(
       "SELECT kmin_values(h, CAST(NULL AS INT)) FROM kmin_null_probe",
-      "SELECT kmin_merge(array(h), CAST(NULL AS INT)) FROM kmin_null_probe",
-      "SELECT hist_cells(h, CAST(NULL AS INT)) FROM kmin_null_probe",
       "SELECT hist_quantile(h, CAST(NULL AS DOUBLE), 8) FROM kmin_null_probe",
       "SELECT hist_quantile(h, 0.5, CAST(NULL AS INT)) FROM kmin_null_probe")) {
       val e = intercept[Exception](spark.sql(q).collect())

@@ -151,18 +151,22 @@ class SnapshotRaceSpec extends AnyFunSuite {
     for (seed <- 1 to 5) {
       val rnd = new scala.util.Random(seed)
       val t = tmpDir()
-      val model = scala.collection.mutable.Map[Long, String]()
+      // about one key in six is null: a merge table keeps one row per key,
+      // the null key included
+      val model = scala.collection.mutable.Map[Option[Long], String]()
       for (batch <- 0 until 6) {
         val tag = f"$batch%03d"
-        val keys = (0 until (1 + rnd.nextInt(12))).map(_ => rnd.nextInt(30).toLong).distinct
+        val keys = (0 until (1 + rnd.nextInt(12)))
+          .map(_ => Option.when(rnd.nextInt(6) > 0)(rnd.nextInt(30).toLong)).distinct
         // every row of the batch upserts by key — mirror exactly
         keys.foreach(k => model(k) = tag)
         Incremental.upsertSnapshot(spark, t,
           keys.map(k => (k, tag)).toDF("k", "ver"), Seq("k"))
       }
+      // the row multiset, not a map: a key held twice must show
       val got = Incremental.read(spark, t).collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
-      assert(got === model.toMap, s"seed $seed diverged")
+        .map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getString(1)).toSeq
+      assert(got.sorted === model.toSeq.sorted, s"seed $seed diverged")
     }
   }
 
@@ -193,32 +197,6 @@ class SnapshotRaceSpec extends AnyFunSuite {
     val tags = Incremental.read(spark, t).select("ver")
       .distinct().collect().map(_.getString(0)).toSet
     assert(tags === Set("001") || tags === Set("002"), tags)
-  }
-
-  test("deleteWhere publishes a cleaned version; old versions hold rows until vacuum") {
-    import spark.implicits._
-    val t = tmpDir()
-    // k=10 carries a NULL tag: `tag === 'pii'` evaluates to NULL there —
-    // the row must be KEPT (SQL DELETE semantics), not swept by !condition
-    Incremental.upsertSnapshot(spark, t,
-      (1L to 10L).map(k =>
-        (k, if (k <= 3) "pii" else if (k == 10L) null else "ok"))
-        .toDF("k", "tag"),
-      Seq("k"))
-    val removed = Incremental.deleteWhere(spark, t, col("tag") === "pii")
-    assert(removed === 3L)
-    assert(Incremental.read(spark, t).count() === 7)
-    assert(Incremental.read(spark, t).filter(col("k") === 10L).count() === 1)
-    // a no-match delete publishes nothing
-    assert(Incremental.deleteWhere(spark, t, col("tag") === "absent") === 0L)
-    assert(Incremental.snapshots(spark, t) === Seq("v00000001", "v00000002"))
-    // the compliance contract: v1 still holds the deleted rows until vacuum
-    assert(Incremental.readVersion(spark, t, 1).count() === 10)
-    Incremental.vacuum(spark, t, keep = 1)
-    assert(Incremental.snapshots(spark, t) === Seq("v00000002"))
-    intercept[IllegalArgumentException] {
-      Incremental.readVersion(spark, t, 1)
-    }
   }
 
   test("upsert with mergeSchema grows the table schema; strict mode refuses") {

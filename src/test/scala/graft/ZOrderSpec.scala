@@ -1,7 +1,5 @@
 package graft
 
-import java.io.File
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,29 +27,5 @@ class ZOrderSpec extends AnyFunSuite {
     val wide = Seq((a31, b31)).toDF("a", "b")
       .select(ZOrder.zorderKey(col("a"), col("b"), bits = 31)).first()
     assert(wide.getLong(0) == morton(a31, b31, 31))
-  }
-
-  test("z-order layout prunes the SECOND dimension better than a plain sort") {
-    import spark.implicits._
-    // grid data: both dims uniform
-    val df = (0 until 4096).map(i => (i % 64, i / 64)).toDF("a", "b")
-    val dirZ = Files.createTempDirectory("zorder").toString + "/t"
-    val dirPlain = Files.createTempDirectory("plain").toString + "/t"
-    ZOrder.layoutBy(df, "a", "b", bits = 6, files = 8)
-      .write.parquet(dirZ)
-    df.repartitionByRange(8, col("a")).sortWithinPartitions("a")
-      .write.parquet(dirPlain)
-
-    // per-file [min,max] of b; count files a point query b=17 must touch
-    def filesTouching(dir: String): Int =
-      new File(dir).listFiles().filter(_.getName.endsWith(".parquet")).count { f =>
-        val mm = spark.read.parquet(f.toString)
-          .agg(min("b"), max("b")).first()
-        mm.getInt(0) <= 17 && 17 <= mm.getInt(1)
-      }
-    val z = filesTouching(dirZ)
-    val plain = filesTouching(dirPlain)
-    assert(plain == 8, s"a-sorted layout spreads b everywhere (got $plain)")
-    assert(z < plain, s"z-order should bound b per file: z=$z plain=$plain")
   }
 }

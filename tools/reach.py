@@ -22,6 +22,18 @@ while True:
     for p in new: seen |= ident(main[p])
 for p in sorted(set(main) - reached):
     print(f"FILE {len(p.read_text().splitlines()):5d} {p.relative_to(repo)}")
+# SQL functions: the registry names every one, so a name registered in
+# graft/functions counts only when reached code outside that package, perfbench
+# or tools names it (strings count: call_function and SQL text name them)
+fdir = repo / "src/main/scala/graft/functions"
+registered = {n for p, c in main.items() if fdir in p.parents
+              for n in re.findall(r'FunctionIdentifier\("(\w+)"\)', c)}
+named = set().union(*(ident(main[p]) for p in reached if fdir not in p.parents),
+                    *map(ident, bench),
+                    *(ident(p.read_text(errors="ignore"))
+                      for p in repo.glob("tools/**/*") if p.is_file()))
+for name in sorted(registered - named):
+    print(f"FUNC {name}")
 # members of reached files: a name used no more often than it is declared
 # (reached code + perfbench, comments skipped) is a candidate
 body = "\n".join([main[p] for p in reached] + bench)
