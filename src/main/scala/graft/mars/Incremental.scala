@@ -60,7 +60,7 @@ object Incremental {
   private val MetaFile = "_snapshot_meta"
 
   private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LocalFs.get(path, spark.sparkContext.hadoopConfiguration)
 
   /** Exclusive marker creation — THE atomic primitive claims and commits
     * lean on. Hadoop's `FileSystem.createNewFile` is exists-then-create
@@ -286,13 +286,14 @@ object Incremental {
 
   /** dbt cluster_by → repartition on the first key + sort within
     * partitions on all of them: co-locates key ranges so parquet row-group
-    * min/max stats prune on the cluster keys (SURVEY §2.9). */
+    * min/max stats prune on the cluster keys (SURVEY §2.9). The write
+    * takes [[LocalFs.writeOptions]], so a local path forks no `chmod`. */
   private[mars] def write(df: DataFrame, path: String, mode: SaveMode,
                     clusterBy: Seq[String]): Unit = {
     val arranged =
       if (clusterBy.isEmpty) df
       else df.repartition(col(clusterBy.head))
         .sortWithinPartitions(clusterBy.map(col): _*)
-    arranged.write.mode(mode).parquet(path)
+    arranged.write.options(LocalFs.writeOptions).mode(mode).parquet(path)
   }
 }

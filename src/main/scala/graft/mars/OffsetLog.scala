@@ -18,7 +18,7 @@ import scala.util.matching.Regex
 final case class OffsetLog(spark: SparkSession, dir: String) {
   import OffsetLog._
 
-  private val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val fs = LocalFs.get(dir, spark.sparkContext.hadoopConfiguration)
 
   /** The ids of the retained entries of `kind`, ascending. */
   def ids(kind: String): Seq[Long] = {

@@ -72,7 +72,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   val goldDailyActivity = s"$root/gold/daily_activity"
   val goldCameraTravel = s"$root/gold/camera_travel_correlation"
 
-  private lazy val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private lazy val fs = LocalFs.get(root, spark.sparkContext.hadoopConfiguration)
   // the offset logs sit outside the table roots: a batch that writes
   // nothing to a table leaves no file under it
   private lazy val silverLog = OffsetLog(spark, s"$root/_checkpoints/silver")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -61,9 +61,13 @@ final case class FileTopicTransport(root: String) extends TopicTransport {
   def produceSparkless(topic: String, json: String): Unit = {
     val d = Paths.get(root, topic)
     Files.createDirectories(d)
-    // flush-per-message like the reference producer (kafka.py:42-57)
-    Files.writeString(d.resolve(s"${System.nanoTime()}_${UUID.randomUUID()}.json"),
-      json + "\n")
+    // flush-per-message like the reference producer (kafka.py:42-57);
+    // written under a hidden name, which the file source does not list,
+    // and renamed in whole: a listing that caught a half-written file
+    // would mark it seen and lose the message
+    val name = s"${System.nanoTime()}_${UUID.randomUUID()}.json"
+    val tmp = Files.writeString(d.resolve(s".$name.tmp"), json + "\n")
+    Files.move(tmp, d.resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 }
 

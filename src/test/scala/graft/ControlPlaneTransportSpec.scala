@@ -1,5 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -92,5 +99,51 @@ class ControlPlaneTransportSpec extends AnyFunSuite {
       ControlPlane.TopicLoadComplete).collect()
     assert(rows.length === 1)
     assert(rows(0).isNullAt(0) && rows(0).isNullAt(1))
+  }
+
+  test("a reader listing a topic while producers write sees only whole messages") {
+    val root = tmp()
+    val t = FileTopicTransport(root)
+    val topic = "race-topic"
+    val dir = Files.createDirectories(Paths.get(root, topic))
+    val (producers, perProducer) = (4, 500)
+    // a message of many 8 KiB writes: Files.write's chunk size, so a
+    // file stays partly written long enough for a listing to catch it
+    val pad = "x" * 200000
+    val mapper = new ObjectMapper()
+    val (done, bad) = (new AtomicBoolean(false), new ConcurrentLinkedQueue[String]())
+    val seen = scala.collection.mutable.Set.empty[String]
+    // as the file source does: list the visible names and read each new
+    // one once, never again
+    def scan(): Unit = {
+      val s = Files.list(dir)
+      val names = try s.iterator.asScala.map(_.getFileName.toString)
+        .filterNot(n => n.startsWith(".") || n.startsWith("_")).toList finally s.close()
+      names.filterNot(seen).foreach { n =>
+        seen += n
+        val lines = Files.readString(dir.resolve(n)).split("\\n", -1)
+        val whole = lines.length == 2 && lines(1).isEmpty &&
+          Try(mapper.readTree(lines(0)).get("n").asInt).isSuccess
+        if (!whole) bad.add(s"$n: ${lines.map(_.length).mkString("/")} chars")
+      }
+    }
+    try {
+      val reader = new Thread(() =>
+        try { while (!done.get) scan(); scan() }
+        catch { case e: Exception => bad.add(e.toString) })
+      reader.start()
+      val writers = (0 until producers).map(i => new Thread(() =>
+        (0 until perProducer).foreach(j =>
+          t.produceSparkless(topic, s"""{"n": ${i * perProducer + j}, "pad": "$pad"}"""))))
+      writers.foreach(_.start())
+      writers.foreach(_.join())
+      done.set(true)
+      reader.join()
+      assert(bad.size == 0, s"messages listed before they were whole: ${bad.asScala.take(3)}")
+      assert(seen.size == producers * perProducer)
+    } finally {
+      val s = Files.list(dir)
+      try s.forEach(Files.delete(_)) finally s.close()
+    }
   }
 }

@@ -3,6 +3,9 @@ package graft
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -610,5 +613,41 @@ class IncrementalLoopSpec extends AnyFunSuite {
     val before = entries(state.getParent.toString)
     assert(cycle(0).isEmpty)
     assert(entries(state.getParent.toString) == before)
+  }
+
+  /** The command lines of the processes the JVM starts while `body` runs,
+    * from an in-process flight recording of `jdk.ProcessStart`. */
+  private def processesStarted(body: => Unit): Seq[String] = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    val file = Files.createTempFile("graft_forks", ".jfr")
+    try {
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(file)
+      RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
+    } finally { rec.close(); Files.delete(file) }
+  }
+
+  test("a loop cycle starts no process") {
+    val clock = ticking()
+    val loop = new Loop("noforks", clock)
+    import loop._
+    setUp()
+    cycle(2)
+    val name = "mars_rover_manifests_2.json"
+    val sol7 = cameras.map { case (rover, _) => rover -> Seq(solEntry(Some(7))) }.toMap
+    val started = processesStarted {
+      assert(cycle(2).nonEmpty)
+      // a manifest merge: writeSnapshot's stage, its meta and the markers
+      orch.loadStage(Seq(upload(store, name, manifestDoc(clock(), name, sol7))))
+      sched = orch.transformStage()
+    }
+    assert(Incremental.snapshots(spark, wh.silverFlatManifestPhotos).size == 2)
+    // other suites' processes name no path under this loop's root
+    val under = root.toRealPath().toString
+    val mine = started.filter(_.contains(under))
+    assert(mine.size == 0, s"processes started under $under: ${mine.take(3)}")
   }
 }

@@ -2,7 +2,7 @@
 """Paired A/B of two checkouts on one benchmark workload.
 
     python3 tools/loop_ab.py <parent-dir> <change-dir> \
-        --workload loop|sweep --pairs N --first-seed S [--layers]
+        --workload loop|sweep --pairs N --first-seed S [--layers] [--forks]
 
 Runs the command `BENCHMARK.json` declares (`perfbench/run.py`) once per
 side per pair, one JVM at a time, with the pair's seed, the declared run
@@ -23,12 +23,21 @@ With --layers, one traced run per side follows the pairs (the first seed,
 non-zero on either side is printed side by side with the change/parent
 ratio, so a claim can name the layer that moved.
 
+With --forks, one more untraced run per side follows (the first seed) under
+a JDK flight recording (`JAVA_TOOL_OPTIONS=-XX:StartFlightRecording`, file
+`<side>/.bench_build/forks-<seed>.jfr`; the builds are cached by then, so
+only the measured JVM records), and each side's `jdk.ProcessStart` events
+are printed per cycle (per op), grouped by command line with digits and
+hashes blanked: the processes a run forks, which execution samples miss.
+
 Each side builds in its own checkout (its `.bench_build`). Nothing is
 written under `perfbench/`. Don't run another JVM while the pairs run.
 """
 import argparse
+import collections
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -36,16 +45,44 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run(side, cwd, command, workload, seed, seconds, trace=0):
+def run(side, cwd, command, workload, seed, seconds, trace=0, env=None):
     cmd = command + ["--workload", workload, "--seed", str(seed),
                      "--seconds", str(seconds), "--trace", str(trace)]
-    p = subprocess.run(cmd, cwd=cwd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+    p = subprocess.run(cmd, cwd=cwd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
+                       env=env)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
         sys.exit(f"{side} seed {seed}: {' '.join(cmd)} exited {p.returncode} in {cwd}")
     result = json.loads(lines[-1])
     print(f"run {side} seed={seed} trace={trace} {lines[-1]}", flush=True)
     return result
+
+
+def forks(side, cwd, command, workload, seed, seconds):
+    """One untraced run under a flight recording; its process starts per op,
+    by command line with uuids, hex digests and numbers blanked."""
+    jfr = os.path.join(cwd, ".bench_build", f"forks-{seed}.jfr")
+    if os.path.exists(jfr):
+        os.remove(jfr)
+    env = dict(os.environ,
+               JAVA_TOOL_OPTIONS=f"-XX:StartFlightRecording:dumponexit=true,filename={jfr}")
+    ops = run(side, cwd, command, workload, seed, seconds, env=env)["attempted"]
+    quiet = {k: v for k, v in os.environ.items() if k != "JAVA_TOOL_OPTIONS"}
+    p = subprocess.run(["jfr", "print", "--json", "--events", "jdk.ProcessStart", jfr],
+                       stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, env=quiet)
+    if p.returncode != 0:
+        sys.exit(f"{side}: jfr print {jfr} exited {p.returncode}: {p.stderr.strip()}")
+    groups = collections.Counter()
+    for e in json.loads(p.stdout)["recording"]["events"]:
+        cmd = e["values"]["command"].replace(cwd, "<side>")
+        cmd = re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "<uuid>", cmd)
+        cmd = re.sub(r"[0-9a-f]{16,}", "<hash>", cmd)
+        groups[re.sub(r"\d+", "<n>", cmd)] += 1
+    total = sum(groups.values())
+    print(f"{side} forks, seed {seed}: {total} process starts over {ops} ops, "
+          f"{total / max(ops, 1):.2f} per op")
+    for cmd, n in groups.most_common():
+        print(f"  {n / max(ops, 1):8.3f}/op  {n:6d}  {cmd}")
 
 
 def quartiles(xs):
@@ -78,6 +115,8 @@ def main():
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--layers", action="store_true",
                     help="after the pairs, one traced run per side, per-layer metrics side by side")
+    ap.add_argument("--forks", action="store_true",
+                    help="then one run per side under JFR, process starts per op by command")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -119,6 +158,10 @@ def main():
                 ratio = f"{c / p:.3f}" if p else "-"
                 print(f"  {m['name']} ({m['unit']}, {m['better']} is better): "
                       f"{p:.6g}  {c:.6g}  {ratio}")
+
+    if a.forks:
+        for side in ("parent", "change"):
+            forks(side, dirs[side], bench["command"], a.workload, a.first_seed, bench["run_seconds"])
 
 
 if __name__ == "__main__":
