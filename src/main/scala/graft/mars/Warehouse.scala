@@ -4,10 +4,7 @@ import java.security.MessageDigest
 import java.util.HexFormat
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, collect_set, struct}
 import org.apache.spark.sql.types.StructType
 
@@ -22,17 +19,26 @@ import org.apache.spark.sql.types.StructType
   *  | flat_coordinate_response   | merge    | rover_name, sol     | rover_name, sol |
   *  | photo_summary / daily_activity / camera_travel_correlation | append | — | per model |
   *
-  * Incremental by file, not by watermark (SURVEY §7.4, item 5a): silver and
-  * gold each keep an [[OffsetLog]] (`$root/_checkpoints/silver`, `/gold`)
-  * of the input files they have consumed, and a batch reads only the files
-  * not in it. Both builds therefore cost O(batch), run no `max()` scan,
-  * and with nothing new run no Spark job at all; a batch stamped in the same
-  * second as the one before is kept, where the reference's strict `>` on
-  * `ingestion_date` drops it. Appends publish batch n as `b<n>-*` files
-  * renamed in from a hidden stage dir, merges record n in the snapshot
-  * meta, so re-running a batch whose commit entry is missing neither loses
-  * nor duplicates rows. A bronze load is tagged by its object path, so a
-  * replayed `minio-events` record loads the object once.
+  * Every table, bronze included, is an [[Incremental]] table: one
+  * directory per write under its root, and a [[TableLog]] whose newest
+  * version names the directories that make it up. Appends and merges
+  * publish the same way ([[Incremental.publish]]), so a reader sees a
+  * batch whole or not at all, and what the loop takes from a table is
+  * what its newest version names: directories, never a listing.
+  *
+  * Incremental by input, not by watermark (SURVEY §7.4, item 5a): silver
+  * and gold each keep an [[OffsetLog]] (`$root/_checkpoints/silver`,
+  * `/gold`) of the input directories (gold: and manifest version) they
+  * have consumed, and a batch reads only the ones not in it. Both builds
+  * therefore cost O(batch), run no `max()` scan, and with nothing new run
+  * no Spark job at all; a batch stamped in the same second as the one
+  * before is kept, where the reference's strict `>` on `ingestion_date`
+  * drops it. Batch n writes each table under the tag `b<n>`, and a table
+  * whose newest version names that tag already is left as it is, so
+  * re-running a batch whose commit entry is missing over the inputs its
+  * offsets entry names neither loses nor duplicates rows. A bronze load
+  * is tagged by its object path, so a replayed `minio-events` record
+  * loads the object once.
   *
   * The log also carries the facts a cycle would otherwise re-derive from
   * silver. Silver's commit entry holds a `key` line per distinct
@@ -40,7 +46,7 @@ import org.apache.spark.sql.types.StructType
   * write; [[buildGold]] takes its Perseverance sols from them and
   * [[gapKeys]] keeps the gap set from them (`$root/_checkpoints/gaps`).
   * Each has a recovery path that reads the data instead: gold collects
-  * the sols from its new files when they are not exactly the files of
+  * the sols from its new directories when they are not exactly those of
   * retained silver entries (silver's entries deleted, or `buildGold`
   * alone over a table no batch wrote), and the gap set is rebuilt from
   * the view on the first cycle, after a manifest merge, and when the
@@ -57,7 +63,6 @@ import org.apache.spark.sql.types.StructType
   * mart models' `:1-7` headers (append + cluster_by).
   */
 final case class Warehouse(spark: SparkSession, root: String) {
-  import Warehouse.Appended
 
   val bronzePhotos = s"$root/bronze/raw_photo_response"
   val bronzeManifests = s"$root/bronze/raw_manifest_response"
@@ -72,7 +77,6 @@ final case class Warehouse(spark: SparkSession, root: String) {
   val goldDailyActivity = s"$root/gold/daily_activity"
   val goldCameraTravel = s"$root/gold/camera_travel_correlation"
 
-  private lazy val fs = LocalFs.get(root, spark.sparkContext.hadoopConfiguration)
   // the offset logs sit outside the table roots: a batch that writes
   // nothing to a table leaves no file under it
   private lazy val silverLog = OffsetLog(spark, s"$root/_checkpoints/silver")
@@ -90,22 +94,22 @@ final case class Warehouse(spark: SparkSession, root: String) {
   private lazy val photoModel = Silver.flatPhotoResponse(noBronze(Schemas.photoBatch))
   private lazy val coordinateModel =
     Silver.flatCoordinateResponse(noBronze(Schemas.coordinateBatch))
-  private def readPinned(path: String, schema: StructType): Option[DataFrame] =
-    Option.when(Incremental.exists(spark, path))(Incremental.read(spark, path, Some(schema)))
+  private def readPinned(table: String, schema: StructType): Option[DataFrame] =
+    TableLog(spark, table).latest.map { case (_, dirs) => readFiles(table, dirs, schema) }
   private def readOr(path: String, model: DataFrame): DataFrame =
     readPinned(path, model.schema).getOrElse(model)
 
   /** Bronze loader (S9): one routed JSON object → typed append, published
-    * the way a batch append is (see [[appendStaged]]) from a stage
-    * directory of its own. Loads therefore share no Spark job-attempt
-    * directory: what a load that died while committing left under the
-    * root's `_temporary/` is not merged by the next load's job commit.
+    * the way a batch append is, into a directory of its own. Loads
+    * therefore share no Spark job-attempt directory: what a load that
+    * died while committing left under its `_temporary/` is not merged by
+    * the next load's job commit, and no version names it.
     *
     * The load's tag is a digest of the object path, so loading an object
     * again — `startLoadStream`'s `foreachBatch` is at-least-once and may
     * replay a `minio-events` record — publishes nothing once the first
-    * load's files are in, and finishes the renames of a load that died
-    * between them. */
+    * load is published, and replaces what a load that died before
+    * publishing wrote. */
   def loadBronze(objectPath: String, filename: String): String = {
     val load = RoverKeys.route(filename) match {
       case "photos" => Some(bronzePhotos -> Bronze.rawPhotoResponse(spark, objectPath))
@@ -116,40 +120,35 @@ final case class Warehouse(spark: SparkSession, root: String) {
     }
     load.fold("UNKNOWN") { case (table, df) =>
       val digest = MessageDigest.getInstance("MD5").digest(objectPath.getBytes("UTF-8"))
-      appendStaged(table, s"load-${HexFormat.of.formatHex(digest)}", df, clusterBy = Nil)
+      Incremental.publish(spark, table, s"load-${HexFormat.of.formatHex(digest)}", df,
+        clusterBy = Nil, replace = false)
       table
     }
   }
 
   /** dbt run --select tag:flatten equivalent (EP2 first stage), one
-    * batch of the silver offset log: the bronze files no batch has taken
-    * yet. New photo files are flattened and appended, and the commit
-    * entry lists the sol keys the append wrote; the rows of new
-    * manifest and coordinate files are upserted (their own batch, so no
-    * watermark filter applies), `flat_manifest_photos` from the same frame
-    * as `flat_manifest_response`. A batch whose commit entry is missing
-    * runs again over the files its offsets entry names (bronze files never
-    * change): its appends are wiped first, and a merge table whose current
-    * version already records the batch is left as it is. */
+    * batch of the silver offset log: the bronze directories no batch has
+    * taken yet. New photo directories are flattened and appended, and the
+    * commit entry lists the sol keys the append wrote; the rows of new
+    * manifest and coordinate directories are upserted (their own batch,
+    * so no watermark filter applies), `flat_manifest_photos` from the same
+    * frame as `flat_manifest_response`. */
   def buildSilver(): Unit = {
     val bronze = Seq(bronzePhotos, bronzeManifests, bronzeCoordinates)
-    runBatch(silverLog, bronze.flatMap(t => dataFiles(t).map(tableName(t) -> _)),
-        replay = true, appends = Seq(silverFlatPhotos)) { (n, fresh) =>
+    runBatch(silverLog, bronze.flatMap(t => live(t).map(tableName(t) -> _))) { (n, fresh) =>
       def take(table: String, schema: StructType): Option[(Seq[String], DataFrame)] =
-        fresh.get(tableName(table)).map(files => files -> readFiles(table, files, schema))
+        fresh.get(tableName(table)).map(dirs => dirs -> readFiles(table, dirs, schema))
       val photos = take(bronzePhotos, Schemas.photoBatch).toSeq.flatMap { case (in, raw) =>
-        val observed = Observation()
-        val out = appendStaged(silverFlatPhotos, s"b$n",
-          Silver.flatPhotoResponse(raw).observe(observed, collect_set(photoKeyStruct).as("keys")),
-          clusterBy = Seq("rover_id", "sol", "earth_date"))
-        // the write gathered the keys; an append that only finished an
-        // earlier attempt wrote nothing, so they are read from its files
-        val gathered = if (out.wrote) observed.get.get("keys") else None
-        val keys = gathered.getOrElse(
-          if (out.files.isEmpty) Nil
-          else readFiles(silverFlatPhotos, out.files, photoModel.schema)
-            .select(collect_set(photoKeyStruct)).head().get(0)).asInstanceOf[Seq[Row]]
-        commitLines(silverFlatPhotos, in, out.files) ++
+        val published = Incremental.publish(spark, silverFlatPhotos, s"b$n",
+          Silver.flatPhotoResponse(raw), clusterBy = Seq("rover_id", "sol", "earth_date"),
+          replace = false, observe = Seq(collect_set(photoKeyStruct).as("keys")))
+        val out = Seq(s"b$n").filter(_ => published.live)
+        // the write gathered the keys; when an earlier run had published
+        // the batch, they are read from its directory
+        val keys = published.observed.map(_("keys")).getOrElse(
+          readFiles(silverFlatPhotos, out, photoModel.schema)
+            .select(collect_set(photoKeyStruct)).head().get(0)).asInstanceOf[collection.Seq[Row]]
+        commitLines(silverFlatPhotos, in, out) ++
           keys.map(photoKey).sorted.map { case (r, s, id) =>
             Seq(tableName(silverFlatPhotos), "key") ++ Seq(r, s, id).map(OffsetLog.field)
           }
@@ -168,10 +167,10 @@ final case class Warehouse(spark: SparkSession, root: String) {
           Silver.flatCoordinateResponse(raw), Seq("rover_name", "sol")))
       }
       // retention: a merge table gains a version only in a batch that
-      // brought it new bronze files — keep current + one grace version so
-      // disk stays bounded instead of growing one full snapshot per such
+      // brought it new bronze — keep current + one grace version so
+      // disk stays bounded instead of growing one full copy per such
       // batch. "Two versions" alone is NOT a reader grace under a fast
-      // trigger (sub-second batches would sweep a snapshot mid-scan), so
+      // trigger (sub-second batches would sweep a version mid-scan), so
       // the wall-clock grace below is what actually protects a concurrent
       // reader of the public warehouse views — a pinned version is
       // deletable only after it is BOTH superseded twice and 10 minutes
@@ -193,7 +192,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** Silver batch n's photo append as its commit entry records it: the
-    * files it published (`out` lines) and the keys they hold (`key`
+    * directory it published (`out` line) and the keys it holds (`key`
     * lines, `flat_photo_response key <rover_name> <sol> <rover_id>`). */
   private def photoBatch(n: Long): (Set[String], Seq[PhotoKey]) = {
     val lines = silverLog.read(OffsetLog.Commits, n).filter(_.head == tableName(silverFlatPhotos))
@@ -202,14 +201,13 @@ final case class Warehouse(spark: SparkSession, root: String) {
       lines.collect { case Seq(_, "key", r, s, id) => (OffsetLog.value(r), int(s), int(id)) })
   }
 
-  /** The keys of silver photo `files` from silver's retained commit
-    * entries, when those entries published exactly `files`; None when a
-    * file is in no retained entry or an entry's files are only partly
-    * among them. */
-  private def loggedKeys(files: Seq[String]): Option[Seq[PhotoKey]] = {
+  /** The keys of silver photo directories `dirs` from silver's retained
+    * commit entries, when those entries published exactly `dirs`; None
+    * when a directory is in no retained entry. */
+  private def loggedKeys(dirs: Seq[String]): Option[Seq[PhotoKey]] = {
     val batches = silverLog.ids(OffsetLog.Commits).map(photoBatch)
-      .filter(_._1.exists(files.contains))
-    Option.when(batches.flatMap(_._1).toSet == files.toSet)(batches.flatMap(_._2))
+      .filter(_._1.exists(dirs.contains))
+    Option.when(batches.flatMap(_._1).toSet == dirs.toSet)(batches.flatMap(_._2))
   }
 
   // lazy views over the materialized silver
@@ -242,7 +240,7 @@ final case class Warehouse(spark: SparkSession, root: String) {
     * changed. */
   def gapKeys(): Seq[GapScheduler.GapKey] = {
     val committed = silverLog.ids(OffsetLog.Commits)
-    val version = OffsetLog.field(Incremental.currentSnapshot(spark, silverFlatManifestPhotos))
+    val version = OffsetLog.field(TableLog(spark, silverFlatManifestPhotos).versions.lastOption)
     val held = gapLog.ids(GapState).lastOption.map(s => s -> gapLog.read(GapState, s))
     val maintained = held.zip(committed.lastOption).collect {
       case ((s, Seq(`version`) +: lines), c) if s <= c && (s + 1 to c).forall(committed.contains) =>
@@ -261,8 +259,9 @@ final case class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** dbt run --select tag:aggregate equivalent (EP2 second stage), one
-    * batch of the gold offset log: the silver photo files no batch has
-    * taken yet, and the `flat_manifest_response` version when it changed.
+    * batch of the gold offset log: the silver photo directories no batch
+    * has taken yet, and the `flat_manifest_response` version when it
+    * changed.
     * The marts join the current dims and path, read once and shared, and
     * built only in a batch that writes a mart:
     *
@@ -272,21 +271,17 @@ final case class Warehouse(spark: SparkSession, root: String) {
     *    the mart over every silver photo of those sols, since a sol's
     *    counts include its older photos; both marts are skipped when there
     *    are no such sols. The sols are the `rover_id = 8` keys of the
-    *    silver commit entries that published exactly the new files, or,
-    *    when there are no such entries, one small job over the files;
+    *    silver commit entries that published exactly the new directories,
+    *    or, when there are no such entries, one small job over them;
     *  - `photo_summary`, when the manifest changed: the `dimRovers` rows
     *    it does not hold yet, matched by (rover_name, ingestion_date).
     *
-    * A mart that does not exist yet is created, even empty. A batch whose
-    * commit entry is missing is planned again from the listing: a silver
-    * re-run renames the files its offsets entry names, and every gold
-    * output is an append that is wiped before the batch runs again. */
+    * A mart that does not exist yet is created, even empty. */
   def buildGold(): Unit = {
     val (photosIn, manifestIn) = (tableName(silverFlatPhotos), tableName(silverFlatManifest))
-    val listing = dataFiles(silverFlatPhotos).map(photosIn -> _) ++
-      Incremental.currentSnapshot(spark, silverFlatManifest).map(manifestIn -> _)
-    val marts = Seq(goldPhotoSummary, goldDailyActivity, goldCameraTravel)
-    runBatch(goldLog, listing, replay = false, appends = marts) { (m, fresh) =>
+    val listing = live(silverFlatPhotos).map(photosIn -> _) ++
+      TableLog(spark, silverFlatManifest).versions.lastOption.map(manifestIn -> _.toString)
+    runBatch(goldLog, listing) { (m, fresh) =>
       lazy val manifest = flatManifest
       lazy val rovers = Dims.dimRovers(manifest)
       lazy val cameras = Dims.dimCameras(manifest)
@@ -299,25 +294,23 @@ final case class Warehouse(spark: SparkSession, root: String) {
           val keys = Seq("rover_name", "ingestion_date")
           val unheld = readPinned(goldPhotoSummary, rows.schema)
             .fold(rows)(held => rows.join(held.select(keys.map(col): _*), keys, "left_anti"))
-          Some((goldPhotoSummary, manifestFresh,
-            appendStaged(goldPhotoSummary, s"b$m", unheld, clusterBy = Seq("rover_name")).files))
+          Some((goldPhotoSummary, manifestFresh, append(goldPhotoSummary, m, unheld, Seq("rover_name"))))
         }
-      val photoFiles = fresh.getOrElse(photosIn, Nil)
+      val photoDirs = fresh.getOrElse(photosIn, Nil)
       lazy val newPhotos = Facts.factPhotos(
-        if (photoFiles.isEmpty) photoModel
-        else readFiles(silverFlatPhotos, photoFiles, photoModel.schema))
+        if (photoDirs.isEmpty) photoModel
+        else readFiles(silverFlatPhotos, photoDirs, photoModel.schema))
       val sols =
-        if (photoFiles.isEmpty) Nil
-        else loggedKeys(photoFiles).fold(
-          // recovery: the new files are not whole retained silver entries
+        if (photoDirs.isEmpty) Nil
+        else loggedKeys(photoDirs).fold(
+          // recovery: the new directories are not whole retained silver entries
           newPhotos.filter(col("rover_id") === 8 && col("sol").isNotNull)
             .select("sol").collect().map(_.getInt(0)).toSeq)(
           _.collect { case (_, Some(sol), Some(8)) => sol }).distinct
       def mart(table: String, build: => DataFrame) =
-        (table, photoFiles,
+        (table, photoDirs,
           if (sols.isEmpty && Incremental.exists(spark, table)) Nil
-          else appendStaged(table, s"b$m", build,
-            clusterBy = Seq("rover_name", "sol_number")).files)
+          else append(table, m, build, Seq("rover_name", "sol_number")))
       val perSol = Seq(
         mart(goldDailyActivity, Marts.dailyActivity(
           factPhotos.filter(col("sol").isin(sols: _*)), rovers, cameras, path)),
@@ -327,121 +320,49 @@ final case class Warehouse(spark: SparkSession, root: String) {
   }
 
   /** Runs the next batch of `log` over `listing`, the (table, input)
-    * pairs on disk now. The batch takes the inputs the log has not
-    * consumed, or, for a pending batch when `replay`, the ones its offsets
-    * entry names; it records them in `offsets/<n>`, wipes what an earlier
-    * attempt at batch n left in `appends`, lets `publish` write the batch
-    * (inputs grouped by source table) and commits the lines it returns.
-    * With nothing new and nothing pending it does nothing: no Spark job,
-    * no file. */
-  private def runBatch(log: OffsetLog, listing: => Seq[(String, String)], replay: Boolean,
-                       appends: Seq[String])
+    * pairs published now. The batch takes the inputs the log has not
+    * consumed, or, when its commit entry is missing, the ones its offsets
+    * entry names (published inputs never change); it records them in
+    * `offsets/<n>`, lets `publish` write the batch (inputs grouped by
+    * source table) and commits the lines it returns. With nothing new and
+    * nothing pending it does nothing: no Spark job, no file. */
+  private def runBatch(log: OffsetLog, listing: => Seq[(String, String)])
                       (publish: (Long, Map[String, Seq[String]]) => Seq[Seq[String]]): Unit = {
     val r = log.resume()
-    val replayed = r.planned.filter(_ => replay)
-    val fresh = replayed.getOrElse(listing.toSet) -- r.consumed
+    val fresh = r.planned.getOrElse(listing.toSet) -- r.consumed
     if (fresh.isEmpty && r.planned.isEmpty) return
-    if (replayed.isEmpty)
+    if (r.planned.isEmpty)
       log.write(OffsetLog.Offsets, r.batch,
         (r.consumed ++ fresh).toSeq.sorted.map { case (t, f) => Seq(t, f) })
-    appends.foreach(wipe(_, r.batch))
     val inputs = fresh.groupMap(_._1)(_._2).map { case (t, fs) => t -> fs.toSeq.sorted }
     log.write(OffsetLog.Commits, r.batch, publish(r.batch, inputs))
   }
 
   /** A commit entry's lines for one table: `<table> in <input>` per input
-    * taken and `<table> out <name>` per file or snapshot published. */
+    * taken and `<table> out <name>` per directory or version published. */
   private def commitLines(table: String, in: Seq[String], out: Seq[String]): Seq[Seq[String]] =
     in.map(Seq(tableName(table), "in", _)) ++ out.map(Seq(tableName(table), "out", _))
 
   private def tableName(table: String): String = new Path(table).getName
 
-  /** A table's input files: the data files directly under its root. Names
-    * starting with `_` or `.` are skipped — Spark's `_temporary`,
-    * `_SUCCESS` and `.crc` files and a batch's `_stage_b<n>` — so a load
-    * still committing is taken by a later batch. */
-  private def dataFiles(table: String): Seq[String] = {
-    val p = new Path(table)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq.filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
-  }
+  /** The directories of a table's newest version; none before its first. */
+  private def live(table: String): Seq[String] = TableLog(spark, table).latest.fold(Seq.empty[String])(_._2)
 
-  private def readFiles(table: String, files: Seq[String], schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(files.map(f => s"$table/$f"): _*)
+  private def readFiles(table: String, dirs: Seq[String], schema: StructType): DataFrame =
+    Incremental.readDirs(spark, table, dirs, Some(schema))
 
-  /** Removes what an attempt at batch n left in an append table: its
-    * stage directory and the files it already renamed in. */
-  private def wipe(table: String, n: Long): Unit = {
-    val p = new Path(table)
-    if (fs.exists(p))
-      fs.listStatus(p).map(_.getPath)
-        .filter(f => f.getName == s"_stage_b$n" || f.getName.startsWith(s"b$n-"))
-        .foreach(fs.delete(_, true))
-  }
+  /** Appends batch n's `df` to `table` under the tag `b<n>`; the
+    * directory the table's newest version names for it, if any. */
+  private def append(table: String, n: Long, df: DataFrame, clusterBy: Seq[String]): Seq[String] =
+    Seq(s"b$n").filter(_ => Incremental.publish(spark, table, s"b$n", df, clusterBy, replace = false).live)
 
-  /** Appends `df` to `table`: written to `_stage_<tag>`, which readers
-    * skip, then each data file renamed into the root as `<tag>-<name>`. A
-    * file holding no rows is dropped (the count is read from its parquet
-    * footer, no Spark job) unless the table does not exist yet, which a
-    * first append creates even empty.
-    *
-    * An earlier append under the same tag is finished, never repeated:
-    * with `<tag>-` files in the root and no stage left it was complete,
-    * and nothing is written; a stage holding `_SUCCESS` was fully written,
-    * and only its remaining files are renamed in. A published file is
-    * never removed, since a batch may already have taken it. */
-  private def appendStaged(table: String, tag: String, df: DataFrame,
-                           clusterBy: Seq[String]): Appended = {
-    val root = new Path(table)
-    val listed = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
-    val stage = new Path(root, s"_stage_$tag")
-    val staged = listed.exists(_.getPath.getName == stage.getName)
-    val done = listed.map(_.getPath.getName).filter(_.startsWith(s"$tag-"))
-    if (done.nonEmpty && !staged) return Appended(done, wrote = false)
-    val create = !listed.exists(st => st.isFile && !st.getPath.getName.startsWith("_"))
-    val wrote = !staged || !fs.exists(new Path(stage, "_SUCCESS"))
-    if (wrote) Incremental.write(df, stage.toString, SaveMode.Overwrite, clusterBy)
-    val published = done ++ dataFiles(stage.toString)
-      .filter(f => create || rowCount(new Path(stage, f)) > 0)
-      .map { f =>
-        val dest = new Path(table, s"$tag-$f")
-        require(fs.rename(new Path(stage, f), dest), s"rename into $dest failed")
-        dest.getName
-      }
-    fs.delete(stage, true)
-    Appended(published, wrote)
-  }
-
-  private def rowCount(file: Path): Long = {
-    // options from the session's conf: the default ones build a new
-    // Hadoop Configuration, re-parsing the *-default.xml files, per call
-    val conf = spark.sparkContext.hadoopConfiguration
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
-      HadoopReadOptions.builder(conf).build())
-    try reader.getRecordCount finally reader.close()
-  }
-
-  private val BatchKey = "transform.batch"
-
-  /** Upserts batch n into a merge table, recording `transform.batch=n` in
-    * the published version's meta; a table whose current version already
-    * records n is left as it is. Only a committed version counts: one
-    * that a run which died before its commit marker renamed in is not
-    * current, so the re-run publishes above it. Returns the current
-    * version. */
+  /** Upserts batch n into a merge table under the tag `b<n>`: a table
+    * whose newest version is batch n's is left as it is. Only a published
+    * version counts, so the re-run of a batch that died before publishing
+    * its merge publishes it. Returns the newest version. */
   private def upsertBatch(table: String, n: Long, df: DataFrame,
                           keys: Seq[String]): Seq[String] = {
-    if (!Incremental.snapshotMeta(spark, table).get(BatchKey).contains(n.toString))
-      Incremental.upsertSnapshot(spark, table, df, keys, clusterBy = keys,
-        meta = Map(BatchKey -> n.toString))
-    Incremental.currentSnapshot(spark, table).toSeq
+    Incremental.upsertSnapshot(spark, table, df, keys, clusterBy = keys, tag = s"b$n")
+    TableLog(spark, table).versions.lastOption.map(_.toString).toSeq
   }
-}
-
-object Warehouse {
-
-  /** What `appendStaged` did: the names it published, and whether it ran
-    * the write (false when it finished an earlier attempt). */
-  private final case class Appended(files: Seq[String], wrote: Boolean)
 }

@@ -81,7 +81,7 @@ class IncrementalLoopSpec extends AnyFunSuite {
   private def multiset(df: DataFrame): Map[Seq[Any], Int] =
     df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
 
-  /** File and marker names under a table root and its snapshot dirs. */
+  /** The relative paths of everything under a table root. */
   private def entries(table: String): Set[String] = {
     val p = Path.of(table)
     if (!Files.exists(p)) Set.empty
@@ -120,10 +120,10 @@ class IncrementalLoopSpec extends AnyFunSuite {
         "flat_manifest_response" -> (wh.flatManifest, manifest),
         "flat_manifest_photos" -> (wh.flatManifestPhotos, Silver.flatManifestPhotos(manifest)),
         "flat_coordinate_response" -> (wh.flatCoordinates, coords),
-        "photo_summary" -> (spark.read.parquet(wh.goldPhotoSummary), Marts.photoSummary(rovers)),
-        "daily_activity" -> (spark.read.parquet(wh.goldDailyActivity),
+        "photo_summary" -> (Incremental.read(spark, wh.goldPhotoSummary), Marts.photoSummary(rovers)),
+        "daily_activity" -> (Incremental.read(spark, wh.goldDailyActivity),
           Marts.dailyActivity(facts, rovers, cams, path)),
-        "camera_travel_correlation" -> (spark.read.parquet(wh.goldCameraTravel),
+        "camera_travel_correlation" -> (Incremental.read(spark, wh.goldCameraTravel),
           Marts.cameraTravelCorrelation(facts, rovers, cams, path))
       ).foreach { case (name, (got, want)) =>
         val expected = multiset(want)
@@ -132,7 +132,7 @@ class IncrementalLoopSpec extends AnyFunSuite {
           s"$cycle: $name differs from its full refresh")
       }
       // the merge tables were fed once, at set-up: no cycle re-published them
-      merged.foreach(t => assert(Incremental.snapshots(spark, t) == Seq("v00000001"),
+      merged.foreach(t => assert(TableLog(spark, t).versions == Seq(0L),
         s"$cycle: $t was re-published"))
     }
 
@@ -243,16 +243,18 @@ class IncrementalLoopSpec extends AnyFunSuite {
       finally s.close()
     }
 
-  /** The data files directly under a table root (no `_`/`.` names). */
-  private def dataFiles(table: String): Set[String] =
-    entries(table).filter(n => !n.contains('/') && !n.startsWith("_") && !n.startsWith(".") &&
-      Files.isRegularFile(Path.of(table, n)))
+  /** The data directories a table's newest version names. */
+  private def live(table: String): Set[String] =
+    TableLog(spark, table).latest.fold(Set.empty[String])(_._2.toSet)
+
+  /** The parquet files under a directory, by relative path. */
+  private def parquetFiles(dir: String): Set[String] = entries(dir).filter(_.endsWith(".parquet"))
 
   /** The last commit entry of each offset log against the disk: every
-    * input it names is a file (gold: or the manifest version) of the
-    * table's source, together they are exactly the inputs its offsets
-    * entry added, and each table's outputs are its `b<n>-` files or its
-    * current version. */
+    * input it names is a directory the table's source names (gold: or
+    * the manifest's version), together they are exactly the inputs its
+    * offsets entry added, and each table's outputs are its `b<n>`
+    * directory, when its newest version names one, or its newest version. */
   private def assertCommitEntries(loop: Loop, label: String): Unit = {
     import loop.{gold, merged, silver, wh}
     val source = Map(
@@ -271,17 +273,19 @@ class IncrementalLoopSpec extends AnyFunSuite {
       def offsets(i: Long) =
         if (i < 0) Set.empty[(String, String)] else log.read(OffsetLog.Offsets, i).map(l => l.head -> l(1)).toSet
       val taken = lines.collect { case (t, "in", f) =>
-        assert(Files.exists(Path.of(source(t), f)), s"$label: $stage batch $n input $f is not in ${source(t)}")
+        val named = if (merged.contains(source(t))) TableLog(spark, source(t)).versions.map(_.toString)
+          else live(source(t)).toSeq
+        assert(named.contains(f), s"$label: $stage batch $n input $f is not in ${source(t)}")
         name(source(t)) -> f
       }.toSet
       assert(taken == offsets(n) -- offsets(n - 1), s"$label: $stage batch $n inputs")
       val out = lines.collect { case (t, "out", f) => t -> f }.groupMap(_._1)(_._2)
       appends.foreach { t =>
-        assert(out.getOrElse(t, Nil).toSet == dataFiles(t).filter(_.startsWith(s"b$n-")),
+        assert(out.getOrElse(t, Nil).toSet == live(t).filter(_ == s"b$n"),
           s"$label: $stage batch $n outputs of $t")
       }
       out.foreach { case (t, fs) =>
-        if (merged.contains(t)) assert(fs == Seq(Incremental.currentSnapshot(spark, t).get))
+        if (merged.contains(t)) assert(fs == TableLog(spark, t).versions.lastOption.map(_.toString).toSeq)
         else assert(appends.contains(t), s"$label: $stage published to $t")
       }
     }
@@ -295,7 +299,7 @@ class IncrementalLoopSpec extends AnyFunSuite {
     assertCommitEntries(loop, "set-up")
     val bronze = Seq(wh.bronzePhotos, wh.bronzeManifests, wh.bronzeCoordinates)
     val copy = root.resolve("bronze_copy").toString
-    spark.read.parquet(wh.bronzePhotos).write.parquet(copy)
+    Incremental.read(spark, wh.bronzePhotos).write.parquet(copy)
     // Curiosity 2-6 and Perseverance 2, then Perseverance 3-4 and 5-6
     for ((take, c) <- Seq(6, 2, 2).zipWithIndex) {
       val tasks = land(take)
@@ -304,9 +308,10 @@ class IncrementalLoopSpec extends AnyFunSuite {
       // files, and a load still committing under _temporary/
       Files.createDirectories(Path.of(wh.bronzePhotos, "_temporary", "0"))
       Files.write(Path.of(wh.bronzePhotos, "_SUCCESS"), Array.emptyByteArray)
-      dataFiles(copy).foreach(f => Files.copy(Path.of(copy, f),
+      parquetFiles(copy).foreach(f => Files.copy(Path.of(copy, f),
         Path.of(wh.bronzePhotos, "_temporary", "0", f), StandardCopyOption.REPLACE_EXISTING))
-      val junk = entries(wh.bronzePhotos).filter(n => n.startsWith("_") || n.startsWith("."))
+      val junk = entries(wh.bronzePhotos).map(n => Path.of(n).getFileName.toString)
+        .filter(n => n.startsWith("_") || n.startsWith("."))
       assert(Seq("_temporary", "_SUCCESS", ".").forall(p => junk.exists(_.startsWith(p))), junk)
       sched = orch.transformStage()
       assertFullRefresh(s"cycle ${c + 1}")
@@ -314,7 +319,7 @@ class IncrementalLoopSpec extends AnyFunSuite {
       val dir = Path.of(wh.root, "_checkpoints", "silver", OffsetLog.Offsets)
       val consumed = OffsetLog(spark, dir.getParent.toString)
         .read(OffsetLog.Offsets, logIds(dir).last).map(_(1)).toSet
-      assert(consumed == bronze.flatMap(dataFiles).toSet, s"cycle ${c + 1}: silver consumed $consumed")
+      assert(consumed == bronze.flatMap(live).toSet, s"cycle ${c + 1}: silver consumed $consumed")
     }
   }
 
@@ -326,7 +331,8 @@ class IncrementalLoopSpec extends AnyFunSuite {
     // job-attempt dir, holding a copy of photos already loaded
     val attempt = Files.createDirectories(Path.of(wh.bronzePhotos, "_temporary", "0"))
     val planted = attempt.resolve("part-dead.parquet")
-    Files.copy(Path.of(wh.bronzePhotos, dataFiles(wh.bronzePhotos).min), planted)
+    val loaded = Path.of(wh.bronzePhotos, live(wh.bronzePhotos).min)
+    Files.copy(loaded.resolve(parquetFiles(loaded.toString).min), planted)
     for (c <- 1 to 2) {
       assert(cycle(2).nonEmpty)
       assertFullRefresh(s"cycle $c")
@@ -338,19 +344,21 @@ class IncrementalLoopSpec extends AnyFunSuite {
     val loop = new Loop("rerun", ticking())
     import loop._
     val checkpoints = s"${wh.root}/_checkpoints"
-    /** A committed batch becomes a pending one: its commit entries go,
-      * and a stale stage dir and one extra `b<n>-` file are left behind. */
+    /** A committed batch becomes a pending one that died before
+      * publishing an append: its commit entries go, so does the table
+      * version naming its `b<n>` directory, and a stale file is left in
+      * that directory. */
     def crash(): Unit =
       for ((stage, t) <- Seq("silver" -> wh.silverFlatPhotos, "gold" -> wh.goldCameraTravel)) {
         val commits = Path.of(checkpoints, stage, OffsetLog.Commits)
         val n = logIds(commits).last
         Files.delete(commits.resolve(n.toString))
-        val published = dataFiles(t).filter(_.startsWith(s"b$n-")).toSeq.sorted
-        assert(published.nonEmpty, s"$stage batch $n published nothing to $t")
-        val src = Path.of(t, published.head)
-        Files.copy(src, Path.of(t, s"b$n-extra.parquet"))
-        Files.createDirectories(Path.of(t, s"_stage_b$n"))
-        Files.copy(src, Path.of(t, s"_stage_b$n", "part-stale.parquet"))
+        val log = TableLog(spark, t)
+        val (v, dirs) = log.latest.get
+        assert(dirs.contains(s"b$n"), s"$stage batch $n published nothing to $t")
+        log.drop(v)
+        val dir = Path.of(t, s"b$n")
+        Files.copy(dir.resolve(parquetFiles(dir.toString).min), dir.resolve("part-stale.parquet"))
       }
     def rerun(cycle: String): Unit = {
       crash()
@@ -368,7 +376,7 @@ class IncrementalLoopSpec extends AnyFunSuite {
     rerun("cycle 1 run again")
   }
 
-  test("a merge renamed in without its commit marker does not count as applied") {
+  test("a merge written without its log version does not count as applied") {
     val clock = ticking()
     val loop = new Loop("orphanmerge", clock)
     import loop._
@@ -378,23 +386,25 @@ class IncrementalLoopSpec extends AnyFunSuite {
     val sol7 = cameras.map { case (rover, _) => rover -> Seq(solEntry(Some(7))) }.toMap
     orch.loadStage(Seq(upload(store, name, manifestDoc(clock(), name, sol7))))
     wh.buildSilver()
-    // the run died between flat_manifest_photos' rename and its commit
-    // marker: the renamed version carries the batch in its meta, and the
-    // batch has no commit entry
+    // the run died between flat_manifest_photos' write and its version:
+    // the batch's directory is written whole, no version names it, and
+    // the batch has no commit entry
     val commits = Path.of(wh.root, "_checkpoints", "silver", OffsetLog.Commits)
     val n = logIds(commits).last
     Files.delete(commits.resolve(n.toString))
     val table = wh.silverFlatManifestPhotos
-    Files.delete(Path.of(table, "_commit_v00000002"))
-    assert(Files.readString(Path.of(table, "v00000002", "_snapshot_meta")) == s"transform.batch=$n\n")
-    assert(Incremental.currentSnapshot(spark, table).contains("v00000001"))
+    val log = TableLog(spark, table)
+    assert(log.versions == Seq(0L, 1L) && log.dirs(1) == Seq(s"b$n"))
+    log.drop(1)
+    assert(parquetFiles(s"$table/b$n").nonEmpty)
+    // its rows, sol 7's, are not part of the table
+    assert(wh.flatManifestPhotos.filter(col("sol") === 7).count() == 0)
 
     sched = orch.transformStage()
-    // the batch ran again: its merge published above the orphan, and the
-    // merge that had committed was left as it is
-    assert(Incremental.snapshots(spark, table) == Seq("v00000001", "v00000002", "v00000003"))
-    assert(Incremental.currentSnapshot(spark, table).contains("v00000003"))
-    assert(Incremental.snapshots(spark, wh.silverFlatManifest) == Seq("v00000001", "v00000002"))
+    // the batch ran again: its merge published, and the merge that had
+    // been published was left as it is
+    assert(log.versions == Seq(0L, 1L) && log.dirs(1) == Seq(s"b$n"))
+    assert(TableLog(spark, wh.silverFlatManifest).versions == Seq(0L, 1L))
     val want = Silver.flatManifestPhotos(Silver.flatManifestResponse(
       Bronze.rawManifestResponse(spark, s"$store/manifests/$name")))
     assert(multiset(wh.flatManifestPhotos.select(want.columns.toIndexedSeq.map(col): _*)) ==
@@ -407,47 +417,82 @@ class IncrementalLoopSpec extends AnyFunSuite {
     import loop._
     setUp()
     val bronze = Seq(wh.bronzePhotos, wh.bronzeManifests, wh.bronzeCoordinates)
-    val before = dataFiles(wh.bronzePhotos)
+    def versions = bronze.map(TableLog(spark, _).versions)
+    val before = live(wh.bronzePhotos)
     val tasks = sched.tasks.take(2)
     val key = orch.ingestStage(tasks, tasks.map(_.sol).min to tasks.map(_.sol).max).toSeq
     orch.loadStage(key)
-    val loaded = bronze.map(dataFiles)
+    val (loaded, published) = (bronze.map(live), versions)
     // a replayed minio-events record for every object loaded so far
     orch.loadStage(key ++ Seq("manifests/mars_rover_manifests_1.json",
       "coordinates/mars_rover_coordinates_1.json"))
-    assert(bronze.map(dataFiles) == loaded, "a replayed load wrote to bronze")
+    assert(bronze.map(live) == loaded && versions == published, "a replayed load wrote to bronze")
 
-    val files = (dataFiles(wh.bronzePhotos) -- before).toSeq.sorted
-    assert(files.nonEmpty)
-    val tag = files.head.split("-").take(2).mkString("-")
-    val stage = Path.of(wh.bronzePhotos, s"_stage_$tag")
-    // died between its renames: the stage holds a finished write
-    Files.createDirectories(stage)
-    Files.move(Path.of(wh.bronzePhotos, files.last),
-      stage.resolve(files.last.stripPrefix(s"$tag-")))
-    Files.write(stage.resolve("_SUCCESS"), Array.emptyByteArray)
+    val Seq(tag) = (loaded.head -- before).toSeq
+    val dir = Path.of(wh.bronzePhotos, tag)
+    val log = TableLog(spark, wh.bronzePhotos)
+    // died before publishing: the directory holds a finished write that
+    // no version names
+    log.drop(log.versions.last)
+    assert(live(wh.bronzePhotos) == before)
     orch.loadStage(key)
-    assert(dataFiles(wh.bronzePhotos) == loaded.head, "the replay did not finish the renames")
-    assert(!Files.exists(stage))
-    // died while writing: nothing renamed, the stage holds a partial write
-    files.foreach(f => Files.delete(Path.of(wh.bronzePhotos, f)))
-    Files.createDirectories(stage)
-    Files.copy(Path.of(wh.bronzePhotos, before.min), stage.resolve("part-partial.parquet"))
+    assert(live(wh.bronzePhotos) == loaded.head && versions == published,
+      "the replay did not publish the load")
+    // died while writing: the directory holds a partial write
+    log.drop(log.versions.last)
+    val old = Path.of(wh.bronzePhotos, before.min)
+    Files.copy(old.resolve(parquetFiles(old.toString).min), dir.resolve("part-partial.parquet"))
     orch.loadStage(key)
-    assert(dataFiles(wh.bronzePhotos).count(_.startsWith(s"$tag-")) == files.size)
+    assert(live(wh.bronzePhotos) == loaded.head && versions == published)
+    assert(!Files.exists(dir.resolve("part-partial.parquet")))
 
     sched = orch.transformStage()
     assertFullRefresh("replayed loads")
+  }
+
+  test("a multi-file load that no version names is invisible, and its replay lands it once") {
+    val loop = new Loop("wholebatch", ticking())
+    import loop._
+    setUp()
+    cycle(2)
+    // one object of two photo documents, from two ingests
+    val docs = sched.tasks.take(2).map { t =>
+      val doc = store.resolve(orch.ingestStage(Seq(t), t.sol to t.sol).get)
+      try Files.readString(doc).trim finally Files.delete(doc)
+    }
+    val key = upload(store, "mars_rover_photos_pair.json", docs.mkString("\n"))
+    // the load died after writing its directory whole, before publishing
+    // it: one file per document
+    val objectPath = s"$store/$key"
+    val digest = java.security.MessageDigest.getInstance("MD5").digest(objectPath.getBytes("UTF-8"))
+    val dir = s"${wh.bronzePhotos}/load-${java.util.HexFormat.of.formatHex(digest)}"
+    Bronze.rawPhotoResponse(spark, objectPath).repartition(2).write.parquet(dir)
+    assert(parquetFiles(dir).size == 2)
+
+    val (photos, gaps) = (wh.flatPhotos.count(), wh.gapKeys())
+    val checkpoints = s"${wh.root}/_checkpoints"
+    val logged = entries(checkpoints)
+    wh.buildSilver()
+    assert(entries(checkpoints) == logged, "silver took an unpublished load")
+    assert(wh.flatPhotos.count() == photos && wh.gapKeys() == gaps)
+    // the replayed load replaces the directory and publishes it
+    orch.loadStage(Seq(key))
+    assert(live(wh.bronzePhotos).count(d => dir.endsWith(s"/$d")) == 1)
+    sched = orch.transformStage()
+    assertFullRefresh("the replayed load")
+    assert(wh.flatPhotos.count() > photos && wh.flatPhotos.distinct().count() == wh.flatPhotos.count())
+    assert(wh.gapKeys().size == gaps.size - 2)
   }
 
   test("a stored column whose type disagrees with the pinned schema fails loudly") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_pinned").toString
     val wh = Warehouse(spark, root)
+    def publish(table: String, df: DataFrame): Unit =
+      Incremental.publish(spark, table, "b0", df, clusterBy = Nil, replace = false)
     // silver photos with `sol` stored as a string
-    Silver.flatPhotoResponse(MarsPipeline.fixtures(spark).rawPhotos)
-      .withColumn("sol", col("sol").cast("string"))
-      .write.parquet(wh.silverFlatPhotos)
+    publish(wh.silverFlatPhotos, Silver.flatPhotoResponse(MarsPipeline.fixtures(spark).rawPhotos)
+      .withColumn("sol", col("sol").cast("string")))
     def mismatch(action: => Any): Unit = {
       val e = intercept[org.apache.spark.SparkException](action)
       assert(e.getMessage.contains("PARQUET_COLUMN_DATA_TYPE_MISMATCH"), e.getMessage)
@@ -455,9 +500,8 @@ class IncrementalLoopSpec extends AnyFunSuite {
     mismatch(wh.flatPhotos.collect())
     mismatch(wh.buildGold())
     // bronze photos with `ingestion_date` stored as a long
-    Seq(("a.json", 99990101L)).toDF("filename", "ingestion_date")
-      .withColumn("photos", lit(null).cast(Schemas.photoBatch("photos").dataType))
-      .write.parquet(wh.bronzePhotos)
+    publish(wh.bronzePhotos, Seq(("a.json", 99990101L)).toDF("filename", "ingestion_date")
+      .withColumn("photos", lit(null).cast(Schemas.photoBatch("photos").dataType)))
     mismatch(wh.buildSilver())
   }
 
@@ -548,7 +592,7 @@ class IncrementalLoopSpec extends AnyFunSuite {
       assert(n == logIds(silverCommits).last, s"$label: state keyed by batch $n")
       val lines = OffsetLog(spark, state.getParent.toString).read("state", n)
       assert(lines.head == Seq(OffsetLog.field(
-        Incremental.currentSnapshot(spark, wh.silverFlatManifestPhotos))), s"$label: version")
+        TableLog(spark, wh.silverFlatManifestPhotos).versions.lastOption)), s"$label: version")
       val held = lines.tail.map { case Seq(r, s) => (OffsetLog.value(r), OffsetLog.value(s).map(_.toInt)) }
       val view = wh.validationPhotoGaps.select("rover_name", "sol")
       assert(held == keys(view.orderBy("rover_name", "sol")), s"$label: gap state")
@@ -640,11 +684,11 @@ class IncrementalLoopSpec extends AnyFunSuite {
     val sol7 = cameras.map { case (rover, _) => rover -> Seq(solEntry(Some(7))) }.toMap
     val started = processesStarted {
       assert(cycle(2).nonEmpty)
-      // a manifest merge: writeSnapshot's stage, its meta and the markers
+      // a manifest merge: its data directory and its log entry
       orch.loadStage(Seq(upload(store, name, manifestDoc(clock(), name, sol7))))
       sched = orch.transformStage()
     }
-    assert(Incremental.snapshots(spark, wh.silverFlatManifestPhotos).size == 2)
+    assert(TableLog(spark, wh.silverFlatManifestPhotos).versions.size == 2)
     // other suites' processes name no path under this loop's root
     val under = root.toRealPath().toString
     val mine = started.filter(_.contains(under))

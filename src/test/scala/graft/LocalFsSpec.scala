@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.mars.{LocalFs, MarsPipeline, NioLocalFileSystem, Warehouse}
+import graft.mars.{Incremental, LocalFs, MarsPipeline, NioLocalFileSystem, Warehouse}
 
 /** The warehouse's local filesystem ([[LocalFs]]) sets permissions without
   * forking `chmod`, and leaves exactly the modes Hadoop's `LocalFileSystem`
@@ -98,7 +98,7 @@ class LocalFsSpec extends AnyFunSuite {
     assert(session() == before)
 
     // the same Spark write with and without the warehouse's options
-    val df = spark.read.parquet(wh.bronzePhotos)
+    val df = Incremental.read(spark, wh.bronzePhotos)
     for ((umask, dirMode) <- Seq(None -> "755", Some("027") -> "750")) {
       val opts = umask.map("fs.permissions.umask-mode" -> _).toMap +
         ("fs.file.impl.disable.cache" -> "true")
@@ -109,15 +109,13 @@ class LocalFsSpec extends AnyFunSuite {
       assert(mode(nio) == mode(std) && modes(nio) == modes(std), s"umask $umask")
       assert(mode(nio) == Integer.parseInt(dirMode, 8), s"umask $umask")
     }
-    // every warehouse entry Hadoop made has the mode a plain write gives
-    // its kind; commit and claim markers are `java.io` creates
+    // every warehouse entry has the mode a plain write gives its kind; a
+    // table log entry is a link to a file Hadoop made
     val std = root.resolve("std_default")
     val (dirMode, fileModes) = (mode(std), modes(std).values.toSet)
     assert(fileModes.size == 1, modes(std))
     val written = root.resolve("warehouse")
-    (modes(written) + ("." -> mode(written))).filterNot { case (p, _) =>
-      Seq("_commit_", "_claim_").exists(new Path(p).getName.startsWith)
-    }.foreach { case (p, m) =>
+    (modes(written) + ("." -> mode(written))).foreach { case (p, m) =>
       val want = if (Files.isDirectory(written.resolve(p))) dirMode else fileModes.head
       assert(m == want, s"$p has mode ${m.toOctalString}, not ${want.toOctalString}")
     }

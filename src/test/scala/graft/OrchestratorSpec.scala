@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
-import graft.mars.{GapScheduler, MarsPipeline, Schemas, Warehouse}
+import graft.mars.{GapScheduler, Incremental, MarsPipeline, Schemas, Warehouse}
 import graft.streaming.{ControlPlane, Orchestrator}
 
 /** End-to-end test of the closed feedback loop (SURVEY §3 EP1→EP2→EP3):
@@ -79,8 +79,8 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(wh.validationPhotoGaps.count() == 0)
 
     // gold marts materialized and incremental (second build appended nothing stale)
-    assert(spark.read.parquet(wh.goldDailyActivity).count() > 0)
-    assert(spark.read.parquet(wh.goldCameraTravel)
+    assert(Incremental.read(spark, wh.goldDailyActivity).count() > 0)
+    assert(Incremental.read(spark, wh.goldCameraTravel)
       .filter(col("sol_number") === 51).count() > 0) // ingested gap sol reached gold
   }
 
@@ -100,7 +100,7 @@ class OrchestratorSpec extends AnyFunSuite {
       val nSched = ControlPlane.readTopicBatch(spark, topics,
         ControlPlane.TopicScheduling).count()
       assert(nSched >= 1, s"unexpected scheduling count $nSched")
-      assert(spark.read.parquet(wh.goldDailyActivity).count() > 0)
+      assert(Incremental.read(spark, wh.goldDailyActivity).count() > 0)
     } finally queries.foreach(_.stop())
   }
 
@@ -144,7 +144,7 @@ class OrchestratorSpec extends AnyFunSuite {
       queries.foreach { q =>
         assert(q.isActive && q.exception.isEmpty, s"${q.name} stopped: ${q.exception}")
       }
-      assert(spark.read.parquet(wh.goldDailyActivity).count() > 0)
+      assert(Incremental.read(spark, wh.goldDailyActivity).count() > 0)
     } finally queries.foreach(_.stop())
   }
 

@@ -5,12 +5,12 @@ import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.mars.Incremental
+import graft.mars.{Incremental, MarsPipeline, Silver, TableLog, Warehouse}
 
 /** The merge-publish atomicity contract (VERDICT r2 item 6): a reader
   * racing upsertSnapshot must never observe a half-published table —
   * no FileNotFound from a swapped-away directory (the r2 temp-dir-swap
-  * failure mode), no row set that isn't exactly one committed version.
+  * failure mode), no row set that isn't exactly one published version.
   */
 class SnapshotRaceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -58,6 +58,43 @@ class SnapshotRaceSpec extends AnyFunSuite {
     assert(last === "006")
   }
 
+  test("reader racing multi-file appends only ever sees whole batches") {
+    val wh = Warehouse(spark, java.nio.file.Files.createTempDirectory("graft_appendrace").toString)
+    val photos = Silver.flatPhotoResponse(MarsPipeline.fixtures(spark).rawPhotos)
+    val batch = photos.count()
+    // every batch is the same photos in three files, so every published
+    // version holds a whole number of batches
+    def append(i: Int): Unit = Incremental.publish(spark, wh.silverFlatPhotos, s"b$i",
+      photos.repartition(3), clusterBy = Nil, replace = false)
+    append(0)
+    val files = java.nio.file.Files.list(java.nio.file.Path.of(wh.silverFlatPhotos, "b0"))
+    try assert(files.toArray.count(_.toString.endsWith(".parquet")) == 3) finally files.close()
+
+    val stop = new AtomicBoolean(false)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val reader = new Thread(() => {
+      while (!stop.get()) {
+        try {
+          val n = wh.flatPhotos.count()
+          reads.incrementAndGet()
+          if (n % batch != 0) failures.add(s"torn read: $n rows, batches of $batch")
+        } catch {
+          case e: Exception => failures.add(s"read failed: ${e.getMessage}")
+        }
+      }
+    })
+    reader.start()
+    try (1 to 6).foreach(append)
+    finally {
+      stop.set(true)
+      reader.join(60000)
+    }
+    assert(failures.isEmpty, failures.toArray.mkString("\n"))
+    assert(reads.get > 0)
+    assert(wh.flatPhotos.count() === 7 * batch)
+  }
+
   test("a DataFrame resolved before a merge still reads its own snapshot") {
     import spark.implicits._
     val t = tmpDir()
@@ -72,6 +109,19 @@ class SnapshotRaceSpec extends AnyFunSuite {
     assert(Incremental.read(spark, t).count() === 3)
   }
 
+  /** The names directly under a table root. */
+  private def rootNames(t: String): Set[String] = {
+    val s = java.nio.file.Files.list(java.nio.file.Path.of(t))
+    try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString).toSet
+    finally s.close()
+  }
+
+  /** `_log` and the data directories the retained versions name. */
+  private def retained(t: String): Set[String] = {
+    val log = TableLog(spark, t)
+    log.versions.flatMap(log.dirs).toSet + TableLog.Dir
+  }
+
   test("vacuum keeps the live snapshot and drops old ones") {
     import spark.implicits._
     val t = tmpDir()
@@ -79,11 +129,8 @@ class SnapshotRaceSpec extends AnyFunSuite {
       Incremental.upsertSnapshot(spark, t,
         Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k")))
     Incremental.vacuum(spark, t, keep = 2)
-    val fs = new org.apache.hadoop.fs.Path(t)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val snaps = fs.listStatus(new org.apache.hadoop.fs.Path(t))
-      .filter(_.isDirectory).map(_.getPath.getName).sorted
-    assert(snaps.toSeq === Seq("v00000004", "v00000005"))
+    assert(TableLog(spark, t).versions === Seq(3L, 4L))
+    assert(rootNames(t) === retained(t) && rootNames(t).size === 3)
     assert(Incremental.read(spark, t).collect()(0).getString(1) === "004")
   }
 
@@ -95,7 +142,8 @@ class SnapshotRaceSpec extends AnyFunSuite {
         Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k")))
     Incremental.vacuum(spark, t, keep = 0)
     assert(Incremental.exists(spark, t))
-    assert(Incremental.snapshots(spark, t) === Seq("v00000003"))
+    assert(TableLog(spark, t).versions === Seq(2L))
+    assert(rootNames(t) === retained(t))
     assert(Incremental.read(spark, t).collect()(0).getString(1) === "002")
   }
 
@@ -105,23 +153,17 @@ class SnapshotRaceSpec extends AnyFunSuite {
     (0 to 3).foreach(i =>
       Incremental.upsertSnapshot(spark, t,
         Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k")))
-    // simulate an in-flight writer: a fresh stage dir + claim
-    val fs = new org.apache.hadoop.fs.Path(t)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(t, "_stage_inflight"))
-    fs.create(new org.apache.hadoop.fs.Path(t, "_claim_v00000009"), false).close()
+    // simulate an in-flight writer: a fresh data directory no version names
+    Seq((1L, "x")).toDF("k", "ver").write.parquet(s"$t/inflight")
     // everything on disk is younger than the grace → vacuum must not
-    // touch ANY of it (expired versions, stages, claims alike)
+    // touch ANY of it (expired versions and the writer's directory alike)
     Incremental.vacuum(spark, t, keep = 1, minAgeMs = 60 * 60 * 1000L)
-    val names = fs.listStatus(new org.apache.hadoop.fs.Path(t))
-      .map(_.getPath.getName).toSet
-    assert(Incremental.snapshots(spark, t).size === 4)
-    assert(names.contains("_stage_inflight") && names.contains("_claim_v00000009"))
+    assert(TableLog(spark, t).versions.size === 4)
+    assert(rootNames(t) === retained(t) + "inflight" && rootNames(t).size === 6)
     // grace elapsed (age 0): the same call now sweeps all of them
     Incremental.vacuum(spark, t, keep = 1, minAgeMs = 0L)
-    val after = fs.listStatus(new org.apache.hadoop.fs.Path(t))
-      .map(_.getPath.getName).toSet
-    assert(after === Set("v00000004", "_commit_v00000004", "_claim_v00000004"))
+    assert(TableLog(spark, t).versions === Seq(3L))
+    assert(rootNames(t) === retained(t) && rootNames(t).size === 2)
     assert(Incremental.read(spark, t).collect()(0).getString(1) === "003")
   }
 
@@ -131,18 +173,17 @@ class SnapshotRaceSpec extends AnyFunSuite {
     (0 to 3).foreach(i =>
       Incremental.upsertSnapshot(spark, t,
         Seq((1L, f"$i%03d")).toDF("k", "ver"), Seq("k")))
-    assert(Incremental.snapshots(spark, t) ===
-      Seq("v00000001", "v00000002", "v00000003", "v00000004"))
-    (1 to 4).foreach { v =>
+    assert(TableLog(spark, t).versions === Seq(0L, 1L, 2L, 3L))
+    (0 to 3).foreach { v =>
       assert(Incremental.readVersion(spark, t, v)
-        .collect()(0).getString(1) === f"${v - 1}%03d")
+        .collect()(0).getString(1) === f"$v%03d")
     }
     intercept[IllegalArgumentException] {
       Incremental.readVersion(spark, t, 9) // never published
     }
     Incremental.vacuum(spark, t, keep = 1)
     intercept[IllegalArgumentException] {
-      Incremental.readVersion(spark, t, 1) // vacuumed away
+      Incremental.readVersion(spark, t, 0) // vacuumed away
     }
   }
 
@@ -187,10 +228,9 @@ class SnapshotRaceSpec extends AnyFunSuite {
     // clear failure, not a race against still-running writers below
     assert(!a.isAlive && !b.isAlive, "a merge writer exceeded the join timeout")
     assert(errs.isEmpty, errs.toArray.mkString("\n"))
-    // both writers committed distinct versions on top of v1
-    assert(Incremental.snapshots(spark, t) ===
-      Seq("v00000001", "v00000002", "v00000003"))
-    (1 to 3).foreach(v =>
+    // both writers published distinct versions on top of version 0
+    assert(TableLog(spark, t).versions === Seq(0L, 1L, 2L))
+    (0 to 2).foreach(v =>
       assert(Incremental.readVersion(spark, t, v).count() === 10))
     // the current table is exactly ONE writer's internally-consistent
     // result (snapshot isolation: racing upserts don't compose)
@@ -199,21 +239,11 @@ class SnapshotRaceSpec extends AnyFunSuite {
     assert(tags === Set("001") || tags === Set("002"), tags)
   }
 
-  test("upsert with mergeSchema grows the table schema; strict mode refuses") {
+  test("an upsert whose source lacks a table column fails loudly") {
     import spark.implicits._
     val t = tmpDir()
     Incremental.upsertSnapshot(spark, t,
-      Seq((1L, "a"), (2L, "b")).toDF("k", "ver"), Seq("k"))
-    // upstream grew a column: evolve on upsert, old rows null-fill
-    Incremental.upsertSnapshot(spark, t,
-      Seq((2L, "b2", "en"), (3L, "c", "fr")).toDF("k", "ver", "lang"),
-      Seq("k"), mergeSchema = true)
-    val got = Incremental.read(spark, t)
-      .select("k", "ver", "lang").collect()
-      .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2)))).toSet
-    assert(got === Set((1L, "a", None), (2L, "b2", Some("en")),
-      (3L, "c", Some("fr"))))
-    // strict default: a source missing table columns fails loudly
+      Seq((1L, "a", "en"), (2L, "b", "fr")).toDF("k", "ver", "lang"), Seq("k"))
     intercept[org.apache.spark.sql.AnalysisException] {
       Incremental.upsertSnapshot(spark, t,
         Seq((4L, "d")).toDF("k", "ver"), Seq("k"))
@@ -223,13 +253,14 @@ class SnapshotRaceSpec extends AnyFunSuite {
   test("a crashed write (snapshot dir without pointer flip) is invisible") {
     import spark.implicits._
     val t = tmpDir()
-    // simulate the crash: a snapshot dir exists but no _current was ever
+    // simulate the crash: a data directory written whole, no version
     // published
-    Seq((1L, "x")).toDF("k", "ver").write.parquet(s"$t/v00000001")
+    Seq((1L, "x")).toDF("k", "ver").write.parquet(s"$t/crashed")
     assert(!Incremental.exists(spark, t))
-    // first real merge publishes cleanly over the orphan
+    // first real merge publishes cleanly beside the orphan
     Incremental.upsertSnapshot(spark, t, Seq((2L, "y")).toDF("k", "ver"),
       Seq("k"))
     assert(Incremental.read(spark, t).collect().map(_.getLong(0)).toSeq === Seq(2L))
+    assert(!TableLog(spark, t).dirs(0).contains("crashed"))
   }
 }

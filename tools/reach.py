@@ -20,8 +20,10 @@ while True:
     if not new: break
     reached |= new
     for p in new: seen |= ident(main[p])
+gate = 0  # exit status: 1 when a FILE or FUNC line is printed; MEMBER lines are advisory
 for p in sorted(set(main) - reached):
     print(f"FILE {len(p.read_text().splitlines()):5d} {p.relative_to(repo)}")
+    gate = 1
 # SQL functions: the registry names every one, so a name registered in
 # graft/functions counts only when reached code outside that package, perfbench
 # or tools names it (strings count: call_function and SQL text name them)
@@ -34,6 +36,7 @@ named = set().union(*(ident(main[p]) for p in reached if fdir not in p.parents),
                       for p in repo.glob("tools/**/*") if p.is_file()))
 for name in sorted(registered - named):
     print(f"FUNC {name}")
+    gate = 1
 # members of reached files: a name used no more often than it is declared
 # (reached code + perfbench, comments skipped) is a candidate
 body = "\n".join([main[p] for p in reached] + bench)
@@ -45,3 +48,4 @@ for p in sorted(reached):
     for name in sorted(set(member.findall(main[p]))):
         if uses[name] <= decls[name]:
             print(f"MEMBER {p.relative_to(repo)}::{name}")
+sys.exit(gate)
