@@ -173,6 +173,13 @@ object GraftFunctions {
           TopKByScore(children(0), children(1), children(2))
             .toAggregateExpression())
     }
+    // the Gopher repetition battery's sorted-run fold over a row's
+    // token n-grams, one codegen'd call per n
+    val grIdent = FunctionIdentifier("gram_runs")
+    if (!registry.functionExists(grIdent)) {
+      registry.registerFunction(grIdent, GramRuns.info,
+        (children: Seq[Expression]) => GramRuns(children(0), children(1)))
+    }
     // the k-step greedy MMR chain as one pool-bounded per-row scan (r12)
     val mmrIdent = FunctionIdentifier("mmr_select")
     if (!registry.functionExists(mmrIdent)) {
@@ -275,6 +282,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       (children: Seq[Expression]) =>
         TopKByScore(children(0), children(1), children(2))
           .toAggregateExpression()))
+    ext.injectFunction((FunctionIdentifier("gram_runs"), GramRuns.info,
+      (children: Seq[Expression]) => GramRuns(children(0), children(1))))
     ext.injectFunction((FunctionIdentifier("mmr_select"), MmrSelect.info,
       (children: Seq[Expression]) =>
         MmrSelect(children(0), children(1), children(2))))

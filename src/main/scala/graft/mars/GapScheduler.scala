@@ -3,6 +3,7 @@ package graft.mars
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
+import graft.streaming.ControlPlane
 
 /** The closed feedback loop's scheduler half (SURVEY §2.1 S13-S14):
   * gap-view rows → next ingestion batch → fan-out task list + dense sol
@@ -32,7 +33,8 @@ object GapScheduler {
     /** reference payload shape: src/utils/snowflake.py:104-111. */
     def toJson: String = {
       val taskJson = tasks.map(t =>
-        s"""{"rover_name":"${t.rover_name}","sol":${t.sol}}""").mkString("[", ",", "]")
+        s"""{"rover_name":${ControlPlane.jsonString(t.rover_name)},"sol":${t.sol}}""")
+        .mkString("[", ",", "]")
       s"""{"ingestion_schedule":{"tasks":$taskJson,"sol_range":${sol_range.mkString("[", ",", "]")}}}"""
     }
   }

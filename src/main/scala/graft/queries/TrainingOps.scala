@@ -90,7 +90,7 @@ object TrainingOps extends OpsModule {
 
     // the full Gopher REPETITION battery (ibid. "repetitious text"):
     // top n-gram char fractions (n=2..4) + duplicated n-gram char
-    // fractions (n=5..10), each a row-local sorted-run fold
+    // fractions (n=5..10), each one row-local gram_runs call
     "txt_gopher_rep" -> ((s, d) =>
       TextOps.gopherRepetition(docs(s, d)).orderBy("doc_id")),
 

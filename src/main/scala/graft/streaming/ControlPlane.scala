@@ -96,16 +96,31 @@ object ControlPlane {
         FileTopicTransport(root).produceSparkless(topic, json)
     }
 
+  /** `s` as a JSON string literal: quote, backslash and the control
+    * characters below 0x20 escaped, every other character as it is — so
+    * a plain name gives the same bytes as pasting it between quotes. */
+  def jsonString(s: String): String = {
+    val b = new StringBuilder(s.length + 2).append('"')
+    s.foreach {
+      case '"' => b.append("\\\"")
+      case '\\' => b.append("\\\\")
+      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
+
   def minioEventJson(key: String): String =
-    s"""{"Key":"$key","EventName":"s3:ObjectCreated:Put"}"""
+    s"""{"Key":${jsonString(key)},"EventName":"s3:ObjectCreated:Put"}"""
 
   def loadCompleteJson(path: String, ts: String): String =
-    s"""{"tmp_jsonl_staging_path":"$path","status":"success","timestamp":"$ts"}"""
+    s"""{"tmp_jsonl_staging_path":${jsonString(path)},"status":"success",""" +
+      s""""timestamp":${jsonString(ts)}}"""
 
   /** scheduleJson is GapScheduler.IngestionSchedule.toJson —
     * `{"ingestion_schedule":{...}}` — spliced into the full message. */
   def schedulingJson(scheduleJson: String, ts: String): String = {
     val body = scheduleJson.trim.stripPrefix("{").stripSuffix("}")
-    s"""{"status":"success","timestamp":"$ts",$body}"""
+    s"""{"status":"success","timestamp":${jsonString(ts)},$body}"""
   }
 }

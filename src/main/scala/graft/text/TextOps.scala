@@ -1771,28 +1771,13 @@ object TextOps {
         round(col("wm").cast("double") / col("wt"), 6).as("weight"))
   }
 
-  /** All k-grams WITH multiplicity (unlike [[shingles]], which dedups) —
-    * repetition measurement needs the duplicates. */
-  private def rawGrams(toks: Column, k: Int): Column = {
-    val g = transform(
-      sequence(lit(0), size(toks) - k),
-      i => concat_ws(" ", (0 until k).map(j => element_at(toks, i + lit(j + 1))): _*))
-    when(size(toks) >= k, g).otherwise(array().cast("array<string>"))
-  }
-
-  /** Highest multiplicity of any element: sort, then the longest equal-run
-    * via one aggregate() pass — max frequency without exploding the array
-    * into a shuffle. Row-local, so repetition scoring stays a narrow map
+  /** `gram_runs(toks, n)`: the sorted-run fold over the row's token
+    * n-grams WITH multiplicity (unlike [[shingles]], which dedups) —
+    * `max_count`, `top_chars`, `dup_chars`; null for a null array. One
+    * codegen'd pass per row, so repetition scoring stays a narrow map
     * over the corpus at any scale. */
-  private def maxRunCount(arr: Column): Column =
-    aggregate(sort_array(arr),
-      struct(lit(null).cast("string").as("prev"), lit(0).as("run"), lit(0).as("best")),
-      (acc, t) => {
-        val run = when(acc.getField("prev") <=> t, acc.getField("run") + 1).otherwise(lit(1))
-        struct(t.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
+  private def gramRuns(toks: Column, n: Int): Column =
+    call_function("gram_runs", toks, lit(n))
 
   /** The FULL Gopher repetition battery (Rae et al. 2021 App. A.1.1,
     * "repetitious text" rules, applied verbatim): per document, the
@@ -1808,61 +1793,28 @@ object TextOps {
     * `n_chars`. Ties for "most frequent" break to the lexicographically
     * smallest gram — deterministic in any engine.
     *
-    * Scale shape: each of the nine signals is ONE row-local fold over
-    * the doc's SORTED gram array (the [[maxRunCount]] run-length
-    * pattern, extended to carry top-gram identity and duplicated-run
-    * character mass) — no explode, no shuffle, scan-speed at 100 TB.
+    * Scale shape: each of the nine signals is ONE row-local call of the
+    * native `gram_runs` kernel ([[graft.functions.GramRuns]]), which
+    * builds and sorts the doc's grams and folds their runs in one pass,
+    * inside whole-stage codegen (a null text folds to 0) —
+    * no explode, no shuffle, scan-speed at 100 TB.
     * The oracle computes the identical integers via per-(doc, gram) SQL
     * aggregation; both reduce to the same counts, so the single final
     * division is engine-exact. */
   def gopherRepetition(docs: DataFrame): DataFrame = {
-    // one sorted-run fold: returns struct(top, dup) where top = count×len
-    // of the MOST FREQUENT gram (picked by count; a strict '>' keeps the
-    // first — lexicographically smallest — gram on count ties) and
-    // dup = Σ over runs of length ≥ 2 of run×len(gram)
-    def runStats(grams: Column): Column = {
-      val z = struct(lit("").as("prev"), lit(0L).as("run"),
-        lit(0L).as("topCnt"), lit(0L).as("top"), lit(0L).as("dup"))
-      def flush(acc: Column) = {
-        val contrib = acc.getField("run") * length(acc.getField("prev"))
-        val isTop = acc.getField("run") > acc.getField("topCnt")
-        struct(
-          when(isTop, acc.getField("run")).otherwise(acc.getField("topCnt"))
-            .as("topCnt"),
-          when(isTop, contrib).otherwise(acc.getField("top")).as("top"),
-          (acc.getField("dup") +
-            when(acc.getField("run") >= 2, contrib).otherwise(0L)).as("dup"))
-      }
-      aggregate(sort_array(grams), z,
-        (acc, g) => when(acc.getField("prev") === g,
-          struct(acc.getField("prev").as("prev"),
-            (acc.getField("run") + 1).as("run"),
-            acc.getField("topCnt").as("topCnt"),
-            acc.getField("top").as("top"), acc.getField("dup").as("dup")))
-          .otherwise {
-            val f = flush(acc)
-            struct(g.as("prev"), lit(1L).as("run"),
-              f.getField("topCnt").as("topCnt"),
-              f.getField("top").as("top"), f.getField("dup").as("dup"))
-          },
-        acc => {
-          val f = flush(acc)
-          struct(f.getField("top").as("top"), f.getField("dup").as("dup"))
-        })
-    }
     val tops = Seq(2 -> 0.20, 3 -> 0.18, 4 -> 0.16)
     val dups = Seq(5 -> 0.15, 6 -> 0.14, 7 -> 0.13, 8 -> 0.12,
       9 -> 0.11, 10 -> 0.10)
     val withStats = (tops.map(_._1) ++ dups.map(_._1)).foldLeft(
       docs.select(col("doc_id"), col("n_chars"), tokens(col("text")).as("toks"))) {
-      (df, n) => df.withColumn(s"_rs_$n", runStats(rawGrams(col("toks"), n)))
+      (df, n) => df.withColumn(s"_rs_$n", gramRuns(col("toks"), n))
     }
     val cols =
       tops.map { case (n, _) =>
-        round(col(s"_rs_$n").getField("top").cast("double") /
+        round(coalesce(col(s"_rs_$n").getField("top_chars"), lit(0L)).cast("double") /
           col("n_chars"), 6).as(s"top_${n}gram_char_frac")
       } ++ dups.map { case (n, _) =>
-        round(col(s"_rs_$n").getField("dup").cast("double") /
+        round(coalesce(col(s"_rs_$n").getField("dup_chars"), lit(0L)).cast("double") /
           col("n_chars"), 6).as(s"dup_${n}gram_char_frac")
       }
     val pass = (tops.map { case (n, t) =>
@@ -1887,8 +1839,9 @@ object TextOps {
       .select(
         col("doc_id"), col("n_tokens"),
         round(size(array_distinct(col("toks"))) / col("nt"), 6).as("distinct_ratio"),
-        round(maxRunCount(col("toks")) / col("nt"), 6).as("top_token_fraction"),
-        round(maxRunCount(rawGrams(col("toks"), 2)) /
+        round(gramRuns(col("toks"), 1).getField("max_count") / col("nt"), 6)
+          .as("top_token_fraction"),
+        round(coalesce(gramRuns(col("toks"), 2).getField("max_count"), lit(0L)) /
           greatest(col("n_tokens") - 1, lit(1)).cast("double"), 6).as("top_bigram_fraction"))
 
   private val stopwords = Seq("the", "a", "and", "of", "to", "in")

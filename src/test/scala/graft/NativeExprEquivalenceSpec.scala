@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sim.Embeddings
+import graft.text.TextOps
 
 /** Focused equivalence gates for the r12 native expressions that replaced
   * multi-operator plan shapes (the snapshot session landed the
@@ -15,6 +16,7 @@ import graft.sim.Embeddings
   * - `vec_avg(emb)`  ≡ posexplode → groupBy(cell, idx).avg → re-assemble
   * - `cell_argmax`   ≡ crossJoin(broadcast) → max(struct(cos, -cell))
   * - `topk_by`       ≡ row_number() OVER (ORDER BY score DESC, id ASC) ≤ k
+  * - `gram_runs`     ≡ aggregate(sort_array(transform(…concat_ws…)), …)
   */
 class NativeExprEquivalenceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -161,5 +163,139 @@ class NativeExprEquivalenceSpec extends AnyFunSuite {
       assert(java.lang.Double.compare(g._3, w2._3) == 0 ||
         (g._3.isNaN && w2._3.isNaN))
     }
+  }
+
+  // ---- gram_runs --------------------------------------------------------
+
+  /** The retired `TextOps` bodies, verbatim: all k-grams with
+    * multiplicity, the highest run count, and the Gopher battery's
+    * (top, dup) run fold. */
+  private def rawGrams(toks: Column, k: Int): Column = {
+    val g = transform(
+      sequence(lit(0), size(toks) - k),
+      i => concat_ws(" ", (0 until k).map(j => element_at(toks, i + lit(j + 1))): _*))
+    when(size(toks) >= k, g).otherwise(array().cast("array<string>"))
+  }
+
+  private def maxRunCount(arr: Column): Column =
+    aggregate(sort_array(arr),
+      struct(lit(null).cast("string").as("prev"), lit(0).as("run"), lit(0).as("best")),
+      (acc, t) => {
+        val run = when(acc.getField("prev") <=> t, acc.getField("run") + 1).otherwise(lit(1))
+        struct(t.as("prev"), run.as("run"),
+          greatest(acc.getField("best"), run).as("best"))
+      },
+      acc => acc.getField("best"))
+
+  private def runStats(grams: Column): Column = {
+    val z = struct(lit("").as("prev"), lit(0L).as("run"),
+      lit(0L).as("topCnt"), lit(0L).as("top"), lit(0L).as("dup"))
+    def flush(acc: Column) = {
+      val contrib = acc.getField("run") * length(acc.getField("prev"))
+      val isTop = acc.getField("run") > acc.getField("topCnt")
+      struct(
+        when(isTop, acc.getField("run")).otherwise(acc.getField("topCnt"))
+          .as("topCnt"),
+        when(isTop, contrib).otherwise(acc.getField("top")).as("top"),
+        (acc.getField("dup") +
+          when(acc.getField("run") >= 2, contrib).otherwise(0L)).as("dup"))
+    }
+    aggregate(sort_array(grams), z,
+      (acc, g) => when(acc.getField("prev") === g,
+        struct(acc.getField("prev").as("prev"),
+          (acc.getField("run") + 1).as("run"),
+          acc.getField("topCnt").as("topCnt"),
+          acc.getField("top").as("top"), acc.getField("dup").as("dup")))
+        .otherwise {
+          val f = flush(acc)
+          struct(g.as("prev"), lit(1L).as("run"),
+            f.getField("topCnt").as("topCnt"),
+            f.getField("top").as("top"), f.getField("dup").as("dup"))
+        },
+      acc => {
+        val f = flush(acc)
+        struct(f.getField("top").as("top"), f.getField("dup").as("dup"))
+      })
+  }
+
+  /** Rows of `toks` where `gram_runs(toks, n)` and the retired folds
+    * disagree for some n in 1..10: a null array must give null (the
+    * folds give 0 over rawGrams' empty array), any other must give
+    * exactly maxRunCount's count and runStats' (top, dup) over rawGrams.
+    * At n = 1, `max_count` must also equal `maxRunCount(toks)`, the
+    * expression `td_repetition` ran, on every array without a null
+    * token (a null token is the gram `""`, see the null-token test). */
+  private def gramRunsMismatches(toks: DataFrame): Array[String] =
+    (1 to 10).flatMap { n =>
+      val gr = call_function("gram_runs", col("toks"), lit(n))
+      val grams = rawGrams(col("toks"), n)
+      val rawTokRuns =
+        if (n == 1) when(exists(col("toks"), _.isNull), gr.getField("max_count"))
+          .otherwise(maxRunCount(col("toks")))
+        else gr.getField("max_count")
+      toks.select(col("id"), gr.as("gr"), maxRunCount(grams).as("mc"),
+          runStats(grams).as("rs"), col("toks").isNull.as("null_toks"),
+          rawTokRuns.as("mc_toks"))
+        .filter(col("gr").isNull =!= col("null_toks") ||
+          coalesce(col("gr.max_count"), lit(0L)) =!= col("mc") ||
+          coalesce(col("gr.top_chars"), lit(0L)) =!= col("rs.top") ||
+          coalesce(col("gr.dup_chars"), lit(0L)) =!= col("rs.dup") ||
+          !(col("gr.max_count") <=> col("mc_toks")))
+        .collect().map(r => s"n=$n id=${r.get(0)}: ${r.get(1)} vs " +
+          s"max ${r.get(2)}, (top, dup) ${r.get(3)}, max over toks ${r.get(5)}")
+    }.toArray
+
+  test("gram_runs ≡ the retired sorted-run folds on crafted edge rows, n = 1..10") {
+    val texts = Seq(
+      null, "", " ", "a  b  a  b", "  lead and trail  ",
+      "x y z",                                 // fewer tokens than most n
+      "aa b aa b c d c d",                     // bigram count tie, lengths 4 vs 3
+      "zz a zz a q",                           // token count tie
+      "a b a b a b c",                         // CurationDiagnosticsSpec's doc
+      "é ü é ü 日本 日本 語 é ü",                // characters ≠ bytes
+      "a\u0001 b a b a\u0001 b a b",           // 0x01 sorts before the space
+      "ab a b ab a c a\tb a\t a",              // prefixes, tab below 0x20
+      "x y z w v x y z w v x y z w v")
+    // random texts over tokens that are prefixes of one another, carry
+    // bytes below and above 0x20 and multi-byte characters, plus empty ones
+    val alphabet = Seq("a", "ab", "a\u0001", "a\u001f", "b", "ba", "é", "éa", "日", "")
+    val rnd = new scala.util.Random(15)
+    val random = Seq.fill(300)(
+      Seq.fill(rnd.nextInt(40))(alphabet(rnd.nextInt(alphabet.size))).mkString(" "))
+    val docs = (texts ++ random).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text").select(col("id"), TextOps.tokens(col("text")).as("toks"))
+    // arrays no split makes: a token holding a space, null tokens, a
+    // token ending in a truncated UTF-8 character
+    val odd = Seq(
+      (1000L, Seq("a b", "a", "b", "a b", "a", "b")),
+      (1001L, Seq("a", null, "a", "b", null, "a", "b")),
+      (1002L, Seq(null, null, null))
+    ).toDF("id", "toks")
+      .unionByName(spark.range(1003, 1004).select(col("id"),
+        array(concat(lit("a"), unhex(lit("E2")).cast("string")), lit("b"),
+          concat(lit("a"), unhex(lit("E2")).cast("string")), lit("b")).as("toks")))
+    val bad = gramRunsMismatches(docs.unionByName(odd))
+    assert(bad.isEmpty, bad.take(20).mkString("\n"))
+  }
+
+  test("gram_runs skips a null token as concat_ws does: at n = 1 it is the gram \"\"") {
+    val r = Seq(Seq(null, "")).toDF("toks")
+      .select(call_function("gram_runs", col("toks"), lit(1)).as("gr"),
+        maxRunCount(col("toks")).as("mc_toks"),
+        maxRunCount(rawGrams(col("toks"), 1)).as("mc_grams"))
+      .head()
+    assert(r.getStruct(0).getLong(0) == 2L)
+    assert(r.getInt(2) == 2)
+    // the run fold over the raw tokens tells null from "": the one place
+    // gram_runs' n = 1 count differs from it (split never yields null)
+    assert(r.getInt(1) == 1)
+  }
+
+  test("gram_runs ≡ the retired sorted-run folds on the sf0.01 corpus, n = 1..10") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id").as("id"), TextOps.tokens(col("text")).as("toks"))
+    assert(docs.count() > 0)
+    val bad = gramRunsMismatches(docs)
+    assert(bad.isEmpty, bad.take(20).mkString("\n"))
   }
 }

@@ -17,9 +17,10 @@ class OrchestratorSpec extends AnyFunSuite {
   /** Copy a fixture bronze doc into the object store under its routed
     * prefix, returning the object key (simulates the reference's seeded
     * MinIO uploads). */
-  private def seed(objectStore: String, fixtureFile: String): String = {
+  private def seed(objectStore: String, fixtureFile: String,
+                   edit: String => String = identity): String = {
     val src = Paths.get(MarsPipeline.defaultFixtureDir, fixtureFile)
-    val line = Files.readString(src).trim
+    val line = edit(Files.readString(src).trim)
     val fn = """"filename": "([^"]+)"""".r.findFirstMatchIn(line).get.group(1)
     val prefix = graft.mars.RoverKeys.route(fn)
     val dir = Paths.get(objectStore, prefix)
@@ -146,6 +147,33 @@ class OrchestratorSpec extends AnyFunSuite {
       }
       assert(Incremental.read(spark, wh.goldDailyActivity).count() > 0)
     } finally queries.foreach(_.stop())
+  }
+
+  test("names holding a quote, a backslash or a control character survive the control plane") {
+    val (orch, _, topics, store) = mkOrchestrator("escape")
+    val odd = "Cu\"rio\\sity\t\u0001"
+    val oddInJson = "Cu\\\"rio\\\\sity\\t\\u0001" // as the manifest's JSON spells it
+    val keys = Seq("photos.jsonl", "coordinates.jsonl").map(seed(store, _)) :+
+      seed(store, "manifests.jsonl", _.replace("\"Curiosity\"", "\"" + oddInJson + "\""))
+    orch.loadStage(keys)
+    val sched = orch.transformStage()
+    assert(sched.tasks.exists(_.rover_name == odd), sched.tasks)
+    // the ingest stream reads this message: an invalid one is an all-null
+    // row, and its tasks would never be fetched
+    val sent = ControlPlane.readTopicBatch(spark, topics, ControlPlane.TopicScheduling)
+      .select(explode(col("ingestion_schedule.tasks")).as("t"))
+      .select(col("t.rover_name"), col("t.sol")).collect()
+      .map(r => GapScheduler.IngestionTask(r.getString(0), r.getInt(1))).toSeq
+    assert(sent == sched.tasks)
+
+    ControlPlane.produce(topics, ControlPlane.TopicMinioEvents, ControlPlane.minioEventJson(odd))
+    ControlPlane.produce(topics, ControlPlane.TopicLoadComplete,
+      ControlPlane.loadCompleteJson(odd, odd))
+    assert(ControlPlane.readTopicBatch(spark, topics, ControlPlane.TopicMinioEvents)
+      .select("Key").collect().map(_.getString(0)).toSeq == Seq(odd))
+    assert(ControlPlane.readTopicBatch(spark, topics, ControlPlane.TopicLoadComplete)
+      .filter(col("timestamp") === odd).select("tmp_jsonl_staging_path")
+      .collect().map(_.getString(0)).toSeq == Seq(odd))
   }
 
   test("streaming stage resumes from its checkpoint without reprocessing") {

@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, Expression}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.GramRuns
 
 /** Codifies the scale discipline for the WHOLE query surface: every
   * registered query's executed plan is audited — no CartesianProduct
@@ -95,6 +97,18 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(allNodes(ss.queryExecution.executedPlan)
       .exists(_.nodeName.contains("WindowGroupLimit")),
       ss.queryExecution.executedPlan.toString)
+  }
+
+  test("the repetition queries fold n-gram runs in gram_runs, not an interpreted aggregate()") {
+    // ArrayAggregate is CodegenFallback: the nine per-n folds it once ran
+    // built an interpreted row per gram
+    Seq("txt_gopher_rep", "txt_gopher_full", "td_repetition").foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan
+      val exprs = plan.collect { case node => node.expressions }.flatten
+      def has(p: Expression => Boolean) = exprs.exists(_.exists(p))
+      assert(has(_.isInstanceOf[GramRuns]), s"$name: no gram_runs in\n$plan")
+      assert(!has(_.isInstanceOf[ArrayAggregate]), s"$name: aggregate() in\n$plan")
+    }
   }
 
   test("no CartesianProduct; BNLJ only where tagged (and every tag earned); no undocumented quadratic joins") {

@@ -2,7 +2,7 @@
 """Paired A/B of two checkouts on one benchmark workload.
 
     python3 tools/loop_ab.py <parent-dir> <change-dir> \
-        --workload loop|sweep --pairs N --first-seed S [--layers] [--forks]
+        --workload loop|sweep --pairs N --first-seed S [--layers] [--forks] [--per-op]
 
 Runs the command `BENCHMARK.json` declares (`perfbench/run.py`) once per
 side per pair, one JVM at a time, with the pair's seed, the declared run
@@ -22,6 +22,12 @@ With --layers, one traced run per side follows the pairs (the first seed,
 `--trace 1`), and every per-layer metric `BENCHMARK.json` lists that is
 non-zero on either side is printed side by side with the change/parent
 ratio, so a claim can name the layer that moved.
+
+With --per-op, each side's median latency per op name (a sweep's query, a
+loop's `cycle`) over its untraced runs is printed side by side with the
+change/parent ratio, read from each run's
+`<side>/.bench_build/records/<workload>-seed<n>-trace0/ops.jsonl`, so a
+sweep claim can name the query that moved, not only its family.
 
 With --forks, one more untraced run per side follows (the first seed) under
 a JDK flight recording (`JAVA_TOOL_OPTIONS=-XX:StartFlightRecording`, file
@@ -85,6 +91,20 @@ def forks(side, cwd, command, workload, seed, seconds):
         print(f"  {n / max(ops, 1):8.3f}/op  {n:6d}  {cmd}")
 
 
+def op_latencies(cwd, workload, seed):
+    """Each op name's latencies in one untraced run's record (an op whose
+    timed run threw has a null latency and is left out, as run.py does)."""
+    path = os.path.join(cwd, ".bench_build", "records", f"{workload}-seed{seed}-trace0", "ops.jsonl")
+    by_name = collections.defaultdict(list)
+    with open(path) as f:
+        for line in f:
+            if line.strip():
+                o = json.loads(line)
+                if o["latency_s"] is not None:
+                    by_name[o["name"]].append(o["latency_s"])
+    return by_name
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return xs[0], xs[0], xs[0]
@@ -117,6 +137,8 @@ def main():
                     help="after the pairs, one traced run per side, per-layer metrics side by side")
     ap.add_argument("--forks", action="store_true",
                     help="then one run per side under JFR, process starts per op by command")
+    ap.add_argument("--per-op", action="store_true",
+                    help="print each side's median latency per op name over the pairs")
     a = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -125,12 +147,16 @@ def main():
     dirs = {"parent": os.path.abspath(a.parent_dir), "change": os.path.abspath(a.change_dir)}
 
     results = {"parent": [], "change": []}
+    per_op = {"parent": collections.defaultdict(list), "change": collections.defaultdict(list)}
     for i in range(a.pairs):
         seed = a.first_seed + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
             results[side].append(run(side, dirs[side], bench["command"], a.workload, seed,
                                      bench["run_seconds"]))
+            if a.per_op:
+                for name, xs in op_latencies(dirs[side], a.workload, seed).items():
+                    per_op[side][name].extend(xs)
 
     for side in ("parent", "change"):
         rs = results[side]
@@ -146,6 +172,14 @@ def main():
               f"parent {pq[1]:.4g} [{pq[0]:.4g}, {pq[2]:.4g}]  "
               f"change {cq[1]:.4g} [{cq[0]:.4g}, {cq[2]:.4g}]  "
               f"({(cq[1] - pq[1]) / pq[1]:+.1%})  wins {wins}/{a.pairs}  {word}")
+
+    if a.per_op:
+        print(f"{a.workload} per-op median latency_s over the pairs: parent  change  change/parent")
+        for name in sorted(set(per_op["parent"]) | set(per_op["change"])):
+            p, c = (statistics.median(per_op[side][name]) if per_op[side][name] else float("nan")
+                    for side in ("parent", "change"))
+            ratio = f"{c / p:.3f}" if p else "-"
+            print(f"  {name}: {p:.4g}  {c:.4g}  {ratio}")
 
     if a.layers:
         traced = {side: run(side, dirs[side], bench["command"], a.workload, a.first_seed,
