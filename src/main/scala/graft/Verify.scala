@@ -44,8 +44,8 @@ object Verify {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .flatMap { case (name, fn) =>
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          fn(spark, sfDir).coalesce(1).write.options(graft.mars.LocalFs.writeOptions)
+            .mode("overwrite").parquet(s"$outDir/$name")
           None
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")

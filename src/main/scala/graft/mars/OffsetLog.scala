@@ -1,5 +1,6 @@
 package graft.mars
 
+import java.io.FileNotFoundException
 import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import java.util.UUID
 
@@ -145,7 +146,16 @@ final case class TableLog(spark: SparkSession, table: String) {
   def dirs(v: Long): Seq[String] = log.read(Dir, v).collect { case Seq(Add, d) => d }
 
   /** The newest version and its directories. */
-  def latest: Option[(Long, Seq[String])] = versions.lastOption.map(v => v -> dirs(v))
+  def latest: Option[(Long, Seq[String])] = latestOf(versions)
+
+  /** The newest of the `listed` versions and its directories. Two appends
+    * that commit after the listing drop its newest version (see
+    * [[commit]]), which can only mean a newer one exists: the log is
+    * listed again. */
+  private[graft] def latestOf(listed: Seq[Long]): Option[(Long, Seq[String])] =
+    listed.lastOption.flatMap { v =>
+      try Some(v -> dirs(v)) catch { case _: FileNotFoundException => latestOf(versions) }
+    }
 
   /** Publishes the version after the newest, whose directories are `next`
     * of the newest's (of none, for a new table); one that lost the race

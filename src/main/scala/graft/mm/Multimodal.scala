@@ -26,13 +26,10 @@ import graft.ops.BlockedPairs
   *    is content-agnostic fingerprinting; their scaladocs state what a
   *    format-specific build would decode first.
   *
-  * mapPartitions re-review (the r6 VERDICT ask): with the codecs as
-  * native expressions, batched per-partition decode is NOT needed for
-  * WAV/BMP — the expressions run inside whole-stage codegen with no
-  * partition barrier and no boxing. [[decodeBatched]] remains only as
-  * the per-partition codec-CONTEXT amortization shape a stateful native
-  * codec (e.g. a hardware decoder handle) would require, and is pinned
-  * by spec to produce exactly the expression path's values.
+  * With the codecs as native expressions, decode needs no per-partition
+  * batching: the expressions run inside whole-stage codegen with no
+  * partition barrier and no boxing. [[resizeBatched]] is the one
+  * `mapPartitions` operator left, for its per-partition digest state.
   */
 object Multimodal {
 
@@ -47,11 +44,6 @@ object Multimodal {
     when(col("format") === "bmp", call_function("bmp_luma", col("content")))
       .when(col("format") === "png", call_function("png_luma", col("content")))
       .otherwise(call_function("bmp_luma", lit(Array.emptyByteArray)))
-
-  final case class LakeRecord(doc_id: Long, format: String, content: Array[Byte])
-
-  final case class MediaFeatures(doc_id: Long, format: String,
-                                 n_units: Int, unit_sum: Long, decoder: String)
 
   /** Synthesize a media table from the documents corpus: text bytes play
     * the role of encoded content; metadata derives deterministically from
@@ -104,33 +96,11 @@ object Multimodal {
         call_function("png_encode", payload, width).as("content"))
   }
 
-  /** Batched per-partition decode of [[mediaLake]] rows — retained as
-    * the mapInPandas-shaped CONTEXT-amortization pattern a stateful
-    * native codec needs; the values are exactly what the expression path
-    * ([[decodeFeatures]]) computes (spec-pinned), because both call the
-    * same [[graft.functions.MediaCodec]] parsers. Prefer the expression
-    * path: it stays inside whole-stage codegen. */
-  def decodeBatched(media: Dataset[LakeRecord]): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { records =>
-      // per-partition init: a real stateful codec opens its context here
-      records.map { r =>
-        val units: Array[Int] =
-          if (r.format == "wav") graft.functions.MediaCodec.wavSamples(r.content)
-          else graft.functions.MediaCodec.bmpLuma(r.content)
-        var s = 0L
-        var i = 0
-        while (i < units.length) { s += math.abs(units(i).toLong); i += 1 }
-        MediaFeatures(r.doc_id, r.format, units.length, s, decoder = "jvm-1.0")
-      }
-    }
-  }
-
   final case class ResizedMedia(doc_id: Long, new_width: Int, new_height: Int,
                                 resized_len: Int, resized_md5: String)
 
-  /** Batched per-partition resize — same mapPartitions shape as
-    * decodeBatched (codec/digest state initialized once per partition).
+  /** Batched per-partition resize: the codec/digest state is initialized
+    * once per partition, not once per row.
     * The stub "resize" halves the dimensions and keeps the first half of
     * the content bytes (a real build would re-encode); deterministic, so
     * the whole pipeline stays oracle-checkable. */

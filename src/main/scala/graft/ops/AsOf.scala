@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE shuffle (hash on the key) + one per-partition sort —
   * the naive range-join formulation explodes to |left|×|right| pairs per
-  * key before filtering, which the planner must never see. Skewed keys
-  * fall to [[joinAsOfSalted]]: per-(key, time-range) windows with a
-  * cross-bucket boundary carry, identical answers.
+  * key before filtering, which the planner must never see. A hot key
+  * lands in one task: the window is partitioned by the key alone.
   *
   * Requirements: non-key column names must be disjoint between the sides
   * (rename before calling); if several right rows share (key, ts), which
@@ -112,109 +111,6 @@ object AsOf {
       case None => carried
     }
     masked.drop("__ts", "__side", "__rts")
-      .select((leftCols ++ carryCols).map(col): _*)
-  }
-
-  /** Skew-hardened as-of: identical semantics to [[joinAsOf]], but the
-    * per-key window is SUB-PARTITIONED by time range so a hot key (one
-    * device emitting 99% of the telemetry) never lands in a single task.
-    *
-    * Mechanism — range bucketing with cross-bucket boundary carry:
-    *  1. rows bucket by `floor((ts − min)/width)` over `buckets` equal
-    *     time ranges (global min/max: one aggregate, two driver
-    *     scalars). Equal timestamps share a bucket, so bucket order is
-    *     ts order and the per-(key, bucket) window preserves as-of
-    *     semantics WITHIN its range.
-    *  2. a left row whose latest right predecessor lives in an EARLIER
-    *     bucket needs carry-in: per (key, bucket), each carry COLUMN
-    *     reduces to its last non-null right value (per-column, matching
-    *     joinAsOf's last-non-null carry — a null in the newest right row
-    *     must not mask an earlier non-null), and a second window over
-    *     the |keys|×|buckets|-row bucket spine (previous buckets only)
-    *     yields each bucket's carry-in per column.
-    *  3. in-bucket matches win (their ts is ≥ the bucket start, hence ≥
-    *     any earlier bucket's rows); the carry-in fills only windows
-    *     with no in-bucket predecessor — a per-row coalesce.
-    *
-    * Scale: the big-side shuffle is hash(keys, bucket) — hot-key
-    * parallelism × `buckets`, the knob to grow with the hot key's row
-    * count. The spine frame is bucket-grain (tiny), its window cheap,
-    * and the carry-in join broadcasts. Ties at equal ts match exactly as
-    * [[joinAsOf]] (side ordering inside each bucket). Pre-dedup the
-    * right side on (keys, ts) for a deterministic winner. */
-  def joinAsOfSalted(left: DataFrame, right: DataFrame, keys: Seq[String],
-                     leftTs: String, rightTs: String,
-                     buckets: Int = 32): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val carryCols = right.columns.filterNot(keys.contains).toSeq
-    val leftCols = left.columns.toSeq
-
-    val taggedLeft = carryCols.foldLeft(
-      left.withColumn("__ts", col(leftTs)).withColumn("__side", lit(1))) {
-      (df, c) => df.withColumn(c, lit(null).cast(right.schema(c).dataType))
-    }
-    val taggedRight = leftCols.filterNot(keys.contains).foldLeft(
-      right.withColumn("__ts", col(rightTs)).withColumn("__side", lit(0))) {
-      (df, c) => df.withColumn(c, lit(null).cast(left.schema(c).dataType))
-    }
-    val unioned = taggedLeft.unionByName(taggedRight)
-
-    // numeric image of the ts for range arithmetic (ordering-preserving)
-    val tsn = right.schema(rightTs).dataType match {
-      case _: org.apache.spark.sql.types.NumericType =>
-        col("__ts").cast("double")
-      case _ => unix_micros(col("__ts")).cast("double")
-    }
-    val withTsn = unioned.withColumn("__tsn", tsn)
-    // bucket bounds: ONE aggregate, two driver scalars — the same
-    // bounded-driver-traffic posture as the BPE argmax
-    val bounds = withTsn.agg(min("__tsn"), max("__tsn")).collect()(0)
-    val (mn, mx) =
-      if (bounds.isNullAt(0)) (0.0, 0.0)
-      else (bounds.getDouble(0), bounds.getDouble(1))
-    val width = math.max((mx - mn) / buckets, java.lang.Double.MIN_VALUE)
-    val withB = withTsn.withColumn("__b",
-      least(greatest(floor((col("__tsn") - mn) / width), lit(0)),
-        lit(buckets - 1)).cast("int"))
-
-    // per-(key, bucket) as-of carry — the hot key now spreads over
-    // `buckets` tasks
-    val w = Window.partitionBy((keys :+ "__b").map(col): _*)
-      .orderBy(col("__ts"), col("__side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBucket = carryCols.foldLeft(withB) {
-      (df, c) => df.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-    }
-
-    // bucket spine: each (key, bucket) reduced PER CARRY COLUMN to its
-    // last NON-NULL right value (joinAsOf's last(_, ignoreNulls) is a
-    // per-column carry, so a null in the latest right row must not mask
-    // an earlier non-null — a row-grain spine would diverge exactly
-    // there); then carry-in = last non-null per column over PREVIOUS
-    // buckets. Ties at equal ts take the larger value — inside the
-    // "pre-dedup the right side for a deterministic winner" contract.
-    val spine = withB
-      .groupBy((keys :+ "__b").map(col): _*)
-      .agg(
-        max(when(col("__side") === 0 && col(carryCols.head).isNotNull,
-          struct(col("__ts").as("t"), col(carryCols.head).as("v"))))
-          .as(s"__st_${carryCols.head}"),
-        carryCols.tail.map(c =>
-          max(when(col("__side") === 0 && col(c).isNotNull,
-            struct(col("__ts").as("t"), col(c).as("v")))).as(s"__st_$c")): _*)
-    val wB = Window.partitionBy(keys.map(col): _*).orderBy(col("__b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carryIn = carryCols.foldLeft(spine) { (df, c) =>
-      df.withColumn(s"__ci_$c",
-        last(col(s"__st_$c"), ignoreNulls = true).over(wB)("v"))
-    }.select((keys :+ "__b").map(col) ++ carryCols.map(c => col(s"__ci_$c")): _*)
-
-    val filled = carryCols.foldLeft(
-      inBucket.join(carryIn, keys :+ "__b", "left")) {
-      (df, c) => df.withColumn(c, coalesce(col(c), col(s"__ci_$c")))
-    }
-    filled
-      .filter(col("__side") === 1)
       .select((leftCols ++ carryCols).map(col): _*)
   }
 

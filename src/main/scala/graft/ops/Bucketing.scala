@@ -22,7 +22,7 @@ object Bucketing {
     * session catalog (in-memory catalog is enough; no Hive required). */
   def writeBucketed(df: DataFrame, table: String, path: String,
                     key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
+    df.write.options(graft.mars.LocalFs.writeOptions).mode("overwrite")
       .option("path", path)
       .bucketBy(buckets, key)
       .sortBy(key)

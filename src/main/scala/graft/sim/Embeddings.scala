@@ -242,19 +242,11 @@ object Embeddings {
     val e = embeddings.select(col("vec_id"), col("label").as("cell"),
       asDouble(col("embedding")).as("emb"))
       .withColumn("vnorm", norm(col("emb")))
-    ivfCore(e, centroids(embeddings), e.filter(queryFilter), k, nprobe)
-  }
-
-  /** Probe routing + in-cell exact top-k over a postings frame of
-    * (vec_id, cell, emb, vnorm). Shared by the inline [[ivfSearch]] and
-    * the persisted-index [[searchIvfIndex]] path. */
-  private def ivfCore(e: DataFrame, cents: DataFrame, queries: DataFrame,
-                      k: Int, nprobe: Int): DataFrame = {
-    val q = queries
+    val q = e.filter(queryFilter)
       .select(col("vec_id").as("query_id"), col("emb").as("qemb"),
         col("vnorm").as("qnorm"))
     val wK = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    ivfProbes(q, cents, nprobe, keep = Seq("qemb", "qnorm"))
+    ivfProbes(q, centroids(embeddings), nprobe, keep = Seq("qemb", "qnorm"))
       .join(e, col("probe_cell") === col("cell") && col("vec_id") =!= col("query_id"))
       .withColumn("cos",
         cosinePre(col("qemb"), col("emb"), col("qnorm"), col("vnorm")))
@@ -265,9 +257,9 @@ object Embeddings {
   }
 
   /** One k-means refinement step: re-assign every vector to its
-    * nearest (cosine) centroid. The iterative-ML primitive under IVF
-    * index maintenance — run it when drift accumulates, then rebuild
-    * centroids from the new assignment.
+    * nearest (cosine) centroid; `moved` flags the vectors whose cell
+    * changed. Centroids rebuilt from the new assignment complete one
+    * Lloyd round.
     *
     * The argmax is the `cell_argmax` scan of [[exhaustiveAssign]],
     * carrying `old_cell` through: one broadcast one-row centroid array,
@@ -279,126 +271,6 @@ object Embeddings {
     exhaustiveAssign(e, centroids(embeddings), keep = Seq("old_cell"))
       .select(col("vec_id"), col("old_cell"), col("cell").as("new_cell"),
         (col("old_cell") =!= col("cell")).cast("int").as("moved"))
-  }
-
-  /** Persist the IVF index: the build/search split of a real ANN serving
-    * path. Postings are written `partitionBy(cell)` so a search that
-    * probes few cells READS few cells — the probe join is on the
-    * partition column with a small broadcastable side, exactly the shape
-    * Spark's dynamic partition pruning skips files for. Centroids are a
-    * |cells|-row table. The norm is precomputed at build time; searches
-    * never touch raw embeddings outside the probed cells. */
-  def buildIvfIndex(embeddings: DataFrame, indexDir: String): Unit = {
-    embeddings.select(col("vec_id"), col("label").as("cell"),
-        asDouble(col("embedding")).as("emb"))
-      .withColumn("vnorm", norm(col("emb")))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/postings")
-    centroids(embeddings).write.mode("overwrite").parquet(s"$indexDir/centroids")
-  }
-
-  /** [[buildIvfIndex]] with the stored-cell ≡ stream-routing invariant
-    * established AT BIRTH (VERDICT r10 #1): centroids derive from the
-    * caller's labels exactly as in [[buildIvfIndex]], but the postings
-    * store each vector under its FLAT [[routeToCells]] assignment
-    * against those centroids — [[IvfLifecycle.maintain]]'s final
-    * re-route, applied at version 1 instead of only at the first
-    * drift-triggered refresh.
-    *
-    * Why it matters: [[buildIvfIndex]] stores the caller's `label`
-    * verbatim. When those labels come from the two-level trained
-    * assignment ([[assignToCells]] with coarse routing), a boundary
-    * vector can be labeled into a cell its flat routing never probes —
-    * measured at the r10 ingest bench as 0.4% of a 200k store, which
-    * admitted 83 exact replicas as false novelty
-    * (BENCH_SEMDEDUP_INGEST batch 0). An index that takes routed
-    * appends ([[appendToIvfIndex]]) and probes them by cell must be
-    * built through this entry or through [[IvfLifecycle.init]] (which
-    * calls it); the label-faithful [[buildIvfIndex]] remains the right
-    * build for the oracle paths, whose recorded answers reproduce the
-    * inline label-cell searches bit-exactly.
-    *
-    * Scale shape: one extra flat assign pass over the corpus
-    * (broadcast |cells|-row centroid table, the bounded-linear leg
-    * every decade measured) — nothing else changes. */
-  def buildIvfIndexRouted(embeddings: DataFrame, indexDir: String): Unit = {
-    val cents = centroids(embeddings)
-    appendRoutedToIvf(
-      routeToCells(embeddings.select(col("vec_id"), col("embedding")), cents),
-      indexDir, overwrite = true)
-    cents.write.mode("overwrite").parquet(s"$indexDir/centroids")
-  }
-
-  /** Incremental index maintenance: route NEW vectors to their nearest
-    * existing centroid and append those postings partitions — no rebuild,
-    * no touch of existing postings. This is standard IVF lifecycle:
-    * centroids go stale as data drifts (new vectors join the cells that
-    * exist, not the cells that ideally would), and the refresh pass is
-    * [[kmeansAssign]] + [[buildIvfIndex]] when drift accumulates.
-    * Routing is [[routeToCells]]: the same `cell_argmax` scan as
-    * kmeansAssign, and a zero-norm vector fails the append. It is a
-    * pure function of (embedding, centroids): as long as the centroid
-    * table is unchanged, the same `vec_id` always lands in the same
-    * cell — which is what lets a dedup check scope itself to the routed
-    * cells instead of scanning the whole index. */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                       embeddings: DataFrame): Unit =
-    appendRoutedToIvf(
-      routeToCells(embeddings, spark.read.parquet(s"$indexDir/centroids")), indexDir)
-
-  /** The flat nearest-centroid argmax behind [[appendToIvfIndex]],
-    * against an explicit (cell, cemb) centroid frame — shared with the
-    * lifecycle rebuild ([[IvfLifecycle.maintain]]) so STORED cells and
-    * appended vectors' cells derive from the identical expression (same
-    * rounding, same low-cell-id tie-break) and can never disagree: "stored
-    * cell = where this vector routes" is what a cell-scoped probe of a
-    * replayed batch rests on, and a rebuild must re-establish it by
-    * construction. Output: (vec_id, emb, vnorm, cell), write-ready for
-    * the postings layout.
-    *
-    * The argmax is [[exhaustiveAssign]]'s `cell_argmax` scan carrying
-    * `emb`/`vnorm` through, so no aggregate and no join back to the
-    * input. A zero-norm vector has no cosine to any centroid: it raises
-    * an error here rather than route silently to the lowest cell
-    * (appended input reaches this entry from outside the program). */
-  def routeToCells(embeddings: DataFrame, cents: DataFrame): DataFrame = {
-    val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-      .withColumn("vnorm", norm(col("emb")))
-      .withColumn("vnorm", when(col("vnorm") === 0.0,
-        raise_error(concat(lit("zero-norm vector "), col("vec_id").cast("string"),
-          lit(" has no cosine to any centroid")))).otherwise(col("vnorm")))
-    exhaustiveAssign(e, cents, keep = Seq("emb", "vnorm"))
-      .select(col("vec_id"), col("emb"), col("vnorm"), col("cell"))
-  }
-
-  /** Append (or, for a fresh build, overwrite) a [[routeToCells]]-
-    * shaped frame into the postings layout.
-    *
-    * The write repartitions by cell first, so each append lands ONE
-    * file per touched cell instead of one per (shuffle partition ×
-    * cell). Measured necessity (r11 drift bench): without it, a
-    * 10k-row append over a 1,600-cell index shattered into ~32 tiny
-    * files per cell per batch, and after a handful of appends every
-    * subsequent postings READ — search, drift, the admission probe —
-    * spent minutes in driver-side file listing at <10% executor
-    * utilization. Listing cost is the scale killer for high-cell-count
-    * postings under steady ingest; one-file-per-cell-per-append bounds
-    * it at |cells| × appends, and [[IvfLifecycle.maintain]]'s rebuild
-    * is the standing compaction that resets it. */
-  def appendRoutedToIvf(routed: DataFrame, indexDir: String,
-                        overwrite: Boolean = false): Unit =
-    routed.select(col("vec_id"), col("emb"), col("vnorm"), col("cell"))
-      .repartition(col("cell"))
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy("cell").parquet(s"$indexDir/postings")
-
-  /** Search a [[buildIvfIndex]]-persisted index. Results are identical to
-    * the inline [[ivfSearch]] over the same vectors (spec-asserted). */
-  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                     queryFilter: Column, k: Int = 5, nprobe: Int = 1): DataFrame = {
-    val post = spark.read.parquet(s"$indexDir/postings")
-      .select(col("vec_id"), col("cell").cast("int").as("cell"), col("emb"), col("vnorm"))
-    val cents = spark.read.parquet(s"$indexDir/centroids")
-    ivfCore(post, cents, post.filter(queryFilter), k, nprobe)
   }
 
   /** Embedding-cosine near-duplicate pairs, blocked by the coarse cell
@@ -529,7 +401,7 @@ object Embeddings {
   /** The one-level assign: every row of `e` (vec_id, emb, `keep`…)
     * argmax-scans the whole broadcast centroid array, returning
     * (vec_id, `keep`…, cell, ccos) — the one nearest-centroid argmax of
-    * [[kmeansAssign]], [[routeToCells]] and the exhaustive Lloyd pass. */
+    * [[kmeansAssign]] and the exhaustive Lloyd pass. */
   private def exhaustiveAssign(e: DataFrame, cents: DataFrame,
                                keep: Seq[String] = Nil): DataFrame = {
     val carried = col("vec_id") +: keep.map(col)
@@ -731,8 +603,7 @@ object Embeddings {
     * round r (under round r's centroids), and how many vectors changed
     * cell vs round r−1. Mean cosine rises and movement falls as Lloyd's
     * converges; this is the signal that picks `iters` (run until
-    * n_moved ~ 0) and the drift monitor that schedules an IVF index
-    * refresh. The rounds are [[lloydRounds]], the loop
+    * n_moved ~ 0). The rounds are [[lloydRounds]], the loop
     * [[kmeansTrainSampled]] trains with, so under sampled training the
     * telemetry measures convergence on the sample — the thing the
     * iteration-count decision is actually made on. The per-round metrics
@@ -776,8 +647,7 @@ object Embeddings {
     * `nCells > 0` derives the cells from [[kmeansCells]] — k scales with
     * the data, independent of any label the input happens to carry, and
     * centroids are recomputed from the derived assignment. `nCells = 0`
-    * keeps the input's `label` as the cell (the pre-clustered case, e.g.
-    * a persisted IVF index's cells). */
+    * keeps the input's `label` as the cell (the pre-clustered case). */
   def semDedup(embeddings: DataFrame, threshold: Double = 0.4,
                nCells: Int = 0, nCoarse: Int = 1,
                nCoarse2: Int = 1, quantPre: Boolean = false,
@@ -1420,13 +1290,8 @@ object Embeddings {
     * `max(struct(-dist, -cell))` — map-side combinable, no window, ties
     * break to the lowest cell id in any engine. */
   def pqCodes(embeddings: DataFrame, m: Int = 4): DataFrame =
-    pqCodesWith(embeddings, centroids(embeddings), m)
-
-  /** [[pqCodes]] against an already-derived codebook — callers that also
-    * need the centroids elsewhere (pqSearch's LUT, a persisted index
-    * build) pass them in so the centroid aggregation runs once. */
-  def pqCodesWith(embeddings: DataFrame, cents: DataFrame, m: Int): DataFrame =
-    pqCodesOfDims(embeddings, cents, m, vectorDims(embeddings, "embedding"))
+    pqCodesOfDims(embeddings, centroids(embeddings), m,
+      vectorDims(embeddings, "embedding"))
 
   /** The vector width of `vecCol`, read from its first row: one eager job,
     * run once per search and handed to every step that needs it. */
@@ -1473,34 +1338,9 @@ object Embeddings {
       .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qemb"))
     // one centroid derivation feeds both the code assignment and the LUT
     val cents = centroids(embeddings)
-    pqSearchCore(pqCodesOfDims(embeddings, cents, m, dims), cents, queries, k, m, dims)
-  }
-
-  /** Persist the PQ index — codes + codebook, the PQ sibling of
-    * [[buildIvfIndex]]: searches read the m-int code table and the
-    * |cells|-row codebook; raw embeddings never load again (queries bring
-    * their own vectors). At 100 TB this is the difference between
-    * scanning 4-byte codes and scanning 256-byte floats. */
-  def buildPqIndex(embeddings: DataFrame, indexDir: String, m: Int = 4): Unit = {
-    pqCodes(embeddings, m).write.mode("overwrite").parquet(s"$indexDir/codes")
-    centroids(embeddings).write.mode("overwrite").parquet(s"$indexDir/codebook")
-  }
-
-  /** ADC search over a [[buildPqIndex]]-persisted index; results are
-    * identical to the inline [[pqSearch]] (spec-asserted). `queries` is
-    * (query_id, qemb double[]). */
-  def searchPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                    queries: DataFrame, k: Int = 5, m: Int = 4): DataFrame = {
-    val dims = vectorDims(queries, "qemb")
-    pqSearchCore(spark.read.parquet(s"$indexDir/codes"),
-      spark.read.parquet(s"$indexDir/codebook"), queries, k, m, dims)
-  }
-
-  /** Exhaustive ADC: every code row is a candidate of every query. */
-  private def pqSearchCore(codes: DataFrame, cents: DataFrame, queries: DataFrame,
-                           k: Int, m: Int, dims: Int): DataFrame = {
+    // exhaustive ADC: every code row is a candidate of every query
     val lut = adcLut(queries, cents, m, dims, "query_id")
-    adcTopK(longCodes(codes, Seq("vec_id"), m)
+    adcTopK(longCodes(pqCodesOfDims(embeddings, cents, m, dims), Seq("vec_id"), m)
       .join(broadcast(lut), col("csub") === col("sub") && col("code") === col("cell"))
       .filter(col("vec_id") =!= col("query_id")), m, k)
   }
@@ -1560,9 +1400,8 @@ object Embeddings {
     *
     * Shape at 100 TB: the probe table is query-set × nprobe rows
     * (broadcast); candidate generation is one broadcast join against the
-    * code table's cell column (partition-prunable in a persisted layout,
-    * see [[buildIvfIndex]]); the ADC LUT join and fixed-order sum are
-    * [[pqSearchCore]]'s ([[adcLut]], [[adcTopK]]), restricted to
+    * code table's cell column; the ADC LUT join and fixed-order sum are
+    * [[pqSearch]]'s ([[adcLut]], [[adcTopK]]), restricted to
     * candidates. */
   def ivfPqSearch(embeddings: DataFrame, queryFilter: Column, k: Int = 5,
                   nprobe: Int = 1, m: Int = 4): DataFrame = {
@@ -1577,7 +1416,14 @@ object Embeddings {
       .select(col("vec_id").as("query_id"), asDouble(col("embedding")).as("qemb"))
     val codes = pqCodesOfDims(embeddings, cents, m, dims)
       .join(embeddings.select(col("vec_id"), col("label").as("cell")), "vec_id")
-    ivfPqCore(codes, cents, queries, ivfProbes(queries, cents, nprobe), k, m, dims)
+    // probe-pruned ADC: only the probed cells' codes are candidates
+    val lut = adcLut(queries, cents, m, dims, "lq")
+    val cand = codes.join(broadcast(ivfProbes(queries, cents, nprobe)),
+        col("cell") === col("probe_cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+    adcTopK(longCodes(cand, Seq("query_id", "vec_id"), m)
+      .join(broadcast(lut), col("query_id") === col("lq") &&
+        col("csub") === col("sub") && col("code") === col("cell")), m, k)
   }
 
   /** IVF probe routing: each query's `nprobe` nearest centroids by
@@ -1593,51 +1439,6 @@ object Embeddings {
       .withColumn("pr", row_number().over(wProbe))
       .filter(col("pr") <= nprobe)
       .select(col("query_id") +: keep.map(col) :+ col("cell").as("probe_cell"): _*)
-  }
-
-  /** Persist the IVF-PQ index: PQ codes PARTITIONED BY CELL plus the
-    * codebook — the combined serving layout of [[buildIvfIndex]] and
-    * [[buildPqIndex]]. A search reads only the probed cells' code
-    * partitions (static partition pruning, spec-asserted) and never
-    * touches a raw embedding: at 100 TB the per-query read is
-    * ~(nprobe/|cells|) × 4-byte codes. */
-  def buildIvfPqIndex(embeddings: DataFrame, indexDir: String, m: Int = 4): Unit = {
-    val cents = centroids(embeddings)
-    pqCodesWith(embeddings, cents, m)
-      .join(embeddings.select(col("vec_id"), col("label").as("cell")), "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$indexDir/codes")
-    cents.write.mode("overwrite").parquet(s"$indexDir/codebook")
-  }
-
-  /** Search a [[buildIvfPqIndex]]-persisted index; identical results to
-    * the inline [[ivfPqSearch]] (spec-asserted). `queries` is
-    * (query_id, qemb double[]). The probed cells are collected (bounded
-    * by query-set × nprobe — a driver-side scalar) and pushed into the
-    * codes scan as a static partition filter, so only those partitions'
-    * files are read. */
-  def searchIvfPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                       queries: DataFrame, k: Int = 5, nprobe: Int = 1,
-                       m: Int = 4): DataFrame = {
-    val dims = vectorDims(queries, "qemb")
-    val cents = spark.read.parquet(s"$indexDir/codebook")
-    val q = queries.select(col("query_id"), asDouble(col("qemb")).as("qemb"))
-    val probes = ivfProbes(q, cents, nprobe)
-    val cells = probes.select("probe_cell").distinct().collect().map(_.get(0))
-    val codes = spark.read.parquet(s"$indexDir/codes")
-      .filter(col("cell").isin(cells.toIndexedSeq: _*))
-    ivfPqCore(codes, cents, q, probes, k, m, dims)
-  }
-
-  /** Probe-pruned ADC: shared by the inline and persisted IVF-PQ paths.
-    * `codes` carries (vec_id, cell, code_0..code_{m-1}). */
-  private def ivfPqCore(codes: DataFrame, cents: DataFrame, queries: DataFrame,
-                        probes: DataFrame, k: Int, m: Int, dims: Int): DataFrame = {
-    val lut = adcLut(queries, cents, m, dims, "lq")
-    val cand = codes.join(broadcast(probes), col("cell") === col("probe_cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-    adcTopK(longCodes(cand, Seq("query_id", "vec_id"), m)
-      .join(broadcast(lut), col("query_id") === col("lq") &&
-        col("csub") === col("sub") && col("code") === col("cell")), m, k)
   }
 
   /** Cluster-quality metric (centroid silhouette): per vector,

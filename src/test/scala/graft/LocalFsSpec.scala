@@ -109,15 +109,20 @@ class LocalFsSpec extends AnyFunSuite {
       assert(mode(nio) == mode(std) && modes(nio) == modes(std), s"umask $umask")
       assert(mode(nio) == Integer.parseInt(dirMode, 8), s"umask $umask")
     }
-    // every warehouse entry has the mode a plain write gives its kind; a
-    // table log entry is a link to a file Hadoop made
+    // every entry the warehouse, a verify dump and a bucketed table write
+    // has the mode a plain write gives its kind; a table log entry is a
+    // link to a file Hadoop made
     val std = root.resolve("std_default")
     val (dirMode, fileModes) = (mode(std), modes(std).values.toSet)
     assert(fileModes.size == 1, modes(std))
-    val written = root.resolve("warehouse")
-    (modes(written) + ("." -> mode(written))).foreach { case (p, m) =>
-      val want = if (Files.isDirectory(written.resolve(p))) dirMode else fileModes.head
-      assert(m == want, s"$p has mode ${m.toOctalString}, not ${want.toOctalString}")
-    }
+    assert(Verify.dump(spark, "/nonexistent/sf", root.resolve("verify").toString,
+      Set("mars_dim_rovers")).isEmpty)
+    graft.ops.Bucketing.writeBucketed(df, "localfs_bucketed", root.resolve("bucketed").toString,
+      "filename", 2)
+    for (written <- Seq("warehouse", "verify", "bucketed").map(root.resolve))
+      (modes(written) + ("." -> mode(written))).foreach { case (p, m) =>
+        val want = if (Files.isDirectory(written.resolve(p))) dirMode else fileModes.head
+        assert(m == want, s"$written/$p has mode ${m.toOctalString}, not ${want.toOctalString}")
+      }
   }
 }

@@ -290,21 +290,6 @@ class MediaCodecSpec extends AnyFunSuite {
     assert(luma.toSeq === expected)
   }
 
-  test("expression path ≡ mapPartitions path (the r6 re-review pin)") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val lake = graft.mm.Multimodal.mediaLake(docs)
-    val exprSide = graft.mm.Multimodal.decodeFeatures(lake)
-      .select("doc_id", "n_units", "unit_sum")
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(_._1)
-    val mpSide = graft.mm.Multimodal.decodeBatched(
-        lake.as[graft.mm.Multimodal.LakeRecord])
-      .collect().map(f => (f.doc_id, f.n_units, f.unit_sum)).sortBy(_._1)
-    assert(exprSide.toSeq === mpSide.toSeq)
-    assert(exprSide.nonEmpty)
-  }
-
   // ---- AVI (r9) ----
 
   /** payload (B,G,R) = (0x0A, 0x14, 0x1E), width 1 → one 1×4 frame

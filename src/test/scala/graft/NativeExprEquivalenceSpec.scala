@@ -116,16 +116,6 @@ class NativeExprEquivalenceSpec extends AnyFunSuite {
     // (NaN greatest, ties to lowest cell — the max(struct) rule)
     val byId = got.map(t => t._1 -> t._2).toMap
     assert(byId(1L) == 10L && byId(3L) == 10L)
-    // the IVF routing entry lands every vector of the same frame in the
-    // reference shape's cell, the tie and the NaN row included
-    val asInput = e.select(col("vec_id"), col("emb").as("embedding"))
-    val routed = Embeddings.routeToCells(asInput, cents).orderBy("vec_id")
-      .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cell")))
-    assert(routed.toSeq == want.toSeq.map(t => (t._1, t._2)))
-    // a zero-norm vector has no cosine to any centroid: routing it must
-    // fail, not land it silently in the lowest cell
-    val zeroNorm = asInput.union(Seq((5L, Seq(0.0, 0.0))).toDF("vec_id", "embedding"))
-    intercept[Exception](Embeddings.routeToCells(zeroNorm, cents).collect())
   }
 
   test("cell_argmax on an empty centroid table yields no rows, like the join") {

@@ -152,48 +152,6 @@ class PropertiesSpec extends AnyFunSuite {
     }
   }
 
-  test("salted as-of matches joinAsOf on random data at several bucket counts") {
-    import spark.implicits._
-    val ptsGen = Gen.listOfN(60, Gen.zip(Gen.choose(0L, 4L), Gen.choose(0, 500)))
-    val refGen = Gen.listOfN(30, Gen.zip(Gen.choose(0L, 4L), Gen.choose(0, 500)))
-    for (seed <- 1 to 3; buckets <- Seq(1, 5, 64)) {
-      val pts = sample(ptsGen, seed).zipWithIndex
-        .map { case ((k, t), i) => (i.toLong, k, t) }
-      val refs = sample(refGen, seed + 10).distinctBy(r => (r._1, r._2)).zipWithIndex
-        .map { case ((k, t), i) => (k, t, s"v$i") }
-      val plain = graft.ops.AsOf.joinAsOf(
-        pts.toDF("id", "k", "t"), refs.toDF("k", "rt", "rv"),
-        Seq("k"), "t", "rt")
-        .collect().map(r => r.getLong(0) -> Option(r.getAs[String]("rv"))).toMap
-      val salted = graft.ops.AsOf.joinAsOfSalted(
-        pts.toDF("id", "k", "t"), refs.toDF("k", "rt", "rv"),
-        Seq("k"), "t", "rt", buckets = buckets)
-        .collect().map(r => r.getLong(0) -> Option(r.getAs[String]("rv"))).toMap
-      assert(salted == plain, s"seed=$seed buckets=$buckets")
-    }
-  }
-
-  test("salted as-of carries per-column last-non-null across buckets (a newer null must not mask)") {
-    import spark.implicits._
-    // right side: v non-null at ts=1, then null at ts=2 — both in the
-    // earliest bucket; the left row at ts=100 lives in the last bucket
-    // with no in-bucket right rows, so its value comes from carry-in.
-    // joinAsOf's per-column last-non-null yields "x"; a row-grain
-    // carry-in would ship the ts=2 row's null instead.
-    val left = Seq((1L, 0L, 100)).toDF("id", "k", "t")
-    val right = Seq((0L, 1, Option("x")), (0L, 2, Option.empty[String]))
-      .toDF("k", "rt", "rv")
-    val plain = graft.ops.AsOf.joinAsOf(left, right, Seq("k"), "t", "rt")
-      .collect().map(r => Option(r.getAs[String]("rv"))).toSeq
-    assert(plain == Seq(Some("x")))
-    for (buckets <- Seq(4, 16, 64)) {
-      val salted = graft.ops.AsOf.joinAsOfSalted(
-        left, right, Seq("k"), "t", "rt", buckets = buckets)
-        .collect().map(r => Option(r.getAs[String]("rv"))).toSeq
-      assert(salted == plain, s"buckets=$buckets: $salted")
-    }
-  }
-
   test("forward as-of tolerance works on integer timestamps (column-unit tolerance)") {
     import spark.implicits._
     val pts = Seq((1L, 0L, 100), (2L, 0L, 200)).toDF("id", "k", "t")

@@ -100,32 +100,6 @@ class SkewSpec extends AnyFunSuite {
     assert(salts > 4, s"hot key should spread over most of 8 salts, got $salts")
   }
 
-  test("salted as-of: planted 99%-hot-key parity and sub-partitioned window plan") {
-    import spark.implicits._
-    // 99% of the left side on one key, timestamps spread over the range —
-    // the shape where joinAsOf's per-key window serializes into one task
-    val rnd = new scala.util.Random(7)
-    val pts = ((1 to 990).map(i => (i.toLong, 1L, rnd.nextInt(10000))) ++
-      (991 to 1000).map(i => (i.toLong, (i % 5 + 2).toLong, rnd.nextInt(10000))))
-      .toDF("id", "k", "t")
-    val refs = (1 to 200).map(i => (if (i <= 190) 1L else (i % 5 + 2).toLong,
-      rnd.nextInt(10000), s"v$i"))
-      .distinctBy(r => (r._1, r._2))
-      .toDF("k", "rt", "rv")
-    val plain = graft.ops.AsOf.joinAsOf(pts, refs, Seq("k"), "t", "rt")
-      .collect().map(r => (r.getLong(0), Option(r.getAs[String]("rv")))).toMap
-    val saltedDf = graft.ops.AsOf.joinAsOfSalted(
-      pts, refs, Seq("k"), "t", "rt", buckets = 16)
-    val salted = saltedDf
-      .collect().map(r => (r.getLong(0), Option(r.getAs[String]("rv")))).toMap
-    assert(salted == plain)
-    assert(plain.values.exists(_.isDefined))
-    // the big window really partitions on (key, bucket): the plan's
-    // window spec names the bucket column alongside the key
-    val plan = saltedDf.queryExecution.executedPlan.toString
-    assert(plan.contains("__b"), "window is not sub-partitioned by bucket")
-  }
-
   test("skewReport surfaces the hot key with exact share and cumulative share") {
     import spark.implicits._
     // 910 of 1000 rows on key 7 (900 planted + 10 from the modulo tail)

@@ -95,6 +95,18 @@ class SnapshotRaceSpec extends AnyFunSuite {
     assert(wh.flatPhotos.count() === 7 * batch)
   }
 
+  test("a reader whose listing two appends outdate reads the newest version") {
+    // the read that follows a listing, with two appends committed in
+    // between: the second drops the version the listing found newest
+    val log = TableLog(spark, tmpDir())
+    log.commit(_ :+ "a")
+    val listed = log.versions
+    log.commit(_ :+ "b")
+    log.commit(_ :+ "c")
+    assert(!log.versions.contains(listed.last))
+    assert(log.latestOf(listed) === Some(2L -> Seq("a", "b", "c")))
+  }
+
   test("a DataFrame resolved before a merge still reads its own snapshot") {
     import spark.implicits._
     val t = tmpDir()

@@ -234,73 +234,6 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(res.map(_.getAs[Long]("neighbor_id")).toSet == Set(1L, 2L))
   }
 
-  test("persisted ivf index: search results identical to the inline path") {
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
-    try {
-      Embeddings.buildIvfIndex(e, dir)
-      // partitioned layout on disk: one directory per cell
-      val cells = new java.io.File(s"$dir/postings").listFiles()
-        .filter(_.getName.startsWith("cell=")).map(_.getName)
-      assert(cells.nonEmpty, "postings must be partitioned by cell")
-      def key(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getDouble(3), r.getInt(4))).toSet
-      val inline = key(Embeddings.ivfSearch(e, col("vec_id") < 5, k = 5, nprobe = 2))
-      val persisted = key(Embeddings.searchIvfIndex(spark, dir, col("vec_id") < 5,
-        k = 5, nprobe = 2))
-      assert(persisted == inline)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
-    }
-  }
-
-  test("ivf index append: new vectors are routed to a cell and found by search") {
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("ivf_append").toString
-    try {
-      Embeddings.buildIvfIndex(e, dir)
-      // two near-identical new vectors, far outside the existing id space
-      val base = e.filter(col("vec_id") === 7).select("embedding")
-        .collect()(0).getSeq[Float](0).toArray
-      val bumped = base.clone(); bumped(0) = bumped(0) + 0.01f
-      val fresh = Seq((100000L, base), (100001L, bumped))
-        .toDF("vec_id", "embedding")
-      Embeddings.appendToIvfIndex(spark, dir, fresh)
-      val res = Embeddings.searchIvfIndex(spark, dir,
-        col("vec_id") === 100000L, k = 3, nprobe = 1).collect()
-      val neighbors = res.map(_.getAs[Long]("neighbor_id")).toSet
-      // its twin lands in the same cell and ranks first
-      assert(res.head.getAs[Long]("neighbor_id") == 100001L)
-      assert(neighbors.size == 3, "existing postings still searched")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
-    }
-  }
-
-  test("persisted pq index: search results identical to the inline path") {
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("pq_idx").toString
-    try {
-      Embeddings.buildPqIndex(e, dir)
-      def key(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getDouble(2), r.getInt(3))).toSet
-      val inline = key(Embeddings.pqSearch(e, col("vec_id") < 5, k = 5))
-      val queries = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          Embeddings.asDouble(col("embedding")).as("qemb"))
-      val persisted = key(Embeddings.searchPqIndex(spark, dir, queries, k = 5))
-      assert(persisted == inline)
-      assert(inline.nonEmpty)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(dir)).deleteRecursively()
-    }
-  }
-
   test("lsh search: identical vectors share a bucket and find each other first") {
     val e = Seq(
       (0L, Array.fill(8)(0.5f), 0),
@@ -589,22 +522,6 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(bad.getLong(0) == 0 && bad.getLong(1) == 0)
   }
 
-  test("multimodal: batched decode is deterministic and schema-stable") {
-    val docs = docDF((7L, "some media payload bytes here", "s1"),
-      (8L, "another media payload with more bytes", "s1"))
-    val media = Multimodal.mediaLake(docs)
-    assert(media.schema("content").dataType.typeName == "binary")
-    val ds = media.as[Multimodal.LakeRecord]
-    val f1 = Multimodal.decodeBatched(ds).collect().sortBy(_.doc_id)
-    val f2 = Multimodal.decodeBatched(ds).collect().sortBy(_.doc_id)
-    assert(f1.map(f => (f.doc_id, f.n_units, f.unit_sum)).toSeq ==
-      f2.map(f => (f.doc_id, f.n_units, f.unit_sum)).toSeq)
-    // doc 7 is odd → bmp; doc 8 even → wav with one sample per byte
-    assert(f1.head.format == "bmp" && f1.last.format == "wav")
-    assert(f1.last.n_units == "another media payload with more bytes".length)
-    assert(f1.forall(_.decoder == "jvm-1.0"))
-  }
-
   test("resize: halves dimensions, keeps first half of content") {
     val docs = docDF((4L, "abcdefgh", "s1"))
     val media = Multimodal.mediaFromDocuments(docs)
@@ -686,28 +603,6 @@ class TrainingOpsSpec extends AnyFunSuite {
     // and restricting probes can only shrink the candidate pool
     val narrow = Embeddings.ivfPqSearch(e, col("vec_id") < 5, nprobe = 1)
     assert(narrow.count() <= 5 * 5)
-  }
-
-  test("persisted ivf-pq index: identical to inline, codes scan partition-pruned") {
-    val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString + "/idx"
-    Embeddings.buildIvfPqIndex(e, dir)
-    val queries = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qemb"))
-    val persisted = Embeddings.searchIvfPqIndex(spark, dir, queries, nprobe = 2)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    assert(rows(persisted) ==
-      rows(Embeddings.ivfPqSearch(e, col("vec_id") < 5, nprobe = 2)))
-    // the codes scan carries a static partition filter on cell
-    val scans = persisted.queryExecution.sparkPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec
-        if s.relation.location.rootPaths.exists(_.toString.contains("codes")) => s
-    }
-    assert(scans.nonEmpty &&
-      scans.forall(_.metadata.getOrElse("PartitionFilters", "").contains("cell")),
-      scans.map(_.metadata.getOrElse("PartitionFilters", "")).mkString(";"))
   }
 
   test("segment dedup: cross-doc boilerplate segment removed, uniques kept") {

@@ -46,6 +46,6 @@ member = re.compile(r'^  (?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|lazy\s
                     r'(?:def|val|object|class)\s+(\w+)', re.M)
 for p in sorted(reached):
     for name in sorted(set(member.findall(main[p]))):
-        if uses[name] <= decls[name]:
+        if uses[name] <= decls[name] and not (name == "main" and p in roots):
             print(f"MEMBER {p.relative_to(repo)}::{name}")
 sys.exit(gate)
